@@ -1113,7 +1113,7 @@ object SegmentedIndex {
   final case class SegQBlock(query_id: Int, seg_ord: Int,
       range_id: Int, term: String, df: Long, first_doc: Long, last_doc: Long,
       doc_gaps: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
-      block_max_score: Double)
+      block_max_score: Double) extends BlockMaxWand.EncodedBlock
 
   /** Block-max WAND top-k over the SEGMENTED index — the top-k-pruned
     * traversal that replaces the exhaustive O(df) live posting scan a
@@ -1316,13 +1316,7 @@ object SegmentedIndex {
       .groupByKey(r => (r.query_id, r.seg_ord, r.range_id))
       .flatMapGroups { (key: (Int, Int, Int), rows: Iterator[SegQBlock]) =>
         val (qid, ord, rid) = key
-        val byTerm = rows.toVector.groupBy(_.term)
-        val terms = byTerm.valuesIterator.map { trs =>
-          val sorted = trs.sortBy(_.first_doc)
-          BlockMaxWand.TermPostings(sorted.head.df,
-            sorted.map(r => BlockMaxWand.BlockRef(r.first_doc, r.last_doc,
-              r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-        }.toSeq
+        val terms = BlockMaxWand.termPostings(rows).values.toSeq
         val lo = rid.toLong * rangeSize
         val kk = k + overMap(ord)
         val seed = seeds.getOrElse(qid, Double.NegativeInfinity)

@@ -9,11 +9,13 @@ import graft.index.VarintCodec
   * Pure Scala core over the engine's encoded block format; the Spark
   * integration ([[IndexSearch.searchWand]]) feeds it per (query,
   * doc-range) group via `groupByKey.flatMapGroups` — Dataset API, no
-  * RDDs. The traversal is sequential within a group; cluster parallelism
-  * is across queries AND across doc ranges within a query (so a hot
-  * single-term query does not funnel its whole posting list through one
-  * task), while within a group whole blocks are skipped without decoding
-  * via (first_doc, last_doc, block_max_score) metadata.
+  * RDDs — or, for a request within one range's working set, on the
+  * driver from one collected block set. The traversal is sequential
+  * within a group; cluster parallelism is across queries AND across doc
+  * ranges within a query (so a hot single-term query does not funnel its
+  * whole posting list through one task), while within a group whole
+  * blocks are skipped without decoding via (first_doc, last_doc,
+  * block_max_score) metadata.
   *
   * Equivalence contract: output equals the exhaustive path's top-k under
   * the pinned ranking (round(score,7) DESC, doc_id ASC). Three guards make
@@ -39,6 +41,32 @@ object BlockMaxWand {
   /** A query term's posting list: blocks MUST be doc-ascending with
     * non-overlapping ranges — guaranteed by the build. */
   final case class TermPostings(df: Long, blocks: Array[BlockRef])
+
+  /** One encoded block as a traversal group's rows carry it (the persisted
+    * block columns plus the term's df). */
+  trait EncodedBlock {
+    def term: String
+    def df: Long
+    def first_doc: Long
+    def last_doc: Long
+    def doc_gaps: Array[Byte]
+    def tfs: Array[Byte]
+    def dls: Array[Byte]
+    def block_max_score: Double
+  }
+
+  /** A group's blocks assembled into one doc-ascending posting list per
+    * term — the input every traversal call site hands to `topKRange`. */
+  def termPostings(rows: Iterator[EncodedBlock]): Map[String, TermPostings] =
+    rows.toVector.groupBy(_.term).map { case (term, trs) =>
+      val sorted = trs.sortBy(_.first_doc)
+      term -> TermPostings(sorted.head.df, sorted.map(r => BlockRef(r.first_doc,
+        r.last_doc, r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
+    }
+
+  /** The per-range traversal signature shared by [[topKRange]] and
+    * [[MaxScore.topKRange]]: (terms, k, nDocs, avgdl, lo, hi, seed). */
+  type RangeTopK = (Seq[TermPostings], Int, Long, Double, Long, Long, Double) => Seq[(Long, Double)]
 
   final val ExhaustedDoc = Long.MaxValue
 

@@ -20,15 +20,26 @@ import org.apache.spark.sql.functions._
   */
 object IndexSearch {
 
+  /** An opened index: a SNAPSHOT of the root at open time. The relations
+    * resolve their files once, so reopen after an in-place rebuild.
+    *
+    * Driver memory: one [[ResidentDict]] per open index, built on first
+    * use from this instance's own `dictionary` and `blockmeta` — it grows
+    * with the vocabulary, not the corpus. Besides it a request keeps at
+    * most its own dictionary rows, and on the single-range path
+    * ([[residentTopK]]) the encoded blocks of ≤ docsPerRange postings.
+    *
+    * `blockmeta` holds the per-term top block maxes when the index carries
+    * them; the plain `dictionary` stays unjoined for every other probe. */
   final case class OpenIndex(paths: IndexPaths, dictionary: DataFrame,
                              stats: Stats, spark: SparkSession,
                              io: graft.sources.TableIO,
-                             // per-term top block maxes (blockmeta/), when
-                             // the index carries them — joined on demand
-                             // ONLY by the WAND θ-seed probe; keeping the
-                             // plain dictionary unjoined spares every
-                             // other probe a dictionary ⋈ blockmeta join
-                             blockmeta: Option[DataFrame] = None)
+                             blockmeta: Option[DataFrame] = None) {
+    /** The postings relation, resolved (file listing, schema) once. */
+    lazy val postings: DataFrame = io.read(spark, paths.postings)
+    /** term → df, shard, top block maxes, collected on first use. */
+    lazy val resident: ResidentDict = ResidentDict.load(dictionary, blockmeta)
+  }
 
   /** One posting block routed to one (query, doc-range) group (WAND
     * input). A block spanning a range boundary is routed to EVERY range it
@@ -38,6 +49,15 @@ object IndexSearch {
                              df: Long, first_doc: Long, last_doc: Long,
                              doc_gaps: Array[Byte], tfs: Array[Byte],
                              dls: Array[Byte], block_max_score: Double)
+      extends BlockMaxWand.EncodedBlock
+
+  /** A persisted posting block with its term's df — the driver path's
+    * input. */
+  final case class TermBlock(term: String, df: Long, first_doc: Long,
+                             last_doc: Long, doc_gaps: Array[Byte],
+                             tfs: Array[Byte], dls: Array[Byte],
+                             block_max_score: Double)
+      extends BlockMaxWand.EncodedBlock
 
   final case class ResultRow(query_id: Int, rank: Int, doc_id: Long,
                              score: Double)
@@ -62,10 +82,10 @@ object IndexSearch {
            io: graft.sources.TableIO = graft.sources.ParquetTableIO): OpenIndex = {
     val p = IndexPaths(root)
     // per-term top block maxes (blockmeta) are carried SEPARATELY and
-    // joined onto the dictionary only inside the WAND θ-seed probe: the
-    // plain dictionary feeds every other probe without paying a
-    // dictionary ⋈ blockmeta join per query. An older index without
-    // blockmeta falls back to the window-job seed path in wandBlocks.
+    // joined onto the dictionary only by the WAND seed paths (the
+    // resident dictionary, once; wandBlocks' probe, per batch). An older
+    // index without blockmeta runs them unseeded or with wandBlocks'
+    // window-job seed.
     val bm =
       if (graft.sources.Fs.exists(spark, p.blockmeta))
         Some(io.read(spark, p.blockmeta))
@@ -89,9 +109,9 @@ object IndexSearch {
     val shards = qd.select("shard").distinct().collect().map(_.getInt(0)).toSeq
     if (shards.isEmpty)
       return PostingBlocks.decodePostings(
-        idx.io.read(spark, idx.paths.postings).limit(0)
+        idx.postings.limit(0)
           .join(broadcast(qd.select(dictCols.map(col): _*)), Seq("term")))
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(shards: _*))
       .join(broadcast(qd.select(dictCols.map(col): _*)), Seq("term"))
     PostingBlocks.decodePostings(blocks)
@@ -275,7 +295,7 @@ object IndexSearch {
         .select("shard").distinct().collect().map(_.getInt(0)).toSeq
       if (shards.isEmpty) None
       else {
-        val blocks = idx.io.read(spark, idx.paths.postings)
+        val blocks = idx.postings
           .where(col("shard").isin(shards: _*))
           .join(broadcast(qdf), Seq("term"))
         val scored = PostingBlocks.decodePostings(blocks)
@@ -963,7 +983,7 @@ object IndexSearch {
     // block-level prune: only blocks of query terms whose doc range holds
     // a hit id decode their positions (idArr is a tiny literal array)
     val idArr = array(ids.map(lit(_)): _*)
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(shards: _*) &&
         col("term").isInCollection(terms) &&
         exists(idArr, id => id >= col("first_doc") && id <= col("last_doc")))
@@ -1122,8 +1142,8 @@ object IndexSearch {
       .select("query_id", "term", "df", "_end", "shard")
     val shards = qd.select("shard").distinct().collect().map(_.getInt(0)).toSeq
     val base =
-      if (shards.isEmpty) idx.io.read(spark, idx.paths.postings).limit(0)
-      else idx.io.read(spark, idx.paths.postings)
+      if (shards.isEmpty) idx.postings.limit(0)
+      else idx.postings
         .where(col("shard").isin(shards: _*))
     val rows = PostingBlocks.decodePostingsWithPositions(
       base.join(broadcast(qd.drop("shard")), Seq("term")))
@@ -1800,7 +1820,7 @@ object IndexSearch {
   private[search] def requirePositional(idx: OpenIndex): Unit = {
     val ok = graft.sources.Fs.exists(idx.spark, idx.paths.positionalMarker) ||
       sampledVerdicts.computeIfAbsent(idx.paths.root, _ => {
-        val postings = idx.io.read(idx.spark, idx.paths.postings)
+        val postings = idx.postings
         if (!postings.schema.fieldNames.contains("poss")) java.lang.Boolean.FALSE
         else {
           val sample = postings.select("poss").limit(1).collect()
@@ -1882,7 +1902,7 @@ object IndexSearch {
     val restTerms = qtRows.filterNot(_._3).map(_._2).distinct
     val nDistinct = batch.queries
       .map { case (qid, terms) => (qid, terms.distinct.size) }
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(batch.shards: _*))
     // THIN pass: doc-id stream only — `poss` (the fat stream) is never
     // referenced, so parquet column pruning skips its bytes entirely.
@@ -2068,6 +2088,14 @@ object IndexSearch {
     * savings grow with the fan-out. */
   private final val MinRangesForPrune = 16L
 
+  /** (query, term, resident dictionary row) of each query's distinct
+    * in-vocabulary terms — looked up on the driver, no Spark job. */
+  private def dictRows(dict: ResidentDict,
+                       queries: Seq[(Int, String)]): Seq[(Int, String, Int)] =
+    queries.flatMap { case (qid, text) =>
+      graft.analysis.Analyzer.tokenize(text).map(t => (qid, t, dict.row(t)))
+    }.filter(_._3 >= 0).distinct
+
   /** Candidate blocks for the WAND traversal, routed per (query, range),
     * plus the per-query θ seed. Exposed for WandSpec's block-count
     * assertion; `prune=false` disables the θ-seed range prune (routing
@@ -2098,43 +2126,19 @@ object IndexSearch {
       : Option[(org.apache.spark.sql.Dataset[QBlockRow], Map[Int, Double], Long)] = {
     val spark = idx.spark
     import spark.implicits._
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val hasBm = idx.blockmeta.isDefined
-    val qdCols = Seq("query_id", "term", "df", "shard") ++
-      (if (hasBm) Seq("top_block_maxes") else Nil)
-    // dictionary and blockmeta pruned by the analyzed term set BEFORE the
-    // joins: the predicate pushes to both parquet scans, and the blockmeta
-    // join (θ-seed metadata) touches ≤ |terms| rows per side instead of
-    // the whole dictionary per batch
-    val allTerms = queries
-      .flatMap { case (_, t) => graft.analysis.Analyzer.tokenize(t) }.distinct
-    val dictPruned = idx.dictionary.where(col("term").isInCollection(allTerms))
-    val dictProbe = idx.blockmeta match {
-      case Some(bm) => dictPruned.join(
-        bm.where(col("term").isInCollection(allTerms)), Seq("term"), "left")
-      case None => dictPruned
-    }
-    val qd = qt.join(dictProbe, "term").select(qdCols.map(col): _*)
-    // one driver job (≤ |query terms| rows): shards AND — when the index
-    // carries blockmeta — the per-term top block maxes the θ seed needs
-    val qdRows = qd.collect()
-    val shards = qdRows.map(_.getAs[Int]("shard")).distinct.toSeq
-    if (shards.isEmpty) return None
-    // θ_seed(q) = max over q's terms of the k-th largest block max of the
-    // term (k doc-disjoint blocks each achieve their max from that term
-    // alone, so the final k-th best raw score is ≥ this) — free from the
-    // already-collected dictionary rows, zero extra Spark jobs
+    val dict = idx.resident
+    val qtRows = dictRows(dict, queries)
+    if (qtRows.isEmpty) return None
+    val shards = qtRows.map(r => dict.shard(r._3)).distinct
+    val qd = qtRows.map { case (qid, t, r) => (qid, t, dict.df(r)) }
+      .toDF("query_id", "term", "df")
+    // θ_seed(q) from the stored top block maxes ([[ResidentDict.seed]]);
+    // None when the index has none or k passes them
     val driverSeeds: Option[Map[Int, Double]] =
-      if (!hasBm || k > graft.index.PostingBlocks.TopBlockMaxes) None
-      else Some(qdRows.iterator.flatMap { r =>
-        val i = r.fieldIndex("top_block_maxes")
-        if (r.isNullAt(i)) None
-        else {
-          val arr = r.getSeq[Double](i)
-          if (arr.size >= k) Some(r.getAs[Int]("query_id") -> arr(k - 1))
-          else None
-        }
-      }.toSeq.groupMapReduce(_._1)(_._2)(math.max))
+      if (idx.blockmeta.isEmpty || k > graft.index.PostingBlocks.TopBlockMaxes) None
+      else Some(qtRows.groupMap(_._1)(_._3)
+        .map { case (qid, rows) => qid -> dict.seed(rows, k) }
+        .filter(_._2 > Double.NegativeInfinity))
     val rangeSize = math.max(1L, math.min(docsPerRange, idx.stats.nDocs))
     val nRanges = (idx.stats.nDocs + rangeSize - 1) / rangeSize
     // a pathological caller-supplied docsPerRange on a huge corpus would
@@ -2142,9 +2146,9 @@ object IndexSearch {
     require(nRanges <= Int.MaxValue,
       s"docsPerRange=$docsPerRange yields $nRanges ranges over " +
         s"${idx.stats.nDocs} docs — exceeds Int range ids")
-    val base = idx.io.read(spark, idx.paths.postings)
+    val base = idx.postings
       .where(col("shard").isin(shards: _*))
-      .join(broadcast(qd.select("query_id", "term", "df")), Seq("term"))
+      .join(broadcast(qd), Seq("term"))
     // exact integer range id: (d - d mod rs) / rs — the numerator is an
     // exact multiple of rs, so the double division is exact (plain d / rs
     // can cross an integer boundary for huge doc ids)
@@ -2216,145 +2220,104 @@ object IndexSearch {
   /** Block-max WAND fast path (disjunctive top-k). Same output as
     * [[search]] — the WandSpec property.
     *
-    * Parallelism is across (query, doc-range) pairs, NOT one task per
-    * query: the corpus doc-id space splits into fixed ranges of
-    * `docsPerRange`, each candidate block routes PRECISELY to the ranges
-    * containing its postings (see [[wandBlocks]]), the range-bounded WAND
-    * traversal ([[BlockMaxWand.topKRange]]) produces that range's exact
-    * top-k seeded with the per-query θ lower bound, and the per-range
-    * top-k's rank-merge globally through the same pinned ordering
-    * ([[Search.rank]] — a window over ≤ ranges×k candidate rows per
-    * query). Exactness: BM25 is additive per doc, every doc lives in
-    * exactly one range, and a doc in the global top-k is necessarily in
-    * its range's top-k under the pinned order; the θ seed and the range
-    * prune only ever discard docs provably below the final k-th score. */
+    * A batch that fits one range's working set is answered on the driver
+    * with one Spark job ([[residentTopK]]). Otherwise parallelism is
+    * across (query, doc-range) pairs, NOT one task per query: the corpus
+    * doc-id space splits into fixed ranges of `docsPerRange`, each
+    * candidate block routes PRECISELY to the ranges containing its
+    * postings (see [[wandBlocks]]), the range-bounded WAND traversal
+    * ([[BlockMaxWand.topKRange]]) produces that range's exact top-k seeded
+    * with the per-query θ lower bound, and the per-range top-k's
+    * rank-merge globally through the same pinned ordering ([[Search.rank]]
+    * — a window over ≤ ranges×k candidate rows per query). Exactness:
+    * BM25 is additive per doc, every doc lives in exactly one range, and a
+    * doc in the global top-k is necessarily in its range's top-k under the
+    * pinned order; the θ seed and the range prune only ever discard docs
+    * provably below the final k-th score. */
   def searchWand(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
                  docsPerRange: Long = DefaultDocsPerRange,
-                 start: Int = 0): DataFrame = {
-    val spark = idx.spark
-    import spark.implicits._
-    // pagination: every internal bound (θ seed, per-range heap) must hold
-    // the TOP start+k — an offset page still needs the full prefix exact
-    val planned = wandBlocks(idx, queries, start + k, docsPerRange)
-    if (planned.isEmpty)
-      return Seq.empty[ResultRow].toDF()
-        .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-    val (blocks, seeds, rs) = planned.get
-    val (nDocs, avgdl, kk) = (idx.stats.nDocs, idx.stats.avgdl, start + k)
-    val singleRange = (nDocs + rs - 1) / rs == 1
-    if (singleRange) {
-      // SINGLE-RANGE corpus (a data-derived condition — ≤ docsPerRange
-      // docs — not a hardware constant, the MinRangesForPrune precedent):
-      // the one (query, range-0) group already holds the query's full
-      // candidate set, and topKRange returns it in the pinned rank order
-      // (round(score,RankScale) DESC, doc ASC — the same Scala round twin
-      // the traversal's heap uses), so the global rank is assigned
-      // IN-GROUP and the rank window's exchange+window jobs per batch
-      // disappear. Output bit-identical to [[Search.rank]]. Multi-range
-      // corpora take the unchanged rank-merge path below.
-      val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
-        .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
-          val (qid, rid) = key
-          val byTerm = rows.toVector.groupBy(_.term)
-          val terms = byTerm.valuesIterator.map { trs =>
-            val sorted = trs.sortBy(_.first_doc)
-            BlockMaxWand.TermPostings(sorted.head.df,
-              sorted.map(r => BlockMaxWand.BlockRef(r.first_doc, r.last_doc,
-                r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-          }.toSeq
-          val lo = rid.toLong * rs
-          val seed = seeds.getOrElse(qid, Double.NegativeInfinity)
-          BlockMaxWand.topKRange(terms, kk, nDocs, avgdl, lo, lo + rs, seed)
-            .iterator.zipWithIndex.collect {
-              case ((doc, s), i) if i + 1 > start =>
-                (qid, i + 1, doc, BlockMaxWand.round(s, Bm25.OutScale))
-            }
-        }
-        .toDF("query_id", "rank", "doc_id", "score")
-      return candidates.select(col("query_id"),
-        col("rank").cast("int").as("rank"), col("doc_id"), col("score"))
-    }
-    val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
-      .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
-        val (qid, rid) = key
-        // bounded by the range width: ≤ |terms| × rangeSize/blockSize blocks
-        val byTerm = rows.toVector.groupBy(_.term)
-        val terms = byTerm.valuesIterator.map { trs =>
-          val sorted = trs.sortBy(_.first_doc)
-          BlockMaxWand.TermPostings(sorted.head.df,
-            sorted.map(r => BlockMaxWand.BlockRef(r.first_doc, r.last_doc,
-              r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-        }.toSeq
-        val lo = rid.toLong * rs
-        val seed = seeds.getOrElse(qid, Double.NegativeInfinity)
-        BlockMaxWand.topKRange(terms, kk, nDocs, avgdl, lo, lo + rs, seed)
-          .iterator.map { case (doc, s) => (qid, doc, s) }
-      }
-      .toDF("query_id", "doc_id", "_score")
-    Search.rank(candidates, k, start)
-  }
+                 start: Int = 0): DataFrame =
+    traverseTopK(idx, queries, k, docsPerRange, start, BlockMaxWand.topKRange)
 
   /** MaxScore fast path (disjunctive top-k) — same output as [[search]]
-    * and [[searchWand]], same doc-range-parallel shape and θ seeds via
-    * [[wandBlocks]]; only the within-range traversal differs
-    * ([[MaxScore.topKRange]]'s essential-list pruning instead of WAND's
-    * pivot bounding). Two engines over one block layout lets a caller
-    * pick per workload: MaxScore tends to win on queries mixing one hot
-    * low-impact term with selective terms (the hot list is probed, never
-    * walked); WAND on uniformly selective terms. */
+    * and [[searchWand]], same paths and θ seeds; only the within-range
+    * traversal differs ([[MaxScore.topKRange]]'s essential-list pruning
+    * instead of WAND's pivot bounding). Two engines over one block layout
+    * lets a caller pick per workload: MaxScore tends to win on queries
+    * mixing one hot low-impact term with selective terms (the hot list is
+    * probed, never walked); WAND on uniformly selective terms. */
   def searchMaxScore(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
                      docsPerRange: Long = DefaultDocsPerRange,
-                     start: Int = 0): DataFrame = {
+                     start: Int = 0): DataFrame =
+    traverseTopK(idx, queries, k, docsPerRange, start, MaxScore.topKRange)
+
+  private def traverseTopK(idx: OpenIndex, queries: Seq[(Int, String)], k: Int,
+                           docsPerRange: Long, start: Int,
+                           traverse: BlockMaxWand.RangeTopK): DataFrame =
+    residentTopK(idx, queries, k, docsPerRange, start, traverse).getOrElse {
+      val spark = idx.spark
+      import spark.implicits._
+      // pagination: every internal bound (θ seed, per-range heap) must
+      // hold the TOP start+k — an offset page still needs the full prefix
+      val (nDocs, avgdl, kk) = (idx.stats.nDocs, idx.stats.avgdl, start + k)
+      wandBlocks(idx, queries, kk, docsPerRange) match {
+        case None => Seq.empty[ResultRow].toDF()
+        case Some((blocks, seeds, rs)) =>
+          val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
+            .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
+              val (qid, rid) = key
+              // bounded by the range width: ≤ |terms| × rangeSize/blockSize blocks
+              val lo = rid.toLong * rs
+              traverse(BlockMaxWand.termPostings(rows).values.toSeq, kk, nDocs,
+                avgdl, lo, lo + rs, seeds.getOrElse(qid, Double.NegativeInfinity))
+                .iterator.map { case (doc, s) => (qid, doc, s) }
+            }
+            .toDF("query_id", "doc_id", "_score")
+          Search.rank(candidates, k, start)
+      }
+    }
+
+  /** The single-range path of [[searchWand]] and [[searchMaxScore]], taken
+    * when a batch fits one range's working set: the corpus is one doc
+    * range (nDocs ≤ docsPerRange) and the df of the batch's distinct terms
+    * sums to ≤ docsPerRange. The terms, their shards and each query's θ
+    * seed come from the resident dictionary; ONE Spark job collects the
+    * batch's posting blocks (`shard ∈ S ∧ term ∈ T`); the traversal runs
+    * on the driver, which returns the ranked rows in the pinned order
+    * (round(score,RankScale) DESC, doc ASC), so ranks are assigned here and
+    * the result is a local frame whose `collect` runs no job. A batch with
+    * only out-of-vocabulary terms runs no job at all. The seed is −∞ when
+    * start + k passes the stored top block maxes or the index has no
+    * blockmeta — the answer is exact either way. None when the batch does
+    * not fit: the caller takes the range-parallel path. */
+  private def residentTopK(idx: OpenIndex, queries: Seq[(Int, String)], k: Int,
+                           docsPerRange: Long, start: Int,
+                           traverse: BlockMaxWand.RangeTopK): Option[DataFrame] = {
     val spark = idx.spark
     import spark.implicits._
-    val planned = wandBlocks(idx, queries, start + k, docsPerRange)
-    if (planned.isEmpty)
-      return Seq.empty[ResultRow].toDF()
-        .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-    val (blocks, seeds, rs) = planned.get
-    val (nDocs, avgdl, kk) = (idx.stats.nDocs, idx.stats.avgdl, start + k)
-    val singleRange = (nDocs + rs - 1) / rs == 1
-    if (singleRange) {
-      // single-range in-group ranking — see [[searchWand]]; MaxScore's
-      // topKRange returns the same pinned order
-      val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
-        .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
-          val (qid, rid) = key
-          val byTerm = rows.toVector.groupBy(_.term)
-          val terms = byTerm.valuesIterator.map { trs =>
-            val sorted = trs.sortBy(_.first_doc)
-            BlockMaxWand.TermPostings(sorted.head.df,
-              sorted.map(r => BlockMaxWand.BlockRef(r.first_doc, r.last_doc,
-                r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-          }.toSeq
-          val lo = rid.toLong * rs
-          val seed = seeds.getOrElse(qid, Double.NegativeInfinity)
-          MaxScore.topKRange(terms, kk, nDocs, avgdl, lo, lo + rs, seed)
-            .iterator.zipWithIndex.collect {
-              case ((doc, s), i) if i + 1 > start =>
-                (qid, i + 1, doc, BlockMaxWand.round(s, Bm25.OutScale))
-            }
+    val dict = idx.resident
+    val qtRows = dictRows(dict, queries)
+    val rowOf = qtRows.map(r => r._2 -> r._3).toMap
+    if (idx.stats.nDocs > docsPerRange ||
+        rowOf.valuesIterator.map(dict.df).sum > docsPerRange) return None
+    val lists =
+      if (rowOf.isEmpty) Map.empty[String, BlockMaxWand.TermPostings]
+      else BlockMaxWand.termPostings(idx.postings
+        .where(col("shard").isin(rowOf.values.map(dict.shard).toSeq.distinct: _*) &&
+          col("term").isin(rowOf.keys.toSeq: _*))
+        .select(col("term"),
+          element_at(typedLit(rowOf.map { case (t, r) => t -> dict.df(r) }), col("term")).as("df"),
+          col("first_doc"), col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
+          col("block_max_score"))
+        .as[TermBlock].collect().iterator)
+    val kk = start + k
+    val byQuery = qtRows.groupMap(_._1)(r => (r._2, r._3)).toSeq.sortBy(_._1)
+    Some(byQuery.flatMap { case (qid, terms) =>
+      traverse(terms.flatMap(t => lists.get(t._1)), kk, idx.stats.nDocs, idx.stats.avgdl,
+        0L, Long.MaxValue, dict.seed(terms.map(_._2), kk))
+        .iterator.zipWithIndex.collect { case ((doc, s), i) if i >= start =>
+          ResultRow(qid, i + 1, doc, BlockMaxWand.round(s, Bm25.OutScale))
         }
-        .toDF("query_id", "rank", "doc_id", "score")
-      return candidates.select(col("query_id"),
-        col("rank").cast("int").as("rank"), col("doc_id"), col("score"))
-    }
-    val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
-      .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
-        val (qid, rid) = key
-        val byTerm = rows.toVector.groupBy(_.term)
-        val terms = byTerm.valuesIterator.map { trs =>
-          val sorted = trs.sortBy(_.first_doc)
-          BlockMaxWand.TermPostings(sorted.head.df,
-            sorted.map(r => BlockMaxWand.BlockRef(r.first_doc, r.last_doc,
-              r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-        }.toSeq
-        val lo = rid.toLong * rs
-        val seed = seeds.getOrElse(qid, Double.NegativeInfinity)
-        MaxScore.topKRange(terms, kk, nDocs, avgdl, lo, lo + rs, seed)
-          .iterator.map { case (doc, s) => (qid, doc, s) }
-      }
-      .toDF("query_id", "doc_id", "_score")
-    Search.rank(candidates, k, start)
+    }.toDF())
   }
 }

@@ -130,7 +130,7 @@ object Intervals {
     if (live.isEmpty) return empty
     val qtRows = live.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
     val shards = live.flatMap(_._2).distinct.map(t => dictRows(t)._2).distinct
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(shards: _*))
     val dfDf = live.flatMap(_._2).distinct.map(t => (t, dictRows(t)._1))
       .toDF("term", "df")

@@ -137,7 +137,7 @@ object MultiPhrase {
     val (leadRows, restRows) = routing.partition { case (qid, i, _) =>
       i == leaderSlot(qid) }
     val shards = allTerms.flatMap(dictRows.get).map(_._2).distinct
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(shards: _*))
 
     // THIN pass (no `poss` bytes read): (query_id, slot, term, _bfd, doc_id)

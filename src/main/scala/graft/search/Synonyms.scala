@@ -92,7 +92,7 @@ object Synonyms {
     if (shards.isEmpty) return empty
     // SynonymQuery docFreq: max member df per (query, class)
     val gdf = qd.groupBy("query_id", "gid").agg(max(col("df")).as("_df"))
-    val blocks = idx.io.read(spark, idx.paths.postings)
+    val blocks = idx.postings
       .where(col("shard").isin(shards: _*))
       .join(broadcast(qd.select("query_id", "gid", "term")), Seq("term"))
     val scored = PostingBlocks.decodePostings(blocks)

@@ -65,26 +65,46 @@ object Fs {
     * initialized"; OVERWRITE closes that window. Filesystems without
     * FileContext support fall back to delete+rename, and readers must
     * treat a missing pointer as a possible crash (see
-    * [[graft.streaming.StreamingIngest.ingestBatch]]). */
+    * [[graft.streaming.StreamingIngest.ingestBatch]]).
+    *
+    * A checksummed filesystem (the local `file://` one) renames a file and
+    * its `.crc` in two steps, so a reader between them would pair one
+    * version's bytes with another version's checksum and fail. Pointer
+    * files there carry no `.crc`: any stale one is removed first (a file
+    * without one is read unverified), then the file is written and renamed
+    * through the raw filesystem, whose rename replaces the target in one
+    * step. */
   def publishString(spark: SparkSession, path: String, content: String): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        f.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, new Path(path), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      // UnsupportedFileSystemException (no AbstractFileSystem binding, e.g.
-      // s3a/gs) extends IOException, NOT UnsupportedOperationException —
-      // it must be caught here or the documented fallback is unreachable
-      case _: UnsupportedOperationException |
-           _: org.apache.hadoop.fs.UnsupportedFileSystemException |
-           _: java.io.FileNotFoundException =>
-        f.delete(new Path(path), false)
-        if (!f.rename(tmp, new Path(path)))
+    val (tmp, target) = (new Path(path + ".tmp"), new Path(path))
+    def write(f: FileSystem): Unit = {
+      val out = f.create(tmp, true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    fs(spark, path) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+        val raw = c.getRawFileSystem
+        Seq(tmp, target).foreach(p => raw.delete(c.getChecksumFile(p), false))
+        write(raw)
+        if (!raw.rename(tmp, target))
           throw new java.io.IOException(s"publish rename failed for $path")
+      case f =>
+        write(f)
+        try {
+          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+            f.getUri, spark.sparkContext.hadoopConfiguration)
+          fc.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        } catch {
+          // UnsupportedFileSystemException (no AbstractFileSystem binding,
+          // e.g. s3a/gs) extends IOException, NOT
+          // UnsupportedOperationException — it must be caught here or the
+          // documented fallback is unreachable
+          case _: UnsupportedOperationException |
+               _: org.apache.hadoop.fs.UnsupportedFileSystemException |
+               _: java.io.FileNotFoundException =>
+            f.delete(target, false)
+            if (!f.rename(tmp, target))
+              throw new java.io.IOException(s"publish rename failed for $path")
+        }
     }
   }
 }

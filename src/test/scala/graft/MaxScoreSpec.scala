@@ -129,35 +129,6 @@ class MaxScoreSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graftms").toString
     BuildIndexJob.run(spark, Transcripts.synthetic(spark, 300), root, "ms1",
       BuildIndexJob.Config(numShards = 8, blockSize = 16, saltTarget = 64))
-    val idx = IndexSearch.open(spark, root)
-    val queries = Seq(
-      1 -> "w1 w3 w17",
-      2 -> "zzzrareone",
-      3 -> "w1",
-      4 -> "w2 zzzmissing",
-      5 -> "w5 w50 w500",
-      6 -> "w1 w2 w3 w4 w5",
-      7 -> "qqqnotthere")
-    for (k <- Seq(3, 10)) {
-      val exh = IndexSearch.search(idx, queries, k = k)
-        .orderBy("query_id", "rank").collect().toSeq
-      val ms = IndexSearch.searchMaxScore(idx, queries, k = k)
-        .orderBy("query_id", "rank").collect().toSeq
-      assert(ms == exh, s"k=$k")
-      assert(exh.nonEmpty)
-      for (docsPerRange <- Seq(7L, 100L)) {
-        val ranged = IndexSearch.searchMaxScore(idx, queries, k = k,
-          docsPerRange = docsPerRange)
-          .orderBy("query_id", "rank").collect().toSeq
-        assert(ranged == exh, s"k=$k docsPerRange=$docsPerRange")
-      }
-    }
-    // offset page parity
-    val pageExh = IndexSearch.search(idx, queries, k = 5, start = 5)
-      .orderBy("query_id", "rank").collect().toSeq
-    val pageMs = IndexSearch.searchMaxScore(idx, queries, k = 5,
-      docsPerRange = 64L, start = 5)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(pageMs == pageExh, "MaxScore offset page must match exhaustive page")
+    TopKParity.check(IndexSearch.open(spark, root), IndexSearch.searchMaxScore(_, _, _, _, _))
   }
 }

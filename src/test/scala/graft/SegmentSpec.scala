@@ -357,6 +357,38 @@ class SegmentSpec extends SparkSpec {
     assert(segResults(root) == rebuildExpected(live))
   }
 
+  test("MANIFEST publish beside a looping reader: no exception, no torn or mixed body") {
+    val root = tmp()
+    // bodies of varying length, so a reader that paired one version's
+    // bytes with another version's checksum would fail verification
+    val published = (0 until 240).map(i => SegmentedIndex.Manifest(
+      Seq.tabulate(1 + i % 9)(j => s"seg-$i-$j"), Seq.fill(i % 4)(s"t$i"), i.toLong, 7L * i))
+    def body(m: SegmentedIndex.Manifest) =
+      s"segments=${m.segments.mkString(",")}\ntombs=${m.tombs.mkString(",")}\n" +
+        s"n_docs=${m.nDocs}\ntotal_tokens=${m.totalTokens}\n"
+    val path = SegmentedIndex.manifestPath(root)
+    graft.sources.Fs.publishString(spark, path, body(published.head))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SegmentedIndex.Manifest]
+    val reader = new Thread(() =>
+      while (!done.get) {
+        try SegmentedIndex.readManifest(spark, root) match {
+          case Some(m) => seen.add(m)
+          case None => errors.add(new AssertionError("MANIFEST missing"))
+        } catch { case t: Throwable => errors.add(t) }
+      })
+    reader.start()
+    try published.tail.foreach(m => graft.sources.Fs.publishString(spark, path, body(m)))
+    finally { done.set(true); reader.join() }
+    val failed = errors.size
+    assert(failed == 0, s"failed reads, first: ${errors.peek()}")
+    val valid = published.toSet
+    assert(seen.size > 0)
+    seen.forEach(m => assert(valid.contains(m), s"read an unpublished manifest $m"))
+    assert(SegmentedIndex.readManifest(spark, root).contains(published.last))
+  }
+
   test("segmented search prunes each segment's postings scan to query-term shards") {
     val root = tmp()
     SegmentedIndex.append(spark, root, Transcripts.synthetic(spark, 60),

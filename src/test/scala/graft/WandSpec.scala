@@ -110,50 +110,7 @@ class WandSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graftwand").toString
     BuildIndexJob.run(spark, Transcripts.synthetic(spark, 300), root, "w1",
       BuildIndexJob.Config(numShards = 8, blockSize = 16, saltTarget = 64))
-    val idx = IndexSearch.open(spark, root)
-    val queries = Seq(
-      1 -> "w1 w3 w17",
-      2 -> "zzzrareone",
-      3 -> "w1",             // hottest term
-      4 -> "w2 zzzmissing",
-      5 -> "w5 w50 w500",
-      6 -> "w1 w2 w3 w4 w5", // all hot
-      7 -> "qqqnotthere")
-    for (k <- Seq(3, 10)) {
-      val exh = IndexSearch.search(idx, queries, k = k)
-        .orderBy("query_id", "rank").collect().toSeq
-      val wand = IndexSearch.searchWand(idx, queries, k = k)
-        .orderBy("query_id", "rank").collect().toSeq
-      assert(wand == exh, s"k=$k")
-      assert(exh.nonEmpty)
-      // doc-range-parallel form: tiny ranges force many (query, range)
-      // groups and block spans across range boundaries — must still be
-      // exactly the single-range answer
-      for (docsPerRange <- Seq(7L, 100L)) {
-        val ranged = IndexSearch.searchWand(idx, queries, k = k,
-          docsPerRange = docsPerRange)
-          .orderBy("query_id", "rank").collect().toSeq
-        assert(ranged == exh, s"k=$k docsPerRange=$docsPerRange")
-      }
-    }
-    // k beyond the stored top-block-maxes (16): the driver seed is
-    // unavailable and wandBlocks takes the legacy window path — answers
-    // must be unchanged
-    val k20exh = IndexSearch.search(idx, queries, k = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    val k20wand = IndexSearch.searchWand(idx, queries, k = 20, docsPerRange = 64L)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(k20wand == k20exh, "k=20 (past blockmeta cap) must match exhaustive")
-    // pagination through WAND: page 2 of 5 must equal the exhaustive
-    // offset page, absolute ranks included (heap internally sized start+k)
-    val pageExh = IndexSearch.search(idx, queries, k = 5, start = 5)
-      .orderBy("query_id", "rank").collect().toSeq
-    val pageWand = IndexSearch.searchWand(idx, queries, k = 5,
-      docsPerRange = 64L, start = 5)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(pageWand == pageExh, "WAND offset page must match exhaustive page")
-    assert(pageExh.nonEmpty && pageExh.head.getInt(1) == 6,
-      "absolute rank positions expected on the offset page")
+    TopKParity.check(IndexSearch.open(spark, root), IndexSearch.searchWand(_, _, _, _, _))
   }
 
   test("θ seed rides the dictionary probe: one Spark job inside wandBlocks") {
@@ -186,7 +143,7 @@ class WandSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     val sc = spark.sparkContext
-    def countJobs(body: => Map[Int, Double]): (Map[Int, Double], Int) = {
+    def countJobs[T](body: => T): (T, Int) = {
       org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
       jobs.set(0)
       val r = body
@@ -206,6 +163,24 @@ class WandSpec extends SparkSpec {
       assert(seedsLegacy == expected, "legacy window path must agree")
       assert(jobsBm < jobsLegacy,
         s"blockmeta seed path ran $jobsBm jobs, legacy $jobsLegacy — must be fewer")
+      // the resident dictionary is each instance's own: the legacy copy
+      // carries no stored maxes, so its seed is −∞
+      val w1 = Seq(idx.resident.row("w1"))
+      assert(idx.resident.seed(w1, k) == expected(1))
+      assert(idxLegacy.resident.seed(w1, k) == Double.NegativeInfinity)
+      // a warm single-query request: ONE job collects its blocks, the
+      // driver ranks them, and the returned local frame collects jobless
+      IndexSearch.searchWand(idx, Seq(1 -> "w1 w3")).collect()
+      val (frame, jobsOne) = countJobs(IndexSearch.searchWand(idx, Seq(1 -> "w1 w3")))
+      assert(jobsOne == 1, s"warm single-query searchWand ran $jobsOne jobs")
+      val (rows, jobsCollect) = countJobs(frame.collect())
+      assert(jobsCollect == 0 && rows.nonEmpty, s"collect ran $jobsCollect jobs")
+      val (oov, jobsOov) = countJobs(IndexSearch.searchWand(idx, Seq(1 -> "qqqnotthere")).collect())
+      assert(oov.isEmpty && jobsOov == 0, s"all-OOV request ran $jobsOov jobs")
+      // over the bound (summed df > docsPerRange): the range-parallel path
+      val (_, jobsRange) = countJobs(IndexSearch.searchWand(idx,
+        Seq(6 -> "w1 w2 w3 w4 w5"), docsPerRange = idx.stats.nDocs).collect())
+      assert(jobsRange > 1, s"over-bound request ran $jobsRange jobs")
     } finally sc.removeSparkListener(listener)
   }
 
