@@ -20,11 +20,16 @@ import org.apache.spark.sql.functions._
   * Stages and artifacts:
   *   1. docs      → `docs/`      (doc_id, conv_id, turn_idx, role, tool,
   *                                ts, dl, text) — stored fields + norms
-  *   2. tf        → `tfdl/`      (term, doc_id, tf, dl) — the
-  *                                materialized scoring relation
-  *   3. dict      → `dictionary/` (term, shard, df, cf, max_score)
   *                  `stats/`      (n_docs, total_tokens, avgdl, build_id)
+  *   2. tf        → `tfdl/`      (term, doc_id, tf, dl[, positions]) —
+  *                                the materialized scoring relation
+  *   3. dict      → `dictionary/` (term, shard, df, cf, max_score)
   *   4. postings  → `postings/`  encoded blocks partitioned by shard
+  *                  `blockmeta/`  (term, top_block_maxes)
+  *                  `_positional` marker, iff storePositions
+  *
+  * Every index root this job or [[IndexMerge]] writes carries all of
+  * these; readers rely on it and probe for none of them.
   *
   * Every stage appends per-partition lineage rows to `lineage/`:
   * (stage, partition_id, output_rows, checksum, build_id, wall_ms).
@@ -86,7 +91,6 @@ object BuildIndexJob {
   def run(spark: SparkSession, transcripts: DataFrame, root: String,
           buildId: String, cfg: Config = Config()): IndexPaths = {
     val p = IndexPaths(root)
-    val io = cfg.io
     val tail = new AsyncTail
     try {
       runStages(spark, transcripts, p, buildId, cfg, tail)
@@ -105,25 +109,7 @@ object BuildIndexJob {
         .assignDocIds(ingested, stagingDir = s"${p.staging}/docids")
         .withColumn("dl", Analyzer.docLen(col("text")))
         .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
-      // collection stats ride the docs write as observed metrics — the
-      // dict stage previously re-aggregated the whole docs artifact for
-      // them (one full column-pruned pass per build, saved here; guide
-      // §1.2). avgdl = total/n_docs in ONE double division — identical to
-      // Spark's avg() on integral input (whose partial sums over ints are
-      // exact in double). Written BEFORE the stage marker: marker ⇒ stats
-      // present, so a resumed dict stage can always just read it.
-      val obs = org.apache.spark.sql.Observation()
-      io.write(docs.observe(obs,
-          count(when(col("dl") > 0, 1)).as("n"),
-          sum(when(col("dl") > 0, col("dl").cast("long"))).as("t")),
-        p.docs, snapshotId = buildId)
-      val nDocs = Option(obs.get.getOrElse("n", null)).fold(0L)(_.asInstanceOf[Long])
-      val total = Option(obs.get.getOrElse("t", null)).fold(0L)(_.asInstanceOf[Long])
-      import spark.implicits._
-      io.write(Seq((nDocs, total,
-          if (nDocs == 0) 0.0 else total.toDouble / nDocs, buildId))
-        .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
-        snapshotId = buildId)
+      writeDocsAndStats(spark, docs, p, buildId, io)
       Fs.delete(spark, s"${p.staging}/docids")
       // checksum over (key, dl) — dl is derived from text, so it catches
       // content drift without re-reading the text column (which would be
@@ -136,32 +122,13 @@ object BuildIndexJob {
 
     stage(spark, p, "tf", tail) { t0 =>
       val docs = io.read(spark, p.docs)
-      // dl carried through the aggregate key (functionally dependent on
-      // doc_id) — no join back to docs needed. tfdl is an INTERNAL
-      // artifact (dict re-aggregates by term; the postings stage
-      // re-shuffles by (term, salt)), so it is written straight out of the
-      // aggregation exchange: no pre-write repartition, no shard
-      // partitioning — the round-1 extra shuffle here bought nothing
-      // downstream. Only `postings/` (query-facing) is shard-partitioned.
-      val tfdl =
-        if (!cfg.storePositions)
-          docs
-            .select(col("doc_id"), col("dl"), explode(Analyzer.tokens(col("text"))).as("term"))
-            .groupBy("term", "doc_id", "dl")
-            .agg(count(lit(1)).cast("int").as("tf"))
-            .select("term", "doc_id", "tf", "dl")
-        else
-          // positional variant (A3 with positions kept): posexplode gives
-          // the token index; the sorted per-(term, doc) position list rides
-          // the same aggregate (no extra shuffle) and feeds the per-block
-          // positions stream
-          docs
-            .select(col("doc_id"), col("dl"),
-              posexplode(Analyzer.tokens(col("text"))).as(Seq("_pos", "term")))
-            .groupBy("term", "doc_id", "dl")
-            .agg(count(lit(1)).cast("int").as("tf"),
-              sort_array(collect_list(col("_pos").cast("long"))).as("positions"))
-            .select("term", "doc_id", "tf", "dl", "positions")
+      // tfdl is an INTERNAL artifact (dict re-aggregates by term; the
+      // postings stage re-shuffles by (term, salt)), so it is written
+      // straight out of the aggregation exchange: no pre-write
+      // repartition, no shard partitioning — the round-1 extra shuffle
+      // here bought nothing downstream. Only `postings/` (query-facing)
+      // is shard-partitioned.
+      val tfdl = termFreqs(docs, cfg.storePositions)
       io.write(tfdl, p.tfdl, snapshotId = buildId)
       lineage(spark, p, "tf", buildId, t0, tail = tail, perPartition =
         io.read(spark, p.tfdl)
@@ -172,8 +139,57 @@ object BuildIndexJob {
 
   }
 
-  /** The dict + postings stages, given already-persisted docs/tfdl
-    * artifacts — shared by the batch job and [[IndexMerge]]. */
+  /** Write the `docs/` artifact and `stats/` — the only place the stats
+    * rows are built. The collection stats ride the docs write as observed
+    * metrics, so no stage re-aggregates the docs artifact for them (one
+    * full column-pruned pass per build saved; guide §1.2). avgdl =
+    * total/n_docs in ONE double division — identical to Spark's avg() on
+    * integral input (whose partial sums over ints are exact in double).
+    * The batch job calls this inside its docs stage, BEFORE the stage
+    * marker: marker ⇒ stats present, so the dict stage just reads it. */
+  private[index] def writeDocsAndStats(spark: SparkSession, docs: DataFrame,
+                                       p: IndexPaths, buildId: String,
+                                       io: TableIO): Unit = {
+    val obs = org.apache.spark.sql.Observation()
+    io.write(docs.observe(obs,
+        count(when(col("dl") > 0, 1)).as("n"),
+        sum(when(col("dl") > 0, col("dl").cast("long"))).as("t")),
+      p.docs, snapshotId = buildId)
+    val nDocs = Option(obs.get.getOrElse("n", null)).fold(0L)(_.asInstanceOf[Long])
+    val total = Option(obs.get.getOrElse("t", null)).fold(0L)(_.asInstanceOf[Long])
+    import spark.implicits._
+    io.write(Seq((nDocs, total,
+        if (nDocs == 0) 0.0 else total.toDouble / nDocs, buildId))
+      .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
+      snapshotId = buildId)
+  }
+
+  /** The scoring relation of analyzed `docs` (doc_id, dl, text):
+    * (term, doc_id, tf, dl), plus the doc's sorted token `positions` of
+    * the term when `positional`. dl rides the aggregate key (functionally
+    * dependent on doc_id) — no join back to docs needed. */
+  private[index] def termFreqs(docs: DataFrame, positional: Boolean): DataFrame =
+    if (!positional)
+      docs
+        .select(col("doc_id"), col("dl"), explode(Analyzer.tokens(col("text"))).as("term"))
+        .groupBy("term", "doc_id", "dl")
+        .agg(count(lit(1)).cast("int").as("tf"))
+        .select("term", "doc_id", "tf", "dl")
+    else
+      // posexplode gives the token index; the sorted per-(term, doc)
+      // position list rides the same aggregate (no extra shuffle) and
+      // feeds the per-block positions stream
+      docs
+        .select(col("doc_id"), col("dl"),
+          posexplode(Analyzer.tokens(col("text"))).as(Seq("_pos", "term")))
+        .groupBy("term", "doc_id", "dl")
+        .agg(count(lit(1)).cast("int").as("tf"),
+          sort_array(collect_list(col("_pos").cast("long"))).as("positions"))
+        .select("term", "doc_id", "tf", "dl", "positions")
+
+  /** The dict + postings stages, given already-persisted docs, stats
+    * ([[writeDocsAndStats]]) and tfdl artifacts — shared by the batch job
+    * and [[IndexMerge]]. */
   def runFromTf(spark: SparkSession, p: IndexPaths, buildId: String,
                 cfg: Config = Config()): Unit = {
     val tail = new AsyncTail
@@ -186,25 +202,8 @@ object BuildIndexJob {
                               tail: AsyncTail): Unit = {
     val io = cfg.io
     stage(spark, p, "dict", tail) { t0 =>
-      // stats/ is written by the docs stage (observed metrics on the docs
-      // write) or by [[IndexMerge.run]]'s docs write; compute-and-write
-      // here only for a caller that persisted docs/tfdl through neither
-      // (keeps runFromTf self-sufficient on bare artifacts)
-      val stats =
-        if (Fs.exists(spark, p.stats)) readStats(spark, p, io)
-        else {
-          val docs = io.read(spark, p.docs)
-          val st = docs.where(col("dl") > 0).agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("dl").cast("long")).as("total_tokens"),
-            avg(col("dl")).as("avgdl")).head()
-          val s = Stats(st.getLong(0), st.getLong(1), st.getDouble(2))
-          import spark.implicits._
-          io.write(Seq((s.nDocs, s.totalTokens, s.avgdl, buildId))
-            .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
-            snapshotId = buildId)
-          s
-        }
+      // stats/ is written with the docs artifact ([[writeDocsAndStats]])
+      val stats = readStats(spark, p, io)
       val tfdl = io.read(spark, p.tfdl)
       // One pass: df/cf plus an UPPER BOUND on the term's best score,
       // score(max_tf, min_dl) — BM25 is monotone ↑tf, ↓dl, so this bounds

@@ -108,22 +108,11 @@ object IndexMerge {
     }.reduce(_ unionByName _)
     // fresh dense global ids over the merged key set; dl is already
     // stored, so the docs artifact is a pure column re-shape of the
-    // merged rows (stats observed on the write, as everywhere)
+    // merged rows
     val withIds = IndexBuild.assignDocIds(merged, stagingDir = s"${p.staging}/docids")
     val docs = withIds
       .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
-    val obs = org.apache.spark.sql.Observation()
-    cfg.io.write(docs.observe(obs,
-        count(when(col("dl") > 0, 1)).as("n"),
-        sum(when(col("dl") > 0, col("dl").cast("long"))).as("t")),
-      p.docs, snapshotId = buildId)
-    val nDocs = Option(obs.get.getOrElse("n", null)).fold(0L)(_.asInstanceOf[Long])
-    val total = Option(obs.get.getOrElse("t", null)).fold(0L)(_.asInstanceOf[Long])
-    import spark.implicits._
-    cfg.io.write(Seq((nDocs, total,
-        if (nDocs == 0) 0.0 else total.toDouble / nDocs, buildId))
-      .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
-      snapshotId = buildId)
+    BuildIndexJob.writeDocsAndStats(spark, docs, p, buildId, cfg.io)
     graft.sources.Fs.delete(spark, s"${p.staging}/docids")
     // id map from the PERSISTED docs (the staging files are gone) joined
     // back to the parts' key→old-id rows — keys only, no text
@@ -179,24 +168,11 @@ object IndexMerge {
       .unionByName(newTurns.select(cols.map(col): _*))
 
     val p = BuildIndexJob.IndexPaths(newRoot)
-    // docs stage over the merged corpus (fresh dense ids); collection
-    // stats ride the write as observed metrics (same as the batch job's
-    // docs stage — saves the dict stage's full docs re-aggregation)
+    // docs stage over the merged corpus (fresh dense ids)
     val docs = IndexBuild.assignDocIds(merged, stagingDir = s"${p.staging}/docids")
       .withColumn("dl", Analyzer.docLen(col("text")))
       .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
-    val obs = org.apache.spark.sql.Observation()
-    cfg.io.write(docs.observe(obs,
-        count(when(col("dl") > 0, 1)).as("n"),
-        sum(when(col("dl") > 0, col("dl").cast("long"))).as("t")),
-      p.docs, snapshotId = buildId)
-    val nDocs = Option(obs.get.getOrElse("n", null)).fold(0L)(_.asInstanceOf[Long])
-    val total = Option(obs.get.getOrElse("t", null)).fold(0L)(_.asInstanceOf[Long])
-    import spark.implicits._
-    cfg.io.write(Seq((nDocs, total,
-        if (nDocs == 0) 0.0 else total.toDouble / nDocs, buildId))
-      .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
-      snapshotId = buildId)
+    BuildIndexJob.writeDocsAndStats(spark, docs, p, buildId, cfg.io)
     graft.sources.Fs.delete(spark, s"${p.staging}/docids")
     // downstream steps must read the PERSISTED docs — the lazy `docs` plan
     // still references the just-deleted doc-id staging files
@@ -226,25 +202,11 @@ object IndexMerge {
       .select(tfCols.map(col): _*)
     val newKeys = newTurns.select(key.map(col): _*)
     val freshDocs = docsP.join(newKeys, key, "left_semi")
-    val freshTf =
-      if (!cfg.storePositions)
-        freshDocs
-          .select(col("doc_id"), col("dl"), explode(Analyzer.tokens(col("text"))).as("term"))
-          .groupBy("term", "doc_id", "dl")
-          .agg(count(lit(1)).cast("int").as("tf"))
-          .select(tfCols.map(col): _*)
-      else
-        freshDocs
-          .select(col("doc_id"), col("dl"),
-            posexplode(Analyzer.tokens(col("text"))).as(Seq("_pos", "term")))
-          .groupBy("term", "doc_id", "dl")
-          .agg(count(lit(1)).cast("int").as("tf"),
-            sort_array(collect_list(col("_pos").cast("long"))).as("positions"))
-          .select(tfCols.map(col): _*)
+    val freshTf = BuildIndexJob.termFreqs(freshDocs, cfg.storePositions)
     val tfdl = remap.unionByName(freshTf).select(tfCols.map(col): _*)
     cfg.io.write(tfdl, p.tfdl, snapshotId = buildId)
 
-    // dict + stats + postings: identical to the batch job's stages
+    // dict + postings: identical to the batch job's stages
     BuildIndexJob.runFromTf(spark, p, buildId, cfg)
     p
   }

@@ -15,13 +15,18 @@ import org.apache.spark.sql.functions._
   * Layout under a segmented root:
   * {{{
   *   root/segments/<seg>/   one full [[BuildIndexJob]] index over ONE batch
-  *                          (doc ids dense within the segment only)
-  *   root/tombstones/       (conv_id, turn_idx, upto:int) — a row kills the
+  *                          (doc ids dense within the segment only) plus
+  *                          its keymeta/ sidecar and keymeta/_NBUCKETS
+  *   root/tombstones/<t>/   (conv_id, turn_idx, upto:int) — a row kills the
   *                          key's instance in every segment with ordinal
   *                          < upto (ordinal = position in the manifest)
+  *   root/dfdeltas/<t>/     (term, killed) — the df the tombstone dir of
+  *                          the same name takes from each term
   *   root/MANIFEST          atomically-published segment list + live
   *                          collection stats (the commit point)
   * }}}
+  * Every writer produces this whole layout before the manifest publish
+  * that commits it, so readers check for the MANIFEST only.
   *
   * Cost model (the contract MergeSpec asserts): an append WRITES O(batch)
   * bytes — one new segment plus tombstone rows only for keys that actually
@@ -182,36 +187,23 @@ object SegmentedIndex {
     Fs.writeString(spark, s"$sp/keymeta/_NBUCKETS", kb.toString)
   }
 
-  private def keymetaBuckets(spark: SparkSession, sp: String): Option[Int] = {
-    val p = s"$sp/keymeta/_NBUCKETS"
-    if (Fs.exists(spark, p)) Some(Fs.readString(spark, p).trim.toInt) else None
-  }
-
   /** Older-segment doc metadata (seg ordinal, key, dl, distinct terms)
     * restricted to rows whose key COULD be in `keys`: each segment's
     * keymeta read prunes to the key-hash buckets the batch touches
     * (partition pruning on the bucket directory column — the same trick
-    * as the term shards). Segments without a keymeta sidecar, or with a
-    * pre-terms one, fall back to the full docs metadata scan (terms
-    * re-tokenized from the stored text — correct, just not
-    * bucket-pruned). */
+    * as the term shards). Every committed segment carries a keymeta
+    * sidecar with `terms` and its `_NBUCKETS` count ([[writeKeymeta]] runs
+    * before each manifest publish); reading the counts is a driver-side
+    * file read per segment, no Spark job. */
   private def segDocsMetaFor(spark: SparkSession, root: String, m: Manifest,
-                             keys: DataFrame,
-                             cfg: BuildIndexJob.Config): Option[DataFrame] = {
-    // segment → (keymeta bucket count, has-terms) for segments with a
-    // usable sidecar; driver-side file checks only, no Spark jobs
-    val kbByOrd: Map[Int, Int] = m.segments.zipWithIndex.flatMap {
-      case (seg, ord) =>
-        val sp = segPath(root, seg)
-        keymetaBuckets(spark, sp)
-          .filter(_ => spark.read.parquet(s"$sp/keymeta").columns.contains("terms"))
-          .map(ord -> _)
-    }.toMap
+                             keys: DataFrame): Option[DataFrame] = {
+    val kbByOrd: Seq[Int] = m.segments.map(seg =>
+      Fs.readString(spark, s"${segPath(root, seg)}/keymeta/_NBUCKETS").trim.toInt)
     // ONE fused job computes the batch's touched buckets for EVERY
     // distinct bucket count (the per-segment collect issued one
     // sequential driver job per segment per append — O(segments) fixed
     // latency). Driver boundary: ≤ Σ_kb min(|batch keys|, kb) ids.
-    val distinctKbs = kbByOrd.values.toSeq.distinct
+    val distinctKbs = kbByOrd.distinct
     val touchedByKb: Map[Int, Set[Int]] =
       if (distinctKbs.isEmpty) Map.empty
       else keys.select(explode(array(distinctKbs.map(kb =>
@@ -219,20 +211,11 @@ object SegmentedIndex {
         .select(col("x.kb").as("kb"), col("x.b").as("b")).distinct()
         .collect().groupBy(_.getInt(0)).view
         .mapValues(_.map(_.getInt(1)).toSet).toMap
-    m.segments.zipWithIndex.map { case (seg, ord) =>
-      val sp = segPath(root, seg)
-      def fromDocs = cfg.io.read(spark, s"$sp/docs")
-        .select(col("conv_id"), col("turn_idx"), col("dl"),
-          array_distinct(graft.analysis.Analyzer.tokens(col("text"))).as("terms"))
-      val base = kbByOrd.get(ord) match {
-        case Some(kb) =>
-          val km = spark.read.parquet(s"$sp/keymeta")
-          val touched = touchedByKb.getOrElse(kb, Set.empty).toSeq
-          if (touched.size < kb) km.where(col("kb").isin(touched: _*))
-          else km
-        case None => fromDocs
-      }
-      base.select(col("conv_id"), col("turn_idx"), col("dl"), col("terms"))
+    m.segments.zip(kbByOrd).zipWithIndex.map { case ((seg, kb), ord) =>
+      val km = spark.read.parquet(s"${segPath(root, seg)}/keymeta")
+      val touched = touchedByKb.getOrElse(kb, Set.empty).toSeq
+      (if (touched.size < kb) km.where(col("kb").isin(touched: _*)) else km)
+        .select(col("conv_id"), col("turn_idx"), col("dl"), col("terms"))
         .withColumn("seg_ord", lit(ord))
     }.reduceOption(_ unionByName _)
   }
@@ -332,7 +315,7 @@ object SegmentedIndex {
         // (one tiny job per segment) AND the kill scan below
         val tombKeys = pending.ingestedKeys
           .unionByName(pending.delKeys).distinct().cache()
-        try segDocsMetaFor(spark, root, old, tombKeys, cfg) match {
+        try segDocsMetaFor(spark, root, old, tombKeys) match {
           case None => (0L, 0L, false)
           case Some(olderMeta) =>
             val oldTombs = readTombstones(spark, root, old)
@@ -465,10 +448,7 @@ object SegmentedIndex {
         // materialize eagerly (≤ |queries| × k rows — driver-safe by
         // construction) so the cached posting relation can be dropped
         // before returning; callers get a small local frame
-        try {
-          val rows = out.collect()
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-        } finally cached.unpersist()
+        try IndexSearch.localize(spark, out) finally cached.unpersist()
     }
 
   /** The lazy, uncached plan — exposed so plan-shape tests can assert
@@ -577,18 +557,6 @@ object SegmentedIndex {
         round(col("_score"), Bm25.OutScale).as("score"))
   }
 
-  /** Materialize a driver-safe result (≤ |queries|·k rows by
-    * construction) so internal caches can be dropped before returning. */
-  private def localize(spark: SparkSession, out: DataFrame): DataFrame = {
-    val rows = out.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  }
-
-  /** Materialize a result of UNBOUNDED cardinality (e.g. queries ×
-    * facet-cardinality) to temp parquet instead of the driver — same
-    * cache-lifecycle purpose as [[localize]] without the driver-OOM risk
-    * on a high-cardinality facet column (the
-    * [[graft.ops.Similarity]] materializedCandidates idiom). */
   /** Land a facet-shaped result (queries × facet cardinality — too big
     * to collect, per the round-4 driver-OOM advisory) in temp parquet and
     * return a scan over it, so internal caches can drop before the caller
@@ -647,7 +615,7 @@ object SegmentedIndex {
           count(lit(1)).as("n_children"))
       val w = Window.partitionBy("query_id")
         .orderBy(round(col("_score"), Bm25.RankScale).desc, col("conv_id").asc)
-      localize(spark, agged
+      IndexSearch.localize(spark, agged
         .withColumn("rank", row_number().over(w).cast("int"))
         .where(col("rank") <= k)
         .select(col("query_id"), col("rank"), col("conv_id").as("parent"),
@@ -697,7 +665,7 @@ object SegmentedIndex {
         .where(col("_must_matched") === col("_n_must"))
       val mmOk = if (mm == 0) mustOk
         else mustOk.where(col("_should_matched") >= mm)
-      localize(spark, rankKeys(mmOk
+      IndexSearch.localize(spark, rankKeys(mmOk
         .join(negMatch, Seq("query_id", "conv_id", "turn_idx"), "left_anti"), k))
     } finally all.unpersist()
   }
@@ -735,7 +703,7 @@ object SegmentedIndex {
           lit(m.nDocs), lit(m.avgdl)))
         .groupBy("query_id", "conv_id", "turn_idx")
         .agg(sum(col("_s")).as("_score"))
-      localize(spark, rankKeys(scored, k))
+      IndexSearch.localize(spark, rankKeys(scored, k))
     } finally all.unpersist()
   }
 
@@ -779,7 +747,7 @@ object SegmentedIndex {
     try {
       val keep = liveDocAttrs(spark, root, m, cfg)
         .where(filter).select("conv_id", "turn_idx")
-      localize(spark, rankKeys(disjunctiveScores(all, qt, m)
+      IndexSearch.localize(spark, rankKeys(disjunctiveScores(all, qt, m)
         .join(keep, Seq("conv_id", "turn_idx"), "left_semi"), k))
     } finally all.unpersist()
   }
@@ -1100,7 +1068,7 @@ object SegmentedIndex {
             (col("_idf") * col("_pf") /
               (col("_pf") + lit(Bm25.K1) * (lit(1.0) - lit(Bm25.B) +
                 lit(Bm25.B) * col("dl") / lit(m.avgdl)))).as("_score"))
-        localize(spark, rankKeys(scored, k))
+        IndexSearch.localize(spark, rankKeys(scored, k))
       } finally cand.unpersist()
     } finally thin.unpersist()
   }
@@ -1125,10 +1093,9 @@ object SegmentedIndex {
     *
     *  1. EXACT LIVE df per term (BM25's idf input): Σ over segments of
     *     the segment dictionary's build-time df, minus the per-append
-    *     kill deltas (`dfdeltas/` — written by [[append]] from the killed
-    *     instances' keymeta term lists). Metadata only. A legacy root
-    *     with tombstones but no delta sidecars falls back to the
-    *     exhaustive [[search]] (still exact, just unpruned).
+    *     kill deltas (`dfdeltas/<tomb>` — written beside every committed
+    *     tombstone dir by [[append]] and [[mergeAdjacent]] from the killed
+    *     instances' keymeta term lists). Metadata only.
     *  2. UPPER-BOUND block maxes under the live scoring function: a
     *     stored max was computed with the segment's build-time
     *     (df_b, N_b, avgdl_b); for the live function (df_l, N_l, avgdl_l)
@@ -1141,8 +1108,8 @@ object SegmentedIndex {
     *     (idf_l/idf_b)·max(1, avgdl_l/avgdl_b) therefore yields a valid
     *     upper bound — over-estimates only inhibit skipping, never break
     *     exactness.
-    *  3. A θ SEED from the blockmeta top maxes scaled by the LOWER
-    *     factor (idf_l/idf_b)·min(1, avgdl_l/avgdl_b) — used only when
+    *  3. A θ SEED from the segments' `blockmeta/` top maxes scaled by
+    *     the LOWER factor (idf_l/idf_b)·min(1, avgdl_l/avgdl_b) — used only when
     *     the manifest has NO tombstones: then every stored max's doc is
     *     live and keys are globally distinct (an upsert always writes a
     *     tombstone), so the k-th largest corrected-lower max of a term
@@ -1183,8 +1150,6 @@ object SegmentedIndex {
     val allTerms = parsed.flatMap(_._2).distinct
 
     val deltaDirs = m.tombs.map(t => dfDeltaPath(root, t))
-    if (!deltaDirs.forall(d => Fs.exists(spark, d)))
-      return search(spark, root, queries, k, cfg) // legacy root: exhaustive
     val killedByTerm: Map[String, Long] =
       if (deltaDirs.isEmpty) Map.empty
       else deltaDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
@@ -1206,7 +1171,7 @@ object SegmentedIndex {
     // collect per segment, i.e. O(segments) driver round trips per batch.
     case class SegMeta(ord: Int, paths: BuildIndexJob.IndexPaths,
         stats: graft.index.IndexBuild.Stats,
-        rows: Map[String, (Long, Int, Option[Seq[Double]])])
+        rows: Map[String, (Long, Int, Seq[Double])])
     val statsByOrd: Map[Int, graft.index.IndexBuild.Stats] =
       m.segments.zipWithIndex.map { case (seg, ord) =>
         cfg.io.read(spark, BuildIndexJob.IndexPaths(segPath(root, seg)).stats)
@@ -1217,12 +1182,9 @@ object SegmentedIndex {
           r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     val dictRows = m.segments.zipWithIndex.map { case (seg, ord) =>
       val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-      val d0 = cfg.io.read(spark, p.dictionary)
-      val d1 =
-        if (Fs.exists(spark, p.blockmeta))
-          d0.join(cfg.io.read(spark, p.blockmeta), Seq("term"), "left")
-        else d0.withColumn("top_block_maxes", lit(null).cast("array<double>"))
-      d1.where(col("term").isInCollection(allTerms))
+      cfg.io.read(spark, p.dictionary)
+        .join(cfg.io.read(spark, p.blockmeta), Seq("term"), "left")
+        .where(col("term").isInCollection(allTerms))
         .select(lit(ord).as("_ord"), col("term"), col("df"), col("shard"),
           col("top_block_maxes"))
     }.reduce(_ unionByName _).collect()
@@ -1231,7 +1193,7 @@ object SegmentedIndex {
         SegMeta(ord, BuildIndexJob.IndexPaths(segPath(root, m.segments(ord))),
           statsByOrd(ord),
           rows.map { r =>
-            val tm = if (!r.isNullAt(4)) Some(r.getSeq[Double](4).toSeq) else None
+            val tm = if (r.isNullAt(4)) Seq.empty[Double] else r.getSeq[Double](4).toSeq
             r.getString(1) -> ((r.getLong(2), r.getInt(3), tm))
           }.toMap)
       }
@@ -1261,9 +1223,8 @@ object SegmentedIndex {
       else {
         val perTermKth = liveTerms.flatMap { t =>
           val lows = segs.flatMap { sm =>
-            sm.rows.get(t).flatMap(_._3) match {
-              case Some(tm) => val cLo = factors(sm, t)._2; tm.map(_ * cLo)
-              case None => Seq.empty[Double]
+            sm.rows.get(t).fold(Seq.empty[Double]) { r =>
+              val cLo = factors(sm, t)._2; r._3.map(_ * cLo)
             }
           }.sorted(Ordering[Double].reverse)
           if (lows.size >= k) Some(t -> lows(k - 1)) else None
@@ -1332,7 +1293,7 @@ object SegmentedIndex {
         .withColumn("seg_ord", lit(ord))
     }.reduce(_ unionByName _)
     val live = liveFilter(keyed, tombs)
-    localize(spark, rankKeys(
+    IndexSearch.localize(spark, rankKeys(
       candidates.join(live, Seq("seg_ord", "doc_id"))
         .select("query_id", "conv_id", "turn_idx", "_score"), k))
   }
@@ -1411,7 +1372,7 @@ object SegmentedIndex {
         .as("_ps"))
     val texts = perSeg.map(_._2).reduce(_ unionByName _)
     val toks = graft.analysis.Analyzer.tokens(col("text"))
-    localize(spark, hits
+    IndexSearch.localize(spark, hits
       .join(matchPos, Seq("query_id", "conv_id", "turn_idx"))
       .join(texts, Seq("conv_id", "turn_idx"))
       .select(col("query_id"), col("rank"), col("conv_id"), col("turn_idx"),
@@ -1612,7 +1573,7 @@ object SegmentedIndex {
       .groupBy("conv_id", "turn_idx").agg(max("upto").as("upto"))
     val interim = Manifest(newSegs, Seq.empty, m.nDocs, m.totalTokens)
     val tombKeys = remapped.select(Key.map(col): _*)
-    val newTombs = segDocsMetaFor(spark, root, interim, tombKeys, cfg) match {
+    val newTombs = segDocsMetaFor(spark, root, interim, tombKeys) match {
       case None => Seq.empty[String]
       case Some(meta) =>
         // instances STILL PHYSICALLY PRESENT that the remapped set kills

@@ -24,21 +24,20 @@ object IndexSearch {
     * resolve their files once, so reopen after an in-place rebuild.
     *
     * Driver memory: one [[ResidentDict]] per open index, built on first
-    * use from this instance's own `dictionary` and `blockmeta` — it grows
-    * with the vocabulary, not the corpus. Besides it a request keeps at
-    * most its own dictionary rows, and on the single-range path
+    * use from this instance's own `dictionary` and the root's `blockmeta/`
+    * — it grows with the vocabulary, not the corpus. Besides it a request
+    * keeps at most its own dictionary rows, and on the single-range path
     * ([[residentTopK]]) the encoded blocks of ≤ docsPerRange postings.
-    *
-    * `blockmeta` holds the per-term top block maxes when the index carries
-    * them; the plain `dictionary` stays unjoined for every other probe. */
+    * Only the resident dictionary joins `blockmeta/`; the plain
+    * `dictionary` relation stays unjoined for every other probe. */
   final case class OpenIndex(paths: IndexPaths, dictionary: DataFrame,
                              stats: Stats, spark: SparkSession,
-                             io: graft.sources.TableIO,
-                             blockmeta: Option[DataFrame] = None) {
+                             io: graft.sources.TableIO) {
     /** The postings relation, resolved (file listing, schema) once. */
     lazy val postings: DataFrame = io.read(spark, paths.postings)
     /** term → df, shard, top block maxes, collected on first use. */
-    lazy val resident: ResidentDict = ResidentDict.load(dictionary, blockmeta)
+    lazy val resident: ResidentDict =
+      ResidentDict.load(dictionary, io.read(spark, paths.blockmeta))
   }
 
   /** One posting block routed to one (query, doc-range) group (WAND
@@ -72,26 +71,22 @@ object IndexSearch {
 
   /** Materialize a driver-safe (≤ |queries|·k rows by construction)
     * result into a local frame so internal caches can be dropped before
-    * returning — the same idiom as SegmentedIndex's localize. */
-  private[search] def localize(spark: SparkSession, out: DataFrame): DataFrame = {
+    * returning. */
+  private[graft] def localize(spark: SparkSession, out: DataFrame): DataFrame = {
     val rows = out.collect()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
+  /** Open the index root written by [[BuildIndexJob]] (or
+    * [[graft.index.IndexMerge]]): reads its stats and resolves its
+    * dictionary. Every writer stores `blockmeta/` beside the dictionary;
+    * the WAND/MaxScore paths read it on first use and fail on a root
+    * without it. */
   def open(spark: SparkSession, root: String,
            io: graft.sources.TableIO = graft.sources.ParquetTableIO): OpenIndex = {
     val p = IndexPaths(root)
-    // per-term top block maxes (blockmeta) are carried SEPARATELY and
-    // joined onto the dictionary only by the WAND seed paths (the
-    // resident dictionary, once; wandBlocks' probe, per batch). An older
-    // index without blockmeta runs them unseeded or with wandBlocks'
-    // window-job seed.
-    val bm =
-      if (graft.sources.Fs.exists(spark, p.blockmeta))
-        Some(io.read(spark, p.blockmeta))
-      else None
     OpenIndex(p, io.read(spark, p.dictionary),
-      BuildIndexJob.readStats(spark, p, io), spark, io, bm)
+      BuildIndexJob.readStats(spark, p, io), spark, io)
   }
 
   /** Decoded posting rows of the given (query_id, term) pairs, pruned to
@@ -1799,38 +1794,17 @@ object IndexSearch {
       attrs, field, k, expandRows)
   }
 
-  /** Sampled-probe verdicts for LEGACY marker-less roots only — cached so
-    * repeated phrase calls don't re-run the probe job. Marker-bearing
-    * roots never enter this map, so deleting and rebuilding a root WITH
-    * positions takes effect immediately (the marker is re-checked every
-    * call — a cheap filesystem stat, no Spark job). Residual staleness is
-    * confined to a marker-less legacy root rebuilt in place within one
-    * JVM, which no current builder produces. */
-  private val sampledVerdicts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Fail fast on a non-positional index: poss = null would otherwise
     * null out the position chain and SILENTLY return zero hits for
-    * phrases the corpus contains. Order of evidence: the build-time
-    * `_positional` marker (authoritative, re-checked every call — no
-    * Spark job), then the postings schema (a pre-positions index without
-    * a `poss` column fails here with the actionable message instead of an
-    * AnalysisException), then one sampled row (legacy positional indexes
-    * without the marker; an empty index passes; verdict cached per root). */
-  private[search] def requirePositional(idx: OpenIndex): Unit = {
-    val ok = graft.sources.Fs.exists(idx.spark, idx.paths.positionalMarker) ||
-      sampledVerdicts.computeIfAbsent(idx.paths.root, _ => {
-        val postings = idx.postings
-        if (!postings.schema.fieldNames.contains("poss")) java.lang.Boolean.FALSE
-        else {
-          val sample = postings.select("poss").limit(1).collect()
-          java.lang.Boolean.valueOf(sample.isEmpty || !sample(0).isNullAt(0))
-        }
-      }).booleanValue()
-    require(ok,
+    * phrases the corpus contains. Evidence is the build-time
+    * `_positional` marker, which every writer stores exactly when it
+    * keeps positions — re-checked every call (a filesystem stat, no Spark
+    * job), so a root rebuilt in place with positions takes effect
+    * immediately. */
+  private[search] def requirePositional(idx: OpenIndex): Unit =
+    require(graft.sources.Fs.exists(idx.spark, idx.paths.positionalMarker),
       "searchPhrase requires a positional index — rebuild with " +
         "Config(storePositions = true)")
-  }
 
   /** Driver-side phrase-batch plan: per live query its analyzed terms (in
     * phrase order), idf sum, rarest term, and the touched shards. Built
@@ -2119,7 +2093,13 @@ object IndexSearch {
     * query the rare term's high seed erases the hot term's blocks
     * everywhere the rare term is absent. Both passes are metadata-only
     * (columnar scan of the pruned shards, no binary columns). Skipped when
-    * the corpus has a single range (sandbox scale): zero extra jobs. */
+    * the corpus has a single range (sandbox scale): zero extra jobs.
+    *
+    * SEED SOURCE: for k ≤ [[graft.index.PostingBlocks.TopBlockMaxes]] the
+    * resident dictionary's stored top block maxes give θ_seed with no
+    * Spark job, and it is passed even when the prune is skipped. Past the
+    * stored maxes the prune derives it with one per-batch metadata window
+    * job over the routed blocks; without the prune the seed is −∞. */
   private[graft] def wandBlocks(idx: OpenIndex, queries: Seq[(Int, String)],
                                 k: Int, docsPerRange: Long,
                                 prune: Boolean = true)
@@ -2133,9 +2113,9 @@ object IndexSearch {
     val qd = qtRows.map { case (qid, t, r) => (qid, t, dict.df(r)) }
       .toDF("query_id", "term", "df")
     // θ_seed(q) from the stored top block maxes ([[ResidentDict.seed]]);
-    // None when the index has none or k passes them
+    // None when k passes them
     val driverSeeds: Option[Map[Int, Double]] =
-      if (idx.blockmeta.isEmpty || k > graft.index.PostingBlocks.TopBlockMaxes) None
+      if (k > graft.index.PostingBlocks.TopBlockMaxes) None
       else Some(qtRows.groupMap(_._1)(_._3)
         .map { case (qid, rows) => qid -> dict.seed(rows, k) }
         .filter(_._2 > Double.NegativeInfinity))
@@ -2165,14 +2145,13 @@ object IndexSearch {
 
     val (routed, seeds) =
       if (!prune || nRanges < MinRangesForPrune)
-        // the θ seed itself is free when blockmeta exists — pass it even
-        // when the range prune is gated off (topKRange starts its heap
-        // at a true lower bound; results unchanged, work only shrinks)
+        // the stored θ seed is free — pass it even when the range prune
+        // is gated off (topKRange starts its heap at a true lower bound;
+        // results unchanged, work only shrinks)
         (routed0, driverSeeds.getOrElse(Map.empty[Int, Double]))
       else {
         val seedMap = driverSeeds.getOrElse {
-          // legacy index without blockmeta (or k beyond the stored top
-          // maxes): per-batch metadata window job, as before
+          // k beyond the stored top maxes: per-batch metadata window job
           import org.apache.spark.sql.expressions.Window
           val wqt = Window.partitionBy("query_id", "term")
             .orderBy(col("block_max_score").desc)
@@ -2287,9 +2266,9 @@ object IndexSearch {
     * (round(score,RankScale) DESC, doc ASC), so ranks are assigned here and
     * the result is a local frame whose `collect` runs no job. A batch with
     * only out-of-vocabulary terms runs no job at all. The seed is −∞ when
-    * start + k passes the stored top block maxes or the index has no
-    * blockmeta — the answer is exact either way. None when the batch does
-    * not fit: the caller takes the range-parallel path. */
+    * start + k passes the stored top block maxes — the answer is exact
+    * either way. None when the batch does not fit: the caller takes the
+    * range-parallel path. */
   private def residentTopK(idx: OpenIndex, queries: Seq[(Int, String)], k: Int,
                            docsPerRange: Long, start: Int,
                            traverse: BlockMaxWand.RangeTopK): Option[DataFrame] = {

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** The term dictionary of one open index joined with its blockmeta, held
   * on the driver as compact arrays sorted by term: df, shard and the
@@ -27,7 +26,7 @@ final class ResidentDict private (terms: Array[String], dfs: Array[Long],
   def shard(row: Int): Int = shards(row)
 
   /** k-th largest stored block max of the row's term; −∞ when fewer than
-    * k are stored (k past the stored maxes, few blocks, or no blockmeta). */
+    * k are stored (k past the stored maxes, or the term has fewer blocks). */
   def kthMax(row: Int, k: Int): Double = {
     val i = maxStart(row) + k - 1
     if (k >= 1 && i < maxStart(row + 1)) maxes(i) else Double.NegativeInfinity
@@ -45,16 +44,13 @@ object ResidentDict {
 
   /** Collect `dictionary` (term, df, shard) left-joined with `blockmeta`
     * (term, top_block_maxes) — Spark jobs run once per open index. */
-  def load(dictionary: DataFrame, blockmeta: Option[DataFrame]): ResidentDict = {
-    val dict = dictionary.select("term", "df", "shard")
-    val joined = blockmeta match {
-      case Some(bm) => dict.join(bm.select("term", "top_block_maxes"), Seq("term"), "left")
-      case None => dict.withColumn("top_block_maxes", lit(null).cast("array<double>"))
-    }
-    val rows = joined.collect().map { r =>
-      (r.getString(0), r.getLong(1), r.getInt(2),
-        if (r.isNullAt(3)) Seq.empty[Double] else r.getSeq[Double](3))
-    }.sortBy(_._1)
+  def load(dictionary: DataFrame, blockmeta: DataFrame): ResidentDict = {
+    val rows = dictionary.select("term", "df", "shard")
+      .join(blockmeta.select("term", "top_block_maxes"), Seq("term"), "left")
+      .collect().map { r =>
+        (r.getString(0), r.getLong(1), r.getInt(2),
+          if (r.isNullAt(3)) Seq.empty[Double] else r.getSeq[Double](3))
+      }.sortBy(_._1)
     val maxStart = rows.iterator.map(_._4.size).scanLeft(0)(_ + _).toArray
     new ResidentDict(rows.map(_._1), rows.map(_._2), rows.map(_._3),
       maxStart, rows.flatMap(_._4))

@@ -43,17 +43,15 @@ object TopKParity extends Assertions {
     val d = idx.resident
     assert(Seq("w1", "w2", "w3", "w4", "w5").map(t => d.df(d.row(t))).sum > idx.stats.nDocs)
     val hotExh = rows(IndexSearch.search(idx, hot))
-    // the legacy view drops the stored maxes: the driver path runs
-    // unseeded, the range path seeds from a window job; tiny ranges force
-    // the range-parallel path, with block spans across range boundaries
-    for ((view, name, ranged) <- Seq((idx, "blockmeta", Seq(7L, 100L)),
-                                     (idx.copy(blockmeta = None), "legacy", Seq(7L)))) {
-      for ((k, want) <- exh; dpr <- default +: ranged)
-        assert(rows(engine(view, queries, k, dpr, 0)) == want, s"$name k=$k docsPerRange=$dpr")
-      for (dpr <- default +: ranged.take(1))
-        assert(rows(engine(view, queries, 5, dpr, 5)) == pageExh, s"$name page docsPerRange=$dpr")
-      assert(rows(engine(view, oov, 10, default, 0)).isEmpty, s"$name all-OOV")
-      assert(rows(engine(view, hot, 10, idx.stats.nDocs, 0)) == hotExh, s"$name over the bound")
-    }
+    // k = 20 passes the stored top block maxes: the driver path runs
+    // unseeded and the range path seeds from a window job; tiny ranges
+    // force the range-parallel path, with block spans across range
+    // boundaries
+    for ((k, want) <- exh; dpr <- Seq(default, 7L, 100L))
+      assert(rows(engine(idx, queries, k, dpr, 0)) == want, s"k=$k docsPerRange=$dpr")
+    for (dpr <- Seq(default, 7L))
+      assert(rows(engine(idx, queries, 5, dpr, 5)) == pageExh, s"page docsPerRange=$dpr")
+    assert(rows(engine(idx, oov, 10, default, 0)).isEmpty, "all-OOV")
+    assert(rows(engine(idx, hot, 10, idx.stats.nDocs, 0)) == hotExh, "over the bound")
   }
 }

@@ -119,24 +119,25 @@ class WandSpec extends SparkSpec {
     BuildIndexJob.run(spark, Transcripts.synthetic(spark, 300), root, "w3",
       BuildIndexJob.Config(numShards = 8, blockSize = 16, saltTarget = 64))
     val idx = IndexSearch.open(spark, root)
-    assert(idx.blockmeta.isDefined,
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(idx.paths.blockmeta)),
       "fresh builds must carry blockmeta alongside the dictionary")
     val queries = Seq(1 -> "w1", 2 -> "w1 zzzrareone")
-    val k = 10
     // independent expectation straight from the persisted block metadata
     val byTerm = spark.read.parquet(s"$root/postings")
       .select("term", "block_max_score").collect()
       .groupBy(_.getString(0)).view
       .mapValues(_.map(_.getDouble(1)).sorted(Ordering[Double].reverse)).toMap
-    val expected = queries.flatMap { case (qid, text) =>
+    def expected(k: Int): Map[Int, Double] = queries.flatMap { case (qid, text) =>
       val kth = graft.analysis.Analyzer.tokenize(text).distinct
         .flatMap(t => byTerm.get(t).filter(_.length >= k).map(_(k - 1)))
       if (kth.isEmpty) None else Some(qid -> kth.max)
     }.toMap
-    assert(expected.nonEmpty)
-    // legacy view of the same index: NO blockmeta forces the old
-    // per-batch window-job seed derivation
-    val idxLegacy = idx.copy(blockmeta = None)
+    // k = 10 seeds from the resident dictionary's stored top maxes; k = 20
+    // passes them (16 stored per term), so the range prune seeds from a
+    // per-batch window job
+    val (kStored, kWindow) = (10, 20)
+    assert(kWindow > graft.index.PostingBlocks.TopBlockMaxes)
+    assert(expected(kStored).nonEmpty && expected(kWindow).nonEmpty)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -153,21 +154,25 @@ class WandSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       // warm both paths once (parquet footer/listing jobs are one-time)
-      IndexSearch.wandBlocks(idx, queries, k, 64L, prune = true)
-      IndexSearch.wandBlocks(idxLegacy, queries, k, 64L, prune = true)
+      IndexSearch.wandBlocks(idx, queries, kStored, 64L, prune = true)
+      IndexSearch.wandBlocks(idx, queries, kWindow, 64L, prune = true)
       val (seedsBm, jobsBm) = countJobs(
-        IndexSearch.wandBlocks(idx, queries, k, 64L, prune = true).get._2)
-      val (seedsLegacy, jobsLegacy) = countJobs(
-        IndexSearch.wandBlocks(idxLegacy, queries, k, 64L, prune = true).get._2)
-      assert(seedsBm == expected, s"seeds $seedsBm != blockmeta-derived $expected")
-      assert(seedsLegacy == expected, "legacy window path must agree")
-      assert(jobsBm < jobsLegacy,
-        s"blockmeta seed path ran $jobsBm jobs, legacy $jobsLegacy — must be fewer")
-      // the resident dictionary is each instance's own: the legacy copy
-      // carries no stored maxes, so its seed is −∞
+        IndexSearch.wandBlocks(idx, queries, kStored, 64L, prune = true).get._2)
+      val (seedsWindow, jobsWindow) = countJobs(
+        IndexSearch.wandBlocks(idx, queries, kWindow, 64L, prune = true).get._2)
+      assert(seedsBm == expected(kStored),
+        s"seeds $seedsBm != blockmeta-derived ${expected(kStored)}")
+      assert(seedsWindow == expected(kWindow), "window-job seeds must agree")
+      // k within the stored top maxes: the seed rides the resident
+      // dictionary probe and wandBlocks runs no job; past them the seed
+      // takes a per-batch window job
+      assert(jobsBm == 0, s"stored-max seed path ran $jobsBm jobs")
+      assert(jobsBm < jobsWindow,
+        s"stored-max seed path ran $jobsBm jobs, window path $jobsWindow — must be fewer")
+      // the resident seed: the stored k-th max, −∞ past the stored maxes
       val w1 = Seq(idx.resident.row("w1"))
-      assert(idx.resident.seed(w1, k) == expected(1))
-      assert(idxLegacy.resident.seed(w1, k) == Double.NegativeInfinity)
+      assert(idx.resident.seed(w1, kStored) == expected(kStored)(1))
+      assert(idx.resident.seed(w1, kWindow) == Double.NegativeInfinity)
       // a warm single-query request: ONE job collects its blocks, the
       // driver ranks them, and the returned local frame collects jobless
       IndexSearch.searchWand(idx, Seq(1 -> "w1 w3")).collect()
