@@ -36,10 +36,14 @@ import org.apache.spark.sql.functions._
   *
   * Exactness vs a full rebuild: BM25 needs global N, avgdl, df over LIVE
   * docs. N/total_tokens are maintained incrementally in the manifest
-  * (batch stats added, killed-instance stats subtracted). Per-term df is
-  * computed at query time from the same pruned, tombstone-filtered
-  * posting scan that scoring reads anyway — so scores match the rebuild
-  * bit-for-bit (SegmentSpec / q_streaming_topk gates). Results identify
+  * (batch stats added, killed-instance stats subtracted). The exhaustive
+  * paths compute per-term df at query time from the same pruned,
+  * tombstone-filtered posting scan that scoring reads anyway; the WAND
+  * path ([[searchWand]]) takes it from metadata instead — Σ segment
+  * dictionary df minus the `dfdeltas/` kills, held on the driver by
+  * [[SegmentSnapshots]] — so it decodes only the blocks it scores. Both
+  * match the rebuild bit-for-bit (SegmentSpec / q_streaming_topk
+  * gates). Results identify
   * docs by their stable key (conv_id, turn_idx): segment-local ids are
   * internal, exactly like Lucene's per-segment ids; the tie-break
   * (conv_id, turn_idx ascending) equals the unified index's doc_id
@@ -470,48 +474,39 @@ object SegmentedIndex {
     * doc) — (term, conv_id, turn_idx, tf, dl) — across all segments.
     * Per-segment shard pruning + tombstone filtering; the shared scan
     * under every segmented query shape (disjunctive, boolean clauses, fq,
-    * facet). One driver-side dict probe + one Spark job per segment: fine
-    * because compaction bounds the segment count (the documented
-    * invariant — a long-running ingest calls compactInPlace every
-    * `compactEvery` batches, so this loop is O(compactEvery), never O(all
-    * appends ever)). */
+    * facet). Each segment's shards come from its cached resident
+    * dictionary ([[SegmentSnapshots]]) — no probe job — and the plan
+    * holds one postings scan per segment: fine because compaction bounds
+    * the segment count (the documented invariant — a long-running ingest
+    * calls compactInPlace every `compactEvery` batches, so this loop is
+    * O(compactEvery), never O(all appends ever)). */
   private def liveMatched(spark: SparkSession, root: String, m: Manifest,
-                          qTerms: DataFrame,
+                          terms: Seq[String],
                           cfg: BuildIndexJob.Config): Option[DataFrame] = {
+    import spark.implicits._
     val tombs = readTombstones(spark, root, m)
-    // ONE fused dict-probe job across all segments (driver boundary:
-    // ≤ |distinct query terms| shard ids per segment, same as before) —
-    // the prior per-segment collect issued O(segments) sequential driver
-    // round trips per query, a fixed-latency term that grows with the
-    // append count (guide §1.2: remove passes before tuning them)
-    val shardsByOrd: Map[Int, Seq[Int]] =
-      m.segments.zipWithIndex.map { case (seg, ord) =>
-        val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-        cfg.io.read(spark, p.dictionary)
-          .join(broadcast(qTerms), "term")
-          .select(lit(ord).as("_ord"), col("shard")).distinct()
-      }.reduce(_ unionByName _).collect()
-        .groupBy(_.getInt(0)).view.mapValues(_.map(_.getInt(1)).toSeq).toMap
-    val perSeg = m.segments.zipWithIndex.flatMap { case (seg, ord) =>
-      val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-      val shards = shardsByOrd.getOrElse(ord, Seq.empty)
-      if (shards.isEmpty) None
-      else {
-        val blocks = cfg.io.read(spark, p.postings)
-          .where(col("shard").isin(shards: _*))
-          .join(broadcast(qTerms), Seq("term"))
-        val docs = cfg.io.read(spark, p.docs)
-          .select(col("doc_id"), col("conv_id"), col("turn_idx"))
-          .withColumn("seg_ord", lit(ord))
-        val live = liveFilter(docs, tombs)
-        Some(PostingBlocks.decodePostings(blocks)
-          .join(live, "doc_id")
-          .select(col("term"), col("conv_id"), col("turn_idx"),
-            col("tf"), col("dl")))
-      }
+    val qTerms = terms.distinct.toDF("term")
+    val perSeg = SegmentSnapshots.of(spark, root, m, cfg.io)._1.zipWithIndex.flatMap {
+      case (seg, ord) =>
+        val shards = seg.index.resident.shardsOf(terms)
+        if (shards.isEmpty) None
+        else {
+          val blocks = seg.index.postings
+            .where(col("shard").isin(shards: _*))
+            .join(broadcast(qTerms), Seq("term"))
+          val live = liveFilter(seg.docs.withColumn("seg_ord", lit(ord)), tombs)
+          Some(PostingBlocks.decodePostings(blocks)
+            .join(live, "doc_id")
+            .select(col("term"), col("conv_id"), col("turn_idx"),
+              col("tf"), col("dl")))
+        }
     }
     perSeg.reduceOption(_ unionByName _)
   }
+
+  /** Distinct analyzed terms of a query batch, on the driver. */
+  private def termsOf(queries: Seq[(Int, String)]): Seq[String] =
+    queries.flatMap(q => graft.analysis.Analyzer.tokenize(q._2)).distinct
 
   /** Live docs with their stored non-text attributes (keys + role/tool/ts
     * + dl), across all segments — the fq/facet attribute side. Catalyst
@@ -581,7 +576,7 @@ object SegmentedIndex {
     val m = readManifest(spark, root).getOrElse(return Left(empty))
     if (m.segments.isEmpty || m.nDocs == 0) return Left(empty)
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all0 = liveMatched(spark, root, m, qt.select("term").distinct(), cfg)
+    val all0 = liveMatched(spark, root, m, termsOf(queries), cfg)
       .getOrElse(return Left(empty))
     // cached (when doCache): the live tombstone-filtered decode feeds BOTH
     // the df aggregate and the scoring join — without the cache the pruned
@@ -606,7 +601,7 @@ object SegmentedIndex {
     val m = readManifest(spark, root).getOrElse(return empty)
     if (m.segments.isEmpty || m.nDocs == 0) return empty
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, qt.select("term").distinct(), cfg)
+    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
       .getOrElse(return empty).cache()
     try {
       val agged = disjunctiveScores(all, qt, m)
@@ -643,7 +638,8 @@ object SegmentedIndex {
     val m = readManifest(spark, root).getOrElse(return empty)
     if (m.segments.isEmpty || m.nDocs == 0) return empty
     val (qt, neg, nMust) = Search.parseClauseQueries(spark, queries)
-    val allTerms = qt.select("term").unionByName(neg.select("term")).distinct()
+    val allTerms = queries.flatMap { case (_, t) =>
+      val c = Search.parseClauses(t); c.must ++ c.should ++ c.not }
     val all = liveMatched(spark, root, m, allTerms, cfg)
       .getOrElse(return empty).cache()
     try {
@@ -687,7 +683,7 @@ object SegmentedIndex {
     val triples = graft.search.Synonyms.resolve(queries, groups)
     if (triples.isEmpty) return empty
     val tri = triples.toDF("query_id", "gid", "term")
-    val all = liveMatched(spark, root, m, tri.select("term").distinct(), cfg)
+    val all = liveMatched(spark, root, m, triples.map(_._3), cfg)
       .getOrElse(return empty).cache()
     try {
       // live df per member; class df = max member df (SynonymQuery)
@@ -742,7 +738,7 @@ object SegmentedIndex {
     val m = readManifest(spark, root).getOrElse(return empty)
     if (m.segments.isEmpty || m.nDocs == 0) return empty
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, qt.select("term").distinct(), cfg)
+    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
       .getOrElse(return empty).cache()
     try {
       val keep = liveDocAttrs(spark, root, m, cfg)
@@ -765,7 +761,7 @@ object SegmentedIndex {
     val m = readManifest(spark, root).getOrElse(return empty)
     if (m.segments.isEmpty || m.nDocs == 0) return empty
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, qt.select("term").distinct(), cfg)
+    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
       .getOrElse(return empty).cache()
     try {
       val matched = all.join(broadcast(qt), "term")
@@ -796,7 +792,7 @@ object SegmentedIndex {
                           queries: Seq[(Int, String)],
                           cfg: BuildIndexJob.Config): Option[DataFrame] = {
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    liveMatched(spark, root, m, qt.select("term").distinct(), cfg)
+    liveMatched(spark, root, m, termsOf(queries), cfg)
       .map(_.join(broadcast(qt), "term")
         .select("query_id", "conv_id", "turn_idx").distinct())
   }
@@ -962,7 +958,7 @@ object SegmentedIndex {
     * their block identities (seg, term, first_doc); the positional (fat)
     * stream then decodes ONLY blocks containing a candidate doc, per
     * segment. A segment lacking any phrase term contributes nothing and
-    * is skipped at the dict probe. */
+    * is skipped at the resident dictionary lookup. */
   def searchPhrase(spark: SparkSession, root: String,
                    phrases: Seq[(Int, String)], k: Int = 10, slop: Int = 0,
                    luceneSlop: Boolean = false,
@@ -981,30 +977,18 @@ object SegmentedIndex {
     if (parsed.isEmpty) return empty
     val allTerms = parsed.flatMap(_._2).distinct
     val tombs = readTombstones(spark, root, m)
-    def liveKeys(ord: Int): DataFrame = {
-      val p = BuildIndexJob.IndexPaths(segPath(root, m.segments(ord)))
-      liveFilter(cfg.io.read(spark, p.docs)
-        .select(col("doc_id"), col("conv_id"), col("turn_idx"))
-        .withColumn("seg_ord", lit(ord)), tombs)
-    }
-    // per-segment shard lists computed ONCE at the dict probe and reused
-    // by the fat pass below (segments the probe proved term-free are
-    // skipped in both passes). Driver boundary: ≤ |phrase terms| shard
-    // ids per segment; the loop is O(compactEvery), as everywhere here.
-    val segShards: Seq[(Int, Seq[Int])] = {
-      // one fused probe job across segments (same driver boundary)
-      val byOrd = m.segments.zipWithIndex.map { case (seg, ord) =>
-        val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-        cfg.io.read(spark, p.dictionary)
-          .where(col("term").isInCollection(allTerms))
-          .select(lit(ord).as("_ord"), col("shard")).distinct()
-      }.reduce(_ unionByName _).collect()
-        .groupBy(_.getInt(0)).view.mapValues(_.map(_.getInt(1)).toSeq).toMap
-      m.segments.indices.flatMap(ord => byOrd.get(ord).map(ord -> _))
+    val segs = SegmentSnapshots.of(spark, root, m, cfg.io)._1
+    def liveKeys(ord: Int): DataFrame =
+      liveFilter(segs(ord).docs.withColumn("seg_ord", lit(ord)), tombs)
+    // per-segment shard lists from the resident dictionaries, reused by
+    // the fat pass below (segments without a phrase term are skipped in
+    // both passes). The loop is O(compactEvery), as everywhere here.
+    val segShards: Seq[(Int, Seq[Int])] = segs.zipWithIndex.flatMap { case (seg, ord) =>
+      val shards = seg.index.resident.shardsOf(allTerms)
+      if (shards.isEmpty) None else Some(ord -> shards)
     }
     def prunedBlocks(ord: Int, shards: Seq[Int]): DataFrame =
-      cfg.io.read(spark,
-          BuildIndexJob.IndexPaths(segPath(root, m.segments(ord))).postings)
+      segs(ord).index.postings
         .where(col("shard").isin(shards: _*) &&
           col("term").isInCollection(allTerms))
     val perSeg = segShards.map { case (ord, shards) =>
@@ -1074,9 +1058,10 @@ object SegmentedIndex {
   }
 
   /** One posting block routed to one (query, segment, doc-range) group —
-    * the segmented WAND unit. `df` carries the LIVE global df (the exact
-    * scoring input); `block_max_score` is the stored build-time max
-    * CORRECTED to an upper bound under the live scoring function. */
+    * the unit of the range-parallel segmented WAND. `df` carries the LIVE
+    * global df (the exact scoring input); `block_max_score` is the stored
+    * build-time max CORRECTED to an upper bound under the live scoring
+    * function. */
   // public: Spark's generated row (de)serializer must access the class
   final case class SegQBlock(query_id: Int, seg_ord: Int,
       range_id: Int, term: String, df: Long, first_doc: Long, last_doc: Long,
@@ -1108,7 +1093,7 @@ object SegmentedIndex {
     *     (idf_l/idf_b)·max(1, avgdl_l/avgdl_b) therefore yields a valid
     *     upper bound — over-estimates only inhibit skipping, never break
     *     exactness.
-    *  3. A θ SEED from the segments' `blockmeta/` top maxes scaled by
+    *  3. A θ SEED from the segments' stored top block maxes scaled by
     *     the LOWER factor (idf_l/idf_b)·min(1, avgdl_l/avgdl_b) — used only when
     *     the manifest has NO tombstones: then every stored max's doc is
     *     live and keys are globally distinct (an upsert always writes a
@@ -1116,25 +1101,38 @@ object SegmentedIndex {
     *     witnesses k doc-disjoint live docs scoring at least it.
     *
     * TOMBSTONE GUARD: killed docs are invisible to the traversal's
-    * metadata, so they can occupy heap slots; each (query, segment,
-    * range) group over-fetches k + t_s candidates, where t_s = the count
+    * metadata, so they can occupy heap slots; each (query, segment)
+    * traversal over-fetches k + t_s candidates, where t_s = the count
     * of tombstone rows with upto > the segment's ordinal (an upper bound
     * on killed instances in that segment — each tombstone row kills at
     * most one instance per segment), and killed candidates are dropped
-    * by the live-key join before the global rank-merge: any live doc
-    * outside a group's k + t_s heap has ≥ k live docs ranked above it in
-    * its own range, so it cannot enter the global top-k. t_s is bounded
-    * by the appends since the last compaction (the documented segment-
-    * count invariant); heavy delete workloads degrade toward larger
-    * heaps, never toward wrong answers.
+    * before the global rank-merge: any live doc outside a segment's
+    * k + t_s best has ≥ k live docs ranked above it in its own segment,
+    * so it cannot enter the global top-k. t_s is bounded by the appends
+    * since the last compaction (the documented segment-count invariant);
+    * heavy delete workloads degrade toward larger heaps, never toward
+    * wrong answers.
     *
-    * Parallelism is across (query, segment, doc-range) — the same
-    * doc-range sharding as the unified [[IndexSearch.searchWand]], with
-    * segment-local id spaces; per-range results rank-merge through the
-    * pinned key order (segment-local ids are assigned in key order, so
-    * the in-range tie-break is consistent with the global one). Driver
-    * state: ≤ |query terms| dictionary rows per segment, the per-term
-    * kill totals, and ≤ #appends tombstone ordinal counts. */
+    * Driver state: every input above comes from [[SegmentSnapshots]] —
+    * per committed segment its open index (stats, resident dictionary,
+    * resolved postings) and `docs/` key relation, per tombstone dir its
+    * killed keys and df deltas — loaded once per directory and reused by
+    * every later read. A warm read re-reads only the MANIFEST and derives
+    * live df, bounds, seeds and t_s on the driver. A batch within one
+    * range's working set (the segments' doc counts and the stored df of
+    * its terms each sum to ≤ docsPerRange — [[IndexSearch.searchWand]]'s
+    * single-range rule summed over segments) then runs ONE Spark job
+    * collecting its blocks across segments and traverses each (query,
+    * segment) on the driver; a larger batch keeps the (query, segment,
+    * doc-range) parallel traversal, with segment-local id spaces and the
+    * same precise block→range routing as the unified path. Either way
+    * ONE more job resolves the candidates' keys from `docs/`, and killed
+    * instances are dropped and ranked on the driver into a local frame.
+    * A request with only out-of-vocabulary terms runs no job. Memory:
+    * ~84 B per term × Σ live-segment vocabularies (the resident
+    * dictionaries), plus the live tombstone rows and df-delta terms, plus
+    * a request's own blocks (≤ docsPerRange postings on the driver
+    * path) and ≤ |queries| × segments × (k + t_s) candidates. */
   def searchWand(spark: SparkSession, root: String,
                  queries: Seq[(Int, String)], k: Int = 10,
                  docsPerRange: Long = IndexSearch.DefaultDocsPerRange,
@@ -1148,85 +1146,37 @@ object SegmentedIndex {
       .filter(_._2.nonEmpty)
     if (parsed.isEmpty) return empty
     val allTerms = parsed.flatMap(_._2).distinct
-
-    val deltaDirs = m.tombs.map(t => dfDeltaPath(root, t))
-    val killedByTerm: Map[String, Long] =
-      if (deltaDirs.isEmpty) Map.empty
-      else deltaDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .where(col("term").isInCollection(allTerms))
-        .groupBy("term").agg(sum("killed").as("killed"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val tombs = readTombstones(spark, root, m)
-    val hasTombs = m.tombs.nonEmpty
-    val uptoCounts: Seq[(Int, Long)] =
-      if (!hasTombs) Seq.empty
-      else tombs.groupBy("upto").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toSeq
-
-    // FUSED per-segment metadata probe: the stats of every segment in one
-    // job, the matching dictionary rows of every segment in one job
-    // (driver boundary: ≤ |terms| rows per segment, unchanged). The prior
-    // shape opened each segment sequentially — a stats head() plus a dict
-    // collect per segment, i.e. O(segments) driver round trips per batch.
-    case class SegMeta(ord: Int, paths: BuildIndexJob.IndexPaths,
-        stats: graft.index.IndexBuild.Stats,
-        rows: Map[String, (Long, Int, Seq[Double])])
-    val statsByOrd: Map[Int, graft.index.IndexBuild.Stats] =
-      m.segments.zipWithIndex.map { case (seg, ord) =>
-        cfg.io.read(spark, BuildIndexJob.IndexPaths(segPath(root, seg)).stats)
-          .select(lit(ord).as("_ord"), col("n_docs"), col("total_tokens"),
-            col("avgdl"))
-      }.reduce(_ unionByName _).collect()
-        .map(r => r.getInt(0) -> graft.index.IndexBuild.Stats(
-          r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    val dictRows = m.segments.zipWithIndex.map { case (seg, ord) =>
-      val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-      cfg.io.read(spark, p.dictionary)
-        .join(cfg.io.read(spark, p.blockmeta), Seq("term"), "left")
-        .where(col("term").isInCollection(allTerms))
-        .select(lit(ord).as("_ord"), col("term"), col("df"), col("shard"),
-          col("top_block_maxes"))
-    }.reduce(_ unionByName _).collect()
-    val segs: Seq[SegMeta] = dictRows.groupBy(_.getInt(0)).toSeq
-      .sortBy(_._1).map { case (ord, rows) =>
-        SegMeta(ord, BuildIndexJob.IndexPaths(segPath(root, m.segments(ord))),
-          statsByOrd(ord),
-          rows.map { r =>
-            val tm = if (r.isNullAt(4)) Seq.empty[Double] else r.getSeq[Double](4).toSeq
-            r.getString(1) -> ((r.getLong(2), r.getInt(3), tm))
-          }.toMap)
-      }
-    if (segs.isEmpty) return empty
-
+    val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
+    val dicts = segs.map(_.index.resident)
+    val rows: IndexedSeq[Map[String, Int]] = dicts.map(d =>
+      allTerms.map(t => t -> d.row(t)).filter(_._2 >= 0).toMap)
     val dfLive: Map[String, Long] = allTerms.flatMap { t =>
-      val total = segs.map(_.rows.get(t).map(_._1).getOrElse(0L)).sum -
-        killedByTerm.getOrElse(t, 0L)
+      val total = segs.indices.map(o => rows(o).get(t).fold(0L)(dicts(o).df)).sum -
+        tombs.map(_.dfDeltas.getOrElse(t, 0L)).sum
       if (total > 0) Some(t -> total) else None
     }.toMap
     val liveParsed = parsed
       .map { case (q, ts) => (q, ts.filter(dfLive.contains)) }
       .filter(_._2.nonEmpty)
     if (liveParsed.isEmpty) return empty
-    val liveTerms = liveParsed.flatMap(_._2).distinct
     val (nL, avgL) = (m.nDocs, m.avgdl)
 
-    def factors(sm: SegMeta, t: String): (Double, Double) = {
-      val r = Bm25.idfValue(dfLive(t), nL) /
-        Bm25.idfValue(sm.rows(t)._1, sm.stats.nDocs)
-      val a = avgL / sm.stats.avgdl
-      (r * math.max(1.0, a), r * math.min(1.0, a))
+    // per segment: live term → (dictionary row, upper and lower factor)
+    val segTerms: IndexedSeq[Map[String, (Int, Double, Double)]] = segs.indices.map { o =>
+      val st = segs(o).index.stats
+      val a = avgL / st.avgdl
+      rows(o).collect { case (t, r) if dfLive.contains(t) =>
+        val c = Bm25.idfValue(dfLive(t), nL) / Bm25.idfValue(dicts(o).df(r), st.nDocs)
+        t -> ((r, c * math.max(1.0, a), c * math.min(1.0, a)))
+      }
     }
-
     val seeds: Map[Int, Double] =
-      if (hasTombs) Map.empty
+      if (tombs.nonEmpty) Map.empty
       else {
-        val perTermKth = liveTerms.flatMap { t =>
-          val lows = segs.flatMap { sm =>
-            sm.rows.get(t).fold(Seq.empty[Double]) { r =>
-              val cLo = factors(sm, t)._2; r._3.map(_ * cLo)
-            }
-          }.sorted(Ordering[Double].reverse)
+        val perTermKth = dfLive.keys.flatMap { t =>
+          val lows = segs.indices.flatMap(o => segTerms(o).get(t).toSeq.flatMap {
+            case (r, _, lo) => dicts(o).topMaxes(r).map(_ * lo)
+          }).sorted(Ordering[Double].reverse)
           if (lows.size >= k) Some(t -> lows(k - 1)) else None
         }.toMap
         liveParsed.flatMap { case (q, ts) =>
@@ -1234,68 +1184,115 @@ object SegmentedIndex {
           if (s.isEmpty) None else Some(q -> s.max)
         }.toMap
       }
+    val heap: IndexedSeq[Int] = segs.indices.map(o =>
+      k + math.min(tombs.map(_.killing(o)).sum, Int.MaxValue.toLong - k).toInt)
+    val fits = segs.map(_.index.stats.nDocs).sum <= docsPerRange &&
+      segs.indices.map(o => segTerms(o).values.map(v => dicts(o).df(v._1)).sum).sum <= docsPerRange
 
-    val rangeSize = math.max(1L, docsPerRange)
-    segs.foreach(sm => require(
-      (sm.stats.nDocs + rangeSize - 1) / rangeSize <= Int.MaxValue,
-      s"docsPerRange=$docsPerRange yields too many ranges for segment ${sm.ord}"))
-    def rangeOf(c: Column): Column =
-      ((c - pmod(c, lit(rangeSize))) / lit(rangeSize)).cast("int")
-
-    val qtDf = liveParsed.flatMap { case (q, ts) => ts.map(t => (q, t)) }
-      .toDF("query_id", "term")
-    val perSeg: Seq[DataFrame] = segs.flatMap { sm =>
-      val segTerms = liveTerms.filter(sm.rows.contains)
-      if (segTerms.isEmpty) None
-      else {
-        val shards = segTerms.map(t => sm.rows(t)._2).distinct
-        val fdf = segTerms.map(t => (t, dfLive(t), factors(sm, t)._1))
-          .toDF("term", "df", "_cup")
-        Some(cfg.io.read(spark, sm.paths.postings)
-          .where(col("shard").isin(shards: _*))
-          .join(broadcast(qtDf), Seq("term"))
-          .join(broadcast(fdf), Seq("term"))
-          // precise block→range routing (decode ids map-side only for the
-          // rare boundary-spanning block), same as the unified WAND
-          .withColumn("range_id", explode(
-            when(rangeOf(col("first_doc")) === rangeOf(col("last_doc")),
-              array(rangeOf(col("first_doc"))))
-            .otherwise(array_distinct(transform(
-              codec.varintDeltaDecode(col("doc_gaps")), d => rangeOf(d))))))
-          .select(col("query_id"), lit(sm.ord).as("seg_ord"), col("range_id"),
-            col("term"), col("df"), col("first_doc"), col("last_doc"),
-            col("doc_gaps"), col("tfs"), col("dls"),
-            (col("block_max_score") * col("_cup")).as("block_max_score")))
+    val candidates: Seq[(Int, Int, Long, Double)] =
+      if (fits) {
+        val lists: Map[(Int, String), BlockMaxWand.TermPostings] =
+          segs.indices.filter(segTerms(_).nonEmpty).map { o =>
+            val ts = segTerms(o).keys.toSeq
+            segs(o).index.postings
+              .where(col("shard").isin(dicts(o).shardsOf(ts): _*) && col("term").isin(ts: _*))
+              .select(lit(o).as("seg_ord"), col("term"), col("first_doc"),
+                col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
+                col("block_max_score"))
+          }.reduce(_ unionByName _).collect()
+            .groupBy(r => (r.getInt(0), r.getString(1))).map { case ((o, t), rs) =>
+              val up = segTerms(o)(t)._2
+              (o, t) -> BlockMaxWand.TermPostings(dfLive(t), rs.sortBy(_.getLong(2)).map(r =>
+                BlockMaxWand.BlockRef(r.getLong(2), r.getLong(3), r.getDouble(7) * up,
+                  r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6))))
+            }
+        for {
+          (q, ts) <- liveParsed
+          o <- segs.indices
+          terms = ts.flatMap(t => lists.get((o, t)))
+          if terms.nonEmpty
+          (doc, s) <- BlockMaxWand.topKRange(terms, heap(o), nL, avgL, 0L, Long.MaxValue,
+            seeds.getOrElse(q, Double.NegativeInfinity))
+        } yield (q, o, doc, s)
+      } else {
+        val rangeSize = math.max(1L, docsPerRange)
+        segs.zipWithIndex.foreach { case (s, o) => require(
+          (s.index.stats.nDocs + rangeSize - 1) / rangeSize <= Int.MaxValue,
+          s"docsPerRange=$docsPerRange yields too many ranges for segment $o") }
+        def rangeOf(c: Column): Column =
+          ((c - pmod(c, lit(rangeSize))) / lit(rangeSize)).cast("int")
+        val qtDf = liveParsed.flatMap { case (q, ts) => ts.map(t => (q, t)) }
+          .toDF("query_id", "term")
+        val blocks = segs.indices.filter(segTerms(_).nonEmpty).map { o =>
+          val fdf = segTerms(o).map { case (t, (_, up, _)) => (t, dfLive(t), up) }.toSeq
+            .toDF("term", "df", "_cup")
+          segs(o).index.postings
+            .where(col("shard").isin(dicts(o).shardsOf(segTerms(o).keys.toSeq): _*))
+            .join(broadcast(qtDf), Seq("term"))
+            .join(broadcast(fdf), Seq("term"))
+            // precise block→range routing (decode ids map-side only for the
+            // rare boundary-spanning block), same as the unified WAND
+            .withColumn("range_id", explode(
+              when(rangeOf(col("first_doc")) === rangeOf(col("last_doc")),
+                array(rangeOf(col("first_doc"))))
+              .otherwise(array_distinct(transform(
+                codec.varintDeltaDecode(col("doc_gaps")), d => rangeOf(d))))))
+            .select(col("query_id"), lit(o).as("seg_ord"), col("range_id"),
+              col("term"), col("df"), col("first_doc"), col("last_doc"),
+              col("doc_gaps"), col("tfs"), col("dls"),
+              (col("block_max_score") * col("_cup")).as("block_max_score"))
+        }.reduce(_ unionByName _).as[SegQBlock]
+        // a segment's k + t_s best across its ranges bound what the
+        // rank-merge can use (the tombstone guard above), so at most
+        // |queries| × segments × (k + t_s) candidates reach the driver
+        val best = Window.partitionBy("query_id", "seg_ord")
+          .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
+        blocks.groupByKey(r => (r.query_id, r.seg_ord, r.range_id))
+          .flatMapGroups { (key: (Int, Int, Int), rows: Iterator[SegQBlock]) =>
+            val (qid, o, rid) = key
+            val lo = rid.toLong * rangeSize
+            BlockMaxWand.topKRange(BlockMaxWand.termPostings(rows).values.toSeq, heap(o),
+              nL, avgL, lo, lo + rangeSize, seeds.getOrElse(qid, Double.NegativeInfinity))
+              .iterator.map { case (doc, s) => (qid, o, doc, s) }
+          }.toDF("query_id", "seg_ord", "doc_id", "_score")
+          .withColumn("_r", row_number().over(best))
+          .where(col("_r") <= element_at(typedLit(heap), col("seg_ord") + 1))
+          .select("query_id", "seg_ord", "doc_id", "_score")
+          .as[(Int, Int, Long, Double)].collect().toSeq
       }
-    }
-    val overMap = segs.map { sm =>
-      val t = uptoCounts.filter(_._1 > sm.ord).map(_._2).sum
-      sm.ord -> math.min(t, Int.MaxValue.toLong - k).toInt
-    }.toMap
-    val blocks = perSeg.reduce(_ unionByName _).as[SegQBlock]
-    val candidates = blocks
-      .groupByKey(r => (r.query_id, r.seg_ord, r.range_id))
-      .flatMapGroups { (key: (Int, Int, Int), rows: Iterator[SegQBlock]) =>
-        val (qid, ord, rid) = key
-        val terms = BlockMaxWand.termPostings(rows).values.toSeq
-        val lo = rid.toLong * rangeSize
-        val kk = k + overMap(ord)
-        val seed = seeds.getOrElse(qid, Double.NegativeInfinity)
-        BlockMaxWand.topKRange(terms, kk, nL, avgL, lo, lo + rangeSize, seed)
-          .iterator.map { case (doc, s) => (qid, ord, doc, s) }
-      }.toDF("query_id", "seg_ord", "doc_id", "_score")
-    // resolve keys + drop killed instances (the over-fetch guard): the
-    // candidate set is tiny (≤ queries × ranges × (k + t_s)), so AQE
-    // broadcasts it against the thin per-segment key columns
-    val keyed = m.segments.zipWithIndex.map { case (seg, ord) =>
-      cfg.io.read(spark, s"${segPath(root, seg)}/docs")
-        .select(col("doc_id"), col("conv_id"), col("turn_idx"))
-        .withColumn("seg_ord", lit(ord))
-    }.reduce(_ unionByName _)
-    val live = liveFilter(keyed, tombs)
-    IndexSearch.localize(spark, rankKeys(
-      candidates.join(live, Seq("seg_ord", "doc_id"))
-        .select("query_id", "conv_id", "turn_idx", "_score"), k))
+    rankCandidates(spark, segs, tombs, candidates, k)
+  }
+
+  /** The tail of [[searchWand]]: resolve candidates (query, segment
+    * ordinal, segment-local doc, raw score) to keys with ONE job over the
+    * candidate segments' `docs/` keys, drop instances a tombstone kills,
+    * and rank on the driver in [[rankKeys]]' pinned order into a local
+    * frame (its `collect` runs no job). */
+  private def rankCandidates(spark: SparkSession,
+                             segs: IndexedSeq[SegmentSnapshots.Segment],
+                             tombs: IndexedSeq[SegmentSnapshots.Tomb],
+                             candidates: Seq[(Int, Int, Long, Double)],
+                             k: Int): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.unsafe.types.UTF8String
+    val keyOf: Map[(Int, Long), (String, Int)] =
+      if (candidates.isEmpty) Map.empty
+      else candidates.groupMap(_._2)(_._3).map { case (o, ids) =>
+        segs(o).docs.where(col("doc_id").isin(ids.distinct: _*))
+          .select(lit(o).as("seg_ord"), col("doc_id"), col("conv_id"), col("turn_idx"))
+      }.reduce(_ unionByName _).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> (r.getString(2), r.getInt(3))).toMap
+    candidates.flatMap { case (q, o, doc, s) =>
+      val key = keyOf((o, doc))
+      if (tombs.exists(_.killed.get(key).exists(_ > o))) None else Some((q, key, s))
+    }.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, hits) =>
+      // Spark orders strings by their UTF-8 bytes
+      hits.sortBy { case (_, (c, t), s) =>
+        (-BlockMaxWand.round(s, Bm25.RankScale), UTF8String.fromString(c), t)
+      }.take(k).zipWithIndex.map { case ((_, (c, t), s), i) =>
+        (q, i + 1, c, t, BlockMaxWand.round(s, Bm25.OutScale))
+      }
+    }.toDF("query_id", "rank", "conv_id", "turn_idx", "score")
   }
 
   /** Solr `hl` highlighting over the SEGMENTED index — [[search]]'s
@@ -1329,26 +1326,21 @@ object SegmentedIndex {
       .map(r => (r.getString(0), r.getInt(1))).toSeq
     val keysDf = broadcast(hitKeys.toDF("conv_id", "turn_idx"))
     val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val qTerms = queries.flatMap(q => graft.analysis.Analyzer.tokenize(q._2)).distinct
+    val qTerms = termsOf(queries)
     val tombs = readTombstones(spark, root, m)
-    val perSeg = m.segments.zipWithIndex.flatMap { case (seg, ord) =>
-      val p = BuildIndexJob.IndexPaths(segPath(root, seg))
-      // driver boundary: ≤ |query terms| shards per segment
-      val shards = cfg.io.read(spark, p.dictionary)
-        .where(col("term").isInCollection(qTerms))
-        .select("shard").distinct().collect().map(_.getInt(0)).toSeq
+    val segs = SegmentSnapshots.of(spark, root, m, cfg.io)._1
+    val perSeg = segs.zipWithIndex.flatMap { case (seg, ord) =>
+      val shards = seg.index.resident.shardsOf(qTerms)
       if (shards.isEmpty) None
       else {
-        val live = liveFilter(cfg.io.read(spark, p.docs)
-          .select(col("doc_id"), col("conv_id"), col("turn_idx"))
-          .withColumn("seg_ord", lit(ord)), tombs)
+        val live = liveFilter(seg.docs.withColumn("seg_ord", lit(ord)), tombs)
         // driver boundary: ≤ |hit keys| live local ids in this segment
         val ids = live.join(keysDf, Key, "left_semi")
           .select("doc_id").collect().map(_.getLong(0)).toSeq
         if (ids.isEmpty) None
         else {
           val idArr = array(ids.map(lit(_)): _*)
-          val blocks = cfg.io.read(spark, p.postings)
+          val blocks = seg.index.postings
             .where(col("shard").isin(shards: _*) &&
               col("term").isInCollection(qTerms) &&
               exists(idArr, id => id >= col("first_doc") && id <= col("last_doc")))
@@ -1357,7 +1349,7 @@ object SegmentedIndex {
             .where(col("doc_id").isin(ids: _*))
             .join(keyed, "doc_id")
             .select(col("term"), col("conv_id"), col("turn_idx"), col("positions"))
-          val texts = cfg.io.read(spark, p.docs)
+          val texts = cfg.io.read(spark, s"${segPath(root, m.segments(ord))}/docs")
             .where(col("doc_id").isin(ids: _*))
             .select(col("conv_id"), col("turn_idx"), col("text"))
           Some((pos, texts))

@@ -25,12 +25,20 @@ final class ResidentDict private (terms: Array[String], dfs: Array[Long],
   def df(row: Int): Long = dfs(row)
   def shard(row: Int): Int = shards(row)
 
+  /** Distinct shards holding the in-vocabulary ones of `terms`. */
+  def shardsOf(terms: Seq[String]): Seq[Int] =
+    terms.map(row).filter(_ >= 0).map(shards).distinct
+
   /** k-th largest stored block max of the row's term; −∞ when fewer than
     * k are stored (k past the stored maxes, or the term has fewer blocks). */
   def kthMax(row: Int, k: Int): Double = {
     val i = maxStart(row) + k - 1
     if (k >= 1 && i < maxStart(row + 1)) maxes(i) else Double.NegativeInfinity
   }
+
+  /** The row's stored top block maxes, descending. */
+  def topMaxes(row: Int): Iterator[Double] =
+    maxes.iterator.slice(maxStart(row), maxStart(row + 1))
 
   /** WAND θ seed of a query over these rows: the largest k-th block max
     * of any of its terms — k doc-disjoint blocks each reach their max

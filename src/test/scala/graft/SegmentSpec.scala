@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{BuildIndexJob, SegmentedIndex}
+import graft.index.{BuildIndexJob, SegmentSnapshots, SegmentedIndex}
 import graft.search.IndexSearch
 import graft.sources.Transcripts
 import org.apache.spark.sql.{DataFrame, Row}
@@ -18,10 +18,10 @@ class SegmentSpec extends SparkSpec {
 
   /** Full-rebuild expectation in the segmented output shape: global-id
     * search results mapped back to (conv_id, turn_idx) keys. */
-  def rebuildExpected(all: DataFrame): Seq[Row] = {
+  def rebuildExpected(all: DataFrame, qs: Seq[(Int, String)] = queries): Seq[Row] = {
     val root = tmp()
     BuildIndexJob.run(spark, all, root, "full", cfg)
-    val res = IndexSearch.search(IndexSearch.open(spark, root), queries)
+    val res = IndexSearch.search(IndexSearch.open(spark, root), qs)
     val keys = spark.read.parquet(s"$root/docs")
       .select("doc_id", "conv_id", "turn_idx")
     res.join(keys, "doc_id")
@@ -461,5 +461,191 @@ class SegmentSpec extends SparkSpec {
       val y = spark.read.parquet(s"$fullRoot/$art")
       assert(x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0, art)
     }
+  }
+
+  // ---------- resident segment snapshots (SegmentSnapshots) ----------
+
+  val wandQueries: Seq[(Int, String)] =
+    queries ++ Seq(5 -> "w1", 6 -> "w2 w7 zzzrareone", 7 -> "w1 w2 w3 w4")
+
+  def rows(df: DataFrame): Seq[Row] = df.orderBy("query_id", "rank").collect().toSeq
+
+  /** The live corpus after appending `batches` (rows, deleted keys) in
+    * order: a batch kills every older instance of its keys and of its
+    * deletes, and adds its rows that it does not delete itself. */
+  def liveOf(batches: Seq[(DataFrame, DataFrame)]): DataFrame =
+    batches.foldLeft(Option.empty[DataFrame]) { case (live, (b, dels)) =>
+      val added = b.join(dels, Seq("conv_id", "turn_idx"), "left_anti")
+      val killed = b.select("conv_id", "turn_idx").unionByName(dels)
+      Some(live.fold(added)(_.join(killed, Seq("conv_id", "turn_idx"), "left_anti")
+        .unionByName(added)))
+    }.get
+
+  def convs(all: DataFrame, lo: Int, hi: Int): DataFrame =
+    all.where($"conv_id" >= f"conv$lo%08d" && $"conv_id" < f"conv$hi%08d")
+
+  def upserted(all: DataFrame, lo: Int, hi: Int, tag: String): DataFrame =
+    convs(all, lo, hi).withColumn("text", concat($"text", lit(s" $tag zzz$tag")))
+
+  /** A TableIO that records the path of every read. */
+  final class RecordingIO extends graft.sources.TableIO with Serializable {
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def write(df: DataFrame, path: String, partitionBy: Seq[String],
+                       snapshotId: String): Unit =
+      graft.sources.ParquetTableIO.write(df, path, partitionBy, snapshotId)
+    override def read(s: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+      reads.add(path)
+      graft.sources.ParquetTableIO.read(s, path)
+    }
+  }
+
+  test("segmented WAND range-parallel path (docsPerRange 7, 64) ≡ search ≡ rebuild") {
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val b1 = (convs(all, 0, 50), noDeletes)
+    val b2 = (convs(all, 50, 90), noDeletes)
+    val b3 = (convs(all, 90, 120).unionByName(upserted(all, 80, 85, "upserted")),
+      Seq(("conv00000001", 1), ("conv00000095", 0)).toDF("conv_id", "turn_idx"))
+    val root = tmp()
+    def check(stage: String, live: DataFrame): Unit = {
+      val exh = rows(SegmentedIndex.search(spark, root, wandQueries, cfg = cfg))
+      assert(exh.nonEmpty && exh == rebuildExpected(live, wandQueries), s"$stage: search ≡ rebuild")
+      for (dpr <- Seq(7L, 64L))
+        assert(rows(SegmentedIndex.searchWand(spark, root, wandQueries,
+          docsPerRange = dpr, cfg = cfg)) == exh, s"$stage: WAND at docsPerRange=$dpr")
+    }
+    SegmentedIndex.append(spark, root, b1._1, b1._2, "seg-a", cfg)
+    SegmentedIndex.append(spark, root, b2._1, b2._2, "seg-b", cfg)
+    assert(SegmentedIndex.readManifest(spark, root).get.tombs.isEmpty)
+    check("no tombstones (θ seeds on)", liveOf(Seq(b1, b2)))
+    SegmentedIndex.append(spark, root, b3._1, b3._2, "seg-c", cfg)
+    assert(SegmentedIndex.readManifest(spark, root).get.tombs.nonEmpty)
+    check("upserts + deletes", liveOf(Seq(b1, b2, b3)))
+    val (_, decisions) = SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2,
+      maxMergeAtOnce = 2, cfg = cfg)
+    assert(decisions.nonEmpty)
+    check("after tieredCompact", liveOf(Seq(b1, b2, b3)))
+    all.unpersist()
+  }
+
+  test("warm segmented searchWand: ≤ 2 jobs, jobless collect, no TableIO read; a merge reloads only its segment") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val io = new RecordingIO
+    val icfg = cfg.copy(io = io)
+    val root = tmp()
+    SegmentedIndex.append(spark, root, convs(all, 0, 50), noDeletes, "seg-a", icfg)
+    SegmentedIndex.append(spark, root, convs(all, 50, 90), noDeletes, "seg-b", icfg)
+    SegmentedIndex.append(spark, root,
+      convs(all, 90, 120).unionByName(upserted(all, 80, 85, "upserted")),
+      Seq(("conv00000001", 1)).toDF("conv_id", "turn_idx"), "seg-c", icfg)
+    val m = SegmentedIndex.readManifest(spark, root).get
+    assert(m.tombs.nonEmpty)
+    val q = Seq(1 -> "w1 w3")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def countJobs[T](body: => T): (T, Int) = {
+      org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+      jobs.set(0)
+      val r = body
+      org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+      (r, jobs.get())
+    }
+    sc.addSparkListener(listener)
+    try {
+      SegmentedIndex.searchWand(spark, root, q, cfg = icfg).collect() // cold: loads
+      assert(SegmentSnapshots.cached(spark, root) == ((m.segments.toSet, m.tombs.toSet)))
+      io.reads.clear()
+      val (frame, jobsWarm) = countJobs(SegmentedIndex.searchWand(spark, root, q, cfg = icfg))
+      assert(jobsWarm <= 2, s"warm single-query segmented searchWand ran $jobsWarm jobs")
+      val (got, jobsCollect) = countJobs(frame.collect())
+      assert(jobsCollect == 0 && got.nonEmpty, s"collect ran $jobsCollect jobs")
+      val (oov, jobsOov) = countJobs(SegmentedIndex.searchWand(spark, root,
+        Seq(9 -> "qqqnotthere zzznope"), cfg = icfg).collect())
+      assert(oov.isEmpty && jobsOov == 0, s"all-OOV request ran $jobsOov jobs")
+      assert(io.reads.isEmpty, s"warm reads went through TableIO: ${io.reads}")
+      assert(rows(frame) == rows(SegmentedIndex.search(spark, root, q, cfg = icfg)))
+
+      val (m2, decisions) = SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2,
+        maxMergeAtOnce = 2, cfg = icfg)
+      assert(decisions.nonEmpty)
+      val fresh = m2.segments.filterNot(m.segments.contains)
+      assert(fresh.size == 1)
+      io.reads.clear()
+      val after = rows(SegmentedIndex.searchWand(spark, root, q, cfg = icfg))
+      val newSeg = SegmentedIndex.segPath(root, fresh.head) + "/"
+      assert(io.reads.size > 0 && io.reads.toArray.forall(_.toString.startsWith(newSeg)),
+        s"the read after the merge loaded more than $newSeg: ${io.reads}")
+      assert(SegmentSnapshots.cached(spark, root) == ((m2.segments.toSet, m2.tombs.toSet)),
+        "merged-away entries must be dropped")
+      assert(after == rows(SegmentedIndex.search(spark, root, q, cfg = icfg)))
+    } finally sc.removeSparkListener(listener)
+    all.unpersist()
+  }
+
+  test("a segment and tomb name re-appended after merge + vacuum is reloaded, not served stale") {
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val b0 = (convs(all, 0, 60), noDeletes)
+    val b1 = (convs(all, 60, 90).unionByName(upserted(all, 10, 15, "first")),
+      Seq(("conv00000001", 1)).toDF("conv_id", "turn_idx"))
+    val b1b = (convs(all, 90, 120).unionByName(upserted(all, 60, 65, "second")),
+      Seq(("conv00000070", 0)).toDF("conv_id", "turn_idx"))
+    val root = tmp()
+    SegmentedIndex.append(spark, root, b0._1, b0._2, "seg0", cfg)
+    SegmentedIndex.append(spark, root, b1._1, b1._2, "seg1", cfg)
+    assert(SegmentedIndex.readManifest(spark, root).get.tombs == Seq("seg1"))
+    assert(rows(SegmentedIndex.searchWand(spark, root, wandQueries, cfg = cfg))
+      == rebuildExpected(liveOf(Seq(b0, b1)), wandQueries))
+    val (merged, _) = SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2,
+      tierFactor = 16.0, cfg = cfg)
+    assert(!merged.segments.contains("seg1") && !merged.tombs.contains("seg1"))
+    SegmentedIndex.vacuum(spark, root)
+    assert(!new java.io.File(SegmentedIndex.segPath(root, "seg1")).exists)
+    // the same names, different content
+    SegmentedIndex.append(spark, root, b1b._1, b1b._2, "seg1", cfg)
+    val m = SegmentedIndex.readManifest(spark, root).get
+    assert(m.segments.last == "seg1" && m.tombs.contains("seg1"))
+    val got = rows(SegmentedIndex.searchWand(spark, root, wandQueries, cfg = cfg))
+    assert(got.nonEmpty && got == rows(SegmentedIndex.search(spark, root, wandQueries, cfg = cfg)))
+    assert(got == rebuildExpected(liveOf(Seq(b0, b1, b1b)), wandQueries))
+    all.unpersist()
+  }
+
+  test("cold-cache searchWand readers beside an append + tieredCompact answer at a committed manifest") {
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val root = tmp()
+    SegmentedIndex.append(spark, root, convs(all, 0, 50), noDeletes, "seg-a", cfg)
+    SegmentedIndex.append(spark, root, convs(all, 50, 90),
+      Seq(("conv00000003", 0)).toDF("conv_id", "turn_idx"), "seg-b", cfg)
+    val pre = SegmentedIndex.snapshotVersions(spark, root).last
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val answers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Row]]
+    val readers = (0 until 2).map(_ => new Thread(() => {
+      var first = true
+      while (first || !done.get) {
+        first = false
+        try answers.add(rows(SegmentedIndex.searchWand(spark, root, wandQueries, cfg = cfg)))
+        catch { case t: Throwable => errors.add(t) }
+      }
+    }))
+    readers.foreach(_.start())
+    try {
+      SegmentedIndex.append(spark, root,
+        convs(all, 90, 120).unionByName(upserted(all, 40, 45, "upserted")),
+        Seq(("conv00000060", 1)).toDF("conv_id", "turn_idx"), "seg-c", cfg)
+      SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2, tierFactor = 16.0, cfg = cfg)
+    } finally { done.set(true); readers.foreach(_.join()) }
+    val failed = errors.size
+    assert(failed == 0, s"reads failed, first: ${errors.peek()}")
+    val post = SegmentedIndex.snapshotVersions(spark, root).last
+    assert(post > pre)
+    val valid = Set(pre, post).map(v => rows(SegmentedIndex.search(spark, s"$root@v$v",
+      wandQueries, cfg = cfg)))
+    assert(valid.size == 2 && answers.size >= 2)
+    answers.forEach(a => assert(valid.contains(a), "an answer matches no committed manifest"))
+    all.unpersist()
   }
 }
