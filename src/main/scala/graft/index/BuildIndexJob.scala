@@ -28,11 +28,17 @@ import org.apache.spark.sql.functions._
   *                  `blockmeta/`  (term, top_block_maxes)
   *                  `_positional` marker, iff storePositions
   *
-  * Every index root this job or [[IndexMerge]] writes carries all of
+  * Every index root this job or [[SegmentWriter]] writes carries all of
   * these; readers rely on it and probe for none of them.
   *
   * Every stage appends per-partition lineage rows to `lineage/`:
-  * (stage, partition_id, output_rows, checksum, build_id, wall_ms).
+  * (stage, partition_id, output_rows, checksum, build_id, wall_ms). This
+  * is the only resumable writer: every writer that wipes its target
+  * first (appends, merges, compactions) goes through the single-pass
+  * [[SegmentWriter]] instead, which shares this job's relations
+  * ([[analyzedDocs]], [[writeDocsAndStats]], [[termFreqs]],
+  * [[dictionary]], [[postingBlocks]]) and writes one lineage row per
+  * stage.
   */
 object BuildIndexJob {
 
@@ -74,7 +80,7 @@ object BuildIndexJob {
     * while the NEXT stage's artifact jobs run. Ordering WITHIN a stage is
     * preserved (marker only after its lineage lands — the resume
     * invariant "marker ⇒ lineage present" survives any crash), and
-    * [[run]]/[[runFromTf]] join every lane before returning, so callers
+    * [[run]] joins the lane before returning, so callers
     * still observe a fully-materialized index incl. lineage. One worker:
     * tails execute in stage order, keeping marker appearance monotonic. */
   private[index] final class AsyncTail {
@@ -94,7 +100,7 @@ object BuildIndexJob {
     val tail = new AsyncTail
     try {
       runStages(spark, transcripts, p, buildId, cfg, tail)
-      runFromTfStages(spark, p, buildId, cfg, tail)
+      runDictAndPostings(spark, p, buildId, cfg, tail)
     } finally tail.join()
     p
   }
@@ -104,11 +110,7 @@ object BuildIndexJob {
                         tail: AsyncTail): Unit = {
     val io = cfg.io
     stage(spark, p, "docs", tail) { t0 =>
-      val ingested = IndexBuild.ingest(transcripts)
-      val docs = IndexBuild
-        .assignDocIds(ingested, stagingDir = s"${p.staging}/docids")
-        .withColumn("dl", Analyzer.docLen(col("text")))
-        .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
+      val docs = analyzedDocs(IndexBuild.ingest(transcripts), p)
       writeDocsAndStats(spark, docs, p, buildId, io)
       Fs.delete(spark, s"${p.staging}/docids")
       // checksum over (key, dl) — dl is derived from text, so it catches
@@ -139,6 +141,17 @@ object BuildIndexJob {
 
   }
 
+  /** Stored docs of ingested, key-unique turns: dense key-ordered doc ids
+    * frozen in the root's `_staging/docids` ([[IndexBuild.assignDocIds]])
+    * and dl — analyzed from the text, or kept when the rows carry a stored
+    * one (merged index rows). */
+  private[index] def analyzedDocs(turns: DataFrame, p: IndexPaths): DataFrame = {
+    val withIds = IndexBuild.assignDocIds(turns, stagingDir = s"${p.staging}/docids")
+    (if (turns.columns.contains("dl")) withIds
+     else withIds.withColumn("dl", Analyzer.docLen(col("text"))))
+      .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
+  }
+
   /** Write the `docs/` artifact and `stats/` — the only place the stats
     * rows are built. The collection stats ride the docs write as observed
     * metrics, so no stage re-aggregates the docs artifact for them (one
@@ -146,23 +159,32 @@ object BuildIndexJob {
     * total/n_docs in ONE double division — identical to Spark's avg() on
     * integral input (whose partial sums over ints are exact in double).
     * The batch job calls this inside its docs stage, BEFORE the stage
-    * marker: marker ⇒ stats present, so the dict stage just reads it. */
+    * marker: marker ⇒ stats present, so the dict stage just reads it.
+    * Also returns the docs write's row count and its lineage checksum
+    * (over key and dl, as the docs-stage lineage hashes it). */
   private[index] def writeDocsAndStats(spark: SparkSession, docs: DataFrame,
                                        p: IndexPaths, buildId: String,
-                                       io: TableIO): Unit = {
+                                       io: TableIO): (Stats, Long, Long) = {
     val obs = org.apache.spark.sql.Observation()
     io.write(docs.observe(obs,
         count(when(col("dl") > 0, 1)).as("n"),
-        sum(when(col("dl") > 0, col("dl").cast("long"))).as("t")),
+        sum(when(col("dl") > 0, col("dl").cast("long"))).as("t"),
+        count(lit(1)).as("rows"),
+        bit_xor(xxhash64(col("conv_id"), col("turn_idx"), col("dl"))).as("checksum")),
       p.docs, snapshotId = buildId)
-    val nDocs = Option(obs.get.getOrElse("n", null)).fold(0L)(_.asInstanceOf[Long])
-    val total = Option(obs.get.getOrElse("t", null)).fold(0L)(_.asInstanceOf[Long])
+    val (nDocs, total) = (observedLong(obs, "n"), observedLong(obs, "t"))
+    val stats = Stats(nDocs, total, if (nDocs == 0) 0.0 else total.toDouble / nDocs)
     import spark.implicits._
-    io.write(Seq((nDocs, total,
-        if (nDocs == 0) 0.0 else total.toDouble / nDocs, buildId))
+    io.write(Seq((nDocs, total, stats.avgdl, buildId))
       .toDF("n_docs", "total_tokens", "avgdl", "build_id"), p.stats,
       snapshotId = buildId)
+    (stats, observedLong(obs, "rows"), observedLong(obs, "checksum"))
   }
+
+  /** A Long metric observed by a completed write (0 over empty input). */
+  private[index] def observedLong(obs: org.apache.spark.sql.Observation,
+                                  name: String): Long =
+    Option(obs.get.getOrElse(name, null)).fold(0L)(_.asInstanceOf[Long])
 
   /** The scoring relation of analyzed `docs` (doc_id, dl, text):
     * (term, doc_id, tf, dl), plus the doc's sorted token `positions` of
@@ -187,38 +209,47 @@ object BuildIndexJob {
           sort_array(collect_list(col("_pos").cast("long"))).as("positions"))
         .select("term", "doc_id", "tf", "dl", "positions")
 
-  /** The dict + postings stages, given already-persisted docs, stats
-    * ([[writeDocsAndStats]]) and tfdl artifacts — shared by the batch job
-    * and [[IndexMerge]]. */
-  def runFromTf(spark: SparkSession, p: IndexPaths, buildId: String,
-                cfg: Config = Config()): Unit = {
-    val tail = new AsyncTail
-    try runFromTfStages(spark, p, buildId, cfg, tail)
-    finally tail.join()
+  /** The dictionary of a scoring relation: df/cf plus an UPPER BOUND on
+    * the term's best score, score(max_tf, min_dl) — BM25 is monotone ↑tf,
+    * ↓dl, so this bounds every posting. WAND derives exact per-term
+    * bounds from block maxes at query time; the dictionary bound is
+    * advisory, and the bound form saves a tfdl self-join + second
+    * aggregation. */
+  private[index] def dictionary(tfdl: DataFrame, stats: Stats,
+                                numShards: Int): DataFrame =
+    tfdl.groupBy("term").agg(
+        count(lit(1)).as("df"),
+        sum(col("tf").cast("long")).as("cf"),
+        max(col("tf")).as("_max_tf"),
+        min(col("dl")).as("_min_dl"))
+      .withColumn("shard", PostingBlocks.shardOf(col("term"), numShards))
+      .withColumn("max_score", Bm25.termScore(col("_max_tf"), col("_min_dl"),
+        col("df"), lit(stats.nDocs), lit(stats.avgdl)))
+      .select("term", "shard", "df", "cf", "max_score")
+
+  /** The encoded blocks of `postings/` ([[PostingBlocks.build]]), clustered
+    * for the shard-partitioned write. */
+  private[index] def postingBlocks(tfdl: DataFrame, dict: DataFrame,
+                                   stats: Stats, cfg: Config): DataFrame = {
+    val tfdlCols = Seq("term", "doc_id", "tf", "dl") ++
+      (if (tfdl.columns.contains("positions")) Seq("positions") else Nil)
+    PostingBlocks.build(
+      tfdl.select(tfdlCols.map(col): _*), dict, stats,
+      cfg.numShards, cfg.blockSize, cfg.saltTarget)
+      .repartition(cfg.numShards * 4, col("shard"),
+        pmod(xxhash64(col("term")), lit(4)))
   }
 
-  private def runFromTfStages(spark: SparkSession, p: IndexPaths,
-                              buildId: String, cfg: Config,
-                              tail: AsyncTail): Unit = {
+  /** The dict + postings stages, given already-persisted docs, stats
+    * ([[writeDocsAndStats]]) and tfdl artifacts. */
+  private def runDictAndPostings(spark: SparkSession, p: IndexPaths,
+                                 buildId: String, cfg: Config,
+                                 tail: AsyncTail): Unit = {
     val io = cfg.io
     stage(spark, p, "dict", tail) { t0 =>
       // stats/ is written with the docs artifact ([[writeDocsAndStats]])
       val stats = readStats(spark, p, io)
-      val tfdl = io.read(spark, p.tfdl)
-      // One pass: df/cf plus an UPPER BOUND on the term's best score,
-      // score(max_tf, min_dl) — BM25 is monotone ↑tf, ↓dl, so this bounds
-      // every posting. WAND derives exact per-term bounds from block
-      // maxes at query time; the dictionary bound is advisory, and the
-      // bound form saves a tfdl self-join + second aggregation here.
-      val dict = tfdl.groupBy("term").agg(
-          count(lit(1)).as("df"),
-          sum(col("tf").cast("long")).as("cf"),
-          max(col("tf")).as("_max_tf"),
-          min(col("dl")).as("_min_dl"))
-        .withColumn("shard", PostingBlocks.shardOf(col("term"), cfg.numShards))
-        .withColumn("max_score", Bm25.termScore(col("_max_tf"), col("_min_dl"),
-          col("df"), lit(stats.nDocs), lit(stats.avgdl)))
-        .select("term", "shard", "df", "cf", "max_score")
+      val dict = dictionary(io.read(spark, p.tfdl), stats, cfg.numShards)
       io.write(dict, p.dictionary, snapshotId = buildId)
       lineage(spark, p, "dict", buildId, t0, tail = tail, perPartition =
         io.read(spark, p.dictionary).groupBy(col("shard").as("partition_id"))
@@ -227,16 +258,9 @@ object BuildIndexJob {
     }
 
     stage(spark, p, "postings", tail) { t0 =>
-      val tfdl = io.read(spark, p.tfdl)
-      val dict = io.read(spark, p.dictionary)
       val stats = readStats(spark, p, cfg.io)
-      val tfdlCols = Seq("term", "doc_id", "tf", "dl") ++
-        (if (tfdl.columns.contains("positions")) Seq("positions") else Nil)
-      val blocks = PostingBlocks.build(
-        tfdl.select(tfdlCols.map(col): _*), dict, stats,
-        cfg.numShards, cfg.blockSize, cfg.saltTarget)
-        .repartition(cfg.numShards * 4, col("shard"),
-          pmod(xxhash64(col("term")), lit(4)))
+      val blocks = postingBlocks(io.read(spark, p.tfdl),
+        io.read(spark, p.dictionary), stats, cfg)
       io.write(blocks, p.postings, partitionBy = Seq("shard"), snapshotId = buildId)
       // ONE cached metadata-only scan of what was just written feeds both
       // the blockmeta sidecar and the lineage rows (round-4 ran two

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.analysis.Analyzer
+import graft.index.IndexBuild.Stats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   * Upsert semantics: a new-batch row with an existing (conv_id, turn_idx)
   * key replaces the old row. Delete semantics: tombstoned keys vanish from
   * docs and postings (left_anti — U2).
+  *
+  * The target is written in one pass by [[SegmentWriter]] (no stage
+  * markers, one lineage row per stage): its docs are materialized once,
+  * the remapped + fresh scoring relation is derived from that frame, and
+  * nothing the merge writes is read back from disk.
   */
 object IndexMerge {
 
@@ -70,23 +75,25 @@ object IndexMerge {
     * re-tokenizing any text — the Lucene-merge property ([[run]]'s
     * old-side remap generalized to N parts, for segment merges and
     * compaction): each part supplies its LIVE doc rows (full stored
-    * columns + the part-local `doc_id` + a caller `_part_ord`) and its
-    * tfdl artifact; fresh dense global ids are assigned from the merged
-    * key set, the docs artifact is written from the STORED rows (dl is
-    * stored — never recomputed), and the scoring relation is the union
-    * of the parts' tfdl rows remapped (part_ord, old id) → new id. At
-    * scale analysis touches every byte of text, so a merge that
-    * re-analyzes is a rebuild; this path touches text bytes exactly once
-    * (the docs copy) and never re-runs the analyzer. Dead rows drop out
-    * naturally: the remap join is inner on the live id map.
+    * columns + the part-local `doc_id`) and its tfdl artifact; fresh
+    * dense global ids are assigned from the merged key set, the docs
+    * artifact is written from the STORED rows (dl is stored — never
+    * recomputed), and the scoring relation is the union of the parts'
+    * tfdl rows remapped (part ordinal, old id) → new id. At scale
+    * analysis touches every byte of text, so a merge that re-analyzes is
+    * a rebuild; this path touches text bytes exactly once (the docs copy)
+    * and never re-runs the analyzer. Dead rows drop out naturally: the
+    * remap join is inner on the live id map. Written in one pass by
+    * [[SegmentWriter]] (with a segment's keymeta sidecar when `keymeta`);
+    * returns the collection stats and the docs row count.
     *
     * Preconditions (the segment invariants): part docs are live-filtered
     * and key-unique across parts, and already passed ingest. */
-  def rebuildFromParts(spark: SparkSession,
-                       parts: Seq[(DataFrame, DataFrame)],
-                       newRoot: String, buildId: String,
-                       cfg: BuildIndexJob.Config = BuildIndexJob.Config())
-      : BuildIndexJob.IndexPaths = {
+  private[index] def rebuildFromParts(spark: SparkSession,
+                                      parts: Seq[(DataFrame, DataFrame)],
+                                      newRoot: String, buildId: String,
+                                      cfg: BuildIndexJob.Config,
+                                      keymeta: Boolean): (Stats, Long) = {
     require(parts.nonEmpty, "rebuildFromParts needs at least one part")
     val partHasPos = parts.map(_._2.columns.contains("positions")).distinct
     require(partHasPos.size == 1,
@@ -102,41 +109,33 @@ object IndexMerge {
     val p = BuildIndexJob.IndexPaths(newRoot)
     val key = Seq("conv_id", "turn_idx")
     val cols = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts", "dl")
-    val merged = parts.zipWithIndex.map { case ((docs, _), i) =>
-      docs.select((cols.map(col) :+ col("doc_id").as("_old_id")): _*)
-        .withColumn("_part_ord", lit(i))
-    }.reduce(_ unionByName _)
     // fresh dense global ids over the merged key set; dl is already
     // stored, so the docs artifact is a pure column re-shape of the
     // merged rows
-    val withIds = IndexBuild.assignDocIds(merged, stagingDir = s"${p.staging}/docids")
-    val docs = withIds
-      .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
-    BuildIndexJob.writeDocsAndStats(spark, docs, p, buildId, cfg.io)
-    graft.sources.Fs.delete(spark, s"${p.staging}/docids")
-    // id map from the PERSISTED docs (the staging files are gone) joined
-    // back to the parts' key→old-id rows — keys only, no text
-    val docsP = cfg.io.read(spark, p.docs)
-    val mergedKeys = parts.zipWithIndex.map { case ((docsDf, _), i) =>
-      docsDf.select(col("conv_id"), col("turn_idx"), col("doc_id").as("_old_id"))
-        .withColumn("_part_ord", lit(i))
-    }.reduce(_ unionByName _)
-    val idmap = docsP.select(col("doc_id").as("_new_id"), col("conv_id"), col("turn_idx"))
-      .join(mergedKeys, key)
-      .select(col("_part_ord").as("_im_part"), col("_old_id").as("_im_old"),
-        col("_new_id"))
+    val merged = parts.map(_._1.select(cols.map(col): _*)).reduce(_ unionByName _)
     val tfCols = Seq("term", "doc_id", "tf", "dl") ++
       (if (cfg.storePositions) Seq("positions") else Nil)
-    val tfdl = parts.zipWithIndex.map { case ((_, t), i) =>
-      t.withColumn("_po", lit(i))
-    }.reduce(_ unionByName _)
-      .join(idmap, col("doc_id") === col("_im_old") &&
-        col("_po") === col("_im_part"))
-      .withColumn("doc_id", col("_new_id"))
-      .select(tfCols.map(col): _*)
-    cfg.io.write(tfdl, p.tfdl, snapshotId = buildId)
-    BuildIndexJob.runFromTf(spark, p, buildId, cfg)
-    p
+    // id map from the written docs joined back to the parts' key → old-id
+    // rows — keys only, no text
+    def remap(docs: DataFrame): DataFrame = {
+      val mergedKeys = parts.zipWithIndex.map { case ((docsDf, _), i) =>
+        docsDf.select(col("conv_id"), col("turn_idx"), col("doc_id").as("_old_id"))
+          .withColumn("_part_ord", lit(i))
+      }.reduce(_ unionByName _)
+      val idmap = docs
+        .select(col("doc_id").as("_new_id"), col("conv_id"), col("turn_idx"))
+        .join(mergedKeys, key)
+        .select(col("_part_ord").as("_im_part"), col("_old_id").as("_im_old"),
+          col("_new_id"))
+      parts.zipWithIndex.map { case ((_, t), i) =>
+        t.withColumn("_po", lit(i))
+      }.reduce(_ unionByName _)
+        .join(idmap, col("doc_id") === col("_im_old") &&
+          col("_po") === col("_im_part"))
+        .withColumn("doc_id", col("_new_id"))
+        .select(tfCols.map(col): _*)
+    }
+    SegmentWriter.write(spark, merged, p, buildId, cfg, keymeta)(remap)
   }
 
   def run(spark: SparkSession, oldRoot: String, newBatch: DataFrame,
@@ -146,10 +145,10 @@ object IndexMerge {
       "merge target must be a fresh generation, not the source index " +
         "(overwriting an input while lazily reading it corrupts the merge)")
     // All-or-nothing semantics: a half-written target from a crashed merge
-    // is wiped, never resumed — its docs/tfdl are not marker-guarded, so a
-    // partial resume could pair fresh doc_ids with stale postings. Resume
-    // granularity is the GENERATION (the caller republished pointer /
-    // streaming checkpoint replays the whole batch).
+    // is wiped, never resumed — the single-pass [[SegmentWriter]] keeps no
+    // stage markers, so a partial resume could pair fresh doc_ids with
+    // stale postings. Resume granularity is the GENERATION (the caller's
+    // republished pointer / streaming checkpoint replays the whole batch).
     if (graft.sources.Fs.exists(spark, newRoot))
       graft.sources.Fs.delete(spark, newRoot)
     val key = Seq("conv_id", "turn_idx")
@@ -168,19 +167,10 @@ object IndexMerge {
       .unionByName(newTurns.select(cols.map(col): _*))
 
     val p = BuildIndexJob.IndexPaths(newRoot)
-    // docs stage over the merged corpus (fresh dense ids)
-    val docs = IndexBuild.assignDocIds(merged, stagingDir = s"${p.staging}/docids")
-      .withColumn("dl", Analyzer.docLen(col("text")))
-      .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "text")
-    BuildIndexJob.writeDocsAndStats(spark, docs, p, buildId, cfg.io)
-    graft.sources.Fs.delete(spark, s"${p.staging}/docids")
-    // downstream steps must read the PERSISTED docs — the lazy `docs` plan
-    // still references the just-deleted doc-id staging files
-    val docsP = cfg.io.read(spark, p.docs)
 
-    // tf stage: reuse old tokenization via id remap — SURVIVOR keys only
-    // (an overwritten key must not drag its stale postings along; its text
-    // is re-tokenized as part of the new batch). Positional indexes merge
+    // tf: reuse old tokenization via id remap — SURVIVOR keys only (an
+    // overwritten key must not drag its stale postings along; its text is
+    // re-tokenized as part of the new batch). Positional indexes merge
     // positionally: the old positions column rides the remap untouched
     // (positions are within-doc, id-independent) and the fresh batch runs
     // the positional aggregate. A config/old-index mismatch fails loudly —
@@ -193,21 +183,20 @@ object IndexMerge {
         s"config storePositions=${cfg.storePositions}")
     val tfCols = Seq("term", "doc_id", "tf", "dl") ++
       (if (cfg.storePositions) Seq("positions") else Nil)
-    val remap = oldTfdl
-      .join(keepOld.select(col("doc_id").as("_old_id"), col("conv_id"), col("turn_idx"))
-          .join(docsP.select(col("doc_id").as("_new_id"), col("conv_id"), col("turn_idx")), key)
-          .select("_old_id", "_new_id"),
-        col("doc_id") === col("_old_id"))
-      .withColumn("doc_id", col("_new_id"))
-      .select(tfCols.map(col): _*)
-    val newKeys = newTurns.select(key.map(col): _*)
-    val freshDocs = docsP.join(newKeys, key, "left_semi")
-    val freshTf = BuildIndexJob.termFreqs(freshDocs, cfg.storePositions)
-    val tfdl = remap.unionByName(freshTf).select(tfCols.map(col): _*)
-    cfg.io.write(tfdl, p.tfdl, snapshotId = buildId)
-
-    // dict + postings: identical to the batch job's stages
-    BuildIndexJob.runFromTf(spark, p, buildId, cfg)
+    def tfOf(docs: DataFrame): DataFrame = {
+      val remap = oldTfdl
+        .join(keepOld.select(col("doc_id").as("_old_id"), col("conv_id"), col("turn_idx"))
+            .join(docs.select(col("doc_id").as("_new_id"), col("conv_id"),
+              col("turn_idx")), key)
+            .select("_old_id", "_new_id"),
+          col("doc_id") === col("_old_id"))
+        .withColumn("doc_id", col("_new_id"))
+        .select(tfCols.map(col): _*)
+      val freshDocs = docs.join(newTurns.select(key.map(col): _*), key, "left_semi")
+      remap.unionByName(BuildIndexJob.termFreqs(freshDocs, cfg.storePositions))
+        .select(tfCols.map(col): _*)
+    }
+    SegmentWriter.write(spark, merged, p, buildId, cfg, keymeta = false)(tfOf)
     p
   }
 }

@@ -45,7 +45,7 @@ private[graft] object SegmentSnapshots {
     /** Killed key → the ordinal bound `upto`: the key's instances in
       * segments with ordinal < upto are dead. */
     lazy val killed: Map[(String, Int), Int] =
-      spark.read.schema("conv_id STRING, turn_idx INT, upto INT").parquet(tombPath)
+      spark.read.schema(SegmentedIndex.TombSchema).parquet(tombPath)
         .collect().toSeq
         .groupMapReduce(r => (r.getString(0), r.getInt(1)))(_.getInt(2))(math.max)
     /** term → docs this dir's kills take from the term's df. */

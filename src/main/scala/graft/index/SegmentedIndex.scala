@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.Phase
 import graft.search.{BlockMaxWand, Bm25, IndexSearch, Search}
 import graft.sources.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,9 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Layout under a segmented root:
   * {{{
-  *   root/segments/<seg>/   one full [[BuildIndexJob]] index over ONE batch
-  *                          (doc ids dense within the segment only) plus
-  *                          its keymeta/ sidecar and keymeta/_NBUCKETS
+  *   root/segments/<seg>/   one full index root over ONE batch (or one
+  *                          merged run), written in one pass by
+  *                          [[SegmentWriter]] — the [[BuildIndexJob]]
+  *                          artifacts without `_stage_done/` markers and
+  *                          with one lineage row per stage; doc ids dense
+  *                          within the segment only — plus its keymeta/
+  *                          sidecar and keymeta/_NBUCKETS
   *   root/tombstones/<t>/   (conv_id, turn_idx, upto:int) — a row kills the
   *                          key's instance in every segment with ordinal
   *                          < upto (ordinal = position in the manifest)
@@ -141,8 +146,15 @@ object SegmentedIndex {
     Seq.empty[(String, Int, Int)].toDF("conv_id", "turn_idx", "upto")
   }
 
+  /** The schemas every writer gives a tombstone dir and a keymeta
+    * sidecar: reads pin them, so opening one runs no schema-inference
+    * job. */
+  private[index] final val TombSchema = "conv_id STRING, turn_idx INT, upto INT"
+  private final val KeymetaSchema =
+    "conv_id STRING, turn_idx INT, dl INT, terms ARRAY<STRING>, kb INT"
+
   def readTombstones(spark: SparkSession, root: String, m: Manifest): DataFrame =
-    m.tombs.map(t => spark.read.parquet(tombPath(root, t)))
+    m.tombs.map(t => spark.read.schema(TombSchema).parquet(tombPath(root, t)))
       .reduceOption(_ unionByName _)
       .getOrElse(emptyTombstones(spark))
 
@@ -162,31 +174,40 @@ object SegmentedIndex {
     * without re-reading any killed doc's text: the WAND-over-segments
     * query path needs exact live df from metadata alone. Plain parquet
     * (an internal acceleration structure derived from `docs/`,
-    * rebuildable, not a table-format artifact). */
-  private def writeKeymeta(spark: SparkSession, sp: String, segDocs: Long,
-                           cfg: BuildIndexJob.Config): Unit = {
+    * rebuildable, not a table-format artifact). [[SegmentWriter]] calls
+    * this with the segment's materialized `docs` and `tfdl` frames, so
+    * nothing the segment write just wrote is read back. */
+  private[index] def writeKeymeta(spark: SparkSession, sp: String, segDocs: Long,
+                                  docs: DataFrame, tfdl: DataFrame,
+                                  cfg: BuildIndexJob.Config): Unit = {
     val kb = math.max(1L, math.min(4096L,
       (segDocs + cfg.keymetaBucketRows - 1) / cfg.keymetaBucketRows)).toInt
-    // terms come from the segment's OWN tfdl artifact (one row per
+    // terms come from the segment's OWN scoring relation (one row per
     // (term, doc) ⇒ collect_list IS the distinct term set; order is
     // irrelevant — every consumer explodes or set-joins it) instead of
-    // re-running the analyzer over the stored text: the second full
-    // tokenize pass per append, gone. Docs with zero tokens have no tfdl
-    // rows but still need their keymeta row (the kill scan counts them),
-    // hence the left join + empty-array default.
-    val termsByDoc = cfg.io.read(spark, s"$sp/tfdl")
-      .groupBy("doc_id").agg(collect_list(col("term")).as("terms"))
-    cfg.io.read(spark, s"$sp/docs")
-      .select(col("doc_id"), col("conv_id"), col("turn_idx"), col("dl"))
-      .join(termsByDoc, Seq("doc_id"), "left")
-      .select(col("conv_id"), col("turn_idx"), col("dl"),
-        coalesce(col("terms"), array().cast("array<string>")).as("terms"))
+    // re-running the analyzer over the stored text. One doc_id-keyed
+    // aggregate over the union of the doc rows and the tfdl rows pairs
+    // each doc with its terms in a single shuffle (a join shuffles each
+    // side); a doc with zero tokens has no tfdl row but still gets its
+    // keymeta row (the kill scan counts it), with an empty term list.
+    val none = lit(null)
+    val rows = docs
+      .select(col("doc_id"), col("conv_id"), col("turn_idx"), col("dl"),
+        none.cast("string").as("term"))
+      .unionByName(tfdl.select(col("doc_id"), none.cast("string").as("conv_id"),
+        none.cast("int").as("turn_idx"), none.cast("int").as("dl"), col("term")))
+      .groupBy("doc_id")
+      // max over the group's one non-null doc row (aggregates skip nulls)
+      .agg(max(col("conv_id")).as("conv_id"), max(col("turn_idx")).as("turn_idx"),
+        max(col("dl")).as("dl"), collect_list(col("term")).as("terms"))
+      .select(col("conv_id"), col("turn_idx"), col("dl"), col("terms"))
       .withColumn("kb", keyBucket(kb))
-      // cluster by bucket before the partitioned write: without it every
-      // scan task writes a file into every bucket dir it touches (up to
-      // tasks × kb tiny files), and the append-time pruned reads pay the
-      // listing/footer overhead the bucketing exists to save
-      .repartition(col("kb"))
+    // cluster by bucket before the partitioned write: without it every
+    // scan task writes a file into every bucket dir it touches (up to
+    // tasks × kb tiny files), and the append-time pruned reads pay the
+    // listing/footer overhead the bucketing exists to save; one bucket is
+    // one file without a shuffle
+    (if (kb == 1) rows.coalesce(1) else rows.repartition(col("kb")))
       .write.mode("overwrite").partitionBy("kb").parquet(s"$sp/keymeta")
     Fs.writeString(spark, s"$sp/keymeta/_NBUCKETS", kb.toString)
   }
@@ -197,17 +218,18 @@ object SegmentedIndex {
     * (partition pruning on the bucket directory column — the same trick
     * as the term shards). Every committed segment carries a keymeta
     * sidecar with `terms` and its `_NBUCKETS` count ([[writeKeymeta]] runs
-    * before each manifest publish); reading the counts is a driver-side
-    * file read per segment, no Spark job. */
+    * inside each segment write, before the manifest publish); reading the
+    * counts is a driver-side file read per segment, no Spark job. */
   private def segDocsMetaFor(spark: SparkSession, root: String, m: Manifest,
                              keys: DataFrame): Option[DataFrame] = {
     val kbByOrd: Seq[Int] = m.segments.map(seg =>
       Fs.readString(spark, s"${segPath(root, seg)}/keymeta/_NBUCKETS").trim.toInt)
     // ONE fused job computes the batch's touched buckets for EVERY
-    // distinct bucket count (the per-segment collect issued one
-    // sequential driver job per segment per append — O(segments) fixed
-    // latency). Driver boundary: ≤ Σ_kb min(|batch keys|, kb) ids.
-    val distinctKbs = kbByOrd.distinct
+    // distinct bucket count above one (the per-segment collect issued
+    // one sequential driver job per segment per append — O(segments)
+    // fixed latency; a one-bucket sidecar has nothing to prune). Driver
+    // boundary: ≤ Σ_kb min(|batch keys|, kb) ids.
+    val distinctKbs = kbByOrd.distinct.filter(_ > 1)
     val touchedByKb: Map[Int, Set[Int]] =
       if (distinctKbs.isEmpty) Map.empty
       else keys.select(explode(array(distinctKbs.map(kb =>
@@ -216,9 +238,9 @@ object SegmentedIndex {
         .collect().groupBy(_.getInt(0)).view
         .mapValues(_.map(_.getInt(1)).toSet).toMap
     m.segments.zip(kbByOrd).zipWithIndex.map { case ((seg, kb), ord) =>
-      val km = spark.read.parquet(s"${segPath(root, seg)}/keymeta")
+      val km = spark.read.schema(KeymetaSchema).parquet(s"${segPath(root, seg)}/keymeta")
       val touched = touchedByKb.getOrElse(kb, Set.empty).toSeq
-      (if (touched.size < kb) km.where(col("kb").isin(touched: _*)) else km)
+      (if (kb > 1 && touched.size < kb) km.where(col("kb").isin(touched: _*)) else km)
         .select(col("conv_id"), col("turn_idx"), col("dl"), col("terms"))
         .withColumn("seg_ord", lit(ord))
     }.reduceOption(_ unionByName _)
@@ -240,128 +262,119 @@ object SegmentedIndex {
     */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              deletes: DataFrame, segName: String,
-             cfg: BuildIndexJob.Config = BuildIndexJob.Config()): Manifest = {
-    requireHead(root, "append")
-    val old = readManifest(spark, root).getOrElse(Manifest(Seq.empty, Seq.empty, 0L, 0L))
-    require(!old.segments.contains(segName) && !old.tombs.contains(segName),
-      s"segment $segName already committed (replay must be caught by the caller)")
-    val (pending, keymetaF) =
-      buildSegment(spark, root, batch, deletes, segName, cfg, overlapKeymeta = true)
-    commitSegment(spark, root, pending, cfg, keymetaF)
-  }
+             cfg: BuildIndexJob.Config = BuildIndexJob.Config()): Manifest =
+    Phase(spark, "append") {
+      requireHead(root, "append")
+      val old = readManifest(spark, root).getOrElse(Manifest(Seq.empty, Seq.empty, 0L, 0L))
+      require(!old.segments.contains(segName) && !old.tombs.contains(segName),
+        s"segment $segName already committed (replay must be caught by the caller)")
+      commitSegment(spark, root, buildSegment(spark, root, batch, deletes, segName, cfg))
+    }
 
   /** A built-but-uncommitted segment: its on-disk content is a pure
     * function of (batch, deletes) — independent of the manifest — which
-    * is what lets [[appendAll]] build several concurrently. `ingestedKeys`
-    * / `delKeys` are lazy plans re-evaluated (keys-only, column-pruned)
-    * by the commit's kill scan. */
-  private final case class PendingSegment(segName: String,
-      ingestedKeys: DataFrame, delKeys: DataFrame, hasNewSeg: Boolean,
-      segDocs: Long, segTokens: Long)
+    * is what lets [[appendAll]] build several concurrently. `killKeys`
+    * (every ingested batch key and every delete key, whose OLDER
+    * instances die) is a lazy plan re-evaluated (keys-only, column-pruned)
+    * by the commit's kill scan; duplicates are harmless, the kill scan
+    * semi-joins them. */
+  private final case class PendingSegment(segName: String, killKeys: DataFrame,
+      hasNewSeg: Boolean, segDocs: Long, segTokens: Long)
 
-  /** Build one segment's full index + keymeta under `root/segments/`,
-    * without touching the manifest. With `overlapKeymeta` the keymeta
-    * write runs on a background thread (overlapped by the caller with the
-    * kill scan — guide §2.6) and is returned for joining BEFORE the
-    * manifest publish. */
+  /** Write one segment's full index + keymeta under `root/segments/` in
+    * one pass ([[SegmentWriter]]), without touching the manifest. */
   private def buildSegment(spark: SparkSession, root: String, batch: DataFrame,
                            deletes: DataFrame, segName: String,
-                           cfg: BuildIndexJob.Config, overlapKeymeta: Boolean)
-      : (PendingSegment, Option[java.util.concurrent.Future[_]]) = {
+                           cfg: BuildIndexJob.Config): PendingSegment = {
     val sp = segPath(root, segName)
     if (Fs.exists(spark, sp)) Fs.delete(spark, sp) // crashed half-append
     val ingested = IndexBuild.ingest(batch)
     val delKeys = deletes.select(Key.map(col): _*)
-    val newRows = ingested.join(delKeys, Key, "left_anti")
-    val hasNewSeg = !newRows.isEmpty
-    var keymetaF: Option[java.util.concurrent.Future[_]] = None
-    val (segDocs, segTokens) =
-      if (!hasNewSeg) (0L, 0L)
-      else {
-        BuildIndexJob.run(spark, newRows, sp, segName, cfg)
-        val st = BuildIndexJob.readStats(spark, BuildIndexJob.IndexPaths(sp), cfg.io)
-        if (overlapKeymeta) {
-          val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-          try keymetaF = Some(pool.submit(new Runnable {
-            override def run(): Unit = writeKeymeta(spark, sp, st.nDocs, cfg)
-          }))
-          finally pool.shutdown() // runs the queued task, then terminates
-        } else writeKeymeta(spark, sp, st.nDocs, cfg)
-        (st.nDocs, st.totalTokens)
-      }
-    (PendingSegment(segName, ingested.select(Key.map(col): _*), delKeys,
-      hasNewSeg, segDocs, segTokens), keymetaF)
+    val (st, rows) = SegmentWriter.write(spark, ingested.join(delKeys, Key, "left_anti"),
+      BuildIndexJob.IndexPaths(sp), segName, cfg, keymeta = true)(
+      BuildIndexJob.termFreqs(_, cfg.storePositions))
+    if (rows == 0) Fs.delete(spark, sp) // a batch of deletes only: no segment
+    PendingSegment(segName, ingested.select(Key.map(col): _*).unionByName(delKeys),
+      rows > 0, st.nDocs, st.totalTokens)
   }
 
   /** Fold one pre-built segment into the manifest: the kill scan over
     * OLDER segments, the tombstone/df-delta writes, and the atomic
-    * manifest publish. `keymetaF` (when the build overlapped it) is
-    * joined before the publish — the manifest is the commit point, so no
-    * reader can observe a segment without keymeta. */
+    * manifest publish — the commit point, after the segment (keymeta
+    * included) is fully written. */
   private def commitSegment(spark: SparkSession, root: String,
-                            pending: PendingSegment,
-                            cfg: BuildIndexJob.Config,
-                            keymetaF: Option[java.util.concurrent.Future[_]])
-      : Manifest = {
+                            pending: PendingSegment): Manifest = {
     val old = readManifest(spark, root).getOrElse(Manifest(Seq.empty, Seq.empty, 0L, 0L))
+    publish(spark, root, old, pending,
+      killScan(spark, root, old, pending.killKeys, pending.segName))
+  }
+
+  /** Docs and tokens of the live instances an append kills, and whether
+    * it wrote a tombstone dir. */
+  private type Kills = (Long, Long, Boolean)
+
+  /** The kill scan of append `segName` over the segments of `old`: the
+    * live older instances of `keys` die. Only those that actually kill a
+    * live instance are persisted as tombstones — disjoint batches write
+    * zero tombstone rows. Each append owns its tombstone dir (overwrite ⇒
+    * crash-replay safe); the dir becomes visible only through the
+    * manifest commit. */
+  private def killScan(spark: SparkSession, root: String, old: Manifest,
+                       keys: DataFrame, segName: String): Kills = {
     val ord = old.segments.size
-    val segName = pending.segName
-
-    // keys whose OLDER instances die now: every batch key (upsert) + every
-    // delete key. Only those that actually kill a live instance are
-    // persisted as tombstones — disjoint batches write zero tombstone rows.
-    // Each append owns its tombstone dir (overwrite ⇒ crash-replay safe);
-    // the dir becomes visible only through the manifest commit below.
-    val (killedN, killedTokens, wroteTombs) =
-      if (old.segments.isEmpty) (0L, 0L, false)
-      else {
-        // cached: the batch's key set drives per-segment bucket pruning
-        // (one tiny job per segment) AND the kill scan below
-        val tombKeys = pending.ingestedKeys
-          .unionByName(pending.delKeys).distinct().cache()
-        try segDocsMetaFor(spark, root, old, tombKeys) match {
-          case None => (0L, 0L, false)
-          case Some(olderMeta) =>
-            val oldTombs = readTombstones(spark, root, old)
-            // cached: feeds the stats aggregate, the tombstone write, AND
-            // the df-delta write (one scan, not one per action)
-            val killed = liveFilter(olderMeta, oldTombs)
-              .join(tombKeys, Key, "left_semi")
-              .select(col("conv_id"), col("turn_idx"), col("terms"),
-                when(col("dl") > 0, col("dl")).otherwise(lit(0)).as("dl"),
-                (col("dl") > 0).cast("int").as("counted"))
-              .cache()
-            try {
-              val agg = killed.agg(
-                count(lit(1)),
-                coalesce(sum(col("counted")), lit(0L)).cast("long"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).cast("long")).head()
-              val any = agg.getLong(0) > 0
-              if (any) {
-                killed.select(Key.map(col): _*).distinct()
-                  .withColumn("upto", lit(ord))
-                  .write.mode("overwrite").parquet(tombPath(root, segName))
-                // per-term df delta of the instances this append kills
-                // (each killed instance's DISTINCT terms lose one doc):
-                // lets query time derive exact LIVE df from dictionary
-                // metadata alone — Σ_seg df_build − Σ_deltas killed — the
-                // input the segmented WAND path needs without an O(df)
-                // posting decode. Committed through the same manifest
-                // entry as the tombstone dir (same name, same condition;
-                // overwrite ⇒ crash-replay safe).
-                killed.select(explode(col("terms")).as("term"))
-                  .groupBy("term").agg(count(lit(1)).as("killed"))
-                  .write.mode("overwrite").parquet(dfDeltaPath(root, segName))
-              }
-              (agg.getLong(1), agg.getLong(2), any)
-            } finally killed.unpersist()
-        } finally tombKeys.unpersist()
+    if (old.segments.isEmpty) (0L, 0L, false)
+    else Phase(spark, "append.killscan") {
+      segDocsMetaFor(spark, root, old, keys) match {
+        case None => (0L, 0L, false)
+        case Some(olderMeta) =>
+          val oldTombs = readTombstones(spark, root, old)
+          // cached: feeds the tombstone write AND the df-delta write
+          // (one scan, not one per action)
+          val killed = liveFilter(olderMeta, oldTombs)
+            .join(keys, Key, "left_semi")
+            .select(col("conv_id"), col("turn_idx"), col("terms"),
+              when(col("dl") > 0, col("dl")).otherwise(lit(0)).as("dl"),
+              (col("dl") > 0).cast("int").as("counted"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            // the killed-instance stats ride the tombstone write as
+            // observed metrics (no separate aggregate job); a write that
+            // killed nothing is removed again and never committed
+            val obs = org.apache.spark.sql.Observation()
+            killed.observe(obs, count(lit(1)).as("n"),
+                sum(col("counted").cast("long")).as("docs"),
+                sum(col("dl").cast("long")).as("tokens"))
+              .select(Key.map(col): _*).distinct()
+              .withColumn("upto", lit(ord))
+              .write.mode("overwrite").parquet(tombPath(root, segName))
+            def metric(k: String) = BuildIndexJob.observedLong(obs, k)
+            val any = metric("n") > 0
+            if (!any) Fs.delete(spark, tombPath(root, segName))
+            else Phase(spark, "append.dfdeltas") {
+              // per-term df delta of the instances this append kills
+              // (each killed instance's DISTINCT terms lose one doc):
+              // lets query time derive exact LIVE df from dictionary
+              // metadata alone — Σ_seg df_build − Σ_deltas killed — the
+              // input the segmented WAND path needs without an O(df)
+              // posting decode. Committed through the same manifest
+              // entry as the tombstone dir (same name, same condition;
+              // overwrite ⇒ crash-replay safe).
+              killed.select(explode(col("terms")).as("term"))
+                .groupBy("term").agg(count(lit(1)).as("killed"))
+                .write.mode("overwrite").parquet(dfDeltaPath(root, segName))
+            }
+            (metric("docs"), metric("tokens"), any)
+          } finally killed.unpersist()
       }
+    }
+  }
 
-    keymetaF.foreach(_.get()) // keymeta must land before the commit point
+  private def publish(spark: SparkSession, root: String, old: Manifest,
+                      pending: PendingSegment, kills: Kills): Manifest = {
+    val (killedN, killedTokens, wroteTombs) = kills
     val m = Manifest(
-      if (pending.hasNewSeg) old.segments :+ segName else old.segments,
-      if (wroteTombs) old.tombs :+ segName else old.tombs,
+      if (pending.hasNewSeg) old.segments :+ pending.segName else old.segments,
+      if (wroteTombs) old.tombs :+ pending.segName else old.tombs,
       old.nDocs - killedN + pending.segDocs,
       old.totalTokens - killedTokens + pending.segTokens)
     writeManifest(spark, root, m)
@@ -399,13 +412,12 @@ object SegmentedIndex {
         val fs = batches.map { case (name, batch, deletes) =>
           pool.submit(new java.util.concurrent.Callable[PendingSegment] {
             override def call(): PendingSegment =
-              buildSegment(spark, root, batch, deletes, name, cfg,
-                overlapKeymeta = false)._1
+              Phase(spark, "append")(buildSegment(spark, root, batch, deletes, name, cfg))
           })
         }
         fs.map(_.get())
       } finally pool.shutdown()
-    pendings.map(p => commitSegment(spark, root, p, cfg, None)).last
+    Phase(spark, "append")(pendings.map(p => commitSegment(spark, root, p)).last)
   }
 
   /** Solr deleteByQuery over the segmented index: every LIVE doc matching
@@ -1409,8 +1421,11 @@ object SegmentedIndex {
         // re-id without re-running the analyzer over the whole corpus
         // ([[IndexMerge.rebuildFromParts]]; compaction is the one
         // O(corpus) maintenance op, and analysis was its biggest term)
-        IndexMerge.rebuildFromParts(spark, compactParts(spark, root, m, cfg),
-          outRoot, buildId, cfg)
+        Phase(spark, "compact") {
+          IndexMerge.rebuildFromParts(spark, compactParts(spark, root, m, cfg),
+            outRoot, buildId, cfg, keymeta = false)
+          BuildIndexJob.IndexPaths(outRoot)
+        }
     }
 
   /** One (live docs, tfdl) part per segment of `m` — the rebuild inputs
@@ -1446,13 +1461,11 @@ object SegmentedIndex {
     if (old.segments.isEmpty || (old.segments.size <= 1 && old.tombs.isEmpty))
       return old
     val segName = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    val sp = segPath(root, segName)
     // parts read through the OLD manifest (segments immutable), and the
     // rebuild reuses their tokenization — see [[compact]]
-    IndexMerge.rebuildFromParts(spark, compactParts(spark, root, old, cfg),
-      sp, segName, cfg)
-    val st = BuildIndexJob.readStats(spark, BuildIndexJob.IndexPaths(sp), cfg.io)
-    writeKeymeta(spark, sp, st.nDocs, cfg)
+    val (st, _) = Phase(spark, "compact")(IndexMerge.rebuildFromParts(spark,
+      compactParts(spark, root, old, cfg), segPath(root, segName), segName, cfg,
+      keymeta = true))
     val m = Manifest(Seq(segName), Seq.empty, st.nDocs, st.totalTokens)
     writeManifest(spark, root, m)
     m
@@ -1523,7 +1536,11 @@ object SegmentedIndex {
     * rows. Obsolete dirs are retained for snapshot readers ([[vacuum]]
     * reclaims). */
   def mergeAdjacent(spark: SparkSession, root: String, a: Int, b: Int,
-                    cfg: BuildIndexJob.Config = BuildIndexJob.Config()): Manifest = {
+                    cfg: BuildIndexJob.Config = BuildIndexJob.Config()): Manifest =
+    Phase(spark, "merge")(mergeRun(spark, root, a, b, cfg))
+
+  private def mergeRun(spark: SparkSession, root: String, a: Int, b: Int,
+                       cfg: BuildIndexJob.Config): Manifest = {
     requireHead(root, "mergeAdjacent")
     val m = readManifest(spark, root).getOrElse(
       sys.error(s"mergeAdjacent on an empty table: $root"))
@@ -1542,15 +1559,11 @@ object SegmentedIndex {
         tombs).drop("seg_ord")
       (docsLive, cfg.io.read(spark, s"$sp0/tfdl"))
     }
-    val live = parts.map(_._1).reduce(_ unionByName _)
     val segName = s"tier-${java.util.UUID.randomUUID().toString.take(8)}"
     val sp = segPath(root, segName)
-    val hasRows = !live.isEmpty
-    if (hasRows) {
-      IndexMerge.rebuildFromParts(spark, parts, sp, segName, cfg)
-      val st = BuildIndexJob.readStats(spark, BuildIndexJob.IndexPaths(sp), cfg.io)
-      writeKeymeta(spark, sp, st.nDocs, cfg)
-    }
+    val hasRows =
+      IndexMerge.rebuildFromParts(spark, parts, sp, segName, cfg, keymeta = true)._2 > 0
+    if (!hasRows) Fs.delete(spark, sp) // an all-dead run: nothing to splice
     val newSegs = m.segments.take(a) ++
       (if (hasRows) Seq(segName) else Seq.empty) ++ m.segments.drop(b + 1)
     // ordinal remap; an all-dead merged range (hasRows=false) removes the
@@ -1565,7 +1578,7 @@ object SegmentedIndex {
       .groupBy("conv_id", "turn_idx").agg(max("upto").as("upto"))
     val interim = Manifest(newSegs, Seq.empty, m.nDocs, m.totalTokens)
     val tombKeys = remapped.select(Key.map(col): _*)
-    val newTombs = segDocsMetaFor(spark, root, interim, tombKeys) match {
+    val newTombs = Phase(spark, "merge.remap")(segDocsMetaFor(spark, root, interim, tombKeys) match {
       case None => Seq.empty[String]
       case Some(meta) =>
         // instances STILL PHYSICALLY PRESENT that the remapped set kills
@@ -1591,7 +1604,7 @@ object SegmentedIndex {
             Seq(segName)
           }
         } finally killed.unpersist()
-    }
+    })
     val out = interim.copy(tombs = newTombs)
     writeManifest(spark, root, out)
     out
@@ -1627,7 +1640,7 @@ object SegmentedIndex {
     val sizeCache = scala.collection.mutable.HashMap.empty[String, Long]
     def sizesOf(segs: Seq[String]): Seq[Long] = {
       val missing = segs.filterNot(sizeCache.contains).distinct
-      if (missing.nonEmpty) {
+      if (missing.nonEmpty) Phase(spark, "merge.sizes") {
         missing.map(seg =>
             cfg.io.read(spark,
                 BuildIndexJob.IndexPaths(segPath(root, seg)).stats)

@@ -648,4 +648,92 @@ class SegmentSpec extends SparkSpec {
     answers.forEach(a => assert(valid.contains(a), "an answer matches no committed manifest"))
     all.unpersist()
   }
+
+  /** Properties of every Spark job `body` submits. */
+  def jobsOf[T](body: => T): (T, Seq[java.util.Properties]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties).getOrElse(new java.util.Properties))
+    }
+    org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A root with one older segment (convs 0–40) and the next batch:
+    * convs 40–60 plus upserts of convs 10–13, deleting two older keys. */
+  def olderSegmentAndBatch(all: DataFrame, c: BuildIndexJob.Config)
+      : (String, DataFrame, DataFrame) = {
+    val root = tmp()
+    SegmentedIndex.append(spark, root, convs(all, 0, 40), noDeletes, "seg-a", c)
+    (root, convs(all, 40, 60).unionByName(upserted(all, 10, 13, "upserted")),
+      Seq(("conv00000001", 0), ("conv00000020", 1)).toDF("conv_id", "turn_idx"))
+  }
+
+  test("every job of an append and a mergeAdjacent carries a graft.phase; the caller's job group and pool survive") {
+    val all = Transcripts.synthetic(spark, 60).cache()
+    val (root, batch, dels) = olderSegmentAndBatch(all, cfg)
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel = false)
+    sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+    try {
+      val (_, appendJobs) = jobsOf(SegmentedIndex.append(spark, root, batch, dels, "seg-b", cfg))
+      val (_, mergeJobs) = jobsOf(SegmentedIndex.mergeAdjacent(spark, root, 0, 1, cfg))
+      for ((op, jobs) <- Seq("append" -> appendJobs, "mergeAdjacent" -> mergeJobs)) {
+        assert(jobs.nonEmpty, s"$op ran no jobs")
+        jobs.foreach { p =>
+          assert(p.getProperty(Phase.Key) != null, s"$op: a job without ${Phase.Key}")
+          assert(p.getProperty("spark.jobGroup.id") == "caller-group", s"$op: job group lost")
+          assert(p.getProperty("spark.scheduler.pool") == "caller-pool", s"$op: pool lost")
+        }
+      }
+      val phases = (appendJobs ++ mergeJobs).map(_.getProperty(Phase.Key)).toSet
+      val want = Set("segment.docids", "segment.docs", "segment.tf", "segment.dict",
+        "segment.postings", "segment.blockmeta", "segment.keymeta", "append.killscan")
+      assert(want.subsetOf(phases), s"phases seen: $phases")
+      assert(sc.getLocalProperty(Phase.Key) == null, "the phase leaked past the call")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+    }
+    all.unpersist()
+  }
+
+  test("single-pass append: ≤ 35 Spark jobs and no TableIO read of the new segment; a merge runs fewer jobs") {
+    val all = Transcripts.synthetic(spark, 60).cache()
+    val io = new RecordingIO
+    val icfg = cfg.copy(io = io)
+    val (root, batch, dels) = olderSegmentAndBatch(all, icfg)
+    io.reads.clear()
+    val (_, appendJobs) = jobsOf(SegmentedIndex.append(spark, root, batch, dels, "seg-b", icfg))
+    // writing the segment through BuildIndexJob.run (stage markers,
+    // per-partition lineage, artifacts read back) took 66 jobs here; the
+    // single-pass writer takes 34 — AQE submits one job per shuffle stage
+    // and per broadcast, so each of the seven artifacts costs ≥ 2
+    def byPhase(jobs: Seq[java.util.Properties]) =
+      jobs.groupMapReduce(_.getProperty(Phase.Key))(_ => 1)(_ + _).toSeq.sorted.mkString(", ")
+    assert(appendJobs.size <= 35, s"append ran ${appendJobs.size} jobs: ${byPhase(appendJobs)}")
+    val seg = SegmentedIndex.segPath(root, "seg-b")
+    val artifacts = Seq("docs", "tfdl", "dictionary", "postings", "stats").map(a => s"$seg/$a")
+    val readBack = io.reads.toArray.map(_.toString)
+      .filter(r => artifacts.exists(a => r == a || r.startsWith(s"$a/")))
+    assert(readBack.isEmpty, s"the append read back what it wrote: ${readBack.toSeq}")
+    val (_, mergeJobs) = jobsOf(SegmentedIndex.mergeAdjacent(spark, root, 0, 1, icfg))
+    // the same merge through the bulk build's stages ran 62 jobs; the
+    // single-pass writer runs 37
+    assert(mergeJobs.size < 62, s"mergeAdjacent ran ${mergeJobs.size} jobs: ${byPhase(mergeJobs)}")
+    assert(segResults(root) == rebuildExpected(liveOf(Seq((convs(all, 0, 40), noDeletes),
+      (batch, dels)))))
+    all.unpersist()
+  }
 }
+

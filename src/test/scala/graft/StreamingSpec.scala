@@ -89,6 +89,27 @@ class StreamingSpec extends SparkSpec {
     assert(segResults(root) == rebuildExpected(Transcripts.synthetic(spark, 40)))
   }
 
+  test("stale artifacts of another batch in a crashed segment dir are wiped by the replay") {
+    val root = tmp()
+    StreamingIngest.ingestBatch(spark, root, Transcripts.synthetic(spark, 20), 0L, cfg)
+    // simulate a crash mid-append of a DIFFERENT batch under the same
+    // segment name: its docs/ and postings/ exist, no stage markers, and
+    // the manifest never referenced the dir
+    val other = tmp()
+    BuildIndexJob.run(spark, Transcripts.synthetic(spark, 60)
+      .where($"conv_id" >= "conv00000045"), other, "other", cfg)
+    val partial = SegmentedIndex.segPath(root, "seg-000001")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    for (a <- Seq("docs", "postings"))
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$other/$a"),
+        fs, new org.apache.hadoop.fs.Path(s"$partial/$a"), false, conf)
+    assert(!new java.io.File(s"$partial/_stage_done").exists)
+    val b2 = Transcripts.synthetic(spark, 40).where($"conv_id" >= "conv00000020")
+    StreamingIngest.ingestBatch(spark, root, b2, 1L, cfg)
+    assert(segResults(root) == rebuildExpected(Transcripts.synthetic(spark, 40)))
+  }
+
   test("flatMapGroupsWithState dedup: redeliveries across AND within batches drop") {
     val in = tmp()
     val all = Transcripts.synthetic(spark, 20).cache()
