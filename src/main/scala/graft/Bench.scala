@@ -66,7 +66,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // lz4 default — zstd lost the 8→32 A/B (see ScalingBench scaladoc)
+      // lz4 default — zstd lost the 8→32 A/B (commit fe9d420's ScalingBench)
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .config("spark.sql.files.maxPartitionBytes", "16m")

@@ -157,7 +157,8 @@ object Oracle {
 
   /** BM25 top-k over the transcripts corpus, results identified by the
     * stable (conv_id, turn_idx) KEY instead of the dense doc_id — the twin
-    * of [[graft.index.SegmentedIndex.search]], whose segment-local ids
+    * of [[graft.search.IndexSearch.search]] over a segmented root's
+    * [[graft.index.SegmentedIndex.open]] view, whose segment-local ids
     * never escape. Ranking is unchanged: dense ids are assigned in key
     * order, so (round(score,7) DESC, doc_id ASC) ≡ (…, conv_id, turn_idx
     * ASC). Disjunctive only. */
@@ -1089,7 +1090,8 @@ object Oracle {
        |FROM ranked WHERE rnk <= $k
        |ORDER BY query_id, rnk""".stripMargin
 
-  /** Keys-shaped twin of [[graft.index.SegmentedIndex.searchSynonyms]] —
+  /** Keys-shaped twin of [[graft.search.Synonyms.searchIndex]] over a
+    * segmented root's [[graft.index.SegmentedIndex.open]] view —
     * the same synonym scoring chain joined back through the keymap (the
     * [[bm25TopKKeys]] rule: dense ids are assigned in key order, so the
     * rank tie-break carries over). */

@@ -743,6 +743,11 @@ object SparkEntry {
       root
     })
 
+  /** The streamed fixture as a live view. */
+  private def streamedView(s: SparkSession, dir: String): IndexSearch.View =
+    graft.index.SegmentedIndex.open(s, streamedIndex(s, dir),
+      BuildIndexJob.Config(numShards = 8))
+
   /** Memoized tiered-merge fixture: six equal doc_id slices appended as
     * segments seg0..seg5 (one snapshot per commit — v1..v6), then a 7th
     * append that UPSERTS docs ≡ 0 (mod 50) with " upserted" appended and
@@ -1515,9 +1520,8 @@ object SparkEntry {
     // {!parent} block join over the SEGMENTED index: conv_id is the key
     // prefix, so the live scored keys aggregate with no attribute join
     "q_bm25_parent_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchParents(s, streamedIndex(s, dir),
-        DisjQueries, graft.search.BlockJoin.Total, k = 10,
-        cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.searchParents(streamedView(s, dir),
+        DisjQueries, graft.search.BlockJoin.Total, k = 10)),
     // Solr interval faceting: endpoint-inclusive/exclusive dl bands,
     // overlapping sets both count, zero-filled request spine
     "q_facet_interval" -> ((s, dir) =>
@@ -1604,9 +1608,8 @@ object SparkEntry {
     // JSON Facet API over the SEGMENTED index (keys identity) — the
     // modern facet module served live between compactions
     "q_facet_json_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetJson(s, streamedIndex(s, dir),
-        DisjQueries, "role", "tool", 2, 2, JsonFacetMetrics,
-        BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetJson(streamedView(s, dir),
+        DisjQueries, "role", "tool", 2, 2, JsonFacetMetrics)),
     // JSON Facet API metric-sorted terms buckets (sort:"avg_dl desc") —
     // parent ranking by a bucket metric instead of the count; the limit
     // must bite for the sort to be observable
@@ -1625,9 +1628,8 @@ object SparkEntry {
         FacetQueryDefs.map(d => (d._1, d._2)), JsonFacetMetrics)),
     // JSON Facet query buckets served LIVE from the segmented index
     "q_facet_json_query_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetJsonQuery(s, streamedIndex(s, dir),
-        DisjQueries, FacetQueryDefs.map(d => (d._1, d._2)), JsonFacetMetrics,
-        BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetJsonQuery(streamedView(s, dir),
+        DisjQueries, FacetQueryDefs.map(d => (d._1, d._2)), JsonFacetMetrics)),
     // JSON Facet API range facet: [b, b+gap) buckets each carrying the
     // metric set — count + metrics from one aggregation pass
     "q_facet_json_range" -> ((s, dir) =>
@@ -1636,9 +1638,8 @@ object SparkEntry {
     // JSON Facet range buckets served LIVE from the segmented index —
     // metrics see upserts and tombstones between compactions
     "q_facet_json_range_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetJsonRange(s, streamedIndex(s, dir),
-        DisjQueries, "dl", 0L, 120L, 20L, JsonFacetMetrics,
-        BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetJsonRange(streamedView(s, dir),
+        DisjQueries, "dl", 0L, 120L, 20L, JsonFacetMetrics)),
     // Solr TermsComponent: prefix enumeration, terms.sort=index
     "q_terms" -> ((s, dir) =>
       graft.search.Suggest.terms(indexFor(s, dir), SuggestPrefixes, 5)),
@@ -1836,8 +1837,7 @@ object SparkEntry {
     // §2.10: streaming ingest → segmented index, queried by segment
     // fan-out (keys-shaped output; segment-local ids never escape)
     "q_streaming_topk" -> ((s, dir) =>
-      graft.index.SegmentedIndex.search(s, streamedIndex(s, dir), DisjQueries,
-        cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.search(streamedView(s, dir), DisjQueries)),
     // flatMapGroupsWithState keyed dedup: three REDELIVERING micro-batches
     // (each resends part of the previous) collapse to exactly one row per
     // key — the custom-state streaming surface, verified against the
@@ -1880,15 +1880,14 @@ object SparkEntry {
     // SynonymQuery expansion served LIVE from the segmented index (live
     // member df from the tombstone-filtered fan-out)
     "q_bm25_synonyms_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchSynonyms(s, streamedIndex(s, dir),
-        DisjQueries, SynonymGroups,
-        cfg = BuildIndexJob.Config(numShards = 8))),
+      graft.search.Synonyms.searchIndex(streamedView(s, dir),
+        DisjQueries, SynonymGroups)),
     // Solr deleteByQuery over the segmented index: every live doc
     // containing 'dup' tombstoned via an empty-batch append; subsequent
     // queries score as a rebuild on the survivors
     "q_delete_by_query" -> ((s, dir) =>
-      graft.index.SegmentedIndex.search(s, dbqIndex(s, dir), DisjQueries,
-        cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.search(graft.index.SegmentedIndex.open(s, dbqIndex(s, dir),
+        BuildIndexJob.Config(numShards = 8)), DisjQueries)),
     // Lucene TieredMergePolicy analog: adjacent same-tier segment runs
     // folded (tombstone ordinals remapped, df-delta sidecar consolidated),
     // then the WAND path over the merged artifacts — answers ≡ a rebuild
@@ -1900,8 +1899,8 @@ object SparkEntry {
     // through snapshot v3 (committed before the upserts, deletes, and
     // merges) answers from the first three slices only
     "q_bm25_asof" -> ((s, dir) =>
-      graft.index.SegmentedIndex.search(s, tieredIndex(s, dir) + "@v3",
-        DisjQueries, cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.search(graft.index.SegmentedIndex.open(s,
+        tieredIndex(s, dir) + "@v3", BuildIndexJob.Config(numShards = 8)), DisjQueries)),
     // U1 at scale: compaction of the streamed segments back to a unified
     // global-id index — same oracle as any full-corpus BM25 query
     // (memoized: the compacted index is deterministic per sfDir)
@@ -2031,26 +2030,25 @@ object SparkEntry {
       graft.index.SegmentedIndex.searchClauses(s, streamedIndex(s, dir),
         BoolQueries, cfg = BuildIndexJob.Config(numShards = 8))),
     "q_bm25_fq_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchFiltered(s, streamedIndex(s, dir),
-        DisjQueries, col("role") === "user",
-        cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.searchFiltered(streamedView(s, dir),
+        DisjQueries, col("role") === "user")),
     "q_facet_role_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetCounts(s, streamedIndex(s, dir),
-        DisjQueries, "role", BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetCounts(streamedView(s, dir),
+        DisjQueries, "role")),
     // round-5 facet engine composed onto the segmented keys identity:
     // repeated facet.field and the StatsComponent served between
     // compactions from the live match set
     "q_facet_multi_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetFields(s, streamedIndex(s, dir),
-        DisjQueries, Seq("role", "tool"), BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetFields(streamedView(s, dir),
+        DisjQueries, Seq("role", "tool"))),
     "q_stats_dl_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.statsField(s, streamedIndex(s, dir),
-        DisjQueries, "dl", BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.statsField(streamedView(s, dir),
+        DisjQueries, "dl")),
     // Interval faceting composed onto the live segmented fan-out —
     // bracket counts stay exact between compactions
     "q_facet_interval_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.facetIntervals(s, streamedIndex(s, dir),
-        DisjQueries, "dl", IntervalSets, BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.facetIntervals(streamedView(s, dir),
+        DisjQueries, "dl", IntervalSets)),
     // Conjunctive AND over the segmented index — the clause engine's
     // all-must subset (J3's semantics, fanned out per segment)
     "q_bm25_conj_segmented" -> ((s, dir) =>

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
   *
   *  - per segment: its [[IndexSearch.OpenIndex]] (stats, the resolved
   *    postings relation and the [[graft.search.ResidentDict]], each
-  *    loaded on first use) and its thin `docs/` key relation;
+  *    loaded on first use) and its resolved `docs/` relation;
   *  - per tombstone dir: its killed keys with their `upto` and the
   *    per-term kills of its `dfdeltas/` sidecar.
   *
@@ -36,9 +36,10 @@ private[graft] object SegmentSnapshots {
 
   final class Segment(spark: SparkSession, path: String, io: TableIO) {
     lazy val index: IndexSearch.OpenIndex = IndexSearch.open(spark, path, io)
+    /** The `docs/` relation, resolved (file listing, schema) once. */
+    lazy val stored: DataFrame = io.read(spark, s"$path/docs")
     /** (doc_id, conv_id, turn_idx) — the segment-local id → key map. */
-    lazy val docs: DataFrame = io.read(spark, s"$path/docs")
-      .select(col("doc_id"), col("conv_id"), col("turn_idx"))
+    lazy val docs: DataFrame = stored.select(col("doc_id"), col("conv_id"), col("turn_idx"))
   }
 
   final class Tomb(spark: SparkSession, tombPath: String, deltaPath: String) {

@@ -41,18 +41,24 @@ import org.apache.spark.sql.functions._
   *
   * Exactness vs a full rebuild: BM25 needs global N, avgdl, df over LIVE
   * docs. N/total_tokens are maintained incrementally in the manifest
-  * (batch stats added, killed-instance stats subtracted). The exhaustive
-  * paths compute per-term df at query time from the same pruned,
-  * tombstone-filtered posting scan that scoring reads anyway; the WAND
-  * path ([[searchWand]]) takes it from metadata instead — Σ segment
-  * dictionary df minus the `dfdeltas/` kills, held on the driver by
-  * [[SegmentSnapshots]] — so it decodes only the blocks it scores. Both
-  * match the rebuild bit-for-bit (SegmentSpec / q_streaming_topk
-  * gates). Results identify
+  * (batch stats added, killed-instance stats subtracted). df comes from
+  * metadata ([[liveDf]]): Σ segment dictionary df minus the `dfdeltas/`
+  * kills, held on the driver by [[SegmentSnapshots]], so a read decodes
+  * only the postings it scores, once. Answers match the rebuild
+  * bit-for-bit (SegmentSpec / q_streaming_topk gates). Results identify
   * docs by their stable key (conv_id, turn_idx): segment-local ids are
   * internal, exactly like Lucene's per-segment ids; the tie-break
   * (conv_id, turn_idx ascending) equals the unified index's doc_id
   * ascending because global ids are assigned in key order.
+  *
+  * One engine, two storage views: [[open]] is this root's
+  * [[IndexSearch.View]], and the scored, filtered, block-join, synonym
+  * and facet request shapes of [[IndexSearch]] and
+  * [[graft.search.Synonyms]] serve it as they serve a bulk root — Lucene
+  * runs every query per leaf behind one reader interface the same way.
+  * What stays here works on segment-local ids or has its own grammar:
+  * [[searchWand]], [[searchHighlight]], [[getDocs]], [[searchClauses]],
+  * [[searchPhrase]] and the writers.
   */
 object SegmentedIndex {
 
@@ -428,7 +434,7 @@ object SegmentedIndex {
     * manifest snapshot (segments are immutable and the new tombstone dir
     * is not yet visible), so there is no self-read hazard. Scoring after
     * the delete equals a rebuild on the surviving corpus: live df comes
-    * from tombstone-filtered postings (+ df-deltas on the WAND path) and
+    * from dictionary df minus the df-deltas this append writes, and
     * N/avgdl from the manifest's updated totals — the invariant
     * SegmentSpec pins for tombstones generally. Returns the new manifest
     * (unchanged when nothing matches — append still commits a manifest,
@@ -439,42 +445,98 @@ object SegmentedIndex {
     import spark.implicits._
     val emptyBatch = Seq.empty[(String, Int, String, String, String, java.sql.Timestamp)]
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val keys = readManifest(spark, root) match {
-      case None => emptyTombstones(spark)
-      case Some(m) if m.segments.isEmpty || m.nDocs == 0 => emptyTombstones(spark)
-      case Some(m) =>
-        matchedKeys(spark, root, m, Seq((0, query)), cfg)
-          .map(_.select("conv_id", "turn_idx").distinct())
-          .getOrElse(emptyTombstones(spark))
-    }
+    val keys = IndexSearch.matchedDocSet(open(spark, root, cfg), Seq((0, query)))
+      .drop("query_id")
     append(spark, root, emptyBatch, keys, segName, cfg)
   }
 
-  /** Exact BM25 top-k over the segmented index — query-time fan-out.
-    * Output: (query_id, rank, conv_id, turn_idx, score) — docs identified
-    * by their stable key (segment-local ids never escape). Global df comes
-    * from the live tombstone-filtered posting scan itself; N/avgdl from
-    * the manifest. Disjunctive (OR) semantics. */
-  def search(spark: SparkSession, root: String, queries: Seq[(Int, String)],
-             k: Int = 10,
-             cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame =
-    searchParts(spark, root, queries, k, cfg, doCache = true) match {
-      case Left(empty) => empty
-      case Right((out, cached)) =>
-        // materialize eagerly (≤ |queries| × k rows — driver-safe by
-        // construction) so the cached posting relation can be dropped
-        // before returning; callers get a small local frame
-        try IndexSearch.localize(spark, out) finally cached.unpersist()
+  /** The live segmented root as an [[IndexSearch.View]]: every request
+    * shape written against a view ([[IndexSearch.search]],
+    * [[IndexSearch.searchFiltered]], the facet family, …) serves it, with
+    * results keyed by (conv_id, turn_idx). A snapshot of the manifest at
+    * open time, valid until [[vacuum]] removes a directory it lists.
+    *
+    *  - df is the exact live df of [[liveDf]] (metadata only), N/avgdl
+    *    come from the manifest;
+    *  - `matched` decodes, per segment, only the shards its resident
+    *    dictionary ([[SegmentSnapshots]]) maps the query terms to, and
+    *    keeps the postings of tombstone-live instances. The plan holds
+    *    one postings scan per segment: fine because compaction bounds
+    *    the segment count (a long-running ingest calls compactInPlace or
+    *    tieredCompact, so this is O(compactEvery), never O(all appends
+    *    ever));
+    *  - `attrs` is the live instances' stored attributes (keys +
+    *    role/tool/ts + dl) across segments; Catalyst prunes each
+    *    segment's `docs/` scan to the columns a caller references.
+    *
+    * An absent root, a root without segments and a root whose every doc
+    * is tombstoned give a view of typed empty frames. */
+  def open(spark: SparkSession, root: String,
+           cfg: BuildIndexJob.Config = BuildIndexJob.Config()): IndexSearch.View = {
+    val m = readManifest(spark, root).filter(_.nDocs > 0)
+      .getOrElse(Manifest(Seq.empty, Seq.empty, 0L, 0L))
+    val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
+    new LiveView(spark, m, segs, tombs, readTombstones(spark, root, m))
+  }
+
+  private final class LiveView(val spark: SparkSession, m: Manifest,
+                               segs: IndexedSeq[SegmentSnapshots.Segment],
+                               tombs: IndexedSeq[SegmentSnapshots.Tomb],
+                               tombRows: DataFrame) extends IndexSearch.View {
+    def key: Seq[String] = Key
+    def nDocs: Long = m.nDocs
+    def avgdl: Double = m.avgdl
+
+    private def empty(ddl: String): DataFrame = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+    def matched(qt: Seq[(Int, String)]): DataFrame = {
+      import spark.implicits._
+      val df = liveDf(segs, tombs, qt.map(_._2).distinct)._2
+      val qd = broadcast(qt.distinct.collect { case (q, t) if df.contains(t) => (q, t, df(t)) }
+        .toDF("query_id", "term", "df"))
+      segs.indices.flatMap { o =>
+        val shards = segs(o).index.resident.shardsOf(df.keys.toSeq)
+        if (shards.isEmpty) None
+        else Some(PostingBlocks.decodePostings(segs(o).index.postings
+            .where(col("shard").isin(shards: _*)).join(qd, Seq("term")))
+          .join(liveFilter(segs(o).docs.withColumn("seg_ord", lit(o)), tombRows), "doc_id")
+          .select(col("query_id"), col("term"), col("df"), col("conv_id"),
+            col("turn_idx"), col("tf"), col("dl")))
+      }.reduceOption(_ unionByName _).getOrElse(empty(
+        "query_id INT, term STRING, df BIGINT, conv_id STRING, turn_idx INT, tf INT, dl INT"))
     }
 
-  /** The lazy, uncached plan — exposed so plan-shape tests can assert
-    * partition pruning on the executed plan (the public [[search]] returns
-    * a materialized local frame whose plan no longer shows the scans). */
-  private[graft] def searchPlan(spark: SparkSession, root: String,
-                                queries: Seq[(Int, String)], k: Int = 10,
-                                cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame =
-    searchParts(spark, root, queries, k, cfg, doCache = false)
-      .fold(identity, _._1)
+    lazy val attrs: DataFrame = segs.indices
+      .map(o => segs(o).stored.drop("text", "doc_id").withColumn("seg_ord", lit(o)))
+      .reduceOption(_ unionByName _).map(liveFilter(_, tombRows).drop("seg_ord"))
+      .getOrElse(empty(
+        "conv_id STRING, turn_idx INT, role STRING, tool STRING, ts TIMESTAMP, dl INT"))
+  }
+
+  /** Exact LIVE df of `terms` from metadata alone: Σ over segments of the
+    * segment dictionary's build-time df, minus the per-append kill deltas
+    * (`dfdeltas/<tomb>` — written beside every committed tombstone dir by
+    * [[append]] and [[mergeAdjacent]] from the killed instances' keymeta
+    * term lists). A term no live doc holds is absent. Also returns each
+    * segment's dictionary row of every term it holds. The one place live
+    * df is derived: [[searchWand]] and every view of [[open]] score from
+    * it, and SegmentSpec pins it to the count of live decoded postings. */
+  private[graft] def liveDf(segs: IndexedSeq[SegmentSnapshots.Segment],
+                            tombs: IndexedSeq[SegmentSnapshots.Tomb],
+                            terms: Seq[String])
+      : (IndexedSeq[Map[String, Int]], Map[String, Long]) = {
+    val dicts = segs.map(_.index.resident)
+    val rows: IndexedSeq[Map[String, Int]] = dicts.map(d =>
+      terms.map(t => t -> d.row(t)).filter(_._2 >= 0).toMap)
+    val dfLive: Map[String, Long] = terms.flatMap { t =>
+      val total = segs.indices.map(o => rows(o).get(t).fold(0L)(dicts(o).df)).sum -
+        tombs.map(_.dfDeltas.getOrElse(t, 0L)).sum
+      if (total > 0) Some(t -> total) else None
+    }.toMap
+    (rows, dfLive)
+  }
 
   private def keysEmpty(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -482,162 +544,19 @@ object SegmentedIndex {
       .toDF("query_id", "rank", "conv_id", "turn_idx", "score")
   }
 
-  /** Live pruned posting relation for a term set: one row per (term, LIVE
-    * doc) — (term, conv_id, turn_idx, tf, dl) — across all segments.
-    * Per-segment shard pruning + tombstone filtering; the shared scan
-    * under every segmented query shape (disjunctive, boolean clauses, fq,
-    * facet). Each segment's shards come from its cached resident
-    * dictionary ([[SegmentSnapshots]]) — no probe job — and the plan
-    * holds one postings scan per segment: fine because compaction bounds
-    * the segment count (the documented invariant — a long-running ingest
-    * calls compactInPlace every `compactEvery` batches, so this loop is
-    * O(compactEvery), never O(all appends ever)). */
-  private def liveMatched(spark: SparkSession, root: String, m: Manifest,
-                          terms: Seq[String],
-                          cfg: BuildIndexJob.Config): Option[DataFrame] = {
-    import spark.implicits._
-    val tombs = readTombstones(spark, root, m)
-    val qTerms = terms.distinct.toDF("term")
-    val perSeg = SegmentSnapshots.of(spark, root, m, cfg.io)._1.zipWithIndex.flatMap {
-      case (seg, ord) =>
-        val shards = seg.index.resident.shardsOf(terms)
-        if (shards.isEmpty) None
-        else {
-          val blocks = seg.index.postings
-            .where(col("shard").isin(shards: _*))
-            .join(broadcast(qTerms), Seq("term"))
-          val live = liveFilter(seg.docs.withColumn("seg_ord", lit(ord)), tombs)
-          Some(PostingBlocks.decodePostings(blocks)
-            .join(live, "doc_id")
-            .select(col("term"), col("conv_id"), col("turn_idx"),
-              col("tf"), col("dl")))
-        }
-    }
-    perSeg.reduceOption(_ unionByName _)
-  }
-
   /** Distinct analyzed terms of a query batch, on the driver. */
   private def termsOf(queries: Seq[(Int, String)]): Seq[String] =
     queries.flatMap(q => graft.analysis.Analyzer.tokenize(q._2)).distinct
 
-  /** Live docs with their stored non-text attributes (keys + role/tool/ts
-    * + dl), across all segments — the fq/facet attribute side. Catalyst
-    * prunes the per-segment parquet scans to the columns a caller
-    * actually references. */
-  private def liveDocAttrs(spark: SparkSession, root: String, m: Manifest,
-                           cfg: BuildIndexJob.Config): DataFrame = {
-    val tombs = readTombstones(spark, root, m)
-    val segs = m.segments.zipWithIndex.map { case (seg, ord) =>
-      cfg.io.read(spark, s"${segPath(root, seg)}/docs")
-        .drop("text", "doc_id")
-        .withColumn("seg_ord", lit(ord))
-    }
-    liveFilter(segs.reduce(_ unionByName _), tombs).drop("seg_ord")
-  }
-
-  /** Disjunctive per-(query, key) BM25 scores over a live matched
-    * relation: query-time df from the relation itself, manifest N/avgdl —
-    * the shared scoring tail of the plain, fq, and (extended with must
-    * counting) clause paths. */
-  private def disjunctiveScores(all: DataFrame, qt: DataFrame,
-                                m: Manifest): DataFrame = {
-    val dfg = all.groupBy("term").agg(count(lit(1)).as("df"))
-    all.join(broadcast(dfg), "term")
-      .join(broadcast(qt), "term")
-      .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-        lit(m.nDocs), lit(m.avgdl)))
-      .groupBy("query_id", "conv_id", "turn_idx")
-      .agg(sum(col("_s")).as("_score"))
-  }
-
-  /** W1 over key-identified docs: the pinned tie-break (conv_id, turn_idx
-    * ascending ≡ the unified index's doc_id ascending — global ids are
-    * assigned in key order). */
-  private def rankKeys(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(round(col("_score"), Bm25.RankScale).desc,
-        col("conv_id").asc, col("turn_idx").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("conv_id"), col("turn_idx"),
-        round(col("_score"), Bm25.OutScale).as("score"))
-  }
-
-  /** Land a facet-shaped result (queries × facet cardinality — too big
-    * to collect, per the round-4 driver-OOM advisory) in temp parquet and
-    * return a scan over it, so internal caches can drop before the caller
-    * consumes the plan. LIFECYCLE: the directory lives until JVM exit
-    * ([[graft.TempDirs]]' shutdown hook) — per-request scratch, not a
-    * leak, for batch/driver-gate use. A LONG-RUNNING serving deployment
-    * should instead route facet output to its own sink (these methods
-    * return plans; `df.write` to the serving store replaces this scratch
-    * hop entirely) — letting per-query scratch accumulate for days is the
-    * one usage this helper does not bound. */
-  private def materialize(spark: SparkSession, out: DataFrame): DataFrame = {
-    val p = graft.TempDirs.create("graft_seg_out")
-    out.write.mode("overwrite").parquet(p)
-    spark.read.parquet(p)
-  }
-
-  private def searchParts(spark: SparkSession, root: String,
-                          queries: Seq[(Int, String)], k: Int,
-                          cfg: BuildIndexJob.Config, doCache: Boolean)
-      : Either[DataFrame, (DataFrame, DataFrame)] = {
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return Left(empty))
-    if (m.segments.isEmpty || m.nDocs == 0) return Left(empty)
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all0 = liveMatched(spark, root, m, termsOf(queries), cfg)
-      .getOrElse(return Left(empty))
-    // cached (when doCache): the live tombstone-filtered decode feeds BOTH
-    // the df aggregate and the scoring join — without the cache the pruned
-    // decode of every segment executes twice per query batch (round-2 flag)
-    val all = if (doCache) all0.cache() else all0
-    Right((rankKeys(disjunctiveScores(all, qt, m), k), all))
-  }
-
-  /** Solr `{!parent}` block join over the SEGMENTED index
-    * ([[graft.search.BlockJoin]] semantics, served live between
-    * compactions): conv_id is the leading key column, so the parent
-    * aggregation needs NO attribute join at all — one extra hash
-    * aggregation over the live scored keys. Same output shape and oracle
-    * as the unified [[graft.search.IndexSearch.searchParents]]. */
-  def searchParents(spark: SparkSession, root: String,
-                    queries: Seq[(Int, String)],
-                    mode: graft.search.BlockJoin.ScoreMode, k: Int = 10,
-                    cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = Seq.empty[(Int, Int, String, Long, Double)]
-      .toDF("query_id", "rank", "parent", "n_children", "score")
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
-      .getOrElse(return empty).cache()
-    try {
-      val agged = disjunctiveScores(all, qt, m)
-        .groupBy("query_id", "conv_id")
-        .agg(mode.agg(col("_score")).as("_score"),
-          count(lit(1)).as("n_children"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(round(col("_score"), Bm25.RankScale).desc, col("conv_id").asc)
-      IndexSearch.localize(spark, agged
-        .withColumn("rank", row_number().over(w).cast("int"))
-        .where(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("conv_id").as("parent"),
-          col("n_children"), round(col("_score"), Bm25.OutScale).as("score"))
-        .orderBy("query_id", "rank"))
-    } finally all.unpersist()
-  }
-
   /** Full boolean clause grammar (`q=+a b -c`, incl. the NOT-only subset)
     * over the SEGMENTED index — the same pinned semantics as
     * [[graft.search.Search.searchCorpusClauses]]: every must term required
-    * (an out-of-vocabulary must ⇒ no matches), not-terms anti-joined,
-    * score = BM25 over matching must+should terms, computed from the live
-    * tombstone-filtered fan-out (query-time df, manifest N/avgdl). Output
-    * keys-shaped, like [[search]]. `mm` is minimumNumberShouldMatch with
+    * (an out-of-vocabulary must ⇒ no matches), not-terms excluded,
+    * score = BM25 over matching must+should terms, from one pass over
+    * the view's live postings ([[open]]: live df, manifest N/avgdl) that
+    * counts must, should and not matches per doc. Output keys-shaped,
+    * like [[IndexSearch.search]] over the view. `mm` is
+    * minimumNumberShouldMatch with
     * [[graft.search.Search.searchCorpusClauses]]'s exact pinning (term
     * clauses — this engine path is terms-only). */
   def searchClauses(spark: SparkSession, root: String,
@@ -646,327 +565,59 @@ object SegmentedIndex {
                     mm: Int = 0): DataFrame = {
     import spark.implicits._
     require(mm >= 0, s"mm (minimum-should-match) must be >= 0, got $mm")
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
+    val view = open(spark, root, cfg)
     val (qt, neg, nMust) = Search.parseClauseQueries(spark, queries)
-    val allTerms = queries.flatMap { case (_, t) =>
-      val c = Search.parseClauses(t); c.must ++ c.should ++ c.not }
-    val all = liveMatched(spark, root, m, allTerms, cfg)
-      .getOrElse(return empty).cache()
-    try {
-      val dfg = all.groupBy("term").agg(count(lit(1)).as("df"))
-      val scored = all
-        .join(broadcast(dfg), "term")
-        .join(broadcast(qt), "term") // (query_id, term, _is_must, _boost)
-        .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-          lit(m.nDocs), lit(m.avgdl)) * col("_boost"))
-        .groupBy("query_id", "conv_id", "turn_idx")
-        .agg(sum(col("_s")).as("_score"),
-          count(when(col("_is_must"), lit(1))).as("_must_matched"),
-          count(when(!col("_is_must"), lit(1))).as("_should_matched"))
-      val nMustDf = nMust.toSeq.toDF("query_id", "_n_must")
-      val negMatch = all.join(broadcast(neg), Seq("term"))
-        .select("query_id", "conv_id", "turn_idx").distinct()
-      val mustOk = scored
-        .join(broadcast(nMustDf), "query_id")
-        .where(col("_must_matched") === col("_n_must"))
-      val mmOk = if (mm == 0) mustOk
-        else mustOk.where(col("_should_matched") >= mm)
-      IndexSearch.localize(spark, rankKeys(mmOk
-        .join(negMatch, Seq("query_id", "conv_id", "turn_idx"), "left_anti"), k))
-    } finally all.unpersist()
-  }
-
-  /** Query-time SYNONYM expansion over the SEGMENTED index —
-    * [[graft.search.Synonyms]] semantics (max member df, Σ member tf)
-    * served live between compactions: member df comes from the same
-    * tombstone-filtered fan-out every segmented scoring path pays (so a
-    * killed doc's tf stops counting toward its members' df), N/avgdl
-    * from the manifest. Output keys-shaped like [[search]]. */
-  def searchSynonyms(spark: SparkSession, root: String,
-                     queries: Seq[(Int, String)], groups: Seq[Seq[String]],
-                     k: Int = 10,
-                     cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val triples = graft.search.Synonyms.resolve(queries, groups)
-    if (triples.isEmpty) return empty
-    val tri = triples.toDF("query_id", "gid", "term")
-    val all = liveMatched(spark, root, m, triples.map(_._3), cfg)
-      .getOrElse(return empty).cache()
-    try {
-      // live df per member; class df = max member df (SynonymQuery)
-      val dfg = all.groupBy("term").agg(count(lit(1)).as("df"))
-      val gdf = tri.join(dfg, "term")
-        .groupBy("query_id", "gid").agg(max(col("df")).as("_df"))
-      val scored = all.join(broadcast(tri), Seq("term"))
-        // merged-postings view per class: Σ member tfs per live doc
-        .groupBy("query_id", "gid", "conv_id", "turn_idx")
-        .agg(sum(col("tf")).as("_tf"), min(col("dl")).as("dl"))
-        .join(broadcast(gdf), Seq("query_id", "gid"))
-        .withColumn("_s", Bm25.termScore(col("_tf"), col("dl"), col("_df"),
-          lit(m.nDocs), lit(m.avgdl)))
-        .groupBy("query_id", "conv_id", "turn_idx")
-        .agg(sum(col("_s")).as("_score"))
-      IndexSearch.localize(spark, rankKeys(scored, k))
-    } finally all.unpersist()
+    val pairs = queries.flatMap { case (q, t) =>
+      val c = Search.parseClauses(t); (c.must ++ c.should ++ c.not).map(q -> _) }
+    // (query_id, term, _is_must, _boost, _is_not): a not-term scores nothing
+    val clauses = qt.withColumn("_is_not", lit(false)).unionByName(neg
+      .withColumn("_is_must", lit(false)).withColumn("_boost", lit(0.0))
+      .withColumn("_is_not", lit(true)))
+    val scored = view.matched(pairs)
+      .join(broadcast(clauses), Seq("query_id", "term"))
+      .withColumn("_s", when(!col("_is_not"), Bm25.termScore(col("tf"), col("dl"),
+        col("df"), lit(view.nDocs), lit(view.avgdl)) * col("_boost")))
+      .groupBy("query_id", "conv_id", "turn_idx")
+      .agg(sum(col("_s")).as("_score"),
+        count(when(col("_is_must"), lit(1))).as("_must_matched"),
+        count(when(!col("_is_must") && !col("_is_not"), lit(1))).as("_should_matched"),
+        count(when(col("_is_not"), lit(1))).as("_not_matched"))
+      .join(broadcast(nMust.toSeq.toDF("query_id", "_n_must")), "query_id")
+      .where(col("_must_matched") === col("_n_must") && col("_not_matched") === 0 &&
+        col("_should_matched") >= mm)
+    Search.rank(scored, k, key = Key)
   }
 
   /** Solr RealTimeGet over the SEGMENTED (streaming-serving) index — the
     * "realtime" in the name is exactly this path: a just-appended,
     * not-yet-compacted doc is visible, an upserted key answers from its
-    * LATEST segment, and a tombstoned key is absent ([[liveDocAttrs]]'s
-    * live-filter semantics). Text is not carried in segment doc attrs, so
-    * the stored projection is (conv_id, turn_idx, role, tool, dl).
-    * Missing keys are omitted; output ordered by key. */
+    * LATEST segment, and a tombstoned key is absent (the live `attrs` of
+    * [[open]]). Text is not carried in segment doc attrs, so the stored
+    * projection is (conv_id, turn_idx, role, tool, dl). Missing keys are
+    * omitted; output ordered by key. */
   def getDocs(spark: SparkSession, root: String, keys: Seq[(String, Int)],
               cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
     require(keys.nonEmpty, "realtime get needs at least one key")
-    def empty = Seq.empty[(String, Int, String, String, Long)]
-      .toDF("conv_id", "turn_idx", "role", "tool", "dl")
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
     val pred = keys.map { case (c, t) =>
       col("conv_id") === c && col("turn_idx") === t }.reduce(_ || _)
-    liveDocAttrs(spark, root, m, cfg)
+    open(spark, root, cfg).attrs
       .where(pred)
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("dl").cast("long").as("dl"))
       .orderBy("conv_id", "turn_idx")
   }
 
-  /** Solr `fq` over the segmented index: the predicate (over live stored
-    * doc attributes) restricts RESULTS only — scores, query-time df, and
-    * manifest N/avgdl remain those of the full live corpus, exactly like
-    * [[graft.search.IndexSearch.searchFiltered]]. */
-  def searchFiltered(spark: SparkSession, root: String,
-                     queries: Seq[(Int, String)], filter: Column, k: Int = 10,
-                     cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
-      .getOrElse(return empty).cache()
-    try {
-      val keep = liveDocAttrs(spark, root, m, cfg)
-        .where(filter).select("conv_id", "turn_idx")
-      IndexSearch.localize(spark, rankKeys(disjunctiveScores(all, qt, m)
-        .join(keep, Seq("conv_id", "turn_idx"), "left_semi"), k))
-    } finally all.unpersist()
-  }
-
-  /** Solr `facet.field` over the segmented index's match set: per
-    * (query, facet value) LIVE doc counts — every live doc matching ≥1
-    * query term counts once. Same output shape as the unified-index
-    * faceting, so the same oracle gates it. */
-  def facetCounts(spark: SparkSession, root: String,
-                  queries: Seq[(Int, String)], facetCol: String,
-                  cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = Seq.empty[(Int, String, Long)]
-      .toDF("query_id", facetCol, "n_docs")
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val all = liveMatched(spark, root, m, termsOf(queries), cfg)
-      .getOrElse(return empty).cache()
-    try {
-      val matched = all.join(broadcast(qt), "term")
-        .select("query_id", "conv_id", "turn_idx").distinct()
-      val attrs = liveDocAttrs(spark, root, m, cfg)
-        .select(col("conv_id"), col("turn_idx"), col(facetCol))
-      // queries × facet-cardinality rows — unbounded for a high-cardinality
-      // facet column, so this goes to temp parquet, never to the driver;
-      // the returned plan re-sorts the (small relative to the corpus)
-      // materialized counts
-      materialize(spark, matched.join(attrs, Seq("conv_id", "turn_idx"))
-        .groupBy("query_id", facetCol)
-        .agg(count(lit(1)).as("n_docs")))
-        .orderBy("query_id", facetCol)
-    } finally all.unpersist()
-  }
-
-  /** The segmented key columns every facet/stat joins on — the
-    * (conv_id, turn_idx) identity that replaces the unified index's dense
-    * doc_id ([[graft.search.Facets]] `key` parameter). */
-  private val KeyCols = Seq("conv_id", "turn_idx")
-
-  /** Live distinct (query_id, conv_id, turn_idx) match set — the shared
-    * DocSet of the segmented facet family. None when the root is empty or
-    * no query term matches. Caller owns the returned frame's lifecycle
-    * (it is NOT cached here; each facet op consumes it once). */
-  private def matchedKeys(spark: SparkSession, root: String, m: Manifest,
-                          queries: Seq[(Int, String)],
-                          cfg: BuildIndexJob.Config): Option[DataFrame] = {
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    liveMatched(spark, root, m, termsOf(queries), cfg)
-      .map(_.join(broadcast(qt), "term")
-        .select("query_id", "conv_id", "turn_idx").distinct())
-  }
-
-  /** Multi-field `facet.field` over the SEGMENTED index — the
-    * [[graft.search.Facets.fields]] composition on the keys identity:
-    * every repeated facet.field of a request counted from ONE live
-    * match-set join, between compactions, with the same NULL/string
-    * semantics as the unified path. */
-  def facetFields(spark: SparkSession, root: String,
-                  queries: Seq[(Int, String)], fieldNames: Seq[String],
-                  cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = Seq.empty[(Int, String, String, Long)]
-      .toDF("query_id", "field", "value", "n_docs")
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    materialize(spark, graft.search.Facets.fields(
-      matched, liveDocAttrs(spark, root, m, cfg), fieldNames, KeyCols))
-      .orderBy("query_id", "field", "value")
-  }
-
-  /** Solr JSON Facet API over the SEGMENTED index
-    * ([[graft.search.Facets.json]] on the keys identity): terms facet +
-    * bucket metrics + nested subfacet served from the live match set
-    * between compactions. Facets.json materializes its facet-shaped
-    * rollup internally, so no extra lifecycle wrapper is needed here. */
-  def facetJson(spark: SparkSession, root: String,
-                queries: Seq[(Int, String)], parentField: String,
-                childField: String, parentLimit: Int, childLimit: Int,
-                metrics: Seq[graft.search.Facets.JsonMetric],
-                cfg: BuildIndexJob.Config = BuildIndexJob.Config(),
-                sortBy: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    def empty = {
-      val base = Seq.empty[(Int, String, String, Int, Long)]
-        .toDF("query_id", "value", "child_value", "rank", "n_docs")
-      metrics.foldLeft(base)((d, m) =>
-        d.withColumn(m.name, lit(null).cast(m.outType)))
-    }
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    graft.search.Facets.json(matched, liveDocAttrs(spark, root, m, cfg),
-      parentField, childField, parentLimit, childLimit, metrics, KeyCols,
-      sortBy = sortBy)
-  }
-
-  /** StatsComponent over the SEGMENTED index
-    * ([[graft.search.Facets.stats]] on the keys identity): per-query
-    * count/min/max/sum/mean of a stored numeric attribute of the LIVE
-    * match set, zero-filled on the query spine. */
-  def statsField(spark: SparkSession, root: String,
-                 queries: Seq[(Int, String)], field: String,
-                 cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    val queryIds = queries.map(_._1)
-    def empty = graft.search.Facets.stats(queryIds,
-      Seq.empty[(Int, String, Int)].toDF("query_id", "conv_id", "turn_idx"),
-      Seq.empty[(String, Int, Int)].toDF(field, "conv_id", "turn_idx"),
-      field, KeyCols)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    graft.search.Facets.stats(queryIds, matched,
-      liveDocAttrs(spark, root, m, cfg), field, KeyCols)
-  }
-
-  /** Solr interval faceting over the LIVE segmented index
-    * ([[graft.search.Facets.intervals]] semantics on the tombstone-aware
-    * key-identity match set — the [[facetFields]] composition; an
-    * interval count between compactions sees upserts and deletes). */
-  def facetIntervals(spark: SparkSession, root: String,
-                     queries: Seq[(Int, String)], field: String,
-                     sets: Seq[graft.search.Facets.Interval],
-                     cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    val queryIds = queries.map(_._1)
-    def empty = graft.search.Facets.intervals(queryIds,
-      Seq.empty[(Int, String, Int)].toDF("query_id", "conv_id", "turn_idx"),
-      Seq.empty[(Int, String, Int)].toDF(field, "conv_id", "turn_idx"),
-      field, sets, KeyCols)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    materialize(spark, graft.search.Facets.intervals(queryIds, matched,
-      liveDocAttrs(spark, root, m, cfg), field, sets, KeyCols))
-      .orderBy("query_id", "interval")
-  }
-
-  /** JSON Facet API `query` facets with bucket metrics over the LIVE
-    * segmented index ([[graft.search.Facets.jsonQuery]] semantics on the
-    * tombstone-aware key-identity match set). An absent/empty index
-    * reports the full zero-filled spine. */
-  def facetJsonQuery(spark: SparkSession, root: String,
-                     queries: Seq[(Int, String)],
-                     named: Seq[(String, org.apache.spark.sql.Column)],
-                     metrics: Seq[graft.search.Facets.JsonMetric],
-                     cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    val queryIds = queries.map(_._1)
-    def empty = {
-      val spine = (for { q <- queryIds.distinct; (n, _) <- named }
-        yield (q, n)).toDF("query_id", "facet")
-      metrics.foldLeft(spine.withColumn("n_docs", lit(0L)))((d, m) =>
-        d.withColumn(m.name, lit(null).cast(m.outType)))
-        .orderBy("query_id", "facet")
-    }
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    graft.search.Facets.jsonQuery(queryIds, matched,
-      liveDocAttrs(spark, root, m, cfg), named, metrics, KeyCols)
-  }
-
-  /** JSON Facet API `range` facet with bucket metrics over the LIVE
-    * segmented index ([[graft.search.Facets.jsonRange]] semantics on the
-    * tombstone-aware key-identity match set — counts AND metrics see
-    * upserts and deletes between compactions). An absent/empty index
-    * reports the full zero-filled spine (the request shape is
-    * driver-known). */
-  def facetJsonRange(spark: SparkSession, root: String,
-                     queries: Seq[(Int, String)], field: String,
-                     start: Long, end: Long, gap: Long,
-                     metrics: Seq[graft.search.Facets.JsonMetric],
-                     cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    val queryIds = queries.map(_._1)
-    def empty = {
-      val spine = (for { q <- queryIds.distinct; b <- start until end by gap }
-        yield (q, b)).toDF("query_id", "bucket")
-      metrics.foldLeft(spine.withColumn("n_docs", lit(0L)))((d, m) =>
-        d.withColumn(m.name, lit(null).cast(m.outType)))
-        .orderBy("query_id", "bucket")
-    }
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val matched = matchedKeys(spark, root, m, queries, cfg)
-      .getOrElse(return empty)
-    graft.search.Facets.jsonRange(queryIds, matched,
-      liveDocAttrs(spark, root, m, cfg), field, start, end, gap, metrics,
-      KeyCols)
-  }
-
   /** PHRASE search (exact, ordered-window slop, or Lucene-style sloppy)
     * over the SEGMENTED index — requires segments built with
     * `Config.storePositions`. Semantics match
     * [[graft.search.IndexSearch.searchPhrase]] over the live corpus:
-    * idf per term from the exact LIVE df (counted from the
-    * tombstone-filtered thin fan-out — the same pass the disjunctive
-    * path pays for its query-time df), N/avgdl from the manifest, and a
-    * phrase with a term absent from the live corpus matches nothing.
-    * Output keys-shaped like [[search]].
+    * idf per term from the exact LIVE df of [[liveDf]], N/avgdl from the
+    * manifest, and a phrase with a term absent from the live corpus
+    * matches nothing (no Spark job runs when none is left). Output
+    * keys-shaped like [[IndexSearch.search]] over [[open]].
     *
     * Scale shape mirrors the unified path: the thin (positional-free)
-    * fan-out both counts live df AND intersects candidates carrying
+    * fan-out intersects candidates carrying
     * their block identities (seg, term, first_doc); the positional (fat)
     * stream then decodes ONLY blocks containing a candidate doc, per
     * segment. A segment lacking any phrase term contributes nothing and
@@ -987,11 +638,14 @@ object SegmentedIndex {
       .map { case (q, t) => (q, graft.analysis.Analyzer.tokenize(t)) }
       .filter(_._2.nonEmpty)
     if (parsed.isEmpty) return empty
-    val allTerms = parsed.flatMap(_._2).distinct
-    val tombs = readTombstones(spark, root, m)
-    val segs = SegmentSnapshots.of(spark, root, m, cfg.io)._1
+    val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
+    val dfMap = liveDf(segs, tombs, parsed.flatMap(_._2).distinct)._2
+    val live = parsed.filter(_._2.forall(dfMap.contains))
+    if (live.isEmpty) return empty
+    val allTerms = live.flatMap(_._2).distinct
+    val tombRows = readTombstones(spark, root, m)
     def liveKeys(ord: Int): DataFrame =
-      liveFilter(segs(ord).docs.withColumn("seg_ord", lit(ord)), tombs)
+      liveFilter(segs(ord).docs.withColumn("seg_ord", lit(ord)), tombRows)
     // per-segment shard lists from the resident dictionaries, reused by
     // the fat pass below (segments without a phrase term are skipped in
     // both passes). The loop is O(compactEvery), as everywhere here.
@@ -1012,61 +666,52 @@ object SegmentedIndex {
           col("_bfd"))
         .withColumn("_seg", lit(ord))
     }
-    val thin = perSeg.reduceOption(_ unionByName _)
-      .getOrElse(return empty).cache()
+    val qt = live.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) }
+      .toDF("query_id", "term")
+    val nd = live.map { case (q, ts) => (q, ts.distinct.size) }
+      .toDF("query_id", "_nd")
+    val cand = perSeg.reduce(_ unionByName _).join(broadcast(qt), Seq("term"))
+      .groupBy("query_id", "conv_id", "turn_idx")
+      .agg(count(lit(1)).as("_n"),
+        collect_list(struct(col("_seg"), col("term"), col("_bfd"))).as("_blks"))
+      .join(broadcast(nd), "query_id")
+      .where(col("_n") === col("_nd"))
+      .select("query_id", "conv_id", "turn_idx", "_blks")
+      .cache()
     try {
-      // exact live df per phrase term — the idf input (≤ |terms| rows)
-      val dfMap = thin.groupBy("term").agg(count(lit(1)).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val live = parsed.filter(_._2.forall(t => dfMap.getOrElse(t, 0L) > 0L))
-      if (live.isEmpty) return empty
-      val qt = live.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) }
-        .toDF("query_id", "term")
-      val nd = live.map { case (q, ts) => (q, ts.distinct.size) }
-        .toDF("query_id", "_nd")
-      val cand = thin.join(broadcast(qt), Seq("term"))
-        .groupBy("query_id", "conv_id", "turn_idx")
-        .agg(count(lit(1)).as("_n"),
-          collect_list(struct(col("_seg"), col("term"), col("_bfd"))).as("_blks"))
-        .join(broadcast(nd), "query_id")
-        .where(col("_n") === col("_nd"))
-        .select("query_id", "conv_id", "turn_idx", "_blks")
-        .cache()
-      try {
-        val blockKeys = cand.select(explode(col("_blks")).as("_b"))
-          .select(col("_b._seg").as("_seg"), col("_b.term").as("term"),
-            col("_b._bfd").as("_bfd"))
-          .distinct()
-        val fatPerSeg = segShards.map { case (ord, shards) =>
-          val blocks = prunedBlocks(ord, shards)
-            .withColumn("_bfd", col("first_doc"))
-            .join(blockKeys.where(col("_seg") === ord).select("term", "_bfd"),
-              Seq("term", "_bfd"), "left_semi")
-          PostingBlocks.decodePostingsWithPositions(blocks)
-            .join(liveKeys(ord), "doc_id")
-            .select(col("term"), col("conv_id"), col("turn_idx"), col("dl"),
-              col("positions"))
-        }
-        val fat = fatPerSeg.reduce(_ unionByName _)
-          .join(broadcast(qt), Seq("term"))
-          .join(cand.select("query_id", "conv_id", "turn_idx"),
-            Seq("query_id", "conv_id", "turn_idx"), "left_semi")
-        val pm = fat.groupBy("query_id", "conv_id", "turn_idx")
-          .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
-            .as("_pm"), min(col("dl")).as("dl"))
-        val meta = live.map { case (q, ts) =>
-          (q, ts, ts.map(t => Bm25.idfValue(dfMap(t), m.nDocs)).sum)
-        }.toDF("query_id", "_terms", "_idf")
-        val scored = pm.join(broadcast(meta), "query_id")
-          .withColumn("_pf", graft.search.IndexSearch.phrasePf(slop, luceneSlop))
-          .where(col("_pf") > 0)
-          .select(col("query_id"), col("conv_id"), col("turn_idx"),
-            (col("_idf") * col("_pf") /
-              (col("_pf") + lit(Bm25.K1) * (lit(1.0) - lit(Bm25.B) +
-                lit(Bm25.B) * col("dl") / lit(m.avgdl)))).as("_score"))
-        IndexSearch.localize(spark, rankKeys(scored, k))
-      } finally cand.unpersist()
-    } finally thin.unpersist()
+      val blockKeys = cand.select(explode(col("_blks")).as("_b"))
+        .select(col("_b._seg").as("_seg"), col("_b.term").as("term"),
+          col("_b._bfd").as("_bfd"))
+        .distinct()
+      val fatPerSeg = segShards.map { case (ord, shards) =>
+        val blocks = prunedBlocks(ord, shards)
+          .withColumn("_bfd", col("first_doc"))
+          .join(blockKeys.where(col("_seg") === ord).select("term", "_bfd"),
+            Seq("term", "_bfd"), "left_semi")
+        PostingBlocks.decodePostingsWithPositions(blocks)
+          .join(liveKeys(ord), "doc_id")
+          .select(col("term"), col("conv_id"), col("turn_idx"), col("dl"),
+            col("positions"))
+      }
+      val fat = fatPerSeg.reduce(_ unionByName _)
+        .join(broadcast(qt), Seq("term"))
+        .join(cand.select("query_id", "conv_id", "turn_idx"),
+          Seq("query_id", "conv_id", "turn_idx"), "left_semi")
+      val pm = fat.groupBy("query_id", "conv_id", "turn_idx")
+        .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
+          .as("_pm"), min(col("dl")).as("dl"))
+      val meta = live.map { case (q, ts) =>
+        (q, ts, ts.map(t => Bm25.idfValue(dfMap(t), m.nDocs)).sum)
+      }.toDF("query_id", "_terms", "_idf")
+      val scored = pm.join(broadcast(meta), "query_id")
+        .withColumn("_pf", graft.search.IndexSearch.phrasePf(slop, luceneSlop))
+        .where(col("_pf") > 0)
+        .select(col("query_id"), col("conv_id"), col("turn_idx"),
+          (col("_idf") * col("_pf") /
+            (col("_pf") + lit(Bm25.K1) * (lit(1.0) - lit(Bm25.B) +
+              lit(Bm25.B) * col("dl") / lit(m.avgdl)))).as("_score"))
+      IndexSearch.localize(spark, Search.rank(scored, k, key = Key))
+    } finally cand.unpersist()
   }
 
   /** One posting block routed to one (query, segment, doc-range) group —
@@ -1083,16 +728,14 @@ object SegmentedIndex {
   /** Block-max WAND top-k over the SEGMENTED index — the top-k-pruned
     * traversal that replaces the exhaustive O(df) live posting scan a
     * hot-term disjunctive query would otherwise pay between compactions.
-    * Output keys-shaped and EXACT — identical to [[search]] (SegmentSpec
-    * pins the equivalence under upserts + tombstones).
+    * Output keys-shaped and EXACT — identical to [[IndexSearch.search]]
+    * over [[open]] (SegmentSpec pins the equivalence under upserts +
+    * tombstones).
     *
     * The three inputs WAND needs, each derived WITHOUT decoding postings:
     *
-    *  1. EXACT LIVE df per term (BM25's idf input): Σ over segments of
-    *     the segment dictionary's build-time df, minus the per-append
-    *     kill deltas (`dfdeltas/<tomb>` — written beside every committed
-    *     tombstone dir by [[append]] and [[mergeAdjacent]] from the killed
-    *     instances' keymeta term lists). Metadata only.
+    *  1. EXACT LIVE df per term (BM25's idf input): [[liveDf]]. Metadata
+    *     only.
     *  2. UPPER-BOUND block maxes under the live scoring function: a
     *     stored max was computed with the segment's build-time
     *     (df_b, N_b, avgdl_b); for the live function (df_l, N_l, avgdl_l)
@@ -1160,13 +803,7 @@ object SegmentedIndex {
     val allTerms = parsed.flatMap(_._2).distinct
     val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
     val dicts = segs.map(_.index.resident)
-    val rows: IndexedSeq[Map[String, Int]] = dicts.map(d =>
-      allTerms.map(t => t -> d.row(t)).filter(_._2 >= 0).toMap)
-    val dfLive: Map[String, Long] = allTerms.flatMap { t =>
-      val total = segs.indices.map(o => rows(o).get(t).fold(0L)(dicts(o).df)).sum -
-        tombs.map(_.dfDeltas.getOrElse(t, 0L)).sum
-      if (total > 0) Some(t -> total) else None
-    }.toMap
+    val (rows, dfLive) = liveDf(segs, tombs, allTerms)
     val liveParsed = parsed
       .map { case (q, ts) => (q, ts.filter(dfLive.contains)) }
       .filter(_._2.nonEmpty)
@@ -1278,7 +915,7 @@ object SegmentedIndex {
   /** The tail of [[searchWand]]: resolve candidates (query, segment
     * ordinal, segment-local doc, raw score) to keys with ONE job over the
     * candidate segments' `docs/` keys, drop instances a tombstone kills,
-    * and rank on the driver in [[rankKeys]]' pinned order into a local
+    * and rank on the driver in [[Search.rank]]'s pinned order into a local
     * frame (its `collect` runs no job). */
   private def rankCandidates(spark: SparkSession,
                              segs: IndexedSeq[SegmentSnapshots.Segment],
@@ -1307,7 +944,7 @@ object SegmentedIndex {
     }.toDF("query_id", "rank", "conv_id", "turn_idx", "score")
   }
 
-  /** Solr `hl` highlighting over the SEGMENTED index — [[search]]'s
+  /** Solr `hl` highlighting over the SEGMENTED index — [[IndexSearch.search]]'s
     * keys-shaped top-k, each hit carrying up to `fragments` snippets of
     * ±`window` analyzed tokens around query-term matches (the same greedy
     * fragment selection as the unified
@@ -1332,7 +969,8 @@ object SegmentedIndex {
         BuildIndexJob.IndexPaths(segPath(root, seg)).positionalMarker)),
       "segmented searchHighlight requires every segment built with " +
         "Config(storePositions = true)")
-    val hits = search(spark, root, queries, k, cfg)
+    val hits = IndexSearch.localize(spark,
+      IndexSearch.search(open(spark, root, cfg), queries, k))
     if (hits.isEmpty) return hits.withColumn("snippet", lit(""))
     val hitKeys = hits.select("conv_id", "turn_idx").distinct().collect()
       .map(r => (r.getString(0), r.getInt(1))).toSeq

@@ -44,15 +44,20 @@ object BlockJoin {
 
   /** Top-k parents of a scored child match set.
     *
-    * `scored`: (query_id, doc_id, _score) — any engine's per-doc scores.
-    * `attrs`: (doc_id, parentField) — the child → parent key map (a
-    * column-pruned `docs/` scan on the persisted index). */
+    * `scored`: (query_id, key…, _score) — any engine's per-doc scores.
+    * `attrs`: (key…, parentField) — the child → parent key map (a
+    * column-pruned `docs/` scan on the persisted index). When
+    * `parentField` is itself a key column (conv_id of a segmented root's
+    * (conv_id, turn_idx)), the parent is read off the scored keys and no
+    * attribute join runs. */
   def parents(scored: DataFrame, attrs: DataFrame, parentField: String,
-              mode: ScoreMode, k: Int): DataFrame = {
+              mode: ScoreMode, k: Int,
+              key: Seq[String] = Seq("doc_id")): DataFrame = {
     require(k > 0, s"block join k must be positive (got $k)")
-    val agged = scored
-      .join(attrs.select(col("doc_id"),
-        col(parentField).cast("string").as("parent")), "doc_id")
+    val parent = col(parentField).cast("string").as("parent")
+    val agged = (if (key.contains(parentField)) scored.select(col("query_id"),
+        col("_score"), parent)
+      else scored.join(attrs.select(key.map(col) :+ parent: _*), key))
       .where(col("parent").isNotNull)
       .groupBy("query_id", "parent")
       .agg(mode.agg(col("_score")).as("_score"),

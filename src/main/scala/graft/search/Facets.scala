@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
   * Shared core over (matched(query_id, key…), attrs(key…, …)): the join
   * `key` defaults to the unified index's dense doc_id and generalizes to
   * the segmented index's (conv_id, turn_idx) identity — one facet engine
-  * for both serving paths. Engine
-  * paths supply `matched` (inline corpus: term-occurrence join; persisted
-  * index: decoded postings — see [[IndexSearch.facetFields]]) and `attrs`
-  * (corpus columns / the column-pruned `docs/` scan). Each operator is ONE
+  * for both storage views ([[IndexSearch.View]]: a bulk root's
+  * [[IndexSearch.OpenIndex]] and a segmented root's
+  * [[graft.index.SegmentedIndex.open]]). Engine paths supply `matched`
+  * (inline corpus: term-occurrence join; an index view: its decoded live
+  * postings — see [[IndexSearch.facetFields]]) and `attrs` (corpus
+  * columns / the view's stored attributes). Each operator is ONE
   * key-join plus one aggregation shuffle for ALL its facets — Solr
   * computes every facet of a request in one pass over the matching DocSet,
   * and the Spark twin keeps that shape (N fields do NOT cost N joins: the

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Solr `fq` STRING syntax over stored doc attributes, parsed into a
   * Spark Column predicate for the existing non-scoring filter engines
-  * ([[Search.searchCorpusFiltered]], [[IndexSearch.searchFiltered]],
-  * [[graft.index.SegmentedIndex.searchFiltered]] — fq restricts RESULTS
-  * only; scores/df/avgdl stay full-corpus).
+  * ([[Search.searchCorpusFiltered]], [[IndexSearch.searchFiltered]] over
+  * a bulk or a segmented root — fq restricts RESULTS only;
+  * scores/df/avgdl stay full-corpus).
   *
   * Supported grammar — the overwhelmingly common Solr subset:
   *   - `field:value`                exact match

@@ -17,8 +17,40 @@ import org.apache.spark.sql.functions._
   *
   * Must return exactly what [[Search.searchCorpus]] returns on the same
   * corpus — the IndexRoundtripSpec property.
+  *
+  * One engine, two storage views: the scored, filtered, block-join,
+  * synonym and facet request shapes are written once against a [[View]].
+  * A bulk root's [[OpenIndex]] is one view (doc_id identity); the live
+  * segmented root of [[graft.index.SegmentedIndex.open]] is the other
+  * ((conv_id, turn_idx) identity, tombstone-filtered postings, live df
+  * from metadata). The remaining shapes take an [[OpenIndex]].
   */
 object IndexSearch {
+
+  /** What a request shape reads from an index, whatever the storage under
+    * it — a snapshot taken at open time.
+    *
+    *  - `key`: the doc identity columns. Their ascending order is the
+    *    pinned rank tie-break, because global doc ids are assigned in key
+    *    order.
+    *  - `nDocs`/`avgdl`: the live collection stats.
+    *  - `matched(qt)`: decoded postings of the (query_id, term) pairs —
+    *    (query_id, term, df, key…, tf, dl) — of live docs, with live df.
+    *    A term no live doc holds has no rows.
+    *  - `attrs`: the live docs' stored attributes without text, keyed by
+    *    `key`.
+    *
+    * Plans built from a view stay valid while the files it lists do: an
+    * [[OpenIndex]] until an in-place rebuild, a segmented view until
+    * [[graft.index.SegmentedIndex.vacuum]]. */
+  trait View {
+    def spark: SparkSession
+    def key: Seq[String]
+    def nDocs: Long
+    def avgdl: Double
+    def matched(qt: Seq[(Int, String)]): DataFrame
+    def attrs: DataFrame
+  }
 
   /** An opened index: a SNAPSHOT of the root at open time. The relations
     * resolve their files once, so reopen after an in-place rebuild.
@@ -32,12 +64,20 @@ object IndexSearch {
     * `dictionary` relation stays unjoined for every other probe. */
   final case class OpenIndex(paths: IndexPaths, dictionary: DataFrame,
                              stats: Stats, spark: SparkSession,
-                             io: graft.sources.TableIO) {
+                             io: graft.sources.TableIO) extends View {
     /** The postings relation, resolved (file listing, schema) once. */
     lazy val postings: DataFrame = io.read(spark, paths.postings)
     /** term → df, shard, top block maxes, collected on first use. */
     lazy val resident: ResidentDict =
       ResidentDict.load(dictionary, io.read(spark, paths.blockmeta))
+    def key: Seq[String] = Seq("doc_id")
+    def nDocs: Long = stats.nDocs
+    def avgdl: Double = stats.avgdl
+    def matched(qt: Seq[(Int, String)]): DataFrame =
+      matchedPostings(this, spark.createDataFrame(qt).toDF("query_id", "term"))
+    /** The `docs/` attributes minus text (facets and filters never read
+      * it; Catalyst prunes further), resolved once. */
+    lazy val attrs: DataFrame = io.read(spark, paths.docs).drop("text")
   }
 
   /** One posting block routed to one (query, doc-range) group (WAND
@@ -116,11 +156,21 @@ object IndexSearch {
     * index-side twin of [[Search.scoredDocs]]. Package-visible so
     * [[MultiField.searchIndexes]] can weight-combine per-field indexes. */
   private[search] def scoredDocs(idx: OpenIndex, qt: DataFrame,
-                                 conjunctive: Boolean): DataFrame = {
-    val scored = matchedPostings(idx, qt)
+                                 conjunctive: Boolean): DataFrame =
+    scoreMatched(idx, matchedPostings(idx, qt), qt, conjunctive)
+
+  /** [[scoredDocs]] over a view, keyed (query_id, key…). */
+  private def scoredDocs(v: View, qt: Seq[(Int, String)],
+                         conjunctive: Boolean): DataFrame =
+    scoreMatched(v, v.matched(qt),
+      v.spark.createDataFrame(qt).toDF("query_id", "term"), conjunctive)
+
+  private def scoreMatched(v: View, matched: DataFrame, qt: DataFrame,
+                           conjunctive: Boolean): DataFrame = {
+    val scored = matched
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-        lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
-      .groupBy("query_id", "doc_id")
+        lit(v.nDocs), lit(v.avgdl)))
+      .groupBy(("query_id" +: v.key).map(col): _*)
       .agg(sum(col("_s")).as("_score"), count(lit(1)).as("_n_matched"))
     if (!conjunctive) scored
     else {
@@ -132,11 +182,10 @@ object IndexSearch {
     }
   }
 
-  def search(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
-             conjunctive: Boolean = false, start: Int = 0): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    Search.rank(scoredDocs(idx, qt, conjunctive), k, start)
-  }
+  def search(v: View, queries: Seq[(Int, String)], k: Int = 10,
+             conjunctive: Boolean = false, start: Int = 0): DataFrame =
+    Search.rank(scoredDocs(v, Search.queryPairs(queries), conjunctive), k,
+      start, v.key)
 
   /** Top-k under a pluggable similarity ([[Similarities.SimilarityModel]]
     * — Solr's per-field `<similarity>`). Same dictionary probe, shard
@@ -560,9 +609,8 @@ object IndexSearch {
                    sortCols: Seq[Column], k: Int = 10,
                    extra: Seq[(String, Column)] = Nil): DataFrame = {
     val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val attrs = idx.io.read(idx.spark, idx.paths.docs).drop("text")
     val joined = scoredDocs(idx, qt, conjunctive = false)
-      .join(attrs, "doc_id")
+      .join(idx.attrs, "doc_id")
     val withExtra = extra.foldLeft(joined) { case (d, (n, c)) =>
       d.withColumn(n, c) }
     Search.rankBy(withExtra, sortCols, k, keep = extra.map(_._1))
@@ -649,8 +697,7 @@ object IndexSearch {
                    fields: Seq[String], pseudo: Seq[(String, String)] = Nil,
                    k: Int = 10): DataFrame = {
     val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val attrs = idx.io.read(idx.spark, idx.paths.docs).drop("text")
-    val joined = scoredDocs(idx, qt, conjunctive = false).join(attrs, "doc_id")
+    val joined = scoredDocs(idx, qt, conjunctive = false).join(idx.attrs, "doc_id")
     val withPseudo = pseudo.foldLeft(joined) { case (d, (n, fn)) =>
       d.withColumn(n, FunctionQuery.toColumn(FunctionQuery.parse(fn))) }
     Search.rankBy(withPseudo,
@@ -671,9 +718,8 @@ object IndexSearch {
                     boost: Column, k: Int = 10,
                     multiplicative: Boolean = false): DataFrame = {
     val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val attrs = idx.io.read(idx.spark, idx.paths.docs).drop("text")
     val scored = scoredDocs(idx, qt, conjunctive = false)
-      .join(attrs, "doc_id")
+      .join(idx.attrs, "doc_id")
       .withColumn("_score",
         if (multiplicative) col("_score") * boost else col("_score") + boost)
     Search.rank(scored, k)
@@ -1374,14 +1420,12 @@ object IndexSearch {
     * (doc_id + the filter's columns) and left-semi-joined, so the filter
     * costs one key-join against an attribute projection, never a second
     * posting traversal. */
-  def searchFiltered(idx: OpenIndex, queries: Seq[(Int, String)],
+  def searchFiltered(v: View, queries: Seq[(Int, String)],
                      filter: org.apache.spark.sql.Column, k: Int = 10,
                      conjunctive: Boolean = false): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val keep = idx.io.read(idx.spark, idx.paths.docs)
-      .where(filter).select("doc_id")
-    Search.rank(
-      scoredDocs(idx, qt, conjunctive).join(keep, Seq("doc_id"), "left_semi"), k)
+    val keep = v.attrs.where(filter).select(v.key.map(col): _*)
+    Search.rank(scoredDocs(v, Search.queryPairs(queries), conjunctive)
+      .join(keep, v.key, "left_semi"), k, key = v.key)
   }
 
   /** Solr `/export` (the export handler): the ENTIRE match set of each
@@ -1418,29 +1462,20 @@ object IndexSearch {
     * (query, facet value) doc counts — every doc matching ≥1 query term
     * counts once. Facet values come from the persisted `docs/` attributes
     * (column-pruned scan). */
-  def facetCounts(idx: OpenIndex, queries: Seq[(Int, String)],
-                  facetCol: String): DataFrame = {
-    val attrs = idx.io.read(idx.spark, idx.paths.docs)
-      .select(col("doc_id"), col(facetCol))
-    matchedDocSet(idx, queries).join(attrs, "doc_id")
+  def facetCounts(v: View, queries: Seq[(Int, String)],
+                  facetCol: String): DataFrame =
+    matchedDocSet(v, queries)
+      .join(v.attrs.select((v.key :+ facetCol).map(col): _*), v.key)
       .groupBy("query_id", facetCol)
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("query_id", facetCol)
-  }
 
-  /** The distinct (query_id, doc_id) match set of a disjunctive query
+  /** The distinct (query_id, key…) match set of a disjunctive query
     * batch — the DocSet every facet of a request shares. */
-  private[search] def matchedDocSet(idx: OpenIndex,
-                                    queries: Seq[(Int, String)]): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    matchedPostings(idx, qt).select("query_id", "doc_id").distinct()
-  }
-
-  /** Stored attributes for faceting: the `docs/` scan minus the text
-    * column (facets never read text; Catalyst prunes further to the
-    * fields each facet actually references). */
-  private def facetAttrs(idx: OpenIndex): DataFrame =
-    idx.io.read(idx.spark, idx.paths.docs).drop("text")
+  private[graft] def matchedDocSet(v: View,
+                                   queries: Seq[(Int, String)]): DataFrame =
+    v.matched(Search.queryPairs(queries))
+      .select(("query_id" +: v.key).map(col): _*).distinct()
 
   /** Solr `rows=0` response header: per query `numFound` (total match
     * count — what Solr always reports even when no docs are returned)
@@ -1457,7 +1492,7 @@ object IndexSearch {
     val spark = idx.spark
     import spark.implicits._
     val agged = matchedDocSet(idx, queries)
-      .join(facetAttrs(idx).select(col("doc_id"), col(groupField)), "doc_id")
+      .join(idx.attrs.select(col("doc_id"), col(groupField)), "doc_id")
       .groupBy("query_id")
       .agg(count(lit(1)).as("_nf"), count_distinct(col(groupField)).as("_ng"))
     val spine = queries.map(_._1).distinct.sorted.toDF("query_id")
@@ -1473,10 +1508,10 @@ object IndexSearch {
   /** Multi-field Solr `facet.field` over the persisted index — repeated
     * facet.field params of one request, all counted from ONE match-set
     * join ([[Facets.fields]] semantics). */
-  def facetFields(idx: OpenIndex, queries: Seq[(Int, String)],
+  def facetFields(v: View, queries: Seq[(Int, String)],
                   fieldNames: Seq[String], missing: Boolean = false,
                   mincount: Long = 0L): DataFrame =
-    Facets.fields(matchedDocSet(idx, queries), facetAttrs(idx), fieldNames,
+    Facets.fields(matchedDocSet(v, queries), v.attrs, fieldNames, v.key,
       missing = missing, mincount = mincount)
 
   /** Solr `facet.query` over the persisted index: named predicates over
@@ -1485,15 +1520,15 @@ object IndexSearch {
   def facetQueries(idx: OpenIndex, queries: Seq[(Int, String)],
                    named: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
     Facets.queryCounts(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), named)
+      idx.attrs, named)
 
   /** Solr interval faceting over the persisted index ([[Facets.intervals]]
     * semantics: overlapping sets allowed, every set reported, zero-filled
     * request spine). */
-  def facetIntervals(idx: OpenIndex, queries: Seq[(Int, String)],
+  def facetIntervals(v: View, queries: Seq[(Int, String)],
                      field: String, sets: Seq[Facets.Interval]): DataFrame =
-    Facets.intervals(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, sets)
+    Facets.intervals(queries.map(_._1), matchedDocSet(v, queries),
+      v.attrs, field, sets, v.key)
 
   /** Solr multi-select (tag/ex) faceting over the persisted index
     * ([[Facets.multiSelect]] semantics: each facet field counts the match
@@ -1501,7 +1536,7 @@ object IndexSearch {
   def facetMultiSelect(idx: OpenIndex, queries: Seq[(Int, String)],
                        filters: Seq[(String, org.apache.spark.sql.Column)],
                        facets: Seq[(String, Set[String])]): DataFrame =
-    Facets.multiSelect(matchedDocSet(idx, queries), facetAttrs(idx),
+    Facets.multiSelect(matchedDocSet(idx, queries), idx.attrs,
       filters, facets)
 
   /** Solr `facet.range` over a numeric stored attribute of the persisted
@@ -1509,7 +1544,7 @@ object IndexSearch {
   def facetRange(idx: OpenIndex, queries: Seq[(Int, String)], field: String,
                  start: Long, end: Long, gap: Long): DataFrame =
     Facets.range(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, start, end, gap)
+      idx.attrs, field, start, end, gap)
 
   /** `facet.range` over a DATE field with a Solr date-math gap
     * ([[Facets.rangeDate]] semantics — fixed-length gap subset, ISO
@@ -1518,7 +1553,7 @@ object IndexSearch {
                      field: String, startIso: String, endIso: String,
                      gap: String): DataFrame =
     Facets.rangeDate(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, startIso, endIso, gap)
+      idx.attrs, field, startIso, endIso, gap)
 
   /** `facet.range` + `facet.range.other=all` over the persisted index
     * ([[Facets.rangeOther]] semantics). */
@@ -1526,25 +1561,25 @@ object IndexSearch {
                       field: String, start: Long, end: Long,
                       gap: Long): DataFrame =
     Facets.rangeOther(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, start, end, gap)
+      idx.attrs, field, start, end, gap)
 
   /** Solr `facet.pivot=parent,child` over the persisted index
     * ([[Facets.pivot]] semantics). */
   def facetPivot(idx: OpenIndex, queries: Seq[(Int, String)],
                  parentField: String, childField: String): DataFrame =
-    Facets.pivot(matchedDocSet(idx, queries), facetAttrs(idx),
+    Facets.pivot(matchedDocSet(idx, queries), idx.attrs,
       parentField, childField)
 
   /** Solr JSON Facet API over the persisted index ([[Facets.json]]
     * semantics): a terms facet with bucket metrics and one nested terms
     * subfacet, from one match-set join + one rollup pass. */
-  def facetJson(idx: OpenIndex, queries: Seq[(Int, String)],
+  def facetJson(v: View, queries: Seq[(Int, String)],
                 parentField: String, childField: String,
                 parentLimit: Int, childLimit: Int,
                 metrics: Seq[Facets.JsonMetric],
                 sortBy: Option[String] = None): DataFrame =
-    Facets.json(matchedDocSet(idx, queries), facetAttrs(idx),
-      parentField, childField, parentLimit, childLimit, metrics,
+    Facets.json(matchedDocSet(v, queries), v.attrs,
+      parentField, childField, parentLimit, childLimit, metrics, v.key,
       sortBy = sortBy)
 
   /** JSON Facet API `allBuckets` + `numBuckets` header over the persisted
@@ -1553,23 +1588,23 @@ object IndexSearch {
                    parentField: String,
                    metrics: Seq[Facets.JsonMetric]): DataFrame =
     Facets.jsonAllBuckets(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), parentField, metrics)
+      idx.attrs, parentField, metrics)
 
   /** JSON Facet API `query` facets with bucket metrics over the persisted
     * index ([[Facets.jsonQuery]] semantics). */
-  def facetJsonQuery(idx: OpenIndex, queries: Seq[(Int, String)],
+  def facetJsonQuery(v: View, queries: Seq[(Int, String)],
                      named: Seq[(String, org.apache.spark.sql.Column)],
                      metrics: Seq[Facets.JsonMetric]): DataFrame =
-    Facets.jsonQuery(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), named, metrics)
+    Facets.jsonQuery(queries.map(_._1), matchedDocSet(v, queries),
+      v.attrs, named, metrics, v.key)
 
   /** JSON Facet API `range` facet with bucket metrics over the persisted
     * index ([[Facets.jsonRange]] semantics). */
-  def facetJsonRange(idx: OpenIndex, queries: Seq[(Int, String)],
+  def facetJsonRange(v: View, queries: Seq[(Int, String)],
                      field: String, start: Long, end: Long, gap: Long,
                      metrics: Seq[Facets.JsonMetric]): DataFrame =
-    Facets.jsonRange(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, start, end, gap, metrics)
+    Facets.jsonRange(queries.map(_._1), matchedDocSet(v, queries),
+      v.attrs, field, start, end, gap, metrics, v.key)
 
   /** Solr `facet.sort=count` + `facet.limit` over the persisted index
     * ([[Facets.topValues]] semantics). */
@@ -1577,16 +1612,16 @@ object IndexSearch {
                topN: Int, prefix: Option[String] = None,
                contains: Option[String] = None,
                sort: String = "count", offset: Int = 0): DataFrame =
-    Facets.topValues(matchedDocSet(idx, queries), facetAttrs(idx),
+    Facets.topValues(matchedDocSet(idx, queries), idx.attrs,
       field, topN, prefix = prefix, contains = contains,
       sort = sort, offset = offset)
 
   /** Solr StatsComponent over the persisted index ([[Facets.stats]]
     * semantics). */
-  def statsField(idx: OpenIndex, queries: Seq[(Int, String)],
+  def statsField(v: View, queries: Seq[(Int, String)],
                  field: String): DataFrame =
-    Facets.stats(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field)
+    Facets.stats(queries.map(_._1), matchedDocSet(v, queries),
+      v.attrs, field, v.key)
 
   /** Solr `stats.field=f&cardinality=true` over the persisted index
     * ([[Facets.cardinality]] semantics: deterministic 64-register HLL
@@ -1594,7 +1629,7 @@ object IndexSearch {
   def statsCardinality(idx: OpenIndex, queries: Seq[(Int, String)],
                        field: String): DataFrame =
     Facets.cardinality(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field)
+      idx.attrs, field)
 
   /** Solr StatsComponent percentiles over the persisted index
     * ([[Facets.percentiles]] semantics: exact type-7, zero-filled
@@ -1602,13 +1637,13 @@ object IndexSearch {
   def statsPercentiles(idx: OpenIndex, queries: Seq[(Int, String)],
                        field: String, ps: Seq[Double]): DataFrame =
     Facets.percentiles(queries.map(_._1), matchedDocSet(idx, queries),
-      facetAttrs(idx), field, ps)
+      idx.attrs, field, ps)
 
   /** Solr `stats.facet` over the persisted index ([[Facets.statsFacet]]
     * semantics: per-facet-value stats, observed buckets only). */
   def statsFacet(idx: OpenIndex, queries: Seq[(Int, String)],
                  field: String, facetField: String): DataFrame =
-    Facets.statsFacet(matchedDocSet(idx, queries), facetAttrs(idx),
+    Facets.statsFacet(matchedDocSet(idx, queries), idx.attrs,
       field, facetField)
 
   /** Solr `group.facet=true` over the persisted index
@@ -1616,20 +1651,18 @@ object IndexSearch {
     * facet value). */
   def facetGrouped(idx: OpenIndex, queries: Seq[(Int, String)],
                    field: String, groupField: String): DataFrame =
-    Facets.groupedCounts(matchedDocSet(idx, queries), facetAttrs(idx),
+    Facets.groupedCounts(matchedDocSet(idx, queries), idx.attrs,
       field, groupField)
 
   /** Solr `{!parent which=…}` block join over the persisted index
     * ([[BlockJoin.parents]] semantics): turns are the child documents,
     * conversations the parents; top-k parents by the ScoreMode aggregate
     * of their matching children's BM25 scores. */
-  def searchParents(idx: OpenIndex, queries: Seq[(Int, String)],
+  def searchParents(v: View, queries: Seq[(Int, String)],
                     mode: BlockJoin.ScoreMode, k: Int = 10,
-                    parentField: String = "conv_id"): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    BlockJoin.parents(scoredDocs(idx, qt, conjunctive = false),
-      facetAttrs(idx), parentField, mode, k)
-  }
+                    parentField: String = "conv_id"): DataFrame =
+    BlockJoin.parents(scoredDocs(v, Search.queryPairs(queries), conjunctive = false),
+      v.attrs, parentField, mode, k, v.key)
 
   /** Solr `{!child of=…}` block join over the persisted index
     * ([[BlockJoin.children]] semantics): every turn of each top-k
@@ -1639,7 +1672,7 @@ object IndexSearch {
                      parentField: String = "conv_id"): DataFrame = {
     val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
     BlockJoin.children(scoredDocs(idx, qt, conjunctive = false),
-      facetAttrs(idx), parentField, mode, k,
+      idx.attrs, parentField, mode, k,
       childCols = Seq("turn_idx", "role"), childOrder = Seq("turn_idx"))
   }
 
@@ -1675,7 +1708,7 @@ object IndexSearch {
     require(pairs.nonEmpty,
       "no fielded clauses — use search/searchClauses for plain term queries")
     val fields = pairs.map(_._1).distinct
-    val attrs = facetAttrs(idx)
+    val attrs = idx.attrs
     require(fields.forall(attrs.columns.contains),
       s"unknown fielded-clause field(s) ${fields.filterNot(attrs.columns.contains)}" +
         s" (stored attrs: ${attrs.columns.toSeq.mkString(", ")})")
@@ -1740,7 +1773,7 @@ object IndexSearch {
   def matchAll(idx: OpenIndex, filter: Column, sortCols: Seq[Column],
                k: Int, fl: Seq[String]): DataFrame = {
     require(k > 0, s"rows must be positive (got $k)")
-    facetAttrs(idx).where(filter)
+    idx.attrs.where(filter)
       .orderBy(sortCols :+ col("doc_id").asc: _*).limit(k)
       .select(col("doc_id") +: fl.map(col): _*)
   }
@@ -1754,7 +1787,7 @@ object IndexSearch {
                     groupLimit: Int = 1): DataFrame = {
     val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
     Grouping.topGroups(scoredDocs(idx, qt, conjunctive = false),
-      facetAttrs(idx), groupField, kGroups, groupLimit)
+      idx.attrs, groupField, kGroups, groupLimit)
   }
 
   /** Solr `group.query` over the persisted index

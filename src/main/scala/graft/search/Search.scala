@@ -32,6 +32,10 @@ object Search {
         explode(Analyzer.tokens(col("text"))).as("term"))
       .distinct()
 
+  /** [[queryTerms]] on the driver: the distinct (query_id, term) pairs. */
+  def queryPairs(queries: Seq[(Int, String)]): Seq[(Int, String)] =
+    queries.flatMap { case (q, t) => Analyzer.tokenize(t).map(q -> _) }.distinct
+
   /** Full Lucene/Solr boolean clause grammar (`q=+a "b c" -d`):
     * whitespace clauses prefixed '+' are MUST, '-' are MUST_NOT, bare are
     * SHOULD; a clause body wrapped in double quotes is a PHRASE clause
@@ -391,15 +395,18 @@ object Search {
   /** W1 — per-query top-k with the pinned tie-break. `start` is Solr's
     * `start=` pagination offset (k = `rows=`): ranks (start, start+k] are
     * returned with their ABSOLUTE rank positions, exactly like a Solr
-    * response's numbered page. */
-  def rank(scored: DataFrame, k: Int, start: Int = 0): DataFrame = {
+    * response's numbered page. `key` names the doc identity columns
+    * (doc_id, or a segmented root's (conv_id, turn_idx)); ties break on
+    * them ascending. */
+  def rank(scored: DataFrame, k: Int, start: Int = 0,
+           key: Seq[String] = Seq("doc_id")): DataFrame = {
     val w = Window.partitionBy("query_id")
-      .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
+      .orderBy(round(col("_score"), Bm25.RankScale).desc +: key.map(col(_).asc): _*)
     scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") > start && col("rank") <= start + k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("doc_id"), round(col("_score"), Bm25.OutScale).as("score"))
+      .select(Seq(col("query_id"), col("rank").cast("int").as("rank")) ++
+        key.map(col) :+ round(col("_score"), Bm25.OutScale).as("score"): _*)
   }
 
   /** Solr `sort=` result ordering (e.g. `sort=ts desc`): rank the MATCH

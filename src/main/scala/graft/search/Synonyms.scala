@@ -1,8 +1,8 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import graft.index.PostingBlocks
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Query-time SYNONYM expansion — Solr's `synonyms.txt` equivalence
@@ -33,9 +33,11 @@ import org.apache.spark.sql.functions._
   * member) triples, so the expansion itself has no cross-engine drift
   * seam. Scale shape: the expansion multiplies query terms by the class
   * size (bounded by the synonym file, not the corpus); the posting scan
-  * stays shard-pruned exactly like the plain disjunctive path, and the
-  * extra (query, class, doc) aggregation is one map-side-combinable
-  * hash agg keyed no wider than the existing scoring agg.
+  * stays shard-pruned exactly like the plain disjunctive path. The class
+  * df is a max over the class's matched rows (one window partitioned by
+  * (query, class), whose shuffle the (query, class, doc) aggregation
+  * reuses), so both index views serve it from the postings they decode
+  * anyway.
   */
 object Synonyms {
 
@@ -71,39 +73,28 @@ object Synonyms {
     }
   }
 
-  /** BM25 top-k over the persisted index with query-time synonym
-    * expansion. Output shape = [[IndexSearch.search]]. A class with NO
-    * member in the dictionary contributes nothing (OOV ≡ the plain
+  /** BM25 top-k over an index view with query-time synonym expansion.
+    * Output shape = [[IndexSearch.search]]. A class with NO member in the
+    * view's live postings contributes nothing (OOV ≡ the plain
     * disjunctive path's missing term). */
-  def searchIndex(idx: IndexSearch.OpenIndex, queries: Seq[(Int, String)],
+  def searchIndex(v: IndexSearch.View, queries: Seq[(Int, String)],
                   groups: Seq[Seq[String]], k: Int = 10): DataFrame = {
-    val spark = idx.spark
+    val spark = v.spark
     import spark.implicits._
     val triples = resolve(queries, groups)
-    def empty = Search.rank(
-      Seq.empty[(Int, Long, Double)].toDF("query_id", "doc_id", "_score"), k)
-    if (triples.isEmpty) return empty
+    // a member belongs to one class, so (query_id, term) names its class
     val tri = triples.toDF("query_id", "gid", "term")
-    // dictionary probe: member df + shard (≤ |triples| rows — tiny)
-    val qd = tri.join(idx.dictionary, "term")
-      .select("query_id", "gid", "term", "df", "shard")
-    // driver boundary: the shard set the expansion touches (≤ |members|)
-    val shards = qd.select("shard").distinct().collect().map(_.getInt(0)).toSeq
-    if (shards.isEmpty) return empty
-    // SynonymQuery docFreq: max member df per (query, class)
-    val gdf = qd.groupBy("query_id", "gid").agg(max(col("df")).as("_df"))
-    val blocks = idx.postings
-      .where(col("shard").isin(shards: _*))
-      .join(broadcast(qd.select("query_id", "gid", "term")), Seq("term"))
-    val scored = PostingBlocks.decodePostings(blocks)
+    val scored = v.matched(triples.map(t => (t._1, t._3)).distinct)
+      .join(broadcast(tri), Seq("query_id", "term"))
+      // SynonymQuery docFreq: max member df per (query, class)
+      .withColumn("_df", max(col("df")).over(Window.partitionBy("query_id", "gid")))
       // merged-postings view: the class's tf = Σ member tfs per doc
-      .groupBy("query_id", "gid", "doc_id")
-      .agg(sum(col("tf")).as("_tf"), min(col("dl")).as("dl"))
-      .join(broadcast(gdf), Seq("query_id", "gid"))
+      .groupBy((Seq("query_id", "gid") ++ v.key).map(col): _*)
+      .agg(sum(col("tf")).as("_tf"), min(col("dl")).as("dl"), max(col("_df")).as("_df"))
       .withColumn("_s", Bm25.termScore(col("_tf"), col("dl"), col("_df"),
-        lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
-      .groupBy("query_id", "doc_id")
+        lit(v.nDocs), lit(v.avgdl)))
+      .groupBy(("query_id" +: v.key).map(col): _*)
       .agg(sum(col("_s")).as("_score"))
-    Search.rank(scored, k)
+    Search.rank(scored, k, key = v.key)
   }
 }

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   * is a no-op. There is no state from which "first-ever batch" and
   * "crashed mid-merge" can be confused, because nothing mutates in place.
   *
-  * Query the streamed index with [[SegmentedIndex.search]]; run
+  * Query the streamed index through [[SegmentedIndex.open]] (or
+  * [[SegmentedIndex.searchWand]]); run
   * [[SegmentedIndex.compact]] periodically to fold segments into a
   * unified global-id index.
   */

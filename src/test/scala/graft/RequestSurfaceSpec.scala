@@ -160,7 +160,7 @@ class RequestSurfaceSpec extends SparkSpec {
       noDel, "s1", cfg)
     SegmentedIndex.deleteByQuery(spark, root, "bee", "dbq", cfg)
     val q = Seq(1 -> "cat dog", 2 -> "apple", 3 -> "bee")
-    val got = SegmentedIndex.search(spark, root, q, cfg = cfg).collect()
+    val got = IndexSearch.search(SegmentedIndex.open(spark, root, cfg), q).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getInt(3),
         r.getDouble(4))).toSeq
     // rebuild over docs NOT containing 'bee' (docs 3, 4, 5)
@@ -237,8 +237,8 @@ class RequestSurfaceSpec extends SparkSpec {
     SegmentedIndex.append(spark, root, turns.where(col("conv_id") === "c2"),
       noDel, "s1", cfg)
     val q = Seq(1 -> "bee cat emu", 2 -> "apple")
-    val got = SegmentedIndex.searchParents(spark, root, q,
-      BlockJoin.Total, k = 10, cfg = cfg).collect().toSeq
+    val got = IndexSearch.searchParents(SegmentedIndex.open(spark, root, cfg), q,
+      BlockJoin.Total, k = 10).collect().toSeq
     val want = IndexSearch.searchParents(idx, q, BlockJoin.Total, k = 10)
       .collect().toSeq
     assert(got.map(r => (r.getInt(0), r.getInt(1), r.getString(2),
@@ -265,13 +265,13 @@ class RequestSurfaceSpec extends SparkSpec {
     BuildIndexJob.run(spark, live, rebuiltRoot, "rb2", cfg)
     val rb = IndexSearch.open(spark, rebuiltRoot)
     val q = Seq(1 -> "bee cat", 2 -> "emu")
-    val segJson = SegmentedIndex.facetJson(spark, root, q, "role", "tool",
-      10, 10, metrics, cfg).collect().map(_.toSeq).toSeq
+    val segJson = IndexSearch.facetJson(SegmentedIndex.open(spark, root, cfg), q,
+      "role", "tool", 10, 10, metrics).collect().map(_.toSeq).toSeq
     val uniJson = IndexSearch.facetJson(rb, q, "role", "tool",
       10, 10, metrics).collect().map(_.toSeq).toSeq
     assert(segJson == uniJson)
-    val segPar = SegmentedIndex.searchParents(spark, root, q,
-      BlockJoin.Total, 10, cfg).collect().map(_.toSeq).toSeq
+    val segPar = IndexSearch.searchParents(SegmentedIndex.open(spark, root, cfg), q,
+      BlockJoin.Total, 10).collect().map(_.toSeq).toSeq
     val uniPar = IndexSearch.searchParents(rb, q, BlockJoin.Total, 10)
       .collect().map(_.toSeq).toSeq
     assert(segPar == uniPar)

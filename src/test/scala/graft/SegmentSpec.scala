@@ -1,7 +1,7 @@
 package graft
 
 import graft.index.{BuildIndexJob, SegmentSnapshots, SegmentedIndex}
-import graft.search.IndexSearch
+import graft.search.{BlockJoin, IndexSearch, Synonyms}
 import graft.sources.Transcripts
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -30,7 +30,7 @@ class SegmentSpec extends SparkSpec {
   }
 
   def segResults(root: String): Seq[Row] =
-    SegmentedIndex.search(spark, root, queries, cfg = cfg)
+    IndexSearch.search(SegmentedIndex.open(spark, root, cfg), queries)
       .orderBy("query_id", "rank").collect().toSeq
 
   test("clause ^boost flows through the segmented engine ≡ unified rebuild") {
@@ -58,6 +58,72 @@ class SegmentSpec extends SparkSpec {
       .select("conv_id", "turn_idx", "score").collect().toSeq
     assert(plain != boosted)
     all.unpersist()
+  }
+
+  /** The eleven request shapes written once against an index view. */
+  def shapes(qs: Seq[(Int, String)]): Seq[(String, IndexSearch.View => DataFrame)] = Seq(
+    "search" -> (v => IndexSearch.search(v, qs)),
+    "searchFiltered" -> (v => IndexSearch.searchFiltered(v, qs, col("role") === "user")),
+    "searchParents" -> (v => IndexSearch.searchParents(v, qs, BlockJoin.Total)),
+    "searchSynonyms" -> (v => Synonyms.searchIndex(v, qs, Seq(Seq("w1", "w2")))),
+    "facetCounts" -> (v => IndexSearch.facetCounts(v, qs, "role")),
+    "facetFields" -> (v => IndexSearch.facetFields(v, qs, Seq("role", "tool"))),
+    "facetJson" -> (v => IndexSearch.facetJson(v, qs, "role", "tool", 2, 2,
+      SparkEntry.JsonFacetMetrics)),
+    "statsField" -> (v => IndexSearch.statsField(v, qs, "dl")),
+    "facetIntervals" -> (v => IndexSearch.facetIntervals(v, qs, "dl", SparkEntry.IntervalSets)),
+    "facetJsonQuery" -> (v => IndexSearch.facetJsonQuery(v, qs,
+      SparkEntry.FacetQueryDefs.map(d => (d._1, d._2)), SparkEntry.JsonFacetMetrics)),
+    "facetJsonRange" -> (v => IndexSearch.facetJsonRange(v, qs, "dl", 0L, 30L, 10L,
+      SparkEntry.JsonFacetMetrics)))
+
+  test("the eleven shapes over an absent, a segment-free and an all-tombstoned root: pinned rows and schema") {
+    val batch = Transcripts.synthetic(spark, 6).cache()
+    val keys = batch.select("conv_id", "turn_idx")
+    val absent = tmp() + "/none"
+    val noSegs = tmp()
+    // the only batch deletes every key it brings: no segment is written
+    SegmentedIndex.append(spark, noSegs, batch, keys, "seg-a", cfg)
+    val allDead = tmp()
+    SegmentedIndex.append(spark, allDead, batch, noDeletes, "seg-a", cfg)
+    SegmentedIndex.append(spark, allDead, batch.limit(0), keys, "seg-b", cfg)
+    assert(SegmentedIndex.readManifest(spark, noSegs).exists(m => m.segments.isEmpty))
+    assert(SegmentedIndex.readManifest(spark, allDead)
+      .exists(m => m.segments.nonEmpty && m.nDocs == 0))
+    // nullability is left out: it is not part of a result's shape
+    def shape(df: DataFrame): String =
+      df.schema.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+    def body(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val ranked = "query_id INT, rank INT, conv_id STRING, turn_idx INT, score DOUBLE"
+    val metrics = "sum_dl BIGINT, avg_dl DOUBLE, uniq_tool BIGINT, max_turn BIGINT"
+    val nulls = ",0,null,null,null,null]"
+    def spine(buckets: Seq[Any], tail: String): Seq[String] =
+      for (q <- Seq(1, 2); b <- buckets) yield s"[$q,$b$tail"
+    val want: Map[String, (String, Seq[String])] = Map(
+      "search" -> (ranked -> Nil),
+      "searchFiltered" -> (ranked -> Nil),
+      "searchParents" ->
+        ("query_id INT, rank INT, parent STRING, n_children BIGINT, score DOUBLE" -> Nil),
+      "searchSynonyms" -> (ranked -> Nil),
+      "facetCounts" -> ("query_id INT, role STRING, n_docs BIGINT" -> Nil),
+      "facetFields" -> ("query_id INT, field STRING, value STRING, n_docs BIGINT" -> Nil),
+      "facetJson" -> ("query_id INT, value STRING, child_value STRING, rank INT, " +
+        s"n_docs BIGINT, $metrics" -> Nil),
+      "statsField" -> (("query_id INT, n_docs BIGINT, vmissing BIGINT, vmin BIGINT, " +
+        "vmax BIGINT, vsum BIGINT, vmean DOUBLE") -> spine(Seq(0), nulls)),
+      "facetIntervals" -> ("query_id INT, interval STRING, n_docs BIGINT" ->
+        spine(SparkEntry.IntervalSets.map(_.label), ",0]")),
+      "facetJsonQuery" -> (s"query_id INT, facet STRING, n_docs BIGINT, $metrics" ->
+        spine(SparkEntry.FacetQueryDefs.map(_._1), nulls)),
+      "facetJsonRange" -> (s"query_id INT, bucket BIGINT, n_docs BIGINT, $metrics" ->
+        spine(Seq(0, 10, 20), nulls)))
+    assert(want.keySet == shapes(Nil).map(_._1).toSet)
+    for (root <- Seq(absent, noSegs, allDead); (name, run) <- shapes(Seq(1 -> "w1 w3", 2 -> "zzzmissing"))) {
+      val df = run(SegmentedIndex.open(spark, root, cfg))
+      assert(shape(df) == want(name)._1, s"$name schema over $root")
+      assert(body(df) == want(name)._2.sorted, s"$name rows over $root")
+    }
+    batch.unpersist()
   }
 
   test("3 appends with upserts and deletes ≡ full rebuild over the live corpus") {
@@ -137,21 +203,21 @@ class SegmentSpec extends SparkSpec {
     assert(segBool.exists(_.getInt(0) == 3), "upserted must-term must match")
 
     val fqQs = Seq(1 -> "w1 w2", 2 -> "zzzupserted")
-    assert(sorted(SegmentedIndex.searchFiltered(spark, root, fqQs,
-        col("role") === "user", cfg = cfgPos))
+    val view = SegmentedIndex.open(spark, root, cfgPos)
+    assert(sorted(IndexSearch.searchFiltered(view, fqQs, col("role") === "user"))
       == keyed(IndexSearch.searchFiltered(uidx, fqQs, col("role") === "user")))
-    assert(SegmentedIndex.facetCounts(spark, root, fqQs, "role", cfgPos)
+    assert(IndexSearch.facetCounts(view, fqQs, "role")
         .collect().toSeq
       == IndexSearch.facetCounts(uidx, fqQs, "role").collect().toSeq)
 
     // round-5 facet family composed on the segmented keys identity:
     // multi-field facets and stats must agree with the unified rebuild
     // under the same upserts + tombstones
-    assert(SegmentedIndex.facetFields(spark, root, fqQs,
-        Seq("role", "tool"), cfgPos).collect().toSeq
+    assert(IndexSearch.facetFields(view, fqQs,
+        Seq("role", "tool")).collect().toSeq
       == IndexSearch.facetFields(uidx, fqQs, Seq("role", "tool"))
         .collect().toSeq)
-    assert(SegmentedIndex.statsField(spark, root, fqQs, "dl", cfgPos)
+    assert(IndexSearch.statsField(view, fqQs, "dl")
         .collect().toSeq
       == IndexSearch.statsField(uidx, fqQs, "dl").collect().toSeq)
 
@@ -164,6 +230,21 @@ class SegmentSpec extends SparkSpec {
         luceneSlop = true, cfg = cfgPos))
       == keyed(IndexSearch.searchPhrase(uidx, sq, slop = 2, luceneSlop = true)),
       "sloppy mode must agree across segmented and unified paths")
+
+    // every shape written against a view: the live segmented view ≡ the
+    // bulk view of its compaction, doc_id mapped to its key
+    val cmp = IndexSearch.open(spark,
+      SegmentedIndex.compact(spark, root, tmp(), "cmp", cfgPos).root)
+    val cmpKeys = cmp.attrs.select("doc_id", "conv_id", "turn_idx")
+    def lines(df: DataFrame, cols: Seq[String]): Seq[String] =
+      (if (df.columns.contains("doc_id")) df.join(cmpKeys, "doc_id") else df)
+        .select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+    for ((name, run) <- shapes(Seq(1 -> "w1 w2", 2 -> "zzzupserted", 3 -> "upserted w3"))) {
+      val got = run(view)
+      val rowsSeg = lines(got, got.columns.toSeq)
+      assert(rowsSeg.nonEmpty && rowsSeg == lines(run(cmp), got.columns.toSeq),
+        s"$name over the segmented view ≢ over its compaction")
+    }
   }
 
   test("segmented WAND ≡ exhaustive fan-out under upserts + tombstones") {
@@ -181,7 +262,7 @@ class SegmentSpec extends SparkSpec {
     val wq = queries ++ Seq(5 -> "w1", 6 -> "w2 w7 zzzrareone", 7 -> "w1 w2 w3 w4")
     def wand() = SegmentedIndex.searchWand(spark, root, wq, cfg = cfg)
       .orderBy("query_id", "rank").collect().toSeq
-    def exhaustive() = SegmentedIndex.search(spark, root, wq, cfg = cfg)
+    def exhaustive() = IndexSearch.search(SegmentedIndex.open(spark, root, cfg), wq)
       .orderBy("query_id", "rank").collect().toSeq
     val oneSeg = wand()
     assert(oneSeg == exhaustive() && oneSeg.nonEmpty, "single tombless segment")
@@ -271,7 +352,7 @@ class SegmentSpec extends SparkSpec {
     assert(r1 != r2 && r1.nonEmpty)
     assert(SegmentedIndex.snapshotVersions(spark, root) == Seq(1, 2))
     // VERSION AS OF: v1 answers exactly as the head did before commit 2
-    val v1 = SegmentedIndex.search(spark, s"$root@v1", queries, cfg = cfg)
+    val v1 = IndexSearch.search(SegmentedIndex.open(spark, s"$root@v1", cfg), queries)
       .orderBy("query_id", "rank").collect().toSeq
     assert(v1 == r1)
     // mutators reject snapshot specs — writes go only to the head
@@ -283,11 +364,11 @@ class SegmentSpec extends SparkSpec {
     }
     // a bad version fails loudly instead of answering empty
     intercept[IllegalArgumentException] {
-      SegmentedIndex.search(spark, s"$root@v9", queries, cfg = cfg).collect()
+      IndexSearch.search(SegmentedIndex.open(spark, s"$root@v9", cfg), queries).collect()
     }
     // compaction retains old dirs: pre-compaction snapshots stay readable
     SegmentedIndex.compactInPlace(spark, root, cfg) // v3
-    val v2 = SegmentedIndex.search(spark, s"$root@v2", queries, cfg = cfg)
+    val v2 = IndexSearch.search(SegmentedIndex.open(spark, s"$root@v2", cfg), queries)
       .orderBy("query_id", "rank").collect().toSeq
     assert(v2 == r2, "pre-compaction snapshot readable after compaction")
     assert(segResults(root) == r2, "head answers unchanged by compaction")
@@ -296,7 +377,7 @@ class SegmentSpec extends SparkSpec {
     val left = SegmentedIndex.snapshotVersions(spark, root)
     assert(left.size == 1)
     intercept[IllegalArgumentException] {
-      SegmentedIndex.search(spark, s"$root@v2", queries, cfg = cfg).collect()
+      IndexSearch.search(SegmentedIndex.open(spark, s"$root@v2", cfg), queries).collect()
     }
     assert(segResults(root) == r2, "head still serves after vacuum")
     all.unpersist()
@@ -393,9 +474,7 @@ class SegmentSpec extends SparkSpec {
     val root = tmp()
     SegmentedIndex.append(spark, root, Transcripts.synthetic(spark, 60),
       noDeletes, "seg-a", cfg)
-    // searchPlan = the lazy plan (public search returns a materialized
-    // local frame whose plan no longer shows the scans)
-    val plan = SegmentedIndex.searchPlan(spark, root, Seq(1 -> "w1"), cfg = cfg)
+    val plan = IndexSearch.search(SegmentedIndex.open(spark, root, cfg), Seq(1 -> "w1"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("shard"),
       s"no shard pruning in segmented search plan:\n$plan")
@@ -507,7 +586,7 @@ class SegmentSpec extends SparkSpec {
       Seq(("conv00000001", 1), ("conv00000095", 0)).toDF("conv_id", "turn_idx"))
     val root = tmp()
     def check(stage: String, live: DataFrame): Unit = {
-      val exh = rows(SegmentedIndex.search(spark, root, wandQueries, cfg = cfg))
+      val exh = rows(IndexSearch.search(SegmentedIndex.open(spark, root, cfg), wandQueries))
       assert(exh.nonEmpty && exh == rebuildExpected(live, wandQueries), s"$stage: search ≡ rebuild")
       for (dpr <- Seq(7L, 64L))
         assert(rows(SegmentedIndex.searchWand(spark, root, wandQueries,
@@ -566,7 +645,7 @@ class SegmentSpec extends SparkSpec {
         Seq(9 -> "qqqnotthere zzznope"), cfg = icfg).collect())
       assert(oov.isEmpty && jobsOov == 0, s"all-OOV request ran $jobsOov jobs")
       assert(io.reads.isEmpty, s"warm reads went through TableIO: ${io.reads}")
-      assert(rows(frame) == rows(SegmentedIndex.search(spark, root, q, cfg = icfg)))
+      assert(rows(frame) == rows(IndexSearch.search(SegmentedIndex.open(spark, root, icfg), q)))
 
       val (m2, decisions) = SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2,
         maxMergeAtOnce = 2, cfg = icfg)
@@ -580,7 +659,7 @@ class SegmentSpec extends SparkSpec {
         s"the read after the merge loaded more than $newSeg: ${io.reads}")
       assert(SegmentSnapshots.cached(spark, root) == ((m2.segments.toSet, m2.tombs.toSet)),
         "merged-away entries must be dropped")
-      assert(after == rows(SegmentedIndex.search(spark, root, q, cfg = icfg)))
+      assert(after == rows(IndexSearch.search(SegmentedIndex.open(spark, root, icfg), q)))
     } finally sc.removeSparkListener(listener)
     all.unpersist()
   }
@@ -608,7 +687,7 @@ class SegmentSpec extends SparkSpec {
     val m = SegmentedIndex.readManifest(spark, root).get
     assert(m.segments.last == "seg1" && m.tombs.contains("seg1"))
     val got = rows(SegmentedIndex.searchWand(spark, root, wandQueries, cfg = cfg))
-    assert(got.nonEmpty && got == rows(SegmentedIndex.search(spark, root, wandQueries, cfg = cfg)))
+    assert(got.nonEmpty && got == rows(IndexSearch.search(SegmentedIndex.open(spark, root, cfg), wandQueries)))
     assert(got == rebuildExpected(liveOf(Seq(b0, b1, b1b)), wandQueries))
     all.unpersist()
   }
@@ -642,8 +721,8 @@ class SegmentSpec extends SparkSpec {
     assert(failed == 0, s"reads failed, first: ${errors.peek()}")
     val post = SegmentedIndex.snapshotVersions(spark, root).last
     assert(post > pre)
-    val valid = Set(pre, post).map(v => rows(SegmentedIndex.search(spark, s"$root@v$v",
-      wandQueries, cfg = cfg)))
+    val valid = Set(pre, post).map(v => rows(IndexSearch.search(
+      SegmentedIndex.open(spark, s"$root@v$v", cfg), wandQueries)))
     assert(valid.size == 2 && answers.size >= 2)
     answers.forEach(a => assert(valid.contains(a), "an answer matches no committed manifest"))
     all.unpersist()
@@ -676,6 +755,83 @@ class SegmentSpec extends SparkSpec {
     SegmentedIndex.append(spark, root, convs(all, 0, 40), noDeletes, "seg-a", c)
     (root, convs(all, 40, 60).unionByName(upserted(all, 10, 13, "upserted")),
       Seq(("conv00000001", 0), ("conv00000020", 1)).toDF("conv_id", "turn_idx"))
+  }
+
+  test("live df from metadata ≡ the count of live decoded postings, through upserts, deletes, merges and tiered compaction") {
+    // every segmented read scores from SegmentedIndex.liveDf; this is its
+    // independent check (the exhaustive search used to count df itself)
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val root = tmp()
+    def check(stage: String): Unit = {
+      val m = SegmentedIndex.readManifest(spark, root).get
+      val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
+      val tombRows = SegmentedIndex.readTombstones(spark, root, m)
+      val counted = segs.zipWithIndex.map { case (seg, o) =>
+        graft.index.PostingBlocks.decodePostings(seg.index.postings)
+          .join(seg.docs, "doc_id")
+          .join(tombRows.where($"upto" > o), Seq("conv_id", "turn_idx"), "left_anti")
+          .select("term")
+      }.reduce(_ unionByName _).groupBy("term").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val terms = segs.flatMap(_.index.dictionary.select("term").collect().map(_.getString(0)))
+      assert(counted.nonEmpty && SegmentedIndex.liveDf(segs, tombs, terms.distinct)._2 == counted,
+        s"$stage: live df ≢ live posting count")
+    }
+    SegmentedIndex.append(spark, root, convs(all, 0, 50), noDeletes, "seg-a", cfg)
+    SegmentedIndex.append(spark, root, convs(all, 50, 90), noDeletes, "seg-b", cfg)
+    SegmentedIndex.append(spark, root, convs(all, 90, 120).unionByName(upserted(all, 80, 85, "up")),
+      Seq(("conv00000001", 1), ("conv00000095", 0)).toDF("conv_id", "turn_idx"), "seg-c", cfg)
+    assert(SegmentedIndex.readManifest(spark, root).get.tombs.nonEmpty)
+    check("upserts + deletes")
+    SegmentedIndex.mergeAdjacent(spark, root, 0, 1, cfg)
+    check("mergeAdjacent")
+    SegmentedIndex.append(spark, root, upserted(all, 10, 15, "again"),
+      Seq(("conv00000060", 0)).toDF("conv_id", "turn_idx"), "seg-d", cfg)
+    check("an upsert of merged keys")
+    val (_, decisions) = SegmentedIndex.tieredCompact(spark, root, segsPerTier = 2,
+      tierFactor = 16.0, cfg = cfg)
+    assert(decisions.nonEmpty)
+    check("tieredCompact")
+    all.unpersist()
+  }
+
+  test("a warm segmented search and facetFields persist no relation and write no scratch dir") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    val all = Transcripts.synthetic(spark, 120).cache()
+    val root = tmp()
+    SegmentedIndex.append(spark, root, convs(all, 0, 60), noDeletes, "seg-a", cfg)
+    SegmentedIndex.append(spark, root, convs(all, 60, 120).unionByName(upserted(all, 10, 15, "up")),
+      Seq(("conv00000001", 1)).toDF("conv_id", "turn_idx"), "seg-b", cfg)
+    val q = Seq(1 -> "w1 w3", 2 -> "w2")
+    def search() = IndexSearch.search(SegmentedIndex.open(spark, root, cfg), q).collect()
+    def facets() = IndexSearch.facetFields(SegmentedIndex.open(spark, root, cfg), q,
+      Seq("role", "tool")).collect()
+    search(); facets() // cold: loads the segment snapshots
+    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch() = tmpDir.list().count(_.startsWith("graft_seg_out"))
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    // a cached relation shows as RDD blocks stored while the call runs;
+    // earlier tests' relations may be cleaned up meanwhile, so only new
+    // blocks and new persisted RDDs count
+    val cachedBlocks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid)
+          cachedBlocks.incrementAndGet()
+    }
+    val scratch0 = scratch()
+    sc.addSparkListener(listener)
+    val (searchJobs, facetJobs) =
+      try (jobsOf(search())._2.size, jobsOf(facets())._2.size)
+      finally sc.removeSparkListener(listener)
+    // warm jobs on this root: search 14 → 8 and facetFields 19 → 11 once
+    // the twins' cached decode, df aggregate and scratch write went away
+    assert(searchJobs < 14 && facetJobs < 19, s"search $searchJobs, facetFields $facetJobs jobs")
+    assert(cachedBlocks.get == 0 && (sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+      s"a warm read cached ${cachedBlocks.get} RDD blocks")
+    assert(scratch() == scratch0, "facetFields wrote a graft_seg_out scratch dir")
+    all.unpersist()
   }
 
   test("every job of an append and a mergeAdjacent carries a graft.phase; the caller's job group and pool survive") {

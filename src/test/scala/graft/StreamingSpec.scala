@@ -32,7 +32,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   def segResults(root: String): Seq[org.apache.spark.sql.Row] =
-    SegmentedIndex.search(spark, root, queries, cfg = cfg)
+    IndexSearch.search(SegmentedIndex.open(spark, root, cfg), queries)
       .orderBy("query_id", "rank").collect().toSeq
 
   /** Full-rebuild expectation in the segmented (key-identified) shape. */

@@ -98,8 +98,8 @@ class SurfaceSynChunkSpec extends SparkSpec {
     SegmentedIndex.append(spark, root, b2, dead, "seg-b", cfg)
     val queries = Seq(1 -> "w1 w40", 2 -> "w2 zzznew")
     val groups = Seq(Seq("w1", "w2"), Seq("w40", "w41"))
-    val seg = SegmentedIndex.searchSynonyms(spark, root, queries, groups,
-      cfg = cfg).orderBy("query_id", "rank").collect().toSeq
+    val seg = Synonyms.searchIndex(SegmentedIndex.open(spark, root, cfg), queries,
+      groups).orderBy("query_id", "rank").collect().toSeq
     // unified rebuild over the engine's own live view (liveTurns is
     // pinned ≡ rebuild by SegmentSpec), mapped back to keys
     val uroot = tmp()
