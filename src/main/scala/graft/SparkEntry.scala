@@ -1734,10 +1734,10 @@ object SparkEntry {
     "q_doc_get_segmented" -> ((s, dir) =>
       graft.index.SegmentedIndex.getDocs(s, streamedIndex(s, dir), GetKeys,
         cfg = BuildIndexJob.Config(numShards = 8))),
-    // mm over the SEGMENTED (streaming-serving) clause engine
+    // mm over the SEGMENTED (streaming-serving) view: the one clause
+    // engine, one leaf per segment
     "q_bm25_mm_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchClauses(s, streamedIndex(s, dir),
-        MmQueries, cfg = BuildIndexJob.Config(numShards = 8), mm = MmCount)),
+      IndexSearch.searchClauses(streamedView(s, dir), MmQueries, mm = MmCount)),
     // Multimodal plumbing: binary payloads, partition-batched decode stub
     "q_media_features" -> ((s, dir) =>
       Multimodal.decode(Multimodal.mediaTable(s, dir))),
@@ -2023,12 +2023,12 @@ object SparkEntry {
     // phrase clauses composed in one engine over the positional index
     "q_bm25_bool_phrase" -> ((s, dir) =>
       IndexSearch.searchClauses(indexFor(s, dir), BoolPhraseQueries)),
-    // Solr surface over the SEGMENTED (streaming) index: boolean clauses,
-    // fq, and facet composed onto the per-segment fan-out — a streaming
-    // deployment serves the full request grammar between compactions
+    // Solr surface over the SEGMENTED (streaming) view: boolean clauses,
+    // fq, and facet written once against the view, one leaf per segment —
+    // a streaming deployment serves the full request grammar between
+    // compactions
     "q_bm25_bool_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchClauses(s, streamedIndex(s, dir),
-        BoolQueries, cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.searchClauses(streamedView(s, dir), BoolQueries)),
     "q_bm25_fq_segmented" -> ((s, dir) =>
       IndexSearch.searchFiltered(streamedView(s, dir),
         DisjQueries, col("role") === "user")),
@@ -2049,17 +2049,14 @@ object SparkEntry {
     "q_facet_interval_segmented" -> ((s, dir) =>
       IndexSearch.facetIntervals(streamedView(s, dir),
         DisjQueries, "dl", IntervalSets)),
-    // Conjunctive AND over the segmented index — the clause engine's
-    // all-must subset (J3's semantics, fanned out per segment)
+    // Conjunctive AND over the segmented view — the clause engine's
+    // all-must subset (J3's semantics, run per leaf)
     "q_bm25_conj_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchClauses(s, streamedIndex(s, dir),
-        ConjQueriesAsMust, cfg = BuildIndexJob.Config(numShards = 8))),
-    // Phrase over the segmented index (positional segments): block-pruned
-    // fat decode per segment, live-df idf — the last request shape a
-    // streaming deployment was missing
+      IndexSearch.searchClauses(streamedView(s, dir), ConjQueriesAsMust)),
+    // Phrase over the segmented view (positional segments): the one
+    // phrase engine, block-pruned fat decode per leaf, live-df idf
     "q_bm25_phrase_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchPhrase(s, streamedIndex(s, dir),
-        PhraseQueries, cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.searchPhrase(streamedView(s, dir), PhraseQueries)),
     // Multi-field qf where each FIELD is a persisted index (its stats ARE
     // the per-field statistics) — same oracle as the inline variant
     "q_bm25_multifield_index" -> ((s, dir) => {
@@ -2082,11 +2079,11 @@ object SparkEntry {
     "q_bm25_highlight_scored" -> ((s, dir) =>
       IndexSearch.searchHighlightScored(indexFor(s, dir), DisjQueries,
         window = 3, fragments = 2)),
-    // Solr hl over the SEGMENTED index: per-segment block-pruned position
-    // decode + point-lookup snippets, keys-shaped output
+    // Solr hl over the SEGMENTED view: the one highlighter, per-leaf
+    // block-pruned position decode + point-lookup snippets, keys-shaped
+    // output
     "q_bm25_highlight_segmented" -> ((s, dir) =>
-      graft.index.SegmentedIndex.searchHighlight(s, streamedIndex(s, dir),
-        DisjQueries, cfg = BuildIndexJob.Config(numShards = 8))),
+      IndexSearch.searchHighlight(streamedView(s, dir), DisjQueries)),
     // G7: rollup diagnostics (corpus profile by lang × source); grouping()
     // relabels the rollup's nulls so both engines emit 'ALL'
     "q_corpus_cube" -> ((s, dir) => {

@@ -3,6 +3,7 @@ package graft.index
 import graft.analysis.Analyzer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Inverted-index construction over a transcripts table (SURVEY.md §3.1).
   *
@@ -89,7 +90,10 @@ object IndexBuild {
         col("turn_idx").asc_nulls_last)
       .withColumn("_mid", monotonically_increasing_id())
       .write.mode("overwrite").parquet(staging)
-    val staged = spark.read.parquet(staging)
+    // read with the schema it was written with: inferring it is a Spark
+    // job per build and per append
+    val staged = spark.read.schema(StructType(Seq(turns.schema("conv_id"),
+      turns.schema("turn_idx"), StructField("_mid", LongType)))).parquet(staging)
     val pidCol = shiftright(col("_mid"), 33).cast("int")
     val counts = staged.groupBy(pidCol.as("_pid")).count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)

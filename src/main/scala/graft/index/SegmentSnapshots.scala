@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
   * is derived once per directory and reused by every later read:
   *
   *  - per segment: its [[IndexSearch.OpenIndex]] (stats, the resolved
-  *    postings relation and the [[graft.search.ResidentDict]], each
-  *    loaded on first use) and its resolved `docs/` relation;
+  *    postings and `docs/` relations and the
+  *    [[graft.search.ResidentDict]], each loaded on first use);
   *  - per tombstone dir: its killed keys with their `upto` and the
   *    per-term kills of its `dfdeltas/` sidecar.
   *
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions.col
   * sessions.
   *
   * Driver memory: per live segment one resident dictionary (~84 B per
-  * term of its vocabulary, see [[graft.search.ResidentDict]]) plus two
+  * term of its vocabulary, see [[graft.search.ResidentDict]]) plus its
   * resolved relations; per live tombstone dir its rows and its df-delta
   * terms. A root that is deleted without a later head read keeps its
   * entries until its session stops. */
@@ -36,10 +36,9 @@ private[graft] object SegmentSnapshots {
 
   final class Segment(spark: SparkSession, path: String, io: TableIO) {
     lazy val index: IndexSearch.OpenIndex = IndexSearch.open(spark, path, io)
-    /** The `docs/` relation, resolved (file listing, schema) once. */
-    lazy val stored: DataFrame = io.read(spark, s"$path/docs")
     /** (doc_id, conv_id, turn_idx) — the segment-local id → key map. */
-    lazy val docs: DataFrame = stored.select(col("doc_id"), col("conv_id"), col("turn_idx"))
+    lazy val docs: DataFrame =
+      index.stored.select(col("doc_id"), col("conv_id"), col("turn_idx"))
   }
 
   final class Tomb(spark: SparkSession, tombPath: String, deltaPath: String) {

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.Phase
-import graft.search.{BlockMaxWand, Bm25, IndexSearch, Search}
+import graft.search.{BlockMaxWand, Bm25, IndexSearch}
 import graft.sources.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -52,13 +52,13 @@ import org.apache.spark.sql.functions._
   * ascending because global ids are assigned in key order.
   *
   * One engine, two storage views: [[open]] is this root's
-  * [[IndexSearch.View]], and the scored, filtered, block-join, synonym
-  * and facet request shapes of [[IndexSearch]] and
-  * [[graft.search.Synonyms]] serve it as they serve a bulk root — Lucene
-  * runs every query per leaf behind one reader interface the same way.
-  * What stays here works on segment-local ids or has its own grammar:
-  * [[searchWand]], [[searchHighlight]], [[getDocs]], [[searchClauses]],
-  * [[searchPhrase]] and the writers.
+  * [[IndexSearch.View]], and the scored, filtered, block-join, synonym,
+  * facet, phrase, highlight and boolean-clause request shapes of
+  * [[IndexSearch]] and [[graft.search.Synonyms]] serve it as they serve a
+  * bulk root, one leaf per segment — Lucene runs every query per leaf
+  * behind one reader interface the same way. What stays here: the
+  * writers, [[searchWand]] (driver-side traversal over segment-local
+  * ids) and [[getDocs]] (the text-free realtime-get projection).
   */
 object SegmentedIndex {
 
@@ -452,15 +452,21 @@ object SegmentedIndex {
 
   /** The live segmented root as an [[IndexSearch.View]]: every request
     * shape written against a view ([[IndexSearch.search]],
-    * [[IndexSearch.searchFiltered]], the facet family, …) serves it, with
-    * results keyed by (conv_id, turn_idx). A snapshot of the manifest at
-    * open time, valid until [[vacuum]] removes a directory it lists.
+    * [[IndexSearch.searchFiltered]], the facet family,
+    * [[IndexSearch.searchPhrase]], [[IndexSearch.searchHighlight]],
+    * [[IndexSearch.searchClauses]], …) serves it, with results keyed by
+    * (conv_id, turn_idx). A snapshot of the manifest at open time, valid
+    * until [[vacuum]] removes a directory it lists.
     *
     *  - df is the exact live df of [[liveDf]] (metadata only), N/avgdl
     *    come from the manifest;
+    *  - `leaves` holds one leaf per segment: its snapshot's open index
+    *    and the segment's (doc_id, conv_id, turn_idx) rows that no
+    *    tombstone kills;
     *  - `matched` decodes, per segment, only the shards its resident
     *    dictionary ([[SegmentSnapshots]]) maps the query terms to, and
-    *    keeps the postings of tombstone-live instances. The plan holds
+    *    keeps the postings of tombstone-live instances through one join
+    *    with the leaves' live maps. The plan holds
     *    one postings scan per segment: fine because compaction bounds
     *    the segment count (a long-running ingest calls compactInPlace or
     *    tieredCompact, so this is O(compactEvery), never O(all appends
@@ -486,6 +492,13 @@ object SegmentedIndex {
     def key: Seq[String] = Key
     def nDocs: Long = m.nDocs
     def avgdl: Double = m.avgdl
+    def df(terms: Seq[String]): Map[String, Long] = liveDf(segs, tombs, terms)._2
+
+    /** One leaf per segment; its live map keeps the instances no
+      * tombstone kills. */
+    lazy val leaves: Seq[IndexSearch.Leaf] = segs.indices.map(o =>
+      IndexSearch.Leaf(segs(o).index,
+        Some(liveFilter(segs(o).docs.withColumn("seg_ord", lit(o)), tombRows).drop("seg_ord"))))
 
     private def empty(ddl: String): DataFrame = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -493,23 +506,24 @@ object SegmentedIndex {
 
     def matched(qt: Seq[(Int, String)]): DataFrame = {
       import spark.implicits._
-      val df = liveDf(segs, tombs, qt.map(_._2).distinct)._2
-      val qd = broadcast(qt.distinct.collect { case (q, t) if df.contains(t) => (q, t, df(t)) }
+      val dfs = df(qt.map(_._2).distinct)
+      val qd = broadcast(qt.distinct.collect { case (q, t) if dfs.contains(t) => (q, t, dfs(t)) }
         .toDF("query_id", "term", "df"))
-      segs.indices.flatMap { o =>
-        val shards = segs(o).index.resident.shardsOf(df.keys.toSeq)
+      leaves.zipWithIndex.flatMap { case (l, o) =>
+        val shards = l.index.resident.shardsOf(dfs.keys.toSeq)
         if (shards.isEmpty) None
-        else Some(PostingBlocks.decodePostings(segs(o).index.postings
-            .where(col("shard").isin(shards: _*)).join(qd, Seq("term")))
-          .join(liveFilter(segs(o).docs.withColumn("seg_ord", lit(o)), tombRows), "doc_id")
-          .select(col("query_id"), col("term"), col("df"), col("conv_id"),
-            col("turn_idx"), col("tf"), col("dl")))
-      }.reduceOption(_ unionByName _).getOrElse(empty(
-        "query_id INT, term STRING, df BIGINT, conv_id STRING, turn_idx INT, tf INT, dl INT"))
+        else Some(PostingBlocks.decodePostings(l.index.postings
+          .where(col("shard").isin(shards: _*)).join(qd, Seq("term"))
+          .withColumn("_leaf", lit(o))))
+      }.reduceOption(_ unionByName _)
+        .map(IndexSearch.keyed(this, _).select(col("query_id"), col("term"), col("df"),
+          col("conv_id"), col("turn_idx"), col("tf"), col("dl")))
+        .getOrElse(empty(
+          "query_id INT, term STRING, df BIGINT, conv_id STRING, turn_idx INT, tf INT, dl INT"))
     }
 
     lazy val attrs: DataFrame = segs.indices
-      .map(o => segs(o).stored.drop("text", "doc_id").withColumn("seg_ord", lit(o)))
+      .map(o => segs(o).index.stored.drop("text", "doc_id").withColumn("seg_ord", lit(o)))
       .reduceOption(_ unionByName _).map(liveFilter(_, tombRows).drop("seg_ord"))
       .getOrElse(empty(
         "conv_id STRING, turn_idx INT, role STRING, tool STRING, ts TIMESTAMP, dl INT"))
@@ -544,50 +558,6 @@ object SegmentedIndex {
       .toDF("query_id", "rank", "conv_id", "turn_idx", "score")
   }
 
-  /** Distinct analyzed terms of a query batch, on the driver. */
-  private def termsOf(queries: Seq[(Int, String)]): Seq[String] =
-    queries.flatMap(q => graft.analysis.Analyzer.tokenize(q._2)).distinct
-
-  /** Full boolean clause grammar (`q=+a b -c`, incl. the NOT-only subset)
-    * over the SEGMENTED index — the same pinned semantics as
-    * [[graft.search.Search.searchCorpusClauses]]: every must term required
-    * (an out-of-vocabulary must ⇒ no matches), not-terms excluded,
-    * score = BM25 over matching must+should terms, from one pass over
-    * the view's live postings ([[open]]: live df, manifest N/avgdl) that
-    * counts must, should and not matches per doc. Output keys-shaped,
-    * like [[IndexSearch.search]] over the view. `mm` is
-    * minimumNumberShouldMatch with
-    * [[graft.search.Search.searchCorpusClauses]]'s exact pinning (term
-    * clauses — this engine path is terms-only). */
-  def searchClauses(spark: SparkSession, root: String,
-                    queries: Seq[(Int, String)], k: Int = 10,
-                    cfg: BuildIndexJob.Config = BuildIndexJob.Config(),
-                    mm: Int = 0): DataFrame = {
-    import spark.implicits._
-    require(mm >= 0, s"mm (minimum-should-match) must be >= 0, got $mm")
-    val view = open(spark, root, cfg)
-    val (qt, neg, nMust) = Search.parseClauseQueries(spark, queries)
-    val pairs = queries.flatMap { case (q, t) =>
-      val c = Search.parseClauses(t); (c.must ++ c.should ++ c.not).map(q -> _) }
-    // (query_id, term, _is_must, _boost, _is_not): a not-term scores nothing
-    val clauses = qt.withColumn("_is_not", lit(false)).unionByName(neg
-      .withColumn("_is_must", lit(false)).withColumn("_boost", lit(0.0))
-      .withColumn("_is_not", lit(true)))
-    val scored = view.matched(pairs)
-      .join(broadcast(clauses), Seq("query_id", "term"))
-      .withColumn("_s", when(!col("_is_not"), Bm25.termScore(col("tf"), col("dl"),
-        col("df"), lit(view.nDocs), lit(view.avgdl)) * col("_boost")))
-      .groupBy("query_id", "conv_id", "turn_idx")
-      .agg(sum(col("_s")).as("_score"),
-        count(when(col("_is_must"), lit(1))).as("_must_matched"),
-        count(when(!col("_is_must") && !col("_is_not"), lit(1))).as("_should_matched"),
-        count(when(col("_is_not"), lit(1))).as("_not_matched"))
-      .join(broadcast(nMust.toSeq.toDF("query_id", "_n_must")), "query_id")
-      .where(col("_must_matched") === col("_n_must") && col("_not_matched") === 0 &&
-        col("_should_matched") >= mm)
-    Search.rank(scored, k, key = Key)
-  }
-
   /** Solr RealTimeGet over the SEGMENTED (streaming-serving) index — the
     * "realtime" in the name is exactly this path: a just-appended,
     * not-yet-compacted doc is visible, an upserted key answers from its
@@ -605,113 +575,6 @@ object SegmentedIndex {
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("dl").cast("long").as("dl"))
       .orderBy("conv_id", "turn_idx")
-  }
-
-  /** PHRASE search (exact, ordered-window slop, or Lucene-style sloppy)
-    * over the SEGMENTED index — requires segments built with
-    * `Config.storePositions`. Semantics match
-    * [[graft.search.IndexSearch.searchPhrase]] over the live corpus:
-    * idf per term from the exact LIVE df of [[liveDf]], N/avgdl from the
-    * manifest, and a phrase with a term absent from the live corpus
-    * matches nothing (no Spark job runs when none is left). Output
-    * keys-shaped like [[IndexSearch.search]] over [[open]].
-    *
-    * Scale shape mirrors the unified path: the thin (positional-free)
-    * fan-out intersects candidates carrying
-    * their block identities (seg, term, first_doc); the positional (fat)
-    * stream then decodes ONLY blocks containing a candidate doc, per
-    * segment. A segment lacking any phrase term contributes nothing and
-    * is skipped at the resident dictionary lookup. */
-  def searchPhrase(spark: SparkSession, root: String,
-                   phrases: Seq[(Int, String)], k: Int = 10, slop: Int = 0,
-                   luceneSlop: Boolean = false,
-                   cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    require(m.segments.forall(seg => Fs.exists(spark,
-        BuildIndexJob.IndexPaths(segPath(root, seg)).positionalMarker)),
-      "segmented searchPhrase requires every segment built with " +
-        "Config(storePositions = true)")
-    val parsed = phrases
-      .map { case (q, t) => (q, graft.analysis.Analyzer.tokenize(t)) }
-      .filter(_._2.nonEmpty)
-    if (parsed.isEmpty) return empty
-    val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
-    val dfMap = liveDf(segs, tombs, parsed.flatMap(_._2).distinct)._2
-    val live = parsed.filter(_._2.forall(dfMap.contains))
-    if (live.isEmpty) return empty
-    val allTerms = live.flatMap(_._2).distinct
-    val tombRows = readTombstones(spark, root, m)
-    def liveKeys(ord: Int): DataFrame =
-      liveFilter(segs(ord).docs.withColumn("seg_ord", lit(ord)), tombRows)
-    // per-segment shard lists from the resident dictionaries, reused by
-    // the fat pass below (segments without a phrase term are skipped in
-    // both passes). The loop is O(compactEvery), as everywhere here.
-    val segShards: Seq[(Int, Seq[Int])] = segs.zipWithIndex.flatMap { case (seg, ord) =>
-      val shards = seg.index.resident.shardsOf(allTerms)
-      if (shards.isEmpty) None else Some(ord -> shards)
-    }
-    def prunedBlocks(ord: Int, shards: Seq[Int]): DataFrame =
-      segs(ord).index.postings
-        .where(col("shard").isin(shards: _*) &&
-          col("term").isInCollection(allTerms))
-    val perSeg = segShards.map { case (ord, shards) =>
-      PostingBlocks.decodePostings(
-          prunedBlocks(ord, shards).drop("poss")
-            .withColumn("_bfd", col("first_doc")))
-        .join(liveKeys(ord), "doc_id")
-        .select(col("term"), col("conv_id"), col("turn_idx"), col("dl"),
-          col("_bfd"))
-        .withColumn("_seg", lit(ord))
-    }
-    val qt = live.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) }
-      .toDF("query_id", "term")
-    val nd = live.map { case (q, ts) => (q, ts.distinct.size) }
-      .toDF("query_id", "_nd")
-    val cand = perSeg.reduce(_ unionByName _).join(broadcast(qt), Seq("term"))
-      .groupBy("query_id", "conv_id", "turn_idx")
-      .agg(count(lit(1)).as("_n"),
-        collect_list(struct(col("_seg"), col("term"), col("_bfd"))).as("_blks"))
-      .join(broadcast(nd), "query_id")
-      .where(col("_n") === col("_nd"))
-      .select("query_id", "conv_id", "turn_idx", "_blks")
-      .cache()
-    try {
-      val blockKeys = cand.select(explode(col("_blks")).as("_b"))
-        .select(col("_b._seg").as("_seg"), col("_b.term").as("term"),
-          col("_b._bfd").as("_bfd"))
-        .distinct()
-      val fatPerSeg = segShards.map { case (ord, shards) =>
-        val blocks = prunedBlocks(ord, shards)
-          .withColumn("_bfd", col("first_doc"))
-          .join(blockKeys.where(col("_seg") === ord).select("term", "_bfd"),
-            Seq("term", "_bfd"), "left_semi")
-        PostingBlocks.decodePostingsWithPositions(blocks)
-          .join(liveKeys(ord), "doc_id")
-          .select(col("term"), col("conv_id"), col("turn_idx"), col("dl"),
-            col("positions"))
-      }
-      val fat = fatPerSeg.reduce(_ unionByName _)
-        .join(broadcast(qt), Seq("term"))
-        .join(cand.select("query_id", "conv_id", "turn_idx"),
-          Seq("query_id", "conv_id", "turn_idx"), "left_semi")
-      val pm = fat.groupBy("query_id", "conv_id", "turn_idx")
-        .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
-          .as("_pm"), min(col("dl")).as("dl"))
-      val meta = live.map { case (q, ts) =>
-        (q, ts, ts.map(t => Bm25.idfValue(dfMap(t), m.nDocs)).sum)
-      }.toDF("query_id", "_terms", "_idf")
-      val scored = pm.join(broadcast(meta), "query_id")
-        .withColumn("_pf", graft.search.IndexSearch.phrasePf(slop, luceneSlop))
-        .where(col("_pf") > 0)
-        .select(col("query_id"), col("conv_id"), col("turn_idx"),
-          (col("_idf") * col("_pf") /
-            (col("_pf") + lit(Bm25.K1) * (lit(1.0) - lit(Bm25.B) +
-              lit(Bm25.B) * col("dl") / lit(m.avgdl)))).as("_score"))
-      IndexSearch.localize(spark, Search.rank(scored, k, key = Key))
-    } finally cand.unpersist()
   }
 
   /** One posting block routed to one (query, segment, doc-range) group —
@@ -915,8 +778,8 @@ object SegmentedIndex {
   /** The tail of [[searchWand]]: resolve candidates (query, segment
     * ordinal, segment-local doc, raw score) to keys with ONE job over the
     * candidate segments' `docs/` keys, drop instances a tombstone kills,
-    * and rank on the driver in [[Search.rank]]'s pinned order into a local
-    * frame (its `collect` runs no job). */
+    * and rank on the driver in [[graft.search.Search.rank]]'s pinned
+    * order into a local frame (its `collect` runs no job). */
   private def rankCandidates(spark: SparkSession,
                              segs: IndexedSeq[SegmentSnapshots.Segment],
                              tombs: IndexedSeq[SegmentSnapshots.Tomb],
@@ -942,87 +805,6 @@ object SegmentedIndex {
         (q, i + 1, c, t, BlockMaxWand.round(s, Bm25.OutScale))
       }
     }.toDF("query_id", "rank", "conv_id", "turn_idx", "score")
-  }
-
-  /** Solr `hl` highlighting over the SEGMENTED index — [[IndexSearch.search]]'s
-    * keys-shaped top-k, each hit carrying up to `fragments` snippets of
-    * ±`window` analyzed tokens around query-term matches (the same greedy
-    * fragment selection as the unified
-    * [[graft.search.IndexSearch.searchHighlight]]). Requires positional
-    * segments (the streaming ingest config). Per segment, match
-    * positions decode ONLY from blocks whose doc range holds a hit's
-    * segment-local id, and snippet text comes from a `doc_id IN` point
-    * lookup on that segment's docs/ — never a corpus scan. Tombstones are
-    * respected by construction: hits map to their single LIVE instance
-    * per key. Driver boundaries: ≤ |queries|·k hit keys, and per segment
-    * ≤ that many local ids. Output: (query_id, rank, conv_id, turn_idx,
-    * score, snippet). */
-  def searchHighlight(spark: SparkSession, root: String,
-                      queries: Seq[(Int, String)], k: Int = 10,
-                      window: Int = 5, fragments: Int = 1,
-                      cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = keysEmpty(spark).withColumn("snippet", lit(""))
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    require(m.segments.forall(seg => Fs.exists(spark,
-        BuildIndexJob.IndexPaths(segPath(root, seg)).positionalMarker)),
-      "segmented searchHighlight requires every segment built with " +
-        "Config(storePositions = true)")
-    val hits = IndexSearch.localize(spark,
-      IndexSearch.search(open(spark, root, cfg), queries, k))
-    if (hits.isEmpty) return hits.withColumn("snippet", lit(""))
-    val hitKeys = hits.select("conv_id", "turn_idx").distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSeq
-    val keysDf = broadcast(hitKeys.toDF("conv_id", "turn_idx"))
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val qTerms = termsOf(queries)
-    val tombs = readTombstones(spark, root, m)
-    val segs = SegmentSnapshots.of(spark, root, m, cfg.io)._1
-    val perSeg = segs.zipWithIndex.flatMap { case (seg, ord) =>
-      val shards = seg.index.resident.shardsOf(qTerms)
-      if (shards.isEmpty) None
-      else {
-        val live = liveFilter(seg.docs.withColumn("seg_ord", lit(ord)), tombs)
-        // driver boundary: ≤ |hit keys| live local ids in this segment
-        val ids = live.join(keysDf, Key, "left_semi")
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        if (ids.isEmpty) None
-        else {
-          val idArr = array(ids.map(lit(_)): _*)
-          val blocks = seg.index.postings
-            .where(col("shard").isin(shards: _*) &&
-              col("term").isInCollection(qTerms) &&
-              exists(idArr, id => id >= col("first_doc") && id <= col("last_doc")))
-          val keyed = live.select("doc_id", "conv_id", "turn_idx")
-          val pos = PostingBlocks.decodePostingsWithPositions(blocks)
-            .where(col("doc_id").isin(ids: _*))
-            .join(keyed, "doc_id")
-            .select(col("term"), col("conv_id"), col("turn_idx"), col("positions"))
-          val texts = cfg.io.read(spark, s"${segPath(root, m.segments(ord))}/docs")
-            .where(col("doc_id").isin(ids: _*))
-            .select(col("conv_id"), col("turn_idx"), col("text"))
-          Some((pos, texts))
-        }
-      }
-    }
-    if (perSeg.isEmpty) return hits.withColumn("snippet", lit(""))
-    val matchPos = perSeg.map(_._1).reduce(_ unionByName _)
-      .join(broadcast(qt), Seq("term"))
-      .groupBy("query_id", "conv_id", "turn_idx")
-      .agg(sort_array(array_distinct(flatten(collect_list(col("positions")))))
-        .as("_ps"))
-    val texts = perSeg.map(_._2).reduce(_ unionByName _)
-    val toks = graft.analysis.Analyzer.tokens(col("text"))
-    IndexSearch.localize(spark, hits
-      .join(matchPos, Seq("query_id", "conv_id", "turn_idx"))
-      .join(texts, Seq("conv_id", "turn_idx"))
-      .select(col("query_id"), col("rank"), col("conv_id"), col("turn_idx"),
-        col("score"),
-        graft.search.IndexSearch.snippetCol(toks,
-          graft.search.IndexSearch.fragmentPicks(col("_ps"), window, fragments),
-          window).as("snippet"))
-      .orderBy("query_id", "rank"))
   }
 
   /** All live turns with their stored fields — the compaction input. */

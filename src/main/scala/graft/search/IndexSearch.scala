@@ -19,10 +19,14 @@ import org.apache.spark.sql.functions._
   * corpus — the IndexRoundtripSpec property.
   *
   * One engine, two storage views: the scored, filtered, block-join,
-  * synonym and facet request shapes are written once against a [[View]].
-  * A bulk root's [[OpenIndex]] is one view (doc_id identity); the live
-  * segmented root of [[graft.index.SegmentedIndex.open]] is the other
-  * ((conv_id, turn_idx) identity, tombstone-filtered postings, live df
+  * synonym, facet, phrase, highlight and boolean-clause request shapes
+  * ([[search]], [[searchFiltered]], [[searchParents]], the facet family,
+  * [[searchPhrase]], [[searchHighlight]], [[searchHighlightScored]],
+  * [[searchClauses]] and [[searchBoolean]]) are written once against a
+  * [[View]]. A bulk root's [[OpenIndex]] is one view (doc_id identity,
+  * one leaf); the live segmented root of
+  * [[graft.index.SegmentedIndex.open]] is the other ((conv_id, turn_idx)
+  * identity, one leaf per segment filtered by its tombstones, live df
   * from metadata). The remaining shapes take an [[OpenIndex]].
   */
 object IndexSearch {
@@ -39,6 +43,12 @@ object IndexSearch {
     *    A term no live doc holds has no rows.
     *  - `attrs`: the live docs' stored attributes without text, keyed by
     *    `key`.
+    *  - `df(terms)`: the live df of `terms`, on the driver (no Spark
+    *    job). A term no live doc holds is absent.
+    *  - `leaves`: the open indexes the view reads, each with the map from
+    *    its doc ids to `key` — the positional shapes run per leaf, like
+    *    Lucene's per-segment `LeafReaderContext`, scored from the view's
+    *    df and N/avgdl.
     *
     * Plans built from a view stay valid while the files it lists do: an
     * [[OpenIndex]] until an in-place rebuild, a segmented view until
@@ -50,7 +60,14 @@ object IndexSearch {
     def avgdl: Double
     def matched(qt: Seq[(Int, String)]): DataFrame
     def attrs: DataFrame
+    def df(terms: Seq[String]): Map[String, Long]
+    def leaves: Seq[Leaf]
   }
+
+  /** One leaf of a [[View]]: an open index and `live`, the map
+    * (doc_id, key…) of its live instances to the view's key — None when
+    * every doc is live and its doc_id is the key (a bulk root). */
+  final case class Leaf(index: OpenIndex, live: Option[DataFrame])
 
   /** An opened index: a SNAPSHOT of the root at open time. The relations
     * resolve their files once, so reopen after an in-place rebuild.
@@ -70,14 +87,20 @@ object IndexSearch {
     /** term → df, shard, top block maxes, collected on first use. */
     lazy val resident: ResidentDict =
       ResidentDict.load(dictionary, io.read(spark, paths.blockmeta))
+    /** The whole `docs/` relation, text included, resolved once. */
+    lazy val stored: DataFrame = io.read(spark, paths.docs)
     def key: Seq[String] = Seq("doc_id")
     def nDocs: Long = stats.nDocs
     def avgdl: Double = stats.avgdl
     def matched(qt: Seq[(Int, String)]): DataFrame =
       matchedPostings(this, spark.createDataFrame(qt).toDF("query_id", "term"))
     /** The `docs/` attributes minus text (facets and filters never read
-      * it; Catalyst prunes further), resolved once. */
-    lazy val attrs: DataFrame = io.read(spark, paths.docs).drop("text")
+      * it; Catalyst prunes further). */
+    lazy val attrs: DataFrame = stored.drop("text")
+    def df(terms: Seq[String]): Map[String, Long] =
+      terms.map(t => t -> resident.row(t)).collect {
+        case (t, r) if r >= 0 => t -> resident.df(r) }.toMap
+    lazy val leaves: Seq[Leaf] = Seq(Leaf(this, None))
   }
 
   /** One posting block routed to one (query, doc-range) group (WAND
@@ -181,6 +204,25 @@ object IndexSearch {
         .where(col("_n_matched") === col("_n_q"))
     }
   }
+
+  /** Rows read from `v`'s leaves — carrying `_leaf` (the leaf's position
+    * in `v.leaves`) and the leaf-local doc_id — keyed by `v.key`: a keyed
+    * leaf's rows join its live map, so killed instances drop; an identity
+    * leaf's doc_id already is the key. */
+  private[graft] def keyed(v: View, rows: DataFrame): DataFrame =
+    liveMaps(v).fold(rows)(m => rows.join(m, Seq("_leaf", "doc_id")).drop("doc_id"))
+
+  /** The live maps of `v`'s keyed leaves, each tagged with its `_leaf`;
+    * None for a view of identity leaves. */
+  private def liveMaps(v: View): Option[DataFrame] =
+    v.leaves.zipWithIndex
+      .flatMap { case (l, o) => l.live.map(_.withColumn("_leaf", lit(o))) }
+      .reduceOption(_ unionByName _)
+
+  /** A typed empty (query_id, key…, _score) frame of `v` — runs no job. */
+  private def noScores(v: View): DataFrame =
+    v.attrs.select(v.key.map(col): _*).limit(0)
+      .select((lit(0).as("query_id") +: v.key.map(col)) :+ lit(0.0).as("_score"): _*)
 
   def search(v: View, queries: Seq[(Int, String)], k: Int = 10,
              conjunctive: Boolean = false, start: Int = 0): DataFrame =
@@ -963,9 +1005,8 @@ object IndexSearch {
     * positions: take a position iff it starts a new ±window snippet
     * (p > last pick + 2·window), up to `fragments` picks. With
     * fragments = 1 this is exactly the minimum position — the historical
-    * single-snippet behavior. Pure Column fold, shared by the unified and
-    * segmented highlight paths. */
-  private[graft] def fragmentPicks(posArr: Column, window: Int,
+    * single-snippet behavior. Pure Column fold. */
+  private def fragmentPicks(posArr: Column, window: Int,
                                    fragments: Int): Column =
     aggregate(posArr, array().cast("array<bigint>"),
       (acc, p) => when(size(acc) < fragments &&
@@ -975,74 +1016,94 @@ object IndexSearch {
   /** One " … "-joined snippet string: per picked position, ±window
     * analyzed tokens around it (1-based slice clamped at the doc start —
     * identical arithmetic to the DuckDB twin's list_slice). */
-  private[graft] def snippetCol(toks: Column, picks: Column,
+  private def snippetCol(toks: Column, picks: Column,
                                 window: Int): Column =
     array_join(transform(picks, p =>
       array_join(slice(toks,
         greatest(lit(1), p.cast("int") + 1 - window), lit(2 * window + 1)), " ")),
       " ... ")
 
-  /** Solr `hl`-style highlighting over the persisted index: [[search]]'s
-    * top-k, each hit carrying up to `fragments` snippets of ±`window`
-    * analyzed tokens around query-term matches (greedy non-overlapping
-    * fragment selection in match-position order; fragments = 1 — the
-    * default and the oracle-gated shape — is the snippet around the FIRST
-    * match). Match positions come from the positional postings stream
+  /** Solr `hl`-style highlighting over a view: [[search]]'s top-k, each
+    * hit carrying up to `fragments` snippets of ±`window` analyzed tokens
+    * around query-term matches (greedy non-overlapping fragment selection
+    * in match-position order; fragments = 1 — the default and the
+    * oracle-gated shape — is the snippet around the FIRST match). Match
+    * positions come from each leaf's positional postings stream
     * (requires `Config.storePositions`), with BLOCK-level pruning against
-    * the hit doc ids (collected driver-side — ≤ |queries|·k ids by
-    * construction, the documented boundary); the snippet words come from
-    * the stored text of those docs only (`doc_id IN` reaches the parquet
-    * scan as a pushed filter → row-group pruning — a point lookup, not a
-    * corpus scan). Output: (query_id, rank, doc_id, score, snippet). */
-  def searchHighlight(idx: OpenIndex, queries: Seq[(Int, String)],
+    * the hits' leaf-local doc ids (collected driver-side — ≤ |queries|·k
+    * ids by construction, the documented boundary); the snippet words
+    * come from the stored text of those docs only (`doc_id IN` reaches
+    * the parquet scan as a pushed filter → row-group pruning — a point
+    * lookup, not a corpus scan). Output: (query_id, rank, key…, score,
+    * snippet). */
+  def searchHighlight(v: View, queries: Seq[(Int, String)],
                       k: Int = 10, window: Int = 5,
                       fragments: Int = 1): DataFrame =
-    highlightWith(idx, queries, k, window) { (toks, ps) =>
+    highlightWith(v, queries, k, window) { (toks, ps) =>
       snippetCol(toks, fragmentPicks(ps, window, fragments), window) }
 
   /** Shared highlight plumbing: BM25 hits enriched with each hit's sorted
     * distinct match-position array and its stored text; `render(toks,
-    * positions)` produces the snippet column. */
-  private def highlightWith(idx: OpenIndex, queries: Seq[(Int, String)],
+    * positions)` produces the snippet column. The hits' leaf-local ids
+    * are the hits themselves on an identity leaf and ONE Spark job over
+    * the live maps otherwise, whatever the leaf count; a leaf's df and
+    * shards come from its resident dictionary, so no dictionary probe
+    * runs. */
+  private def highlightWith(v: View, queries: Seq[(Int, String)],
                             k: Int, window: Int)(
       render: (Column, Column) => Column): DataFrame = {
-    val spark = idx.spark
-    requirePositional(idx)
+    val spark = v.spark
+    import spark.implicits._
+    requirePositional(v)
     // materialize the small hit set once: it drives the block prune, the
     // doc point-lookup, AND the final join — re-deriving it lazily would
     // re-run the whole search per subtree
-    val hits = localize(spark, search(idx, queries, k))
+    val hits = localize(spark, search(v, queries, k))
     val hitRows = hits.collect() // local — no recompute
     if (hitRows.isEmpty) return hits.withColumn("snippet", lit(""))
-    val ids = hitRows.map(_.getLong(2)).distinct.toSeq
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val qd = qt.join(idx.dictionary, "term").select("term", "shard")
-    val termShards = qd.distinct().collect()
-      .map(r => r.getString(0) -> r.getInt(1))
-    val shards = termShards.map(_._2).distinct.toSeq
-    val terms = termShards.map(_._1).distinct.toSeq
-    // block-level prune: only blocks of query terms whose doc range holds
-    // a hit id decode their positions (idArr is a tiny literal array)
-    val idArr = array(ids.map(lit(_)): _*)
-    val blocks = idx.postings
-      .where(col("shard").isin(shards: _*) &&
-        col("term").isInCollection(terms) &&
-        exists(idArr, id => id >= col("first_doc") && id <= col("last_doc")))
-    val matchPos = PostingBlocks.decodePostingsWithPositions(blocks)
-      .where(col("doc_id").isin(ids: _*))
-      .join(broadcast(qt), Seq("term")) // attach query ownership
-      .groupBy("query_id", "doc_id")
+    // (_leaf, doc_id, key…) of the hits' live instances
+    val inst = liveMaps(v) match {
+      case None => hitRows.map(_.getAs[Long]("doc_id")).distinct.toSeq
+        .map((0, _)).toDF("_leaf", "doc_id")
+      case Some(m) => localize(spark,
+        m.join(broadcast(hits.select(v.key.map(col): _*)), v.key, "left_semi"))
+    }
+    val ids = inst.collect().toSeq
+      .groupMap(_.getAs[Int]("_leaf"))(_.getAs[Long]("doc_id"))
+    val qt = Search.queryPairs(queries)
+    val terms = qt.map(_._2).distinct
+    val perLeaf = ids.toSeq.map { case (o, ls) =>
+      val idx = v.leaves(o).index
+      // block-level prune: only blocks of query terms whose doc range
+      // holds a hit id decode their positions (idArr is a tiny literal
+      // array)
+      val idArr = array(ls.map(lit(_)): _*)
+      val pos = PostingBlocks.decodePostingsWithPositions(idx.postings
+          .where(col("shard").isin(idx.resident.shardsOf(terms): _*) &&
+            col("term").isInCollection(terms) &&
+            exists(idArr, id => id >= col("first_doc") && id <= col("last_doc"))))
+        .where(col("doc_id").isin(ls: _*))
+        .select(lit(o).as("_leaf"), col("doc_id"), col("term"), col("positions"))
+      val texts = idx.stored.where(col("doc_id").isin(ls: _*))
+        .select(lit(o).as("_leaf"), col("doc_id"), col("text"))
+      (pos, texts)
+    }
+    def keyedHits(parts: Seq[DataFrame]): DataFrame =
+      parts.reduce(_ unionByName _).join(broadcast(inst), Seq("_leaf", "doc_id"))
+    val matchPos = keyedHits(perLeaf.map(_._1))
+      .join(broadcast(qt.toDF("query_id", "term")), Seq("term")) // attach query ownership
+      .groupBy(("query_id" +: v.key).map(col): _*)
       .agg(sort_array(array_distinct(flatten(collect_list(col("positions")))))
         .as("_ps"))
-    val texts = idx.io.read(spark, idx.paths.docs)
-      .where(col("doc_id").isin(ids: _*))
-      .select(col("doc_id"), col("text"))
+    val texts = keyedHits(perLeaf.map(_._2)).select((v.key :+ "text").map(col): _*)
     val toks = graft.analysis.Analyzer.tokens(col("text"))
+    // both sides hold ≤ |queries|·k rows: broadcast them up front rather
+    // than let AQE plan shuffles it then drops
     hits
-      .join(matchPos, Seq("query_id", "doc_id"))
-      .join(texts, Seq("doc_id"))
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
-        render(toks, col("_ps")).as("snippet"))
+      .join(broadcast(matchPos), "query_id" +: v.key)
+      .join(broadcast(texts), v.key)
+      .select((Seq(col("query_id"), col("rank")) ++ v.key.map(col) ++
+        Seq(col("score"), render(toks, col("_ps")).as("snippet"))): _*)
       .orderBy("query_id", "rank")
   }
 
@@ -1057,12 +1118,12 @@ object IndexSearch {
     * rounds are unrolled `fragments` times — both engines run the
     * identical bounded loop, no data-dependent iteration. Pure Column
     * work over the per-hit position arrays (≤ queries·k rows). */
-  def searchHighlightScored(idx: OpenIndex, queries: Seq[(Int, String)],
+  def searchHighlightScored(v: View, queries: Seq[(Int, String)],
                             k: Int = 10, window: Int = 5,
                             fragments: Int = 2): DataFrame = {
     require(fragments >= 1 && fragments <= 8,
       s"fragments must be in 1..8 (got $fragments)")
-    highlightWith(idx, queries, k, window) { (toks, ps) =>
+    highlightWith(v, queries, k, window) { (toks, ps) =>
       val cands = transform(ps, p => struct(
         size(filter(ps, q => abs(q - p) <= window)).as("s"),
         (-p).as("np")))
@@ -1202,11 +1263,11 @@ object IndexSearch {
   /** Boolean NOT over the persisted index (Solr `q=a -b`): the no-must
     * subset of the clause grammar — delegates to [[searchClauses]] (one
     * boolean engine path). A pure-negative query matches nothing. */
-  def searchBoolean(idx: OpenIndex, queries: Seq[(Int, String)],
+  def searchBoolean(v: View, queries: Seq[(Int, String)],
                     k: Int = 10): DataFrame =
-    searchClauses(idx, queries, k)
+    searchClauses(v, queries, k)
 
-  /** Full boolean clause grammar over the persisted index — `q=+a b -c`
+  /** Full boolean clause grammar over a view — `q=+a b -c`
     * AND quoted-phrase clauses (`q=+"block max" wand -deprecated`), the
     * composition Solr users hit constantly. Same pinned semantics as
     * [[Search.parseClauses]]'s scaladoc: every must clause satisfied
@@ -1222,8 +1283,8 @@ object IndexSearch {
     *
     * MULTITERM group clauses (`+te*t`, `-roam~1` — round 5) compose into
     * the same grammar: each wildcard/fuzzy clause expands against the
-    * dictionary (two batched probes per query batch, the
-    * [[MultiTerm.expandBodies]] path) into a GROUP — Lucene's
+    * view's live vocabulary (on the driver, the [[MultiTerm.expandBodies]]
+    * path) into a GROUP — Lucene's
     * `+(t1 t2 …)` rewrite. A must GROUP is satisfied by ANY member
     * present (counted as DISTINCT satisfied group ids per doc, so an
     * empty expansion — nothing in the dictionary matches the pattern —
@@ -1243,11 +1304,11 @@ object IndexSearch {
     * pinning carries over: a clause deduped must-over-should counts as
     * MUST only, and a group-member term that is NOT also a plain should
     * clause contributes to its group's count, never as a term clause. */
-  def searchClauses(idx: OpenIndex, queries: Seq[(Int, String)],
+  def searchClauses(v: View, queries: Seq[(Int, String)],
                     k: Int = 10,
                     maxExpansions: Int = DefaultMaxExpansions,
                     mm: Int = 0): DataFrame = {
-    val spark = idx.spark
+    val spark = v.spark
     import spark.implicits._
     require(mm >= 0, s"mm (minimum-should-match) must be >= 0, got $mm")
     val parsed = queries.map { case (id, t) => (id, Search.parseClauses(t)) }
@@ -1264,7 +1325,7 @@ object IndexSearch {
     // groups aggregate in ONE pass over the match relation.
     val expansions: Map[Search.MultiTermBody, Seq[String]] =
       if (!hasGroups) Map.empty
-      else MultiTerm.expandBodies(idx,
+      else MultiTerm.expandBodies(v,
         parsed.flatMap { case (_, c) =>
           c.mustGroups ++ c.shouldGroups ++ c.notGroups },
         maxExpansions)
@@ -1281,7 +1342,8 @@ object IndexSearch {
     def memberTerms(id: Int, gs: Seq[Search.MultiTermBody]): Seq[String] =
       gs.flatMap(expansions.getOrElse(_, Nil)).distinct
 
-    val qt = parsed.flatMap { case (id, c) =>
+    val byDoc = "query_id" +: v.key
+    val qtRows = parsed.flatMap { case (id, c) =>
       val plain = c.must.map(t => (id, t, true, false, c.boost(t))) ++
         c.should.map(t => (id, t, false, true, c.boost(t)))
       val plainTerms = (c.must ++ c.should).toSet
@@ -1295,23 +1357,24 @@ object IndexSearch {
         .toSeq.sortBy(_._1)
         .collect { case (t, bo) if !plainTerms(t) => (id, t, false, false, bo) }
       plain ++ members
-    }.toDF("query_id", "term", "_is_must", "_is_should", "_boost")
+    }
+    val qt = qtRows.toDF("query_id", "term", "_is_must", "_is_should", "_boost")
     val neg = parsed.flatMap { case (id, c) =>
       (c.not ++ memberTerms(id, c.notGroups)).distinct.map(t => (id, t))
-    }.toDF("query_id", "term")
+    }
     // group batches consume the decoded match relation TWICE (scoring agg
     // + satisfied-group countDistinct) — cache it so the shard-pruned
     // block scan and varint decode run once; results localize before the
     // cache drops (group-free batches keep the historical single-consumer
     // lazy plan, uncached)
-    val matched0 = matchedPostings(idx, qt.select("query_id", "term"))
+    val matched0 = v.matched(qtRows.map(r => (r._1, r._2)))
     val matched =
       if (groupRows.isEmpty) matched0 else matched0.cache()
     val tscored0 = matched
       .join(broadcast(qt), Seq("query_id", "term"))
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-        lit(idx.stats.nDocs), lit(idx.stats.avgdl)) * col("_boost"))
-      .groupBy("query_id", "doc_id")
+        lit(v.nDocs), lit(v.avgdl)) * col("_boost"))
+      .groupBy(byDoc.map(col): _*)
       .agg(sum(col("_s")).as("_tscore"),
         count(when(col("_is_must"), lit(1))).as("_must_t"),
         count(when(col("_is_should"), lit(1))).as("_should_t"))
@@ -1326,15 +1389,14 @@ object IndexSearch {
         matched.join(
             broadcast(groupRows.toDF("query_id", "_gid", "term", "_gm")),
             Seq("query_id", "term"))
-          .groupBy("query_id", "doc_id")
+          .groupBy(byDoc.map(col): _*)
           .agg(countDistinct(when(col("_gm"), col("_gid"))).as("_mg"),
             countDistinct(when(!col("_gm"), col("_gid"))).as("_sg")),
-        Seq("query_id", "doc_id"), "left")
+        byDoc, "left")
         .withColumn("_must_g", coalesce(col("_mg"), lit(0L)))
         .withColumn("_should_g", coalesce(col("_sg"), lit(0L)))
         .drop("_mg", "_sg")
-    val negMatch = matchedPostings(idx, neg)
-      .select("query_id", "doc_id").distinct()
+    val negMatch = v.matched(neg).select(byDoc.map(col): _*).distinct()
 
     if (!hasPhrases) {
       // the historical terms-only plan, extended with the group filter
@@ -1350,12 +1412,12 @@ object IndexSearch {
       val mmOk = if (mm == 0) mustOk
         else mustOk.where(col("_should_t") + col("_should_g") >= mm)
       val ranked = Search.rank(
-        mmOk.join(negMatch, Seq("query_id", "doc_id"), "left_anti"), k)
+        mmOk.join(negMatch, byDoc, "left_anti"), k, key = v.key)
       return if (groupRows.isEmpty) ranked
       else try localize(spark, ranked) finally matched.unpersist()
     }
 
-    requirePositional(idx)
+    requirePositional(v)
     // synthetic clause ids key the batched phrase machinery; n_must counts
     // TERM musts + ALL parsed must phrases (a dead/OOV phrase still counts,
     // so its query can never satisfy the filter — Lucene MUST semantics)
@@ -1372,25 +1434,23 @@ object IndexSearch {
     val pidMeta = phraseClauses
       .map { case (pid, id, kind, _, b) => (pid, id, kind, b) }
       .toDF("_pid", "query_id", "_kind", "_pboost")
-    val planned = phrasePlanned(idx,
+    val planned = phrasePlanned(v,
       phraseClauses.map { case (pid, _, _, toks, _) => (pid, toks.mkString(" ")) })
     try {
-      val psRaw = planned match {
-        case None => Seq.empty[(Int, Long, Double)].toDF("_pid", "doc_id", "_pscore")
-        case Some(p) => phraseScoredFromPlan(idx, p, slop = 0, luceneSlop = false)
-          .select(col("query_id").as("_pid"), col("doc_id"),
-            col("_score").as("_pscore"))
-      }
+      val psRaw = planned.fold(noScores(v))(
+          phraseScoredFromPlan(v, _, slop = 0, luceneSlop = false))
+        .select((col("query_id").as("_pid") +: v.key.map(col)) :+
+          col("_score").as("_pscore"): _*)
       val ps = psRaw.join(broadcast(pidMeta), "_pid")
       val posph = ps.where(col("_kind") =!= "n")
-        .groupBy("query_id", "doc_id")
+        .groupBy(byDoc.map(col): _*)
         .agg(sum(col("_pscore") * col("_pboost")).as("_phsum"),
           count(when(col("_kind") === "m", lit(1))).as("_must_ph"),
           count(when(col("_kind") === "s", lit(1))).as("_should_ph"))
       val negph = ps.where(col("_kind") === "n")
-        .select("query_id", "doc_id").distinct()
+        .select(byDoc.map(col): _*).distinct()
       val comb = tscored
-        .join(posph, Seq("query_id", "doc_id"), "full_outer")
+        .join(posph, byDoc, "full_outer")
         .withColumn("_score",
           coalesce(col("_tscore"), lit(0.0)) + coalesce(col("_phsum"), lit(0.0)))
         .withColumn("_mmust",
@@ -1405,8 +1465,8 @@ object IndexSearch {
         .where(col("_mmust") === col("_n_must"))
       val mmOk = if (mm == 0) mustOk else mustOk.where(col("_mshould") >= mm)
       localize(spark, Search.rank(mmOk
-        .join(negMatch, Seq("query_id", "doc_id"), "left_anti")
-        .join(negph, Seq("query_id", "doc_id"), "left_anti"), k))
+        .join(negMatch, byDoc, "left_anti")
+        .join(negph, byDoc, "left_anti"), k, key = v.key))
     } finally {
       planned.foreach(_.unpersistAll())
       if (groupRows.nonEmpty) matched.unpersist()
@@ -1827,60 +1887,55 @@ object IndexSearch {
       attrs, field, k, expandRows)
   }
 
-  /** Fail fast on a non-positional index: poss = null would otherwise
+  /** Fail fast on a non-positional view: poss = null would otherwise
     * null out the position chain and SILENTLY return zero hits for
-    * phrases the corpus contains. Evidence is the build-time
+    * phrases the corpus contains. Evidence is each leaf's build-time
     * `_positional` marker, which every writer stores exactly when it
-    * keeps positions — re-checked every call (a filesystem stat, no Spark
-    * job), so a root rebuilt in place with positions takes effect
-    * immediately. */
-  private[search] def requirePositional(idx: OpenIndex): Unit =
-    require(graft.sources.Fs.exists(idx.spark, idx.paths.positionalMarker),
+    * keeps positions — re-checked every call (a filesystem stat per leaf,
+    * no Spark job), so a root rebuilt in place with positions takes
+    * effect immediately. */
+  private[search] def requirePositional(v: View): Unit =
+    require(v.leaves.forall(l =>
+        graft.sources.Fs.exists(v.spark, l.index.paths.positionalMarker)),
       "searchPhrase requires a positional index — rebuild with " +
         "Config(storePositions = true)")
 
   /** Driver-side phrase-batch plan: per live query its analyzed terms (in
-    * phrase order), idf sum, rarest term, and the touched shards. Built
-    * from ONE dictionary probe over all phrases' distinct terms. */
+    * phrase order), idf sum and rarest term, from the view's live df —
+    * no Spark job. */
   private[graft] final case class PhraseBatch(
-      queries: Seq[(Int, Seq[String])], // (query_id, terms) — all in-dict
-      idfSums: Map[Int, Double], rarest: Map[Int, String], shards: Seq[Int])
+      queries: Seq[(Int, Seq[String])], // (query_id, terms) — all live
+      idfSums: Map[Int, Double], rarest: Map[Int, String])
 
-  private def planPhrases(idx: OpenIndex,
+  private def planPhrases(v: View,
                           phrases: Seq[(Int, String)]): Option[PhraseBatch] = {
     val parsed = phrases
       .map { case (qid, t) => (qid, graft.analysis.Analyzer.tokenize(t)) }
       .filter(_._2.nonEmpty)
-    if (parsed.isEmpty) return None
-    val allTerms = parsed.flatMap(_._2).distinct
-    // ONE driver job for the whole batch: ≤ Σ|phrase| dictionary rows
-    val dictRows = idx.dictionary
-      .where(col("term").isInCollection(allTerms))
-      .select("term", "df", "shard").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2)))).toMap
-    // a phrase with an out-of-vocabulary term matches nothing (Lucene)
-    val live = parsed.filter(_._2.forall(dictRows.contains))
+    val df = v.df(parsed.flatMap(_._2).distinct)
+    // a phrase with a term no live doc holds matches nothing (Lucene)
+    val live = parsed.filter(_._2.forall(df.contains))
     if (live.isEmpty) return None
     val idfSums = live.map { case (qid, terms) =>
-      qid -> terms.map(t => Bm25.idfValue(dictRows(t)._1, idx.stats.nDocs)).sum
+      qid -> terms.map(t => Bm25.idfValue(df(t), v.nDocs)).sum
     }.toMap
     val rarest = live.map { case (qid, terms) =>
-      qid -> terms.distinct.minBy(t => (dictRows(t)._1, t))
+      qid -> terms.distinct.minBy(t => (df(t), t))
     }.toMap
-    val shards = live.flatMap(_._2).distinct.map(t => dictRows(t)._2).distinct
-    Some(PhraseBatch(live, idfSums, rarest, shards))
+    Some(PhraseBatch(live, idfSums, rarest))
   }
 
   /** The phrase batch's pruned relations, shared by [[searchPhrase]] and
     * the PhraseSpec decode-volume assertion:
     *
-    *   - `cand`       (query_id, doc_id) docs containing ALL the query's
+    *   - `cand`       (query_id, key…) docs containing ALL the query's
     *                  distinct terms — CACHED (bounded above by the
     *                  rarest term's df per query, the smallest relation
     *                  in the problem), carrying the candidate block keys
-    *   - `fatBlocks`  only the encoded blocks that CONTAIN a candidate
-    *                  doc — the positional (fat) stream decodes nothing
-    *                  else
+    *                  (leaf, term, first_doc)
+    *   - `fatBlocks`  only the encoded blocks, across leaves, that
+    *                  CONTAIN a candidate doc — the positional (fat)
+    *                  stream decodes nothing else
     *
     * The caller must call `unpersistAll()` after consuming the result. */
   private[graft] final case class PhrasePlanned(
@@ -1889,14 +1944,15 @@ object IndexSearch {
     def unpersistAll(): Unit = { cand.unpersist(); rarestRows.unpersist() }
   }
 
-  private[graft] def phrasePlanned(idx: OpenIndex,
+  private[graft] def phrasePlanned(v: View,
                                    phrases: Seq[(Int, String)]): Option[PhrasePlanned] = {
-    val spark = idx.spark
+    val spark = v.spark
     import spark.implicits._
-    val batch = planPhrases(idx, phrases) match {
+    val batch = planPhrases(v, phrases) match {
       case None => return None
       case Some(b) => b
     }
+    val key = v.key.map(col)
     // (query_id, term) routed rarest-vs-rest: the intersection is DRIVEN
     // by each query's rarest term (ascending-df order, Lucene's lead-term
     // discipline) — the rest of the terms' doc streams semi-join against
@@ -1905,70 +1961,75 @@ object IndexSearch {
     val qtRows = batch.queries.flatMap { case (qid, terms) =>
       terms.distinct.map(t => (qid, t, t == batch.rarest(qid)))
     }
+    val allTerms = qtRows.map(_._2).distinct
     val rarestTerms = qtRows.filter(_._3).map(_._2).distinct
     val restTerms = qtRows.filterNot(_._3).map(_._2).distinct
     val nDistinct = batch.queries
       .map { case (qid, terms) => (qid, terms.distinct.size) }
-    val blocks = idx.postings
-      .where(col("shard").isin(batch.shards: _*))
-    // THIN pass: doc-id stream only — `poss` (the fat stream) is never
-    // referenced, so parquet column pruning skips its bytes entirely.
-    // `_bfd` carries the block identity (first_doc is unique per term —
+    // per leaf, its postings pruned to the shards its resident dictionary
+    // maps the phrase terms to (a leaf holding none is skipped). The term
+    // predicate reaches each scan as a pushed filter. `_bfd` carries the
+    // block identity (first_doc is unique per term within a leaf —
     // blocks of one term are doc-disjoint) through the decode.
+    val blocks = v.leaves.zipWithIndex.flatMap { case (l, o) =>
+      val shards = l.index.resident.shardsOf(allTerms)
+      if (shards.isEmpty) None
+      else Some(l.index.postings
+        .where(col("shard").isin(shards: _*) && col("term").isInCollection(allTerms))
+        .withColumn("_leaf", lit(o)).withColumn("_bfd", col("first_doc")))
+    }.reduce(_ unionByName _)
+    // THIN pass: doc-id stream only — `poss` (the fat stream) is never
+    // referenced, so parquet column pruning skips its bytes entirely
     def thinSide(terms: Seq[String], pairs: Seq[(Int, String)]): DataFrame =
-      PostingBlocks.decodePostings(
+      keyed(v, PostingBlocks.decodePostings(
         blocks.drop("poss")
           .where(col("term").isInCollection(terms))
-          .withColumn("_bfd", col("first_doc"))
           .join(broadcast(pairs.toDF("query_id", "term")), Seq("term")))
-        .select("query_id", "term", "_bfd", "doc_id")
+        .select("_leaf", "query_id", "term", "_bfd", "doc_id"))
     val rarestRows = thinSide(rarestTerms, qtRows.filter(_._3).map(r => (r._1, r._2)))
-      .cache() // ≤ Σ_q df(rarest term of q) rows of 4 small columns
+      .cache() // ≤ Σ_q df(rarest term of q) rows of a few small columns
     val survivors =
       if (restTerms.isEmpty) rarestRows
       else {
         // AQE broadcasts the rarest candidates when small (the hot+rare
         // case) — the hot terms' rows then never reach the shuffle
         val restRows = thinSide(restTerms, qtRows.filterNot(_._3).map(r => (r._1, r._2)))
-          .join(rarestRows.select("query_id", "doc_id"),
-            Seq("query_id", "doc_id"), "left_semi")
+          .join(rarestRows.select(col("query_id") +: key: _*),
+            "query_id" +: v.key, "left_semi")
         rarestRows.unionByName(restRows)
       }
     // docs holding ALL distinct terms of their query; the per-(doc, term)
     // block keys ride the same aggregation (≤ m struct entries per row)
     val cand = survivors
-      .groupBy("query_id", "doc_id")
+      .groupBy(col("query_id") +: key: _*)
       .agg(count(lit(1)).as("_n"),
-        collect_list(struct(col("term"), col("_bfd"))).as("_blks"))
+        collect_list(struct(col("_leaf"), col("term"), col("_bfd"))).as("_blks"))
       .join(broadcast(nDistinct.toDF("query_id", "_nd")), "query_id")
       .where(col("_n") === col("_nd"))
-      .select("query_id", "doc_id", "_blks")
+      .select((col("query_id") +: key) :+ col("_blks"): _*)
       .cache() // ≤ min-df candidates per query; feeds keys + the row filter
     val blockKeys = cand
       .select(explode(col("_blks")).as("_b"))
-      .select(col("_b.term").as("term"), col("_b._bfd").as("_bfd"))
+      .select(col("_b._leaf").as("_leaf"), col("_b.term").as("term"),
+        col("_b._bfd").as("_bfd"))
       .distinct()
-    // FAT pass: decode positions ONLY for blocks containing a candidate.
-    // The term predicate repeats here so it reaches THIS scan as a pushed
-    // filter — without it the fat scan reads every term's poss bytes in
-    // the touched shards before the semi-join can drop the rows
-    val fatBlocks = blocks
-      .where(col("term").isInCollection(qtRows.map(_._2).distinct))
-      .withColumn("_bfd", col("first_doc"))
-      .join(blockKeys, Seq("term", "_bfd"), "left_semi")
+    // FAT pass: decode positions ONLY for blocks containing a candidate
+    val fatBlocks = blocks.join(blockKeys, Seq("_leaf", "term", "_bfd"), "left_semi")
     Some(PhrasePlanned(batch, cand, fatBlocks, rarestRows))
   }
 
-  /** PHRASE search over positional postings — requires an index built with
-    * `Config.storePositions`. Pinned semantics are Lucene `PhraseQuery`'s
-    * documented scoring: the phrase acts as one virtual term with
+  /** PHRASE search over a view's positional postings — requires leaves
+    * built with `Config.storePositions`. Pinned semantics are Lucene
+    * `PhraseQuery`'s documented scoring, from the view's live df and
+    * N/avgdl: the phrase acts as one virtual term with
     *
     *   idf   = Σ_i idf(t_i)        (duplicate phrase terms counted again)
     *   tf    = pf, the exact phrase frequency in the doc
     *   score = idf · pf / (pf + k1·(1−b+b·dl/avgdl))
     *
-    * and a doc matches iff pf ≥ 1. A phrase containing an
-    * out-of-vocabulary term matches nothing (Lucene semantics).
+    * and a doc matches iff pf ≥ 1. A phrase containing a term no live
+    * doc holds matches nothing (Lucene semantics); when none is left no
+    * Spark job runs.
     *
     * `slop` ≥ 0 relaxes adjacency to an ORDERED proximity window (Solr
     * `"a b"~N`-style): a start position p₁ of t₁ counts toward pf iff
@@ -1982,58 +2043,54 @@ object IndexSearch {
     * ([[SloppyPhrase]] — out-of-order, reciprocal-distance freq),
     * property-gated against a brute-force twin rather than the SQL oracle.
     *
-    * PLAN SHAPE (one Spark plan for the whole batch — no per-phrase
-    * subtrees, no per-phrase driver jobs): a thin doc-id-only pass
-    * intersects each query's terms into a candidate doc set, driven by
-    * the query's RAREST term (ascending df — a hot term semi-joins
-    * against the rare term's candidates before it can shuffle); the
-    * positional (fat) stream then decodes ONLY blocks containing a
-    * candidate doc (block-level pruning on the (term, first_doc) key);
+    * PLAN SHAPE (one Spark plan for the whole batch over every leaf — no
+    * per-phrase subtrees, no per-phrase or per-leaf driver jobs): a thin
+    * doc-id-only pass intersects each query's terms into a candidate key
+    * set, driven by the query's RAREST term (ascending df — a hot term
+    * semi-joins against the rare term's candidates before it can
+    * shuffle); the positional (fat) stream then decodes ONLY blocks
+    * containing a candidate doc (block-level pruning on the (leaf, term,
+    * first_doc) key); killed instances drop at each leaf's live map;
     * the chain check runs per candidate over a term→positions map with a
     * GREEDY fold — for ordered matching, taking at each slot the minimal
     * position > previous completes iff any admissible chain exists (the
     * greedy chain is pointwise minimal by induction), so pf is exact.
     * The result is materialized eagerly (≤ |queries|·k rows) so the two
     * internal caches can be dropped before returning. */
-  def searchPhrase(idx: OpenIndex, phrases: Seq[(Int, String)],
+  def searchPhrase(v: View, phrases: Seq[(Int, String)],
                    k: Int = 10, slop: Int = 0,
                    luceneSlop: Boolean = false): DataFrame = {
-    val spark = idx.spark
-    import spark.implicits._
-    requirePositional(idx)
-    def empty = Seq.empty[ResultRow].toDF()
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-    val planned = phrasePlanned(idx, phrases) match {
-      case None => return empty
-      case Some(p) => p
+    requirePositional(v)
+    phrasePlanned(v, phrases) match {
+      case None => Search.rank(noScores(v), k, key = v.key)
+      case Some(planned) =>
+        try localize(v.spark, Search.rank(
+          phraseScoredFromPlan(v, planned, slop, luceneSlop), k, key = v.key))
+        finally planned.unpersistAll()
     }
-    try localize(spark,
-      Search.rank(phraseScoredFromPlan(idx, planned, slop, luceneSlop), k))
-    finally planned.unpersistAll()
   }
 
   /** Lazy per-(query, doc) phrase scores over a planned batch:
-    * (query_id, doc_id, _score), pf > 0 rows only — the scoring tail of
+    * (query_id, key…, _score), pf > 0 rows only — the scoring tail of
     * [[searchPhrase]], shared with the phrase-bearing boolean clause
     * engine (which keys phrases by synthetic clause ids in query_id).
     * The caller owns the plan's cache lifecycle
     * ([[PhrasePlanned.unpersistAll]] after the result is consumed). */
-  private def phraseScoredFromPlan(idx: OpenIndex, planned: PhrasePlanned,
+  private def phraseScoredFromPlan(v: View, planned: PhrasePlanned,
                                    slop: Int, luceneSlop: Boolean): DataFrame = {
-    val spark = idx.spark
+    val spark = v.spark
     import spark.implicits._
     val PhrasePlanned(batch, cand, fatBlocks, _) = planned
+    val byDoc = "query_id" +: v.key
     val qtAll = batch.queries
       .flatMap { case (qid, terms) => terms.distinct.map(t => (qid, t)) }
       .toDF("query_id", "term")
-    val fatRows = PostingBlocks.decodePostingsWithPositions(
-        fatBlocks.join(broadcast(qtAll), Seq("term")))
-      .join(cand.select("query_id", "doc_id"),
-        Seq("query_id", "doc_id"), "left_semi")
-      .select("query_id", "term", "doc_id", "dl", "positions")
+    val fatRows = keyed(v, PostingBlocks.decodePostingsWithPositions(
+        fatBlocks.join(broadcast(qtAll), Seq("term"))))
+      .join(cand.select(byDoc.map(col): _*), byDoc, "left_semi")
     // one row per candidate doc: term → ascending positions
     val pm = fatRows
-      .groupBy("query_id", "doc_id")
+      .groupBy(byDoc.map(col): _*)
       .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
         .as("_pm"), min(col("dl")).as("dl"))
     val meta = batch.queries
@@ -2042,15 +2099,15 @@ object IndexSearch {
     pm.join(broadcast(meta), "query_id")
       .withColumn("_pf", phrasePf(slop, luceneSlop))
       .where(col("_pf") > 0)
-      .select(col("query_id"), col("doc_id"),
+      .select(byDoc.map(col) :+
         (col("_idf") * col("_pf") /
           (col("_pf") + lit(Bm25.K1) * (lit(1.0) - lit(Bm25.B) +
-            lit(Bm25.B) * col("dl") / lit(idx.stats.avgdl)))).as("_score"))
+            lit(Bm25.B) * col("dl") / lit(v.avgdl)))).as("_score"): _*)
   }
 
   /** Phrase-frequency Column over a row carrying `_pm` (map term →
     * ascending positions) and `_terms` (the phrase's terms in order) —
-    * shared by the unified and segmented phrase paths.
+    * shared by the phrase, multi-phrase and interval engines.
     *
     * Default mode is the GREEDY ordered chain: fold slots 2..m, each step
     * taking the minimal position of that slot's term strictly after the

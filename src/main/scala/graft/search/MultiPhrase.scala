@@ -65,8 +65,7 @@ object MultiPhrase {
   /** Elasticsearch `match_phrase_prefix` over the positional index: the
     * last position of the phrase accepts ANY dictionary term extending
     * the stem — the prefix expansion ([[MultiTerm.expandWildcards]]'s
-    * bounded dictionary range probe, prefix-pushed to the parquet scan)
-    * becomes the final slot of a [[search]] multi-phrase, so matching,
+    * walk of the resident dictionary's prefix range) becomes the final slot of a [[search]] multi-phrase, so matching,
     * union positions, summed-expansion idf, and the virtual-term BM25
     * tail are exactly the MultiPhraseQuery semantics Lucene rewrites
     * this query into. A stem with NO dictionary extension matches

@@ -2,8 +2,8 @@ package graft.search
 
 import graft.analysis.Analyzer
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The rest of the Lucene/Solr MultiTermQuery family beyond prefixes:
   * WILDCARD terms (`te*t`, `t?st` — Lucene WildcardQuery) and FUZZY terms
@@ -52,36 +52,47 @@ object MultiTerm {
     * '*' → '%', '?' → '_' (whole-term match — LIKE is anchored). */
   def likePattern(p: String): String = p.replace("*", "%").replace("?", "_")
 
-  /** Literal prefix before the first wildcard char — pushed to the
-    * dictionary parquet scan as a StringStartsWith conjunct, so a
-    * trailing-wildcard pattern prunes like a prefix query; only a
-    * LEADING-wildcard pattern pays a full dictionary scan (exactly
-    * Lucene's reverse-wildcard caveat). */
+  /** Literal prefix before the first wildcard char — it bounds the
+    * dictionary walk, so a trailing-wildcard pattern prunes like a prefix
+    * query; only a LEADING-wildcard pattern walks the whole dictionary
+    * (exactly Lucene's reverse-wildcard caveat). */
   def literalPrefix(p: String): String = p.takeWhile(c => c != '*' && c != '?')
 
-  /** Lucene/Solr WILDCARD queries over the persisted index. Scale shape:
-    * one `limit(maxExpansions + 1)`-bounded dictionary probe per DISTINCT
-    * pattern (prefix-pushed where a literal prefix exists), then the
-    * standard disjunctive engine over the expanded term set. */
-  /** Batch wildcard expansion: one bounded, prefix-pushed dictionary
-    * probe per DISTINCT pattern. Shared by the standalone wildcard engine
-    * and the boolean clause grammar's group clauses. */
-  def expandWildcards(idx: IndexSearch.OpenIndex, pats: Seq[String],
+  /** The live terms of `v` that start with `prefix` and satisfy `accept`,
+    * ascending — a walk of each leaf's resident dictionary on the driver
+    * (the prefix range found by binary search; an empty prefix walks the
+    * whole vocabulary, Lucene's leading-wildcard caveat), no Spark job. A
+    * term no live doc holds does not count. More than `maxExpansions`
+    * fails loudly (Lucene TooManyClauses analog). */
+  private def liveTerms(v: IndexSearch.View, prefix: String, what: String,
+                        maxExpansions: Int)(accept: String => Boolean): Seq[String] = {
+    val found = v.leaves.flatMap(_.index.resident.termsFrom(prefix).filter(accept)).distinct
+    val df = v.df(found)
+    val live = found.filter(df.contains).sorted
+    require(live.size <= maxExpansions,
+      s"$what expands to more than maxExpansions=$maxExpansions " +
+        "dictionary terms (Lucene TooManyClauses analog)")
+    live
+  }
+
+  /** Batch wildcard expansion: per DISTINCT pattern, the live terms it
+    * matches whole (SQL LIKE semantics — `*` any run, `?` one character),
+    * walked from its literal prefix. Shared by the standalone wildcard
+    * engine, match_phrase_prefix and the boolean clause grammar's group
+    * clauses. */
+  def expandWildcards(v: IndexSearch.View, pats: Seq[String],
                       maxExpansions: Int): Map[String, Seq[String]] =
     pats.distinct.map { p =>
-      val pre = literalPrefix(p)
-      val base =
-        if (pre.nonEmpty) idx.dictionary.where(col("term").startsWith(pre))
-        else idx.dictionary
-      val terms = base.where(col("term").like(likePattern(p)))
-        .select("term").limit(maxExpansions + 1)
-        .collect().map(_.getString(0)).toSeq
-      require(terms.size <= maxExpansions,
-        s"wildcard '$p' expands to more than maxExpansions=$maxExpansions " +
-          "dictionary terms (Lucene TooManyClauses analog)")
-      p -> terms
+      // alphabet-checked: no regex metacharacter besides the translated two
+      val re = java.util.regex.Pattern.compile(
+        p.replace("*", ".*").replace("?", "."), java.util.regex.Pattern.DOTALL)
+      p -> liveTerms(v, literalPrefix(p), s"wildcard '$p'", maxExpansions)(
+        re.matcher(_).matches())
     }.toMap
 
+  /** Lucene/Solr WILDCARD queries over the persisted index: the
+    * patterns expand on the driver ([[expandWildcards]]), then the
+    * standard disjunctive engine scores the expanded term set. */
   def searchWildcard(idx: IndexSearch.OpenIndex, queries: Seq[(Int, String)],
                      k: Int = 10,
                      maxExpansions: Int = IndexSearch.DefaultMaxExpansions): DataFrame = {
@@ -149,19 +160,18 @@ object MultiTerm {
     IndexSearch.searchExpandedTerms(idx, qtRows, k)
   }
 
-  /** Expand a mixed set of boolean-grammar group bodies: the wildcard and
-    * fuzzy members batch through their respective single-pass probes
-    * (two dictionary jobs TOTAL per query batch, not per clause). */
-  def expandBodies(idx: IndexSearch.OpenIndex,
+  /** Expand a mixed set of boolean-grammar group bodies against the
+    * view's live vocabulary, on the driver. */
+  def expandBodies(v: IndexSearch.View,
                    bodies: Seq[Search.MultiTermBody], maxExpansions: Int)
       : Map[Search.MultiTermBody, Seq[String]] = {
-    val wm = expandWildcards(idx,
+    val wm = expandWildcards(v,
       bodies.collect { case Search.WildcardBody(p) => p }, maxExpansions)
-    val fm = expandFuzzies(idx,
+    val fm = expandFuzzies(v,
       bodies.collect { case Search.FuzzyBody(s, n) => (s, n) }, maxExpansions)
     bodies.distinct.map {
-      case b @ Search.WildcardBody(p) => b -> wm.getOrElse(p, Nil)
-      case b @ Search.FuzzyBody(s, n) => b -> fm.getOrElse((s, n), Nil)
+      case b @ Search.WildcardBody(p) => b -> wm(p)
+      case b @ Search.FuzzyBody(s, n) => b -> fm((s, n))
     }.toMap
   }
 
@@ -192,44 +202,26 @@ object MultiTerm {
     (terms, stems.map(s => (s._2, s._3)).distinct)
   }
 
-  /** Lucene/Solr FUZZY queries over the persisted index. Scale shape: ONE
-    * dictionary pass for the whole stem batch — the broadcast stem list
-    * joins on a cheap length-window prune (edit distance ≥ |len delta|,
-    * vectorized) before the levenshtein evaluates, and per-stem expansion
-    * rows are row_number-capped BEFORE the collect so an over-fuzzy stem
-    * cannot materialize an unbounded expansion driver-side. (Lucene walks
-    * a Levenshtein automaton over the FST instead; the Spark-first analog
-    * is the pruned scan — at most |dictionary| rows once per query
-    * BATCH, not per query.) */
-  /** Batch fuzzy expansion: ONE pruned dictionary pass for the whole
-    * distinct stem set (see [[searchFuzzy]]'s scale note). Shared by the
+  /** Batch fuzzy expansion: per DISTINCT (stem, maxEdits), the live terms
+    * within that plain Levenshtein distance — Spark's own
+    * `levenshtein` kernel ([[org.apache.spark.unsafe.types.UTF8String]]),
+    * behind a length-window prune (edit distance ≥ |length delta|), over
+    * the whole resident vocabulary on the driver (Lucene walks a
+    * Levenshtein automaton over the FST instead). Shared by the
     * standalone fuzzy engine and the boolean clause grammar. */
-  def expandFuzzies(idx: IndexSearch.OpenIndex, stems0: Seq[(String, Int)],
-                    maxExpansions: Int): Map[(String, Int), Seq[String]] = {
-    val spark = idx.spark
-    import spark.implicits._
-    val stems = stems0.distinct
-    if (stems.isEmpty) return Map.empty
-    val stemsDf = broadcast(stems.toDF("_stem", "_n"))
-    val w = Window.partitionBy("_stem", "_n").orderBy("term")
-    val rows = idx.dictionary.select("term")
-      .join(stemsDf,
-        abs(length(col("term")) - length(col("_stem"))) <= col("_n") &&
-          levenshtein(col("term"), col("_stem")) <= col("_n"))
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") <= maxExpansions + 1)
-      .select("_stem", "_n", "term").collect()
-    val m: Map[(String, Int), Seq[String]] = rows.toSeq
-      .groupBy(r => (r.getString(0), r.getInt(1)))
-      .map { case (key, rs) => key -> rs.map(_.getString(2)) }
-    m.foreach { case ((st, n), ts) =>
-      require(ts.size <= maxExpansions,
-        s"fuzzy '$st~$n' expands to more than maxExpansions=$maxExpansions " +
-          "dictionary terms (Lucene TooManyClauses analog)")
-    }
-    m
-  }
+  def expandFuzzies(v: IndexSearch.View, stems: Seq[(String, Int)],
+                    maxExpansions: Int): Map[(String, Int), Seq[String]] =
+    stems.distinct.map { case (st, n) =>
+      val us = UTF8String.fromString(st)
+      (st, n) -> liveTerms(v, "", s"fuzzy '$st~$n'", maxExpansions) { t =>
+        val ut = UTF8String.fromString(t)
+        math.abs(ut.numChars - us.numChars) <= n && ut.levenshteinDistance(us) <= n
+      }
+    }.toMap
 
+  /** Lucene/Solr FUZZY queries over the persisted index: the stems expand
+    * on the driver ([[expandFuzzies]]), then the standard disjunctive
+    * engine scores the expanded term set. */
   def searchFuzzy(idx: IndexSearch.OpenIndex, queries: Seq[(Int, String)],
                   k: Int = 10,
                   maxExpansions: Int = IndexSearch.DefaultMaxExpansions): DataFrame = {

@@ -25,6 +25,12 @@ final class ResidentDict private (terms: Array[String], dfs: Array[Long],
   def df(row: Int): Long = dfs(row)
   def shard(row: Int): Int = shards(row)
 
+  /** The terms starting with `prefix`, ascending — every term for "". */
+  def termsFrom(prefix: String): Iterator[String] = {
+    val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], prefix)
+    terms.iterator.drop(if (i >= 0) i else -i - 1).takeWhile(_.startsWith(prefix))
+  }
+
   /** Distinct shards holding the in-vocabulary ones of `terms`. */
   def shardsOf(terms: Seq[String]): Seq[Int] =
     terms.map(row).filter(_ >= 0).map(shards).distinct

@@ -277,8 +277,8 @@ object Search {
       : (DataFrame, DataFrame, Map[Int, Int]) = {
     import spark.implicits._
     val parsed = queries.map { case (id, t) => (id, parseClauses(t)) }
-    // the terms-only engines (inline corpus, segmented fan-out) would
-    // silently DROP a quoted phrase clause — fail loudly instead
+    // the terms-only inline-corpus engine would silently DROP a quoted
+    // phrase clause — fail loudly instead
     require(parsed.forall { case (_, c) =>
       c.mustPhrases.isEmpty && c.shouldPhrases.isEmpty && c.notPhrases.isEmpty },
       "quoted phrase clauses are served by IndexSearch.searchClauses over " +

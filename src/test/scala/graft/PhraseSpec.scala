@@ -170,6 +170,28 @@ class PhraseSpec extends SparkSpec {
     } finally planned.unpersistAll()
   }
 
+  test("a warm searchPhrase plans from the resident dictionary: fewer Spark jobs than a dictionary probe") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    val q = Seq(1 -> "a b", 2 -> "b a", 3 -> "a zzzoov")
+    IndexSearch.searchPhrase(idx, q) // cold: resolves the relations, loads the resident dictionary
+    org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val got = try {
+      val r = IndexSearch.searchPhrase(idx, q)
+      org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(docsOf(got, 1) == Seq(0L) && docsOf(got, 2) == Seq(1L) && docsOf(got, 3).isEmpty)
+    // planned from a dictionary probe (a Spark job per batch), the same
+    // warm call ran 19 jobs
+    assert(jobs.get() < 19, s"warm searchPhrase ran ${jobs.get()} jobs")
+  }
+
   /** Independent re-derivation of the pinned luceneSlop semantics from raw
     * token lists (the engine computes it from decoded postings through
     * [[graft.search.SloppyFreqExpr]]). */

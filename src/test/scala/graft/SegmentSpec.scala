@@ -38,7 +38,7 @@ class SegmentSpec extends SparkSpec {
     val root = tmp()
     SegmentedIndex.append(spark, root, all, noDeletes, "seg-a", cfg)
     val bq = Seq(1 -> "w1 w3^3", 2 -> "+w2^0.5 w5")
-    val seg = SegmentedIndex.searchClauses(spark, root, bq, cfg = cfg)
+    val seg = IndexSearch.searchClauses(SegmentedIndex.open(spark, root, cfg), bq)
       .orderBy("query_id", "rank").collect().toSeq
     val uroot = tmp()
     BuildIndexJob.run(spark, all, uroot, "full", cfg)
@@ -50,11 +50,11 @@ class SegmentSpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq
     assert(seg == want && seg.nonEmpty)
     // the boost actually bites: w3^3 must change the scored output
-    val plain = SegmentedIndex.searchClauses(spark, root, Seq(1 -> "w1 w3"),
-      cfg = cfg).orderBy("rank")
+    val plain = IndexSearch.searchClauses(SegmentedIndex.open(spark, root, cfg),
+      Seq(1 -> "w1 w3")).orderBy("rank")
       .select("conv_id", "turn_idx", "score").collect().toSeq
-    val boosted = SegmentedIndex.searchClauses(spark, root, Seq(1 -> "w1 w3^3"),
-      cfg = cfg).orderBy("rank")
+    val boosted = IndexSearch.searchClauses(SegmentedIndex.open(spark, root, cfg),
+      Seq(1 -> "w1 w3^3")).orderBy("rank")
       .select("conv_id", "turn_idx", "score").collect().toSeq
     assert(plain != boosted)
     all.unpersist()
@@ -77,7 +77,38 @@ class SegmentSpec extends SparkSpec {
     "facetJsonRange" -> (v => IndexSearch.facetJsonRange(v, qs, "dl", 0L, 30L, 10L,
       SparkEntry.JsonFacetMetrics)))
 
-  test("the eleven shapes over an absent, a segment-free and an all-tombstoned root: pinned rows and schema") {
+  /** The phrase, highlight and boolean-clause shapes written once against
+    * a view, each with its own queries. The dead-member case: in the
+    * upsert/delete fixture `zzzraretwo` lives only in a deleted doc, so
+    * `zzzraret*` has one live member, and a dead term must not count
+    * against maxExpansions. */
+  def positionalShapes: Seq[(String, IndexSearch.View => DataFrame)] = {
+    val pq = Seq(1 -> "w1 w2", 2 -> "upserted zzzupserted", 3 -> "w3 w1")
+    val hq = Seq(1 -> "w1 w2", 2 -> "zzzupserted", 3 -> "upserted w3")
+    Seq(
+      "searchPhrase" -> (v => IndexSearch.searchPhrase(v, pq)),
+      "searchPhrase slop 2" -> (v => IndexSearch.searchPhrase(v, pq, slop = 2)),
+      "searchPhrase luceneSlop" ->
+        (v => IndexSearch.searchPhrase(v, pq, slop = 2, luceneSlop = true)),
+      "searchHighlight" -> (v => IndexSearch.searchHighlight(v, hq)),
+      "searchHighlightScored" -> (v => IndexSearch.searchHighlightScored(v, hq)),
+      "searchClauses must phrase" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "+\"w1 w2\" w3", 2 -> "+\"upserted zzzupserted\" w1"))),
+      "searchClauses not phrase" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "w1 -\"w1 w2\"", 2 -> "w2 upserted -\"upserted zzzupserted\""))),
+      "searchClauses wildcard group" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "+w1? w3", 2 -> "w2 -w1?"))),
+      "searchClauses fuzzy group" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "w3 +zzzupsertd~1", 2 -> "+zzzraretwo~1 w1"))),
+      "searchClauses dead member, maxExpansions 1" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "+zzzraret* w1"), maxExpansions = 1)),
+      "searchClauses mm 1" -> (v => IndexSearch.searchClauses(v,
+        Seq(1 -> "+w1 w2 w3", 2 -> "w5 w7 zzzupserted"), mm = 1)))
+  }
+
+  /** An absent root, a segment-free root and a root whose every doc is
+    * tombstoned. */
+  def emptyRoots(): Seq[String] = {
     val batch = Transcripts.synthetic(spark, 6).cache()
     val keys = batch.select("conv_id", "turn_idx")
     val absent = tmp() + "/none"
@@ -90,11 +121,17 @@ class SegmentSpec extends SparkSpec {
     assert(SegmentedIndex.readManifest(spark, noSegs).exists(m => m.segments.isEmpty))
     assert(SegmentedIndex.readManifest(spark, allDead)
       .exists(m => m.segments.nonEmpty && m.nDocs == 0))
-    // nullability is left out: it is not part of a result's shape
-    def shape(df: DataFrame): String =
-      df.schema.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+    batch.unpersist()
+    Seq(absent, noSegs, allDead)
+  }
+
+  // nullability is left out: it is not part of a result's shape
+  def shape(df: DataFrame): String =
+    df.schema.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+  val ranked = "query_id INT, rank INT, conv_id STRING, turn_idx INT, score DOUBLE"
+
+  test("the eleven shapes over an absent, a segment-free and an all-tombstoned root: pinned rows and schema") {
     def body(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
-    val ranked = "query_id INT, rank INT, conv_id STRING, turn_idx INT, score DOUBLE"
     val metrics = "sum_dl BIGINT, avg_dl DOUBLE, uniq_tool BIGINT, max_turn BIGINT"
     val nulls = ",0,null,null,null,null]"
     def spine(buckets: Seq[Any], tail: String): Seq[String] =
@@ -118,12 +155,58 @@ class SegmentSpec extends SparkSpec {
       "facetJsonRange" -> (s"query_id INT, bucket BIGINT, n_docs BIGINT, $metrics" ->
         spine(Seq(0, 10, 20), nulls)))
     assert(want.keySet == shapes(Nil).map(_._1).toSet)
-    for (root <- Seq(absent, noSegs, allDead); (name, run) <- shapes(Seq(1 -> "w1 w3", 2 -> "zzzmissing"))) {
+    for (root <- emptyRoots(); (name, run) <- shapes(Seq(1 -> "w1 w3", 2 -> "zzzmissing"))) {
       val df = run(SegmentedIndex.open(spark, root, cfg))
       assert(shape(df) == want(name)._1, s"$name schema over $root")
       assert(body(df) == want(name)._2.sorted, s"$name rows over $root")
     }
-    batch.unpersist()
+  }
+
+  test("phrase, highlight and clause shapes over an absent, a segment-free and an all-tombstoned root: typed empty results") {
+    for (root <- emptyRoots(); (name, run) <- positionalShapes) {
+      val df = run(SegmentedIndex.open(spark, root, cfg))
+      val want = if (name.startsWith("searchHighlight")) s"$ranked, snippet STRING" else ranked
+      assert(shape(df) == want, s"$name schema over $root")
+      assert(df.collect().isEmpty, s"$name rows over $root")
+    }
+  }
+
+  test("phrase, highlight and phrase-bearing clauses over a non-positional segmented root fail loudly") {
+    val root = tmp()
+    SegmentedIndex.append(spark, root, Transcripts.synthetic(spark, 6), noDeletes, "seg-a", cfg)
+    val view = SegmentedIndex.open(spark, root, cfg)
+    for ((name, run) <- positionalShapes
+         if !Seq("wildcard", "fuzzy", "dead", "mm").exists(name.contains)) {
+      val e = intercept[IllegalArgumentException](run(view).collect())
+      assert(e.getMessage.contains("requires a positional index"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("segmented searchHighlight runs the same Spark jobs over one and over three segments of one live corpus") {
+    val cfgPos = cfg.copy(storePositions = true)
+    val all = Transcripts.synthetic(spark, 60).cache()
+    val one = tmp()
+    SegmentedIndex.append(spark, one, all, noDeletes, "seg-a", cfgPos)
+    val three = tmp()
+    Seq((0, 20), (20, 40), (40, 60)).zipWithIndex.foreach { case ((lo, hi), i) =>
+      SegmentedIndex.append(spark, three, convs(all, lo, hi), noDeletes, s"seg-$i", cfgPos)
+    }
+    val q = Seq(1 -> "w1 w2", 2 -> "w3 zzzrareone")
+    def highlight(root: String): Seq[Row] =
+      IndexSearch.searchHighlight(SegmentedIndex.open(spark, root, cfgPos), q).collect().toSeq
+    // the first read loads each segment's snapshot; count a warm one
+    val jobs = Seq(one, three).map { root =>
+      highlight(root)
+      jobsOf(highlight(root))
+    }
+    assert(jobs(0)._1.nonEmpty && jobs(0)._1 == jobs(1)._1)
+    def byScope(js: Seq[java.util.Properties]) = js.map(p =>
+      Option(p.getProperty("spark.rdd.scope")).fold("-")(_.replaceAll(".*\"name\":\"([^\"]*)\".*", "$1")) +
+        "@" + p.getProperty("spark.sql.execution.id")).mkString(" ")
+    assert(jobs(0)._2.size == jobs(1)._2.size,
+      s"one segment ran ${jobs(0)._2.size} jobs (${byScope(jobs(0)._2)}), " +
+        s"three ran ${jobs(1)._2.size} (${byScope(jobs(1)._2)})")
+    all.unpersist()
   }
 
   test("3 appends with upserts and deletes ≡ full rebuild over the live corpus") {
@@ -198,12 +281,12 @@ class SegmentSpec extends SparkSpec {
       df.orderBy("query_id", "rank").collect().toSeq
 
     val bq = Seq(1 -> "+w1 w3 -w2", 2 -> "w2 -zzzupserted", 3 -> "+zzzupserted")
-    val segBool = sorted(SegmentedIndex.searchClauses(spark, root, bq, cfg = cfgPos))
+    val view = SegmentedIndex.open(spark, root, cfgPos)
+    val segBool = sorted(IndexSearch.searchClauses(view, bq))
     assert(segBool == keyed(IndexSearch.searchClauses(uidx, bq)))
     assert(segBool.exists(_.getInt(0) == 3), "upserted must-term must match")
 
     val fqQs = Seq(1 -> "w1 w2", 2 -> "zzzupserted")
-    val view = SegmentedIndex.open(spark, root, cfgPos)
     assert(sorted(IndexSearch.searchFiltered(view, fqQs, col("role") === "user"))
       == keyed(IndexSearch.searchFiltered(uidx, fqQs, col("role") === "user")))
     assert(IndexSearch.facetCounts(view, fqQs, "role")
@@ -222,12 +305,11 @@ class SegmentSpec extends SparkSpec {
       == IndexSearch.statsField(uidx, fqQs, "dl").collect().toSeq)
 
     val pq = Seq(1 -> "upserted zzzupserted", 2 -> "w1")
-    val segPhrase = sorted(SegmentedIndex.searchPhrase(spark, root, pq, cfg = cfgPos))
+    val segPhrase = sorted(IndexSearch.searchPhrase(view, pq))
     assert(segPhrase == keyed(IndexSearch.searchPhrase(uidx, pq)))
     assert(segPhrase.exists(_.getInt(0) == 1), "planted phrase must match")
     val sq = Seq(1 -> "zzzupserted upserted")
-    assert(sorted(SegmentedIndex.searchPhrase(spark, root, sq, slop = 2,
-        luceneSlop = true, cfg = cfgPos))
+    assert(sorted(IndexSearch.searchPhrase(view, sq, slop = 2, luceneSlop = true))
       == keyed(IndexSearch.searchPhrase(uidx, sq, slop = 2, luceneSlop = true)),
       "sloppy mode must agree across segmented and unified paths")
 
@@ -239,7 +321,8 @@ class SegmentSpec extends SparkSpec {
     def lines(df: DataFrame, cols: Seq[String]): Seq[String] =
       (if (df.columns.contains("doc_id")) df.join(cmpKeys, "doc_id") else df)
         .select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
-    for ((name, run) <- shapes(Seq(1 -> "w1 w2", 2 -> "zzzupserted", 3 -> "upserted w3"))) {
+    for ((name, run) <- shapes(Seq(1 -> "w1 w2", 2 -> "zzzupserted", 3 -> "upserted w3")) ++
+           positionalShapes) {
       val got = run(view)
       val rowsSeg = lines(got, got.columns.toSeq)
       assert(rowsSeg.nonEmpty && rowsSeg == lines(run(cmp), got.columns.toSeq),
@@ -873,11 +956,11 @@ class SegmentSpec extends SparkSpec {
     val (_, appendJobs) = jobsOf(SegmentedIndex.append(spark, root, batch, dels, "seg-b", icfg))
     // writing the segment through BuildIndexJob.run (stage markers,
     // per-partition lineage, artifacts read back) took 66 jobs here; the
-    // single-pass writer takes 34 — AQE submits one job per shuffle stage
+    // single-pass writer takes 33 — AQE submits one job per shuffle stage
     // and per broadcast, so each of the seven artifacts costs ≥ 2
     def byPhase(jobs: Seq[java.util.Properties]) =
       jobs.groupMapReduce(_.getProperty(Phase.Key))(_ => 1)(_ + _).toSeq.sorted.mkString(", ")
-    assert(appendJobs.size <= 35, s"append ran ${appendJobs.size} jobs: ${byPhase(appendJobs)}")
+    assert(appendJobs.size <= 33, s"append ran ${appendJobs.size} jobs: ${byPhase(appendJobs)}")
     val seg = SegmentedIndex.segPath(root, "seg-b")
     val artifacts = Seq("docs", "tfdl", "dictionary", "postings", "stats").map(a => s"$seg/$a")
     val readBack = io.reads.toArray.map(_.toString)
