@@ -53,10 +53,6 @@ private[graft] object SegmentSnapshots {
       spark.read.schema("term STRING, killed LONG").parquet(deltaPath)
         .collect().toSeq
         .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
-
-    /** Rows that kill an instance in segment `ord` — an upper bound on
-      * the dead instances this dir leaves in that segment. */
-    def killing(ord: Int): Long = killed.valuesIterator.count(_ > ord).toLong
   }
 
   private final case class Key(spark: SparkSession, path: String, mtime: Long)

@@ -1,10 +1,9 @@
 package graft.index
 
 import graft.Phase
-import graft.search.{BlockMaxWand, Bm25, IndexSearch}
+import graft.search.IndexSearch
 import graft.sources.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Segment-based incremental index maintenance — the O(batch) path
@@ -54,11 +53,13 @@ import org.apache.spark.sql.functions._
   * One engine, two storage views: [[open]] is this root's
   * [[IndexSearch.View]], and the scored, filtered, block-join, synonym,
   * facet, phrase, highlight and boolean-clause request shapes of
-  * [[IndexSearch]] and [[graft.search.Synonyms]] serve it as they serve a
-  * bulk root, one leaf per segment — Lucene runs every query per leaf
-  * behind one reader interface the same way. What stays here: the
-  * writers, [[searchWand]] (driver-side traversal over segment-local
-  * ids) and [[getDocs]] (the text-free realtime-get projection).
+  * [[IndexSearch]] and [[graft.search.Synonyms]], and its pruned top-k
+  * ([[IndexSearch.searchWand]], [[IndexSearch.searchMaxScore]]), serve it
+  * as they serve a bulk root, one leaf per segment — Lucene runs every
+  * query per leaf behind one reader interface the same way. What stays
+  * here: the writers, the view itself, [[searchWand]] (a forwarder for
+  * callers holding a root) and [[getDocs]] (the text-free realtime-get
+  * projection).
   */
 object SegmentedIndex {
 
@@ -460,15 +461,16 @@ object SegmentedIndex {
     *
     *  - df is the exact live df of [[liveDf]] (metadata only), N/avgdl
     *    come from the manifest;
-    *  - `leaves` holds one leaf per segment: its snapshot's open index
-    *    and the segment's (doc_id, conv_id, turn_idx) rows that no
-    *    tombstone kills;
-    *  - `matched` decodes, per segment, only the shards its resident
-    *    dictionary ([[SegmentSnapshots]]) maps the query terms to, and
-    *    keeps the postings of tombstone-live instances through one join
-    *    with the leaves' live maps. The plan holds
-    *    one postings scan per segment: fine because compaction bounds
-    *    the segment count (a long-running ingest calls compactInPlace or
+    *  - `leaves` holds one leaf per segment: its snapshot's open index,
+    *    the segment's (doc_id, conv_id, turn_idx) rows that no tombstone
+    *    kills, and its tombstone facts — t_s and the kill test, from the
+    *    [[SegmentSnapshots]] tombstone entries;
+    *  - `matched` (written once in [[IndexSearch.View]]) decodes, per
+    *    segment, only the shards its resident dictionary maps the query
+    *    terms to, and keeps the postings of tombstone-live instances
+    *    through one join with the leaves' live maps. The plan holds one
+    *    postings scan per segment: fine because compaction bounds the
+    *    segment count (a long-running ingest calls compactInPlace or
     *    tieredCompact, so this is O(compactEvery), never O(all appends
     *    ever));
     *  - `attrs` is the live instances' stored attributes (keys +
@@ -482,80 +484,58 @@ object SegmentedIndex {
     val m = readManifest(spark, root).filter(_.nDocs > 0)
       .getOrElse(Manifest(Seq.empty, Seq.empty, 0L, 0L))
     val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
-    new LiveView(spark, m, segs, tombs, readTombstones(spark, root, m))
+    new LiveView(spark, root, m, segs, tombs)
   }
 
-  private final class LiveView(val spark: SparkSession, m: Manifest,
+  /** Opening one costs the manifest read and the snapshot lookup only:
+    * the tombstone relation and the leaves' live maps are built on first
+    * use, which the pruned top-k never makes. */
+  private final class LiveView(val spark: SparkSession, root: String, m: Manifest,
                                segs: IndexedSeq[SegmentSnapshots.Segment],
-                               tombs: IndexedSeq[SegmentSnapshots.Tomb],
-                               tombRows: DataFrame) extends IndexSearch.View {
+                               tombs: IndexedSeq[SegmentSnapshots.Tomb])
+      extends IndexSearch.View {
     def key: Seq[String] = Key
     def nDocs: Long = m.nDocs
     def avgdl: Double = m.avgdl
-    def df(terms: Seq[String]): Map[String, Long] = liveDf(segs, tombs, terms)._2
+    def df(terms: Seq[String]): Map[String, Long] = liveDf(segs, tombs, terms)
+    private lazy val tombRows: DataFrame = readTombstones(spark, root, m)
 
-    /** One leaf per segment; its live map keeps the instances no
-      * tombstone kills. */
-    lazy val leaves: Seq[IndexSearch.Leaf] = segs.indices.map(o =>
-      IndexSearch.Leaf(segs(o).index,
-        Some(liveFilter(segs(o).docs.withColumn("seg_ord", lit(o)), tombRows).drop("seg_ord"))))
-
-    private def empty(ddl: String): DataFrame = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-    def matched(qt: Seq[(Int, String)]): DataFrame = {
-      import spark.implicits._
-      val dfs = df(qt.map(_._2).distinct)
-      val qd = broadcast(qt.distinct.collect { case (q, t) if dfs.contains(t) => (q, t, dfs(t)) }
-        .toDF("query_id", "term", "df"))
-      leaves.zipWithIndex.flatMap { case (l, o) =>
-        val shards = l.index.resident.shardsOf(dfs.keys.toSeq)
-        if (shards.isEmpty) None
-        else Some(PostingBlocks.decodePostings(l.index.postings
-          .where(col("shard").isin(shards: _*)).join(qd, Seq("term"))
-          .withColumn("_leaf", lit(o))))
-      }.reduceOption(_ unionByName _)
-        .map(IndexSearch.keyed(this, _).select(col("query_id"), col("term"), col("df"),
-          col("conv_id"), col("turn_idx"), col("tf"), col("dl")))
-        .getOrElse(empty(
-          "query_id INT, term STRING, df BIGINT, conv_id STRING, turn_idx INT, tf INT, dl INT"))
-    }
+    /** One leaf per segment: its live map keeps the instances no
+      * tombstone kills; t_s counts the tombstone rows that reach its
+      * ordinal (each kills at most one of its instances). */
+    lazy val leaves: Seq[IndexSearch.Leaf] = segs.indices.map(o => new IndexSearch.Leaf {
+      def index: IndexSearch.OpenIndex = segs(o).index
+      override lazy val live: Option[DataFrame] =
+        Some(liveFilter(segs(o).docs.withColumn("seg_ord", lit(o)), tombRows).drop("seg_ord"))
+      override lazy val overFetch: Long = tombs.map(_.killed.valuesIterator.count(_ > o).toLong).sum
+      override def kills(key: org.apache.spark.sql.Row): Boolean =
+        tombs.exists(_.killed.get((key.getString(0), key.getInt(1))).exists(_ > o))
+    })
 
     lazy val attrs: DataFrame = segs.indices
       .map(o => segs(o).index.stored.drop("text", "doc_id").withColumn("seg_ord", lit(o)))
       .reduceOption(_ unionByName _).map(liveFilter(_, tombRows).drop("seg_ord"))
-      .getOrElse(empty(
-        "conv_id STRING, turn_idx INT, role STRING, tool STRING, ts TIMESTAMP, dl INT"))
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "conv_id STRING, turn_idx INT, role STRING, tool STRING, ts TIMESTAMP, dl INT")))
   }
 
   /** Exact LIVE df of `terms` from metadata alone: Σ over segments of the
     * segment dictionary's build-time df, minus the per-append kill deltas
     * (`dfdeltas/<tomb>` — written beside every committed tombstone dir by
     * [[append]] and [[mergeAdjacent]] from the killed instances' keymeta
-    * term lists). A term no live doc holds is absent. Also returns each
-    * segment's dictionary row of every term it holds. The one place live
-    * df is derived: [[searchWand]] and every view of [[open]] score from
-    * it, and SegmentSpec pins it to the count of live decoded postings. */
+    * term lists). A term no live doc holds is absent. The one place live
+    * df is derived: every view of [[open]] scores from it, and
+    * SegmentSpec pins it to the count of live decoded postings. */
   private[graft] def liveDf(segs: IndexedSeq[SegmentSnapshots.Segment],
                             tombs: IndexedSeq[SegmentSnapshots.Tomb],
-                            terms: Seq[String])
-      : (IndexedSeq[Map[String, Int]], Map[String, Long]) = {
-    val dicts = segs.map(_.index.resident)
-    val rows: IndexedSeq[Map[String, Int]] = dicts.map(d =>
-      terms.map(t => t -> d.row(t)).filter(_._2 >= 0).toMap)
-    val dfLive: Map[String, Long] = terms.flatMap { t =>
-      val total = segs.indices.map(o => rows(o).get(t).fold(0L)(dicts(o).df)).sum -
-        tombs.map(_.dfDeltas.getOrElse(t, 0L)).sum
+                            terms: Seq[String]): Map[String, Long] = {
+    val segDf = segs.map(_.index.df(terms))
+    terms.flatMap { t =>
+      val total = segDf.map(_.getOrElse(t, 0L)).sum - tombs.map(_.dfDeltas.getOrElse(t, 0L)).sum
       if (total > 0) Some(t -> total) else None
     }.toMap
-    (rows, dfLive)
-  }
-
-  private def keysEmpty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Int, String, Int, Double)]
-      .toDF("query_id", "rank", "conv_id", "turn_idx", "score")
   }
 
   /** Solr RealTimeGet over the SEGMENTED (streaming-serving) index — the
@@ -577,235 +557,17 @@ object SegmentedIndex {
       .orderBy("conv_id", "turn_idx")
   }
 
-  /** One posting block routed to one (query, segment, doc-range) group —
-    * the unit of the range-parallel segmented WAND. `df` carries the LIVE
-    * global df (the exact scoring input); `block_max_score` is the stored
-    * build-time max CORRECTED to an upper bound under the live scoring
-    * function. */
-  // public: Spark's generated row (de)serializer must access the class
-  final case class SegQBlock(query_id: Int, seg_ord: Int,
-      range_id: Int, term: String, df: Long, first_doc: Long, last_doc: Long,
-      doc_gaps: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
-      block_max_score: Double) extends BlockMaxWand.EncodedBlock
-
-  /** Block-max WAND top-k over the SEGMENTED index — the top-k-pruned
-    * traversal that replaces the exhaustive O(df) live posting scan a
-    * hot-term disjunctive query would otherwise pay between compactions.
-    * Output keys-shaped and EXACT — identical to [[IndexSearch.search]]
-    * over [[open]] (SegmentSpec pins the equivalence under upserts +
-    * tombstones).
-    *
-    * The three inputs WAND needs, each derived WITHOUT decoding postings:
-    *
-    *  1. EXACT LIVE df per term (BM25's idf input): [[liveDf]]. Metadata
-    *     only.
-    *  2. UPPER-BOUND block maxes under the live scoring function: a
-    *     stored max was computed with the segment's build-time
-    *     (df_b, N_b, avgdl_b); for the live function (df_l, N_l, avgdl_l)
-    *     every posting satisfies s_live/s_build = (idf_l/idf_b)·g(tf, dl)
-    *     where g = (tf + K_b(dl))/(tf + K_l(dl)) is monotone in dl with
-    *     range bounded by [min(1, avgdl_l/avgdl_b),
-    *     max(1, avgdl_l/avgdl_b)] over tf ≥ 1, dl ≥ 1 (K(dl) =
-    *     k1(1−b+b·dl/avg) is affine in dl, so the ratio's extrema sit at
-    *     dl → {1, ∞} and tf → {1, ∞}). Scaling each stored max by
-    *     (idf_l/idf_b)·max(1, avgdl_l/avgdl_b) therefore yields a valid
-    *     upper bound — over-estimates only inhibit skipping, never break
-    *     exactness.
-    *  3. A θ SEED from the segments' stored top block maxes scaled by
-    *     the LOWER factor (idf_l/idf_b)·min(1, avgdl_l/avgdl_b) — used only when
-    *     the manifest has NO tombstones: then every stored max's doc is
-    *     live and keys are globally distinct (an upsert always writes a
-    *     tombstone), so the k-th largest corrected-lower max of a term
-    *     witnesses k doc-disjoint live docs scoring at least it.
-    *
-    * TOMBSTONE GUARD: killed docs are invisible to the traversal's
-    * metadata, so they can occupy heap slots; each (query, segment)
-    * traversal over-fetches k + t_s candidates, where t_s = the count
-    * of tombstone rows with upto > the segment's ordinal (an upper bound
-    * on killed instances in that segment — each tombstone row kills at
-    * most one instance per segment), and killed candidates are dropped
-    * before the global rank-merge: any live doc outside a segment's
-    * k + t_s best has ≥ k live docs ranked above it in its own segment,
-    * so it cannot enter the global top-k. t_s is bounded by the appends
-    * since the last compaction (the documented segment-count invariant);
-    * heavy delete workloads degrade toward larger heaps, never toward
-    * wrong answers.
-    *
-    * Driver state: every input above comes from [[SegmentSnapshots]] —
-    * per committed segment its open index (stats, resident dictionary,
-    * resolved postings) and `docs/` key relation, per tombstone dir its
-    * killed keys and df deltas — loaded once per directory and reused by
-    * every later read. A warm read re-reads only the MANIFEST and derives
-    * live df, bounds, seeds and t_s on the driver. A batch within one
-    * range's working set (the segments' doc counts and the stored df of
-    * its terms each sum to ≤ docsPerRange — [[IndexSearch.searchWand]]'s
-    * single-range rule summed over segments) then runs ONE Spark job
-    * collecting its blocks across segments and traverses each (query,
-    * segment) on the driver; a larger batch keeps the (query, segment,
-    * doc-range) parallel traversal, with segment-local id spaces and the
-    * same precise block→range routing as the unified path. Either way
-    * ONE more job resolves the candidates' keys from `docs/`, and killed
-    * instances are dropped and ranked on the driver into a local frame.
-    * A request with only out-of-vocabulary terms runs no job. Memory:
-    * ~84 B per term × Σ live-segment vocabularies (the resident
-    * dictionaries), plus the live tombstone rows and df-delta terms, plus
-    * a request's own blocks (≤ docsPerRange postings on the driver
-    * path) and ≤ |queries| × segments × (k + t_s) candidates. */
+  /** Block-max WAND top-k over the segmented root: [[IndexSearch.searchWand]]
+    * over [[open]], keyed (query_id, rank, conv_id, turn_idx, score) —
+    * exact, identical to [[IndexSearch.search]] over the same view. Kept
+    * with this signature for its callers that hold a root rather than a
+    * view: perfbench's `IngestLive` (the `ingest_live` live reads), the
+    * streaming and tiered gates of [[graft.SparkEntry]], and SegmentSpec. */
   def searchWand(spark: SparkSession, root: String,
                  queries: Seq[(Int, String)], k: Int = 10,
                  docsPerRange: Long = IndexSearch.DefaultDocsPerRange,
-                 cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame = {
-    import spark.implicits._
-    def empty = keysEmpty(spark)
-    val m = readManifest(spark, root).getOrElse(return empty)
-    if (m.segments.isEmpty || m.nDocs == 0) return empty
-    val parsed = queries
-      .map { case (qid, t) => (qid, graft.analysis.Analyzer.tokenize(t).distinct) }
-      .filter(_._2.nonEmpty)
-    if (parsed.isEmpty) return empty
-    val allTerms = parsed.flatMap(_._2).distinct
-    val (segs, tombs) = SegmentSnapshots.of(spark, root, m, cfg.io)
-    val dicts = segs.map(_.index.resident)
-    val (rows, dfLive) = liveDf(segs, tombs, allTerms)
-    val liveParsed = parsed
-      .map { case (q, ts) => (q, ts.filter(dfLive.contains)) }
-      .filter(_._2.nonEmpty)
-    if (liveParsed.isEmpty) return empty
-    val (nL, avgL) = (m.nDocs, m.avgdl)
-
-    // per segment: live term → (dictionary row, upper and lower factor)
-    val segTerms: IndexedSeq[Map[String, (Int, Double, Double)]] = segs.indices.map { o =>
-      val st = segs(o).index.stats
-      val a = avgL / st.avgdl
-      rows(o).collect { case (t, r) if dfLive.contains(t) =>
-        val c = Bm25.idfValue(dfLive(t), nL) / Bm25.idfValue(dicts(o).df(r), st.nDocs)
-        t -> ((r, c * math.max(1.0, a), c * math.min(1.0, a)))
-      }
-    }
-    val seeds: Map[Int, Double] =
-      if (tombs.nonEmpty) Map.empty
-      else {
-        val perTermKth = dfLive.keys.flatMap { t =>
-          val lows = segs.indices.flatMap(o => segTerms(o).get(t).toSeq.flatMap {
-            case (r, _, lo) => dicts(o).topMaxes(r).map(_ * lo)
-          }).sorted(Ordering[Double].reverse)
-          if (lows.size >= k) Some(t -> lows(k - 1)) else None
-        }.toMap
-        liveParsed.flatMap { case (q, ts) =>
-          val s = ts.flatMap(perTermKth.get)
-          if (s.isEmpty) None else Some(q -> s.max)
-        }.toMap
-      }
-    val heap: IndexedSeq[Int] = segs.indices.map(o =>
-      k + math.min(tombs.map(_.killing(o)).sum, Int.MaxValue.toLong - k).toInt)
-    val fits = segs.map(_.index.stats.nDocs).sum <= docsPerRange &&
-      segs.indices.map(o => segTerms(o).values.map(v => dicts(o).df(v._1)).sum).sum <= docsPerRange
-
-    val candidates: Seq[(Int, Int, Long, Double)] =
-      if (fits) {
-        val lists: Map[(Int, String), BlockMaxWand.TermPostings] =
-          segs.indices.filter(segTerms(_).nonEmpty).map { o =>
-            val ts = segTerms(o).keys.toSeq
-            segs(o).index.postings
-              .where(col("shard").isin(dicts(o).shardsOf(ts): _*) && col("term").isin(ts: _*))
-              .select(lit(o).as("seg_ord"), col("term"), col("first_doc"),
-                col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
-                col("block_max_score"))
-          }.reduce(_ unionByName _).collect()
-            .groupBy(r => (r.getInt(0), r.getString(1))).map { case ((o, t), rs) =>
-              val up = segTerms(o)(t)._2
-              (o, t) -> BlockMaxWand.TermPostings(dfLive(t), rs.sortBy(_.getLong(2)).map(r =>
-                BlockMaxWand.BlockRef(r.getLong(2), r.getLong(3), r.getDouble(7) * up,
-                  r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6))))
-            }
-        for {
-          (q, ts) <- liveParsed
-          o <- segs.indices
-          terms = ts.flatMap(t => lists.get((o, t)))
-          if terms.nonEmpty
-          (doc, s) <- BlockMaxWand.topKRange(terms, heap(o), nL, avgL, 0L, Long.MaxValue,
-            seeds.getOrElse(q, Double.NegativeInfinity))
-        } yield (q, o, doc, s)
-      } else {
-        val rangeSize = math.max(1L, docsPerRange)
-        segs.zipWithIndex.foreach { case (s, o) => require(
-          (s.index.stats.nDocs + rangeSize - 1) / rangeSize <= Int.MaxValue,
-          s"docsPerRange=$docsPerRange yields too many ranges for segment $o") }
-        def rangeOf(c: Column): Column =
-          ((c - pmod(c, lit(rangeSize))) / lit(rangeSize)).cast("int")
-        val qtDf = liveParsed.flatMap { case (q, ts) => ts.map(t => (q, t)) }
-          .toDF("query_id", "term")
-        val blocks = segs.indices.filter(segTerms(_).nonEmpty).map { o =>
-          val fdf = segTerms(o).map { case (t, (_, up, _)) => (t, dfLive(t), up) }.toSeq
-            .toDF("term", "df", "_cup")
-          segs(o).index.postings
-            .where(col("shard").isin(dicts(o).shardsOf(segTerms(o).keys.toSeq): _*))
-            .join(broadcast(qtDf), Seq("term"))
-            .join(broadcast(fdf), Seq("term"))
-            // precise block→range routing (decode ids map-side only for the
-            // rare boundary-spanning block), same as the unified WAND
-            .withColumn("range_id", explode(
-              when(rangeOf(col("first_doc")) === rangeOf(col("last_doc")),
-                array(rangeOf(col("first_doc"))))
-              .otherwise(array_distinct(transform(
-                codec.varintDeltaDecode(col("doc_gaps")), d => rangeOf(d))))))
-            .select(col("query_id"), lit(o).as("seg_ord"), col("range_id"),
-              col("term"), col("df"), col("first_doc"), col("last_doc"),
-              col("doc_gaps"), col("tfs"), col("dls"),
-              (col("block_max_score") * col("_cup")).as("block_max_score"))
-        }.reduce(_ unionByName _).as[SegQBlock]
-        // a segment's k + t_s best across its ranges bound what the
-        // rank-merge can use (the tombstone guard above), so at most
-        // |queries| × segments × (k + t_s) candidates reach the driver
-        val best = Window.partitionBy("query_id", "seg_ord")
-          .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
-        blocks.groupByKey(r => (r.query_id, r.seg_ord, r.range_id))
-          .flatMapGroups { (key: (Int, Int, Int), rows: Iterator[SegQBlock]) =>
-            val (qid, o, rid) = key
-            val lo = rid.toLong * rangeSize
-            BlockMaxWand.topKRange(BlockMaxWand.termPostings(rows).values.toSeq, heap(o),
-              nL, avgL, lo, lo + rangeSize, seeds.getOrElse(qid, Double.NegativeInfinity))
-              .iterator.map { case (doc, s) => (qid, o, doc, s) }
-          }.toDF("query_id", "seg_ord", "doc_id", "_score")
-          .withColumn("_r", row_number().over(best))
-          .where(col("_r") <= element_at(typedLit(heap), col("seg_ord") + 1))
-          .select("query_id", "seg_ord", "doc_id", "_score")
-          .as[(Int, Int, Long, Double)].collect().toSeq
-      }
-    rankCandidates(spark, segs, tombs, candidates, k)
-  }
-
-  /** The tail of [[searchWand]]: resolve candidates (query, segment
-    * ordinal, segment-local doc, raw score) to keys with ONE job over the
-    * candidate segments' `docs/` keys, drop instances a tombstone kills,
-    * and rank on the driver in [[graft.search.Search.rank]]'s pinned
-    * order into a local frame (its `collect` runs no job). */
-  private def rankCandidates(spark: SparkSession,
-                             segs: IndexedSeq[SegmentSnapshots.Segment],
-                             tombs: IndexedSeq[SegmentSnapshots.Tomb],
-                             candidates: Seq[(Int, Int, Long, Double)],
-                             k: Int): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.unsafe.types.UTF8String
-    val keyOf: Map[(Int, Long), (String, Int)] =
-      if (candidates.isEmpty) Map.empty
-      else candidates.groupMap(_._2)(_._3).map { case (o, ids) =>
-        segs(o).docs.where(col("doc_id").isin(ids.distinct: _*))
-          .select(lit(o).as("seg_ord"), col("doc_id"), col("conv_id"), col("turn_idx"))
-      }.reduce(_ unionByName _).collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> (r.getString(2), r.getInt(3))).toMap
-    candidates.flatMap { case (q, o, doc, s) =>
-      val key = keyOf((o, doc))
-      if (tombs.exists(_.killed.get(key).exists(_ > o))) None else Some((q, key, s))
-    }.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, hits) =>
-      // Spark orders strings by their UTF-8 bytes
-      hits.sortBy { case (_, (c, t), s) =>
-        (-BlockMaxWand.round(s, Bm25.RankScale), UTF8String.fromString(c), t)
-      }.take(k).zipWithIndex.map { case ((_, (c, t), s), i) =>
-        (q, i + 1, c, t, BlockMaxWand.round(s, Bm25.OutScale))
-      }
-    }.toDF("query_id", "rank", "conv_id", "turn_idx", "score")
-  }
+                 cfg: BuildIndexJob.Config = BuildIndexJob.Config()): DataFrame =
+    IndexSearch.searchWand(open(spark, root, cfg), queries, k, docsPerRange)
 
   /** All live turns with their stored fields — the compaction input. */
   def liveTurns(spark: SparkSession, root: String,

@@ -42,28 +42,6 @@ object BlockMaxWand {
     * non-overlapping ranges — guaranteed by the build. */
   final case class TermPostings(df: Long, blocks: Array[BlockRef])
 
-  /** One encoded block as a traversal group's rows carry it (the persisted
-    * block columns plus the term's df). */
-  trait EncodedBlock {
-    def term: String
-    def df: Long
-    def first_doc: Long
-    def last_doc: Long
-    def doc_gaps: Array[Byte]
-    def tfs: Array[Byte]
-    def dls: Array[Byte]
-    def block_max_score: Double
-  }
-
-  /** A group's blocks assembled into one doc-ascending posting list per
-    * term — the input every traversal call site hands to `topKRange`. */
-  def termPostings(rows: Iterator[EncodedBlock]): Map[String, TermPostings] =
-    rows.toVector.groupBy(_.term).map { case (term, trs) =>
-      val sorted = trs.sortBy(_.first_doc)
-      term -> TermPostings(sorted.head.df, sorted.map(r => BlockRef(r.first_doc,
-        r.last_doc, r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
-    }
-
   /** The per-range traversal signature shared by [[topKRange]] and
     * [[MaxScore.topKRange]]: (terms, k, nDocs, avgdl, lo, hi, seed). */
   type RangeTopK = (Seq[TermPostings], Int, Long, Double, Long, Long, Double) => Seq[(Long, Double)]

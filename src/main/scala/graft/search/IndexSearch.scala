@@ -3,8 +3,9 @@ package graft.search
 import graft.index.{BuildIndexJob, PostingBlocks}
 import graft.index.BuildIndexJob.IndexPaths
 import graft.index.IndexBuild.Stats
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Query path over the PERSISTED index (SURVEY.md §3.2):
   *
@@ -22,7 +23,8 @@ import org.apache.spark.sql.functions._
   * synonym, facet, phrase, highlight and boolean-clause request shapes
   * ([[search]], [[searchFiltered]], [[searchParents]], the facet family,
   * [[searchPhrase]], [[searchHighlight]], [[searchHighlightScored]],
-  * [[searchClauses]] and [[searchBoolean]]) are written once against a
+  * [[searchClauses]] and [[searchBoolean]]) and the pruned top-k
+  * ([[searchWand]], [[searchMaxScore]]) are written once against a
   * [[View]]. A bulk root's [[OpenIndex]] is one view (doc_id identity,
   * one leaf); the live segmented root of
   * [[graft.index.SegmentedIndex.open]] is the other ((conv_id, turn_idx)
@@ -58,16 +60,51 @@ object IndexSearch {
     def key: Seq[String]
     def nDocs: Long
     def avgdl: Double
-    def matched(qt: Seq[(Int, String)]): DataFrame
+    /** Per leaf: the shards its resident dictionary maps the live terms
+      * to, decoded, tagged with the leaf and keyed ([[keyed]]) — one
+      * broadcast join of the terms with live df, no dictionary scan and no
+      * Spark job before the scan. */
+    def matched(qt: Seq[(Int, String)]): DataFrame = {
+      val dfs = df(qt.map(_._2).distinct)
+      val qd = broadcast(spark.createDataFrame(qt.distinct.collect {
+        case (q, t) if dfs.contains(t) => (q, t, dfs(t)) }).toDF("query_id", "term", "df"))
+      leaves.zipWithIndex.flatMap { case (l, o) =>
+        val shards = l.index.resident.shardsOf(dfs.keys.toSeq)
+        if (shards.isEmpty) None
+        else Some(PostingBlocks.decodePostings(l.index.postings
+          .where(col("shard").isin(shards: _*)).join(qd, Seq("term"))
+          .withColumn("_leaf", lit(o))))
+      }.reduceOption(_ unionByName _).map(keyed(this, _))
+        .getOrElse(attrs.limit(0).select(lit(0).as("query_id") +: lit("").as("term") +:
+          lit(0L).as("df") +: key.map(col) :+ lit(0).as("tf") :+ lit(0).as("dl"): _*))
+        .select(("query_id" +: "term" +: "df" +: key :+ "tf" :+ "dl").map(col): _*)
+    }
     def attrs: DataFrame
     def df(terms: Seq[String]): Map[String, Long]
     def leaves: Seq[Leaf]
   }
 
-  /** One leaf of a [[View]]: an open index and `live`, the map
-    * (doc_id, key…) of its live instances to the view's key — None when
-    * every doc is live and its doc_id is the key (a bulk root). */
-  final case class Leaf(index: OpenIndex, live: Option[DataFrame])
+  /** One leaf of a [[View]]:
+    *
+    *  - `index`: its open index;
+    *  - `live`: the map (doc_id, key…) of its live instances to the
+    *    view's key — read only for a keyed leaf, one whose index key is
+    *    not the view's ([[isIdentity]] decides, for every reader);
+    *  - `overFetch` (t_s): an upper bound on its dead instances;
+    *  - `kills(key)`: whether a tombstone kills its instance of `key` (the
+    *    key's values in the view's `key` order).
+    *
+    * The last two are driver-side facts the pruned top-k reads
+    * ([[searchWand]]). The defaults are an identity leaf's — a bulk
+    * root's, whose every doc is live and whose doc_id is the key: no live
+    * map, t_s = 0, no kills. A keyed leaf builds `live` on first use only:
+    * the pruned top-k never reads it. */
+  trait Leaf {
+    def index: OpenIndex
+    def live: Option[DataFrame] = None
+    def overFetch: Long = 0L
+    def kills(key: Row): Boolean = false
+  }
 
   /** An opened index: a SNAPSHOT of the root at open time. The relations
     * resolve their files once, so reopen after an in-place rebuild.
@@ -76,7 +113,7 @@ object IndexSearch {
     * use from this instance's own `dictionary` and the root's `blockmeta/`
     * — it grows with the vocabulary, not the corpus. Besides it a request
     * keeps at most its own dictionary rows, and on the single-range path
-    * ([[residentTopK]]) the encoded blocks of ≤ docsPerRange postings.
+    * of [[searchWand]]) the encoded blocks of ≤ docsPerRange postings.
     * Only the resident dictionary joins `blockmeta/`; the plain
     * `dictionary` relation stays unjoined for every other probe. */
   final case class OpenIndex(paths: IndexPaths, dictionary: DataFrame,
@@ -92,34 +129,26 @@ object IndexSearch {
     def key: Seq[String] = Seq("doc_id")
     def nDocs: Long = stats.nDocs
     def avgdl: Double = stats.avgdl
-    def matched(qt: Seq[(Int, String)]): DataFrame =
-      matchedPostings(this, spark.createDataFrame(qt).toDF("query_id", "term"))
     /** The `docs/` attributes minus text (facets and filters never read
       * it; Catalyst prunes further). */
     lazy val attrs: DataFrame = stored.drop("text")
     def df(terms: Seq[String]): Map[String, Long] =
       terms.map(t => t -> resident.row(t)).collect {
         case (t, r) if r >= 0 => t -> resident.df(r) }.toMap
-    lazy val leaves: Seq[Leaf] = Seq(Leaf(this, None))
+    lazy val leaves: Seq[Leaf] = Seq(new Leaf { def index: OpenIndex = OpenIndex.this })
   }
 
-  /** One posting block routed to one (query, doc-range) group (WAND
-    * input). A block spanning a range boundary is routed to EVERY range it
-    * overlaps; the range-bounded traversal ignores its out-of-range
-    * postings, so each doc is scored exactly once (in its own range). */
-  final case class QBlockRow(query_id: Int, range_id: Int, term: String,
+  /** One posting block routed to one (query, leaf, doc-range) group
+    * (range-parallel WAND input). `df` is the term's live df and
+    * `block_max_score` the stored max scaled to an upper bound under the
+    * live scoring function (see [[searchWand]]). A block spanning a range
+    * boundary is routed to EVERY range it overlaps; the range-bounded
+    * traversal ignores its out-of-range postings, so each doc is scored
+    * exactly once (in its own range). */
+  final case class QBlockRow(query_id: Int, leaf: Int, range_id: Int, term: String,
                              df: Long, first_doc: Long, last_doc: Long,
                              doc_gaps: Array[Byte], tfs: Array[Byte],
                              dls: Array[Byte], block_max_score: Double)
-      extends BlockMaxWand.EncodedBlock
-
-  /** A persisted posting block with its term's df — the driver path's
-    * input. */
-  final case class TermBlock(term: String, df: Long, first_doc: Long,
-                             last_doc: Long, doc_gaps: Array[Byte],
-                             tfs: Array[Byte], dls: Array[Byte],
-                             block_max_score: Double)
-      extends BlockMaxWand.EncodedBlock
 
   final case class ResultRow(query_id: Int, rank: Int, doc_id: Long,
                              score: Double)
@@ -215,9 +244,14 @@ object IndexSearch {
   /** The live maps of `v`'s keyed leaves, each tagged with its `_leaf`;
     * None for a view of identity leaves. */
   private def liveMaps(v: View): Option[DataFrame] =
-    v.leaves.zipWithIndex
+    v.leaves.zipWithIndex.filterNot { case (l, _) => isIdentity(v, l) }
       .flatMap { case (l, o) => l.live.map(_.withColumn("_leaf", lit(o))) }
       .reduceOption(_ unionByName _)
+
+  /** Whether `l`'s doc_id already is `v`'s key (a bulk root's one leaf):
+    * its live map is not read, its candidates need no key job. Decided
+    * from the keys alone, so asking never builds a keyed leaf's `live`. */
+  private def isIdentity(v: View, l: Leaf): Boolean = l.index.key == v.key
 
   /** A typed empty (query_id, key…, _score) frame of `v` — runs no job. */
   private def noScores(v: View): DataFrame =
@@ -1176,28 +1210,18 @@ object IndexSearch {
     * bit-for-bit). Expanded and literal terms dedupe per query, exactly
     * like the analyzer's distinct-term pinning for plain queries.
     *
-    * Scale shape: the dictionary probe is one range predicate per prefix
-    * (StringStartsWith — pushed to the parquet dictionary scan), the
-    * per-prefix collect is `limit(maxExpansions + 1)`-bounded BEFORE it
-    * reaches the driver, and an over-broad pattern ("a*" on a billion-term
-    * dictionary) fails loudly instead of materializing its expansion. */
+    * Scale shape: each distinct prefix `p` expands as the wildcard `p*`
+    * ([[MultiTerm.expandWildcards]]) — a walk of the resident dictionary
+    * from `p` on the driver, no Spark job — and an over-broad pattern
+    * ("a*" on a billion-term dictionary) fails loudly instead of scoring
+    * its expansion. */
   def searchPrefix(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
                    maxExpansions: Int = DefaultMaxExpansions): DataFrame = {
-    val spark = idx.spark
-    import spark.implicits._
     val parsed = queries.map { case (qid, t) => (qid, parsePrefixQuery(t)) }
-    val expansions: Map[String, Seq[String]] =
-      parsed.flatMap(_._2._2).distinct.map { p =>
-        val terms = idx.dictionary.where(col("term").startsWith(p))
-          .select("term").limit(maxExpansions + 1)
-          .collect().map(_.getString(0)).toSeq
-        require(terms.size <= maxExpansions,
-          s"prefix '$p*' expands to more than maxExpansions=$maxExpansions " +
-            "dictionary terms (Lucene TooManyClauses analog)")
-        p -> terms
-      }.toMap
+    val expansions = MultiTerm.expandWildcards(idx,
+      parsed.flatMap(_._2._2).map(_ + "*"), maxExpansions)
     val qtRows = parsed.flatMap { case (qid, (terms, prefixes)) =>
-      (terms ++ prefixes.flatMap(expansions)).distinct.map(t => (qid, t))
+      (terms ++ prefixes.flatMap(p => expansions(p + "*"))).distinct.map(t => (qid, t))
     }
     searchExpandedTerms(idx, qtRows, k)
   }
@@ -1207,15 +1231,8 @@ object IndexSearch {
     * ([[searchPrefix]], [[MultiTerm.searchWildcard]],
     * [[MultiTerm.searchFuzzy]]). */
   private[search] def searchExpandedTerms(idx: OpenIndex,
-      qtRows: Seq[(Int, String)], k: Int): DataFrame = {
-    val spark = idx.spark
-    import spark.implicits._
-    if (qtRows.isEmpty)
-      return Seq.empty[ResultRow].toDF()
-        .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-    Search.rank(
-      scoredDocs(idx, qtRows.toDF("query_id", "term"), conjunctive = false), k)
-  }
+      qtRows: Seq[(Int, String)], k: Int): DataFrame =
+    Search.rank(scoredDocs(idx, qtRows, conjunctive = false), k)
 
   /** Lucene SpanFirstQuery(SpanTermQuery(term), end): matches docs whose
     * term occurs at a token position < `end` (0-based — "in the first
@@ -2152,16 +2169,53 @@ object IndexSearch {
     * savings grow with the fan-out. */
   private final val MinRangesForPrune = 16L
 
-  /** (query, term, resident dictionary row) of each query's distinct
-    * in-vocabulary terms — looked up on the driver, no Spark job. */
-  private def dictRows(dict: ResidentDict,
-                       queries: Seq[(Int, String)]): Seq[(Int, String, Int)] =
-    queries.flatMap { case (qid, text) =>
-      graft.analysis.Analyzer.tokenize(text).map(t => (qid, t, dict.row(t)))
-    }.filter(_._3 >= 0).distinct
+  /** The driver-side inputs of one pruned top-k request over a view,
+    * derived without a Spark job:
+    *
+    *  - `terms`: per query id (ascending) its distinct terms that some
+    *    live doc holds, in query order;
+    *  - `df`: their live df;
+    *  - `leafTerms`: per leaf, each of those terms it holds → (its
+    *    dictionary row, the upper and the lower bound-correction factor —
+    *    see [[searchWand]]);
+    *  - `heap`: per leaf, the traversal heap `kk` + t_s;
+    *  - `seeds`: per query the θ seed for `kk` from the leaves' stored top
+    *    block maxes, scaled by the lower factor — empty unless `seeded`,
+    *    i.e. no leaf can hold a dead instance. */
+  private final case class TopKInputs(terms: Seq[(Int, Seq[String])],
+      df: Map[String, Long], leafTerms: IndexedSeq[Map[String, (Int, Double, Double)]],
+      heap: IndexedSeq[Int], seeded: Boolean, seeds: Map[Int, Double])
 
-  /** Candidate blocks for the WAND traversal, routed per (query, range),
-    * plus the per-query θ seed. Exposed for WandSpec's block-count
+  private def topKInputs(v: View, queries: Seq[(Int, String)], kk: Int): TopKInputs = {
+    val parsed = queries.groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (q, texts) =>
+      (q, texts.flatMap(graft.analysis.Analyzer.tokenize).distinct) }
+    val df = v.df(parsed.flatMap(_._2).distinct)
+    val terms = parsed.map { case (q, ts) => (q, ts.filter(df.contains)) }.filter(_._2.nonEmpty)
+    val dicts = v.leaves.map(_.index.resident).toIndexedSeq
+    val leafTerms = v.leaves.toIndexedSeq.zip(dicts).map { case (l, d) =>
+      val st = l.index.stats
+      val a = v.avgdl / st.avgdl
+      df.keys.map(t => t -> d.row(t)).collect { case (t, r) if r >= 0 =>
+        val c = Bm25.idfValue(df(t), v.nDocs) / Bm25.idfValue(d.df(r), st.nDocs)
+        t -> ((r, c * math.max(1.0, a), c * math.min(1.0, a)))
+      }.toMap
+    }
+    val overFetch = v.leaves.map(_.overFetch).toIndexedSeq
+    val seeded = overFetch.forall(_ == 0L)
+    // the kk-th largest lower-corrected stored max of a term, over leaves
+    val kth: Map[String, Double] = if (!seeded) Map.empty else df.keys.flatMap { t =>
+      leafTerms.indices.flatMap(o => leafTerms(o).get(t).toSeq.flatMap { case (r, _, lo) =>
+        dicts(o).topMaxes(r).map(_ * lo) }).sorted(Ordering[Double].reverse)
+        .lift(kk - 1).map(t -> _)
+    }.toMap
+    TopKInputs(terms, df, leafTerms,
+      overFetch.map(t => kk + math.min(t, Int.MaxValue.toLong - kk).toInt), seeded,
+      terms.flatMap { case (q, ts) => ts.flatMap(kth.get).maxOption.map(q -> _) }.toMap)
+  }
+
+  /** Candidate blocks for the range-parallel traversal, routed per
+    * (query, leaf, range), plus the per-query θ seed and the range size.
+    * None when no query has a live term. Exposed for WandSpec's block-count
     * assertion; `prune=false` disables the θ-seed range prune (routing
     * stays precise).
     *
@@ -2169,56 +2223,66 @@ object IndexSearch {
     * that actually CONTAIN one of its postings — the doc ids are decoded
     * map-side (codegen'd varint expression, pre-shuffle) and distinct
     * range ids exploded, so a sparse term's block spanning the whole doc
-    * space shuffles to ≤ block_len ranges, not nDocs/rangeSize.
+    * space shuffles to ≤ block_len ranges, not nDocs/rangeSize. Ranges
+    * split each leaf's own doc-id space.
     *
     * PRUNING (dictionary/block max-score at query time): θ_seed(q) = the
-    * largest over q's terms of the k-th largest block_max_score of that
-    * term — k distinct docs (blocks of one term are doc-disjoint) each
-    * achieve their block's max from that term alone and other terms only
+    * largest over q's terms of the k-th largest lower-corrected block max
+    * of that term — k distinct live docs each score at least their
+    * block's corrected max from that term alone and other terms only
     * add, so θ_seed is a true lower bound on the final k-th best raw
-    * score. A (query, range) group whose upper bound — Σ over terms of the
-    * term's max block-max among blocks overlapping the range (span-based,
-    * an over-estimate of the precise routing) — falls below θ_seed − Eps
-    * cannot produce a global top-k doc and ships nothing. On a hot+rare
-    * query the rare term's high seed erases the hot term's blocks
-    * everywhere the rare term is absent. Both passes are metadata-only
-    * (columnar scan of the pruned shards, no binary columns). Skipped when
-    * the corpus has a single range (sandbox scale): zero extra jobs.
+    * score. A (query, leaf, range) group whose upper bound — Σ over terms
+    * of the term's max upper-corrected block max among the leaf's blocks
+    * overlapping the range (span-based, an over-estimate of the precise
+    * routing) — falls below θ_seed − Eps cannot produce a global top-k
+    * doc and ships nothing. On a hot+rare query the rare term's high seed
+    * erases the hot term's blocks everywhere the rare term is absent.
+    * Both passes are metadata-only (columnar scan of the pruned shards,
+    * no binary columns). Skipped when the leaves span fewer than
+    * [[MinRangesForPrune]] ranges (sandbox scale): zero extra jobs. No
+    * seed, and so no prune, while a leaf can hold a dead instance.
     *
     * SEED SOURCE: for k ≤ [[graft.index.PostingBlocks.TopBlockMaxes]] the
-    * resident dictionary's stored top block maxes give θ_seed with no
+    * resident dictionaries' stored top block maxes give θ_seed with no
     * Spark job, and it is passed even when the prune is skipped. Past the
     * stored maxes the prune derives it with one per-batch metadata window
-    * job over the routed blocks; without the prune the seed is −∞. */
-  private[graft] def wandBlocks(idx: OpenIndex, queries: Seq[(Int, String)],
+    * job over the routed blocks. */
+  private[graft] def wandBlocks(v: View, queries: Seq[(Int, String)],
                                 k: Int, docsPerRange: Long,
                                 prune: Boolean = true)
+      : Option[(org.apache.spark.sql.Dataset[QBlockRow], Map[Int, Double], Long)] =
+    routedBlocks(v, topKInputs(v, queries, k), k, docsPerRange, prune)
+
+  private def routedBlocks(v: View, in: TopKInputs, k: Int, docsPerRange: Long,
+                           prune: Boolean)
       : Option[(org.apache.spark.sql.Dataset[QBlockRow], Map[Int, Double], Long)] = {
-    val spark = idx.spark
+    if (in.terms.isEmpty) return None
+    val spark = v.spark
     import spark.implicits._
-    val dict = idx.resident
-    val qtRows = dictRows(dict, queries)
-    if (qtRows.isEmpty) return None
-    val shards = qtRows.map(r => dict.shard(r._3)).distinct
-    val qd = qtRows.map { case (qid, t, r) => (qid, t, dict.df(r)) }
-      .toDF("query_id", "term", "df")
-    // θ_seed(q) from the stored top block maxes ([[ResidentDict.seed]]);
-    // None when k passes them
-    val driverSeeds: Option[Map[Int, Double]] =
-      if (k > graft.index.PostingBlocks.TopBlockMaxes) None
-      else Some(qtRows.groupMap(_._1)(_._3)
-        .map { case (qid, rows) => qid -> dict.seed(rows, k) }
-        .filter(_._2 > Double.NegativeInfinity))
-    val rangeSize = math.max(1L, math.min(docsPerRange, idx.stats.nDocs))
-    val nRanges = (idx.stats.nDocs + rangeSize - 1) / rangeSize
+    val maxDocs = v.leaves.map(_.index.stats.nDocs).max
+    val rangeSize = math.max(1L, math.min(docsPerRange, maxDocs))
+    val nRanges = (maxDocs + rangeSize - 1) / rangeSize
     // a pathological caller-supplied docsPerRange on a huge corpus would
     // wrap the int range id and silently mis-route blocks — fail loudly
     require(nRanges <= Int.MaxValue,
       s"docsPerRange=$docsPerRange yields $nRanges ranges over " +
-        s"${idx.stats.nDocs} docs — exceeds Int range ids")
-    val base = idx.postings
-      .where(col("shard").isin(shards: _*))
-      .join(broadcast(qd), Seq("term"))
+        s"$maxDocs docs — exceeds Int range ids")
+    // per leaf: its postings of the batch's terms, each with the live df
+    // and the term's upper (`block_max_score`) and lower (`_low`)
+    // corrected block max
+    val base = in.leafTerms.indices.filter(in.leafTerms(_).nonEmpty).map { o =>
+      val idx = v.leaves(o).index
+      val qd = in.terms.flatMap { case (q, ts) => ts.flatMap(t =>
+        in.leafTerms(o).get(t).map { case (_, up, lo) => (q, t, in.df(t), up, lo) }) }
+        .toDF("query_id", "term", "df", "_cup", "_clo")
+      idx.postings
+        .where(col("shard").isin(idx.resident.shardsOf(in.leafTerms(o).keys.toSeq): _*))
+        .join(broadcast(qd), Seq("term"))
+        .select(col("query_id"), lit(o).as("leaf"), col("term"), col("df"),
+          col("first_doc"), col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
+          (col("block_max_score") * col("_cup")).as("block_max_score"),
+          (col("block_max_score") * col("_clo")).as("_low"))
+    }.reduce(_ unionByName _)
     // exact integer range id: (d - d mod rs) / rs — the numerator is an
     // exact multiple of rs, so the double division is exact (plain d / rs
     // can cross an integer boundary for huge doc ids)
@@ -2234,43 +2298,44 @@ object IndexSearch {
           graft.index.codec.varintDeltaDecode(col("doc_gaps")), d => rangeOf(d))))))
 
     val (routed, seeds) =
-      if (!prune || nRanges < MinRangesForPrune)
+      if (!prune || !in.seeded || nRanges < MinRangesForPrune)
         // the stored θ seed is free — pass it even when the range prune
         // is gated off (topKRange starts its heap at a true lower bound;
         // results unchanged, work only shrinks)
-        (routed0, driverSeeds.getOrElse(Map.empty[Int, Double]))
+        (routed0, in.seeds)
       else {
-        val seedMap = driverSeeds.getOrElse {
-          // k beyond the stored top maxes: per-batch metadata window job
-          import org.apache.spark.sql.expressions.Window
-          val wqt = Window.partitionBy("query_id", "term")
-            .orderBy(col("block_max_score").desc)
-          base.select("query_id", "term", "block_max_score")
-            .withColumn("_r", row_number().over(wqt))
-            .where(col("_r") === k) // k-th largest block max of the term
-            .groupBy("query_id").agg(max("block_max_score").as("_seed"))
-            .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        }
+        val seedMap =
+          if (k <= graft.index.PostingBlocks.TopBlockMaxes) in.seeds
+          else {
+            // k beyond the stored top maxes: per-batch metadata window job
+            import org.apache.spark.sql.expressions.Window
+            val wqt = Window.partitionBy("query_id", "term").orderBy(col("_low").desc)
+            base.select("query_id", "term", "_low")
+              .withColumn("_r", row_number().over(wqt))
+              .where(col("_r") === k) // k-th largest block max of the term
+              .groupBy("query_id").agg(max("_low").as("_seed"))
+              .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+          }
         if (seedMap.isEmpty) (routed0, seedMap)
         else {
-          val meta = base.select(col("query_id"), col("term"),
+          val meta = base.select(col("query_id"), col("leaf"), col("term"),
             col("block_max_score"),
             rangeOf(col("first_doc")).as("_r0"), rangeOf(col("last_doc")).as("_r1"))
           val local = meta.where(col("_r1") - col("_r0") < lit(GlobalSpanRanges))
             .withColumn("range_id", explode(sequence(col("_r0"), col("_r1"))))
-            .groupBy("query_id", "range_id", "term")
+            .groupBy("query_id", "leaf", "range_id", "term")
             .agg(max("block_max_score").as("_m"))
-            .groupBy("query_id", "range_id").agg(sum("_m").as("_lb"))
+            .groupBy("query_id", "leaf", "range_id").agg(sum("_m").as("_lb"))
           val global = meta.where(col("_r1") - col("_r0") >= lit(GlobalSpanRanges))
-            .groupBy("query_id", "term").agg(max("block_max_score").as("_m"))
-            .groupBy("query_id").agg(sum("_m").as("_gb"))
+            .groupBy("query_id", "leaf", "term").agg(max("block_max_score").as("_m"))
+            .groupBy("query_id", "leaf").agg(sum("_m").as("_gb"))
           val seedsDf = seedMap.toSeq.toDF("query_id", "_seed")
           // `local` scales with |queries| × populated ranges — at design
           // scale that is NOT broadcastable, so let Catalyst pick (it
           // auto-broadcasts when small); `global`/`seeds` are O(|queries|)
           val kept = routed0
-            .join(local, Seq("query_id", "range_id"), "left")
-            .join(broadcast(global), Seq("query_id"), "left")
+            .join(local, Seq("query_id", "leaf", "range_id"), "left")
+            .join(broadcast(global), Seq("query_id", "leaf"), "left")
             .join(broadcast(seedsDf), Seq("query_id"), "left")
             .where(coalesce(col("_lb"), lit(0.0)) + coalesce(col("_gb"), lit(0.0)) >=
               coalesce(col("_seed"), lit(Double.NegativeInfinity)) - lit(BlockMaxWand.Eps))
@@ -2279,34 +2344,86 @@ object IndexSearch {
         }
       }
     val ds = routed
-      .select(col("query_id"), col("range_id"), col("term"), col("df"),
+      .select(col("query_id"), col("leaf"), col("range_id"), col("term"), col("df"),
         col("first_doc"), col("last_doc"), col("doc_gaps"), col("tfs"),
         col("dls"), col("block_max_score"))
       .as[QBlockRow]
     Some((ds, seeds, rangeSize))
   }
 
-  /** Block-max WAND fast path (disjunctive top-k). Same output as
-    * [[search]] — the WandSpec property.
+  /** Block-max WAND top-k (disjunctive) over a view — the same output as
+    * [[search]] over it (the WandSpec and SegmentSpec properties), with
+    * the view's key and absolute ranks from `start`. Written once over
+    * the leaves: a bulk root is one identity leaf, the live segmented
+    * root of [[graft.index.SegmentedIndex.open]] one leaf per segment, and
+    * each (query, leaf) is traversed in the leaf's own doc-id space —
+    * Lucene's per-`LeafReaderContext` collector with index-wide
+    * statistics, and Block-Max WAND (Ding & Suel, SIGIR 2011) is a
+    * per-leaf algorithm.
     *
-    * A batch that fits one range's working set is answered on the driver
-    * with one Spark job ([[residentTopK]]). Otherwise parallelism is
-    * across (query, doc-range) pairs, NOT one task per query: the corpus
-    * doc-id space splits into fixed ranges of `docsPerRange`, each
-    * candidate block routes PRECISELY to the ranges containing its
-    * postings (see [[wandBlocks]]), the range-bounded WAND traversal
-    * ([[BlockMaxWand.topKRange]]) produces that range's exact top-k seeded
-    * with the per-query θ lower bound, and the per-range top-k's
-    * rank-merge globally through the same pinned ordering ([[Search.rank]]
-    * — a window over ≤ ranges×k candidate rows per query). Exactness:
-    * BM25 is additive per doc, every doc lives in exactly one range, and a
-    * doc in the global top-k is necessarily in its range's top-k under the
-    * pinned order; the θ seed and the range prune only ever discard docs
-    * provably below the final k-th score. */
-  def searchWand(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
+    * SCORING INPUTS, derived without decoding postings: the live df of
+    * `v.df` and the live N/avgdl of the view. A leaf's stored block maxes
+    * were computed with its build-time (df_b, N_b, avgdl_b); for the live
+    * function (df_l, N_l, avgdl_l) every posting satisfies
+    * s_live/s_build = (idf_l/idf_b)·g(tf, dl), where
+    * g = (tf + K_b(dl))/(tf + K_l(dl)) is monotone in dl with range
+    * bounded by [min(1, avgdl_l/avgdl_b), max(1, avgdl_l/avgdl_b)] over
+    * tf ≥ 1, dl ≥ 1 (K(dl) = k1(1−b+b·dl/avg) is affine in dl, so the
+    * ratio's extrema sit at dl → {1, ∞} and tf → {1, ∞}). Scaling each
+    * stored max by the UPPER factor (idf_l/idf_b)·max(1, avgdl_l/avgdl_b)
+    * therefore yields a valid upper bound — over-estimates only inhibit
+    * skipping, never break exactness. An identity leaf's factors are
+    * exactly 1.0, so its bounds and scores are the stored ones, bit for
+    * bit.
+    *
+    * θ SEED: the stored top block maxes scaled by the LOWER factor
+    * (idf_l/idf_b)·min(1, avgdl_l/avgdl_b). Used only when no leaf can
+    * hold a dead instance (every leaf's t_s is 0 — always so for a bulk
+    * root, and for a segmented root exactly when its manifest lists no
+    * tombstone): then every stored max's doc is live and keys are
+    * globally distinct (an upsert always writes a tombstone), so the k-th
+    * largest lower-corrected max of a term witnesses k doc-disjoint live
+    * docs scoring at least it.
+    *
+    * TOMBSTONE GUARD: killed instances are invisible to the traversal's
+    * metadata, so they can occupy heap slots; each (query, leaf)
+    * traversal keeps start + k + t_s candidates, where t_s
+    * ([[Leaf.overFetch]]) bounds the leaf's dead instances, and killed
+    * candidates ([[Leaf.kills]]) are dropped before the global
+    * rank-merge: any live doc outside a leaf's start + k + t_s best has
+    * ≥ start + k live docs ranked above it in its own leaf, so it cannot
+    * enter the global top start + k. t_s is bounded by the appends since
+    * the last compaction (the documented segment-count invariant); heavy
+    * delete workloads degrade toward larger heaps, never toward wrong
+    * answers.
+    *
+    * PATHS: a batch within one range's working set — the leaves' doc
+    * counts and the stored df of its terms each sum to ≤ docsPerRange —
+    * runs ONE Spark job collecting its blocks from every leaf and
+    * traverses each (query, leaf) on the driver. A larger batch runs the
+    * range-parallel traversal: each leaf's doc-id space splits into
+    * fixed ranges of `docsPerRange`, each candidate block routes
+    * PRECISELY to the ranges containing its postings ([[wandBlocks]]),
+    * the range-bounded traversal ([[BlockMaxWand.topKRange]]) produces
+    * that range's exact top-k seeded with the per-query θ lower bound,
+    * and each (query, leaf) keeps its best start + k + t_s across ranges
+    * (BM25 is additive per doc and every doc lives in exactly one range,
+    * so a doc in the global top-k is in its range's top-k under the pinned
+    * order). Either way a keyed view then resolves the candidates' keys
+    * with ONE job over the candidate leaves' `docs/` keys; an identity
+    * leaf's doc id is its key. The candidates are ranked on the driver in
+    * [[Search.rank]]'s pinned order into a local frame, whose `collect`
+    * runs no job. A request with only out-of-vocabulary terms runs no job
+    * at all.
+    *
+    * DRIVER MEMORY: besides each leaf's resident dictionary (see
+    * [[OpenIndex]]), a request holds its own blocks on the driver path
+    * (≤ docsPerRange postings) and ≤ |queries| × leaves × (start + k + t_s)
+    * candidates on either path. */
+  def searchWand(v: View, queries: Seq[(Int, String)], k: Int = 10,
                  docsPerRange: Long = DefaultDocsPerRange,
                  start: Int = 0): DataFrame =
-    traverseTopK(idx, queries, k, docsPerRange, start, BlockMaxWand.topKRange)
+    traverseTopK(v, queries, k, docsPerRange, start, BlockMaxWand.topKRange)
 
   /** MaxScore fast path (disjunctive top-k) — same output as [[search]]
     * and [[searchWand]], same paths and θ seeds; only the within-range
@@ -2315,78 +2432,133 @@ object IndexSearch {
     * lets a caller pick per workload: MaxScore tends to win on queries
     * mixing one hot low-impact term with selective terms (the hot list is
     * probed, never walked); WAND on uniformly selective terms. */
-  def searchMaxScore(idx: OpenIndex, queries: Seq[(Int, String)], k: Int = 10,
+  def searchMaxScore(v: View, queries: Seq[(Int, String)], k: Int = 10,
                      docsPerRange: Long = DefaultDocsPerRange,
                      start: Int = 0): DataFrame =
-    traverseTopK(idx, queries, k, docsPerRange, start, MaxScore.topKRange)
+    traverseTopK(v, queries, k, docsPerRange, start, MaxScore.topKRange)
 
-  private def traverseTopK(idx: OpenIndex, queries: Seq[(Int, String)], k: Int,
+  private def traverseTopK(v: View, queries: Seq[(Int, String)], k: Int,
                            docsPerRange: Long, start: Int,
-                           traverse: BlockMaxWand.RangeTopK): DataFrame =
-    residentTopK(idx, queries, k, docsPerRange, start, traverse).getOrElse {
-      val spark = idx.spark
-      import spark.implicits._
-      // pagination: every internal bound (θ seed, per-range heap) must
-      // hold the TOP start+k — an offset page still needs the full prefix
-      val (nDocs, avgdl, kk) = (idx.stats.nDocs, idx.stats.avgdl, start + k)
-      wandBlocks(idx, queries, kk, docsPerRange) match {
-        case None => Seq.empty[ResultRow].toDF()
-        case Some((blocks, seeds, rs)) =>
-          val candidates = blocks.groupByKey(r => (r.query_id, r.range_id))
-            .flatMapGroups { (key: (Int, Int), rows: Iterator[QBlockRow]) =>
-              val (qid, rid) = key
-              // bounded by the range width: ≤ |terms| × rangeSize/blockSize blocks
-              val lo = rid.toLong * rs
-              traverse(BlockMaxWand.termPostings(rows).values.toSeq, kk, nDocs,
-                avgdl, lo, lo + rs, seeds.getOrElse(qid, Double.NegativeInfinity))
-                .iterator.map { case (doc, s) => (qid, doc, s) }
-            }
-            .toDF("query_id", "doc_id", "_score")
-          Search.rank(candidates, k, start)
-      }
-    }
-
-  /** The single-range path of [[searchWand]] and [[searchMaxScore]], taken
-    * when a batch fits one range's working set: the corpus is one doc
-    * range (nDocs ≤ docsPerRange) and the df of the batch's distinct terms
-    * sums to ≤ docsPerRange. The terms, their shards and each query's θ
-    * seed come from the resident dictionary; ONE Spark job collects the
-    * batch's posting blocks (`shard ∈ S ∧ term ∈ T`); the traversal runs
-    * on the driver, which returns the ranked rows in the pinned order
-    * (round(score,RankScale) DESC, doc ASC), so ranks are assigned here and
-    * the result is a local frame whose `collect` runs no job. A batch with
-    * only out-of-vocabulary terms runs no job at all. The seed is −∞ when
-    * start + k passes the stored top block maxes — the answer is exact
-    * either way. None when the batch does not fit: the caller takes the
-    * range-parallel path. */
-  private def residentTopK(idx: OpenIndex, queries: Seq[(Int, String)], k: Int,
-                           docsPerRange: Long, start: Int,
-                           traverse: BlockMaxWand.RangeTopK): Option[DataFrame] = {
-    val spark = idx.spark
+                           traverse: BlockMaxWand.RangeTopK): DataFrame = {
+    // pagination: every internal bound (θ seed, per-leaf heap) must hold
+    // the TOP start+k — an offset page still needs the full prefix
+    val spark = v.spark
     import spark.implicits._
-    val dict = idx.resident
-    val qtRows = dictRows(dict, queries)
-    val rowOf = qtRows.map(r => r._2 -> r._3).toMap
-    if (idx.stats.nDocs > docsPerRange ||
-        rowOf.valuesIterator.map(dict.df).sum > docsPerRange) return None
-    val lists =
-      if (rowOf.isEmpty) Map.empty[String, BlockMaxWand.TermPostings]
-      else BlockMaxWand.termPostings(idx.postings
-        .where(col("shard").isin(rowOf.values.map(dict.shard).toSeq.distinct: _*) &&
-          col("term").isin(rowOf.keys.toSeq: _*))
-        .select(col("term"),
-          element_at(typedLit(rowOf.map { case (t, r) => t -> dict.df(r) }), col("term")).as("df"),
-          col("first_doc"), col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
-          col("block_max_score"))
-        .as[TermBlock].collect().iterator)
     val kk = start + k
-    val byQuery = qtRows.groupMap(_._1)(r => (r._2, r._3)).toSeq.sortBy(_._1)
-    Some(byQuery.flatMap { case (qid, terms) =>
-      traverse(terms.flatMap(t => lists.get(t._1)), kk, idx.stats.nDocs, idx.stats.avgdl,
-        0L, Long.MaxValue, dict.seed(terms.map(_._2), kk))
-        .iterator.zipWithIndex.collect { case ((doc, s), i) if i >= start =>
-          ResultRow(qid, i + 1, doc, BlockMaxWand.round(s, Bm25.OutScale))
+    val in = topKInputs(v, queries, kk)
+    val leaves = v.leaves.toIndexedSeq
+    val (nL, avgL, heap) = (v.nDocs, v.avgdl, in.heap)
+    val fits = leaves.map(_.index.stats.nDocs).sum <= docsPerRange &&
+      in.leafTerms.indices.map(o => in.leafTerms(o).values
+        .map(t => leaves(o).index.resident.df(t._1)).sum).sum <= docsPerRange
+    val candidates: Seq[(Int, Int, Long, Double)] =
+      if (in.terms.isEmpty) Nil
+      else if (fits) {
+        // ONE job collects the batch's blocks from every leaf holding its
+        // terms; their maxes are scaled to the upper bound on the driver
+        val lists: Map[(Int, String), BlockMaxWand.TermPostings] =
+          in.leafTerms.indices.filter(in.leafTerms(_).nonEmpty).map { o =>
+            val (idx, ts) = (leaves(o).index, in.leafTerms(o).keys.toSeq)
+            idx.postings
+              .where(col("shard").isin(idx.resident.shardsOf(ts): _*) && col("term").isin(ts: _*))
+              .select(lit(o).as("leaf"), col("term"), col("first_doc"),
+                col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
+                col("block_max_score"))
+          }.reduce(_ unionByName _).collect()
+            .groupBy(r => (r.getInt(0), r.getString(1))).map { case ((o, t), rs) =>
+              val up = in.leafTerms(o)(t)._2
+              (o, t) -> BlockMaxWand.TermPostings(in.df(t), rs.sortBy(_.getLong(2)).map(r =>
+                BlockMaxWand.BlockRef(r.getLong(2), r.getLong(3), r.getDouble(7) * up,
+                  r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6))))
+            }
+        for {
+          (q, ts) <- in.terms
+          o <- leaves.indices
+          terms = ts.flatMap(t => lists.get((o, t)))
+          if terms.nonEmpty
+          (doc, s) <- traverse(terms, heap(o), nL, avgL, 0L, Long.MaxValue,
+            in.seeds.getOrElse(q, Double.NegativeInfinity))
+        } yield (q, o, doc, s)
+      } else {
+        val Some((blocks, seeds, rs)) = routedBlocks(v, in, kk, docsPerRange, prune = true)
+        // a leaf's start + k + t_s best across its ranges bound what the
+        // rank-merge can use (the tombstone guard), so at most
+        // |queries| × leaves × (start + k + t_s) candidates reach the driver
+        val best = org.apache.spark.sql.expressions.Window.partitionBy("query_id", "leaf")
+          .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
+        blocks.groupByKey(r => (r.query_id, r.leaf, r.range_id))
+          .flatMapGroups { (key: (Int, Int, Int), rows: Iterator[QBlockRow]) =>
+            val (qid, o, rid) = key
+            // bounded by the range width: ≤ |terms| × rangeSize/blockSize blocks
+            val lo = rid.toLong * rs
+            traverse(termPostings(rows), heap(o), nL, avgL,
+              lo, lo + rs, seeds.getOrElse(qid, Double.NegativeInfinity))
+              .iterator.map { case (doc, s) => (qid, o, doc, s) }
+          }.toDF("query_id", "leaf", "doc_id", "_score")
+          .withColumn("_r", row_number().over(best))
+          .where(col("_r") <= element_at(typedLit(heap), col("leaf") + 1))
+          .select("query_id", "leaf", "doc_id", "_score")
+          .as[(Int, Int, Long, Double)].collect().toSeq
+      }
+    rankCandidates(v, candidates, k, start)
+  }
+
+  /** A traversal group's blocks as one doc-ascending posting list per
+    * term (a term's blocks are doc-disjoint — guaranteed by the build). */
+  private def termPostings(rows: Iterator[QBlockRow]): Seq[BlockMaxWand.TermPostings] =
+    rows.toVector.groupBy(_.term).values.map { trs =>
+      val sorted = trs.sortBy(_.first_doc)
+      BlockMaxWand.TermPostings(sorted.head.df, sorted.map(r => BlockMaxWand.BlockRef(
+        r.first_doc, r.last_doc, r.block_max_score, r.doc_gaps, r.tfs, r.dls)).toArray)
+    }.toSeq
+
+  /** The ranked tail of [[traverseTopK]]: (query, leaf, leaf-local doc,
+    * raw score) candidates → keys — an identity leaf's doc id, a keyed
+    * leaf's with ONE job over the candidate leaves' `docs/` keys — minus
+    * the instances a tombstone kills, ranked per query on the driver in
+    * [[Search.rank]]'s pinned order: round(score, RankScale) DESC, then
+    * the key ascending as Spark orders it. A local frame (its `collect`
+    * runs no job) of (query_id, rank, key…, score). */
+  private def rankCandidates(v: View, candidates: Seq[(Int, Int, Long, Double)],
+                             k: Int, start: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val leaves = v.leaves.toIndexedSeq
+    def identity(o: Int) = isIdentity(v, leaves(o))
+    val keyRows: Map[(Int, Long), Row] = {
+      val byLeaf = candidates.groupMap(_._2)(_._3).filter { case (o, _) => !identity(o) }
+      if (byLeaf.isEmpty) Map.empty
+      else byLeaf.map { case (o, ids) =>
+        leaves(o).index.stored.where(col("doc_id").isin(ids.distinct: _*))
+          .select(lit(o).as("leaf") +: col("doc_id") +: v.key.map(col): _*)
+      }.reduce(_ unionByName _).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> Row.fromSeq(r.toSeq.drop(2))).toMap
+    }
+    val rows = candidates.flatMap { case (q, o, doc, s) =>
+      val key = if (identity(o)) Row(doc) else keyRows((o, doc))
+      if (leaves(o).kills(key)) None else Some((q, key, s))
+    }.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, hits) =>
+      hits.sortBy { case (_, key, s) => (-BlockMaxWand.round(s, Bm25.RankScale), key) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, KeyOrder))
+        .take(start + k).zipWithIndex.drop(start).map { case ((_, key, s), i) =>
+          Row.fromSeq((q +: (i + 1) +: key.toSeq) :+ BlockMaxWand.round(s, Bm25.OutScale))
         }
-    }.toDF())
+    }
+    val keyFields =
+      if (leaves.isEmpty) v.key.map(v.attrs.schema(_))
+      else if (identity(0)) v.key.map(StructField(_, LongType, nullable = false))
+      else v.key.map(leaves(0).index.stored.schema(_))
+    v.spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      StructField("query_id", IntegerType, nullable = false) +:
+        StructField("rank", IntegerType, nullable = false) +: keyFields :+
+        StructField("score", DoubleType, nullable = false)))
+  }
+
+  /** Spark's ascending order of key values: strings by their UTF-8 bytes. */
+  private object KeyOrder extends Ordering[Row] {
+    def compare(a: Row, b: Row): Int = a.toSeq.iterator.zip(b.toSeq.iterator).map {
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    }.find(_ != 0).getOrElse(0)
   }
 }

@@ -22,10 +22,12 @@ import org.apache.spark.sql.types.StructType
   * is a no-op. There is no state from which "first-ever batch" and
   * "crashed mid-merge" can be confused, because nothing mutates in place.
   *
-  * Query the streamed index through [[SegmentedIndex.open]] (or
-  * [[SegmentedIndex.searchWand]]); run
-  * [[SegmentedIndex.compact]] periodically to fold segments into a
-  * unified global-id index.
+  * Query the streamed index through [[SegmentedIndex.open]]: every view
+  * shape of [[graft.search.IndexSearch]] serves it, the pruned top-k
+  * ([[graft.search.IndexSearch.searchWand]]) included —
+  * [[SegmentedIndex.searchWand]] is that call for a caller holding the
+  * root. Run [[SegmentedIndex.compact]] periodically to fold segments into
+  * a unified global-id index.
   */
 object StreamingIngest {
 

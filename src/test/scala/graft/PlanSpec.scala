@@ -61,33 +61,73 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
   }
 
+  /** The result of `body` and the number of Spark jobs it submitted. */
+  def countJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftshim.TestShims.waitUntilListenerBusEmpty(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The dictionary terms matching a SQL LIKE pattern, ascending. */
+  def dictionaryLike(idx: IndexSearch.OpenIndex, like: String): Seq[String] =
+    idx.dictionary.where(col("term").like(like)).select("term")
+      .collect().map(_.getString(0)).toSeq.sorted
+
   test("prefix expansion probes the dictionary with a pushed StartsWith range") {
     val idx = IndexSearch.open(spark, root)
     // w12* stays under maxExpansions (w1* would match ~1,111 of the
     // w1..w5000 synthetic vocab and trip the TooManyClauses guard)
-    val probe = idx.dictionary.where(col("term").startsWith("w12"))
-      .select("term").limit(10)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("StringStartsWith(term,w12"),
-      s"prefix range predicate not pushed to the dictionary scan:\n$plan")
+    val want = dictionaryLike(idx, "w12%")
+    assert(want.nonEmpty)
+    idx.resident // the resident dictionary loads once per open index
+    // the prefix expands on the driver over the resident dictionary's
+    // prefix range: exactly the dictionary's terms in it, no Spark job
+    val (got, jobs) = countJobs(graft.search.MultiTerm.expandWildcards(idx, Seq("w12*"),
+      IndexSearch.DefaultMaxExpansions))
+    assert(got == Map("w12*" -> want), s"w12* expanded to $got")
+    assert(jobs == 0, s"prefix expansion ran $jobs Spark jobs")
     // and the engine path built on it expands without error
     assert(IndexSearch.searchPrefix(idx, Seq(1 -> "w12*"), k = 5).count() > 0)
   }
 
   test("wildcard expansion pushes its literal prefix to the dictionary scan") {
     val idx = IndexSearch.open(spark, root)
-    // w1?3 → literal prefix "w1" rides a pushed StartsWith; the LIKE
-    // residual evaluates on the pruned rows
-    val pre = graft.search.MultiTerm.literalPrefix("w1?3")
-    val probe = idx.dictionary.where(col("term").startsWith(pre))
-      .where(col("term").like(graft.search.MultiTerm.likePattern("w1?3")))
-      .select("term").limit(10)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("StringStartsWith(term,w1"),
-      s"wildcard literal prefix not pushed to the dictionary scan:\n$plan")
+    // w1?3 walks the resident dictionary from its literal prefix "w1" and
+    // keeps the whole-term matches
+    assert(graft.search.MultiTerm.literalPrefix("w1?3") == "w1")
+    val want = dictionaryLike(idx, graft.search.MultiTerm.likePattern("w1?3"))
+    assert(want.nonEmpty)
+    idx.resident
+    val (got, jobs) = countJobs(graft.search.MultiTerm.expandWildcards(idx, Seq("w1?3"),
+      IndexSearch.DefaultMaxExpansions))
+    assert(got == Map("w1?3" -> want), s"w1?3 expanded to $got")
+    assert(jobs == 0, s"wildcard expansion ran $jobs Spark jobs")
     // single-char wildcard over the hot head (w1..w9) must rank results
     assert(graft.search.MultiTerm.searchWildcard(idx, Seq(1 -> "w?"), k = 5)
       .count() > 0)
+  }
+
+  test("a warm bulk search takes its shards from the resident dictionary: fewer Spark jobs than the dictionary join") {
+    val idx = IndexSearch.open(spark, root)
+    val q = Seq(1 -> "w1 w3", 2 -> "w7")
+    def run() = IndexSearch.search(idx, q).collect()
+    run() // warm: the resident dictionary and the postings relation load
+    val (rows, jobs) = countJobs(run())
+    assert(rows.nonEmpty)
+    // the dictionary-join probe this replaces ran 8 jobs for this
+    // call: a broadcast of the query terms joined with the dictionary and
+    // a collect of their shards before the scan
+    assert(jobs < 8, s"warm bulk search ran $jobs Spark jobs")
   }
 
   test("highlight's text lookup is a doc_id point lookup (pushed IN filter)") {

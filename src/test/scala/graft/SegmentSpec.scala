@@ -60,9 +60,12 @@ class SegmentSpec extends SparkSpec {
     all.unpersist()
   }
 
-  /** The eleven request shapes written once against an index view. */
+  /** The eleven request shapes written once against an index view, and
+    * the two pruned top-k engines. */
   def shapes(qs: Seq[(Int, String)]): Seq[(String, IndexSearch.View => DataFrame)] = Seq(
     "search" -> (v => IndexSearch.search(v, qs)),
+    "searchWand" -> (v => IndexSearch.searchWand(v, qs)),
+    "searchMaxScore" -> (v => IndexSearch.searchMaxScore(v, qs)),
     "searchFiltered" -> (v => IndexSearch.searchFiltered(v, qs, col("role") === "user")),
     "searchParents" -> (v => IndexSearch.searchParents(v, qs, BlockJoin.Total)),
     "searchSynonyms" -> (v => Synonyms.searchIndex(v, qs, Seq(Seq("w1", "w2")))),
@@ -138,6 +141,8 @@ class SegmentSpec extends SparkSpec {
       for (q <- Seq(1, 2); b <- buckets) yield s"[$q,$b$tail"
     val want: Map[String, (String, Seq[String])] = Map(
       "search" -> (ranked -> Nil),
+      "searchWand" -> (ranked -> Nil),
+      "searchMaxScore" -> (ranked -> Nil),
       "searchFiltered" -> (ranked -> Nil),
       "searchParents" ->
         ("query_id INT, rank INT, parent STRING, n_children BIGINT, score DOUBLE" -> Nil),
@@ -373,6 +378,19 @@ class SegmentSpec extends SparkSpec {
       .select("query_id", "rank", "conv_id", "turn_idx", "score")
       .orderBy("query_id", "rank").collect().toSeq
     assert(got == expected, "≡ full rebuild over the live corpus")
+    // both pruned engines over the live view ≡ its exhaustive search, on
+    // both paths, at every k, range size and page — with tombstones, and
+    // again after a merge folds the two older segments
+    def parity(): Unit = {
+      val view = SegmentedIndex.open(spark, root, cfg)
+      TopKParity.check(view, IndexSearch.searchWand(_, _, _, _, _))
+      TopKParity.check(view, IndexSearch.searchMaxScore(_, _, _, _, _))
+    }
+    parity()
+    SegmentedIndex.mergeAdjacent(spark, root, 0, 1, cfg)
+    assert(SegmentedIndex.readManifest(spark, root).get.segments.size == 2)
+    parity()
+    all.unpersist()
   }
 
   test("tiered merge: adjacent same-tier runs fold, answers ≡ rebuild, stats unchanged") {
@@ -857,7 +875,7 @@ class SegmentSpec extends SparkSpec {
       }.reduce(_ unionByName _).groupBy("term").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val terms = segs.flatMap(_.index.dictionary.select("term").collect().map(_.getString(0)))
-      assert(counted.nonEmpty && SegmentedIndex.liveDf(segs, tombs, terms.distinct)._2 == counted,
+      assert(counted.nonEmpty && SegmentedIndex.liveDf(segs, tombs, terms.distinct) == counted,
         s"$stage: live df ≢ live posting count")
     }
     SegmentedIndex.append(spark, root, convs(all, 0, 50), noDeletes, "seg-a", cfg)

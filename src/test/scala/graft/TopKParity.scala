@@ -1,18 +1,19 @@
 package graft
 
 import graft.search.IndexSearch
-import graft.search.IndexSearch.OpenIndex
+import graft.search.IndexSearch.View
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.Assertions
 
 /** The inputs of the "≡ exhaustive" tests of the pruned top-k engines
   * ([[IndexSearch.searchWand]], [[IndexSearch.searchMaxScore]]): each must
-  * return exactly what exhaustive [[IndexSearch.search]] returns, on the
-  * single-range driver path and on the range-parallel path alike. */
+  * return exactly what exhaustive [[IndexSearch.search]] returns over the
+  * same view — a bulk root or a live segmented one — on the single-range
+  * driver path and on the range-parallel path alike. */
 object TopKParity extends Assertions {
 
-  /** (index, queries, k, docsPerRange, start) → ranked rows */
-  type Engine = (OpenIndex, Seq[(Int, String)], Int, Long, Int) => DataFrame
+  /** (view, queries, k, docsPerRange, start) → ranked rows */
+  type Engine = (View, Seq[(Int, String)], Int, Long, Int) => DataFrame
 
   val queries: Seq[(Int, String)] = Seq(
     1 -> "w1 w3 w17",
@@ -26,7 +27,7 @@ object TopKParity extends Assertions {
 
   def rows(df: DataFrame): Seq[Row] = df.orderBy("query_id", "rank").collect().toSeq
 
-  def check(idx: OpenIndex, engine: Engine): Unit = {
+  def check(idx: View, engine: Engine): Unit = {
     val default = IndexSearch.DefaultDocsPerRange
     // k = 20 is past the stored top block maxes (16): no stored seed
     val exh = Seq(3, 10, 20).map(k => k -> rows(IndexSearch.search(idx, queries, k = k)))
@@ -40,8 +41,7 @@ object TopKParity extends Assertions {
     // one range, but the summed df of the all-hot query exceeds the bound
     // docsPerRange = nDocs: the range-parallel path answers it
     val hot = queries.filter(_._1 == 6)
-    val d = idx.resident
-    assert(Seq("w1", "w2", "w3", "w4", "w5").map(t => d.df(d.row(t))).sum > idx.stats.nDocs)
+    assert(idx.df(Seq("w1", "w2", "w3", "w4", "w5")).values.sum > idx.nDocs)
     val hotExh = rows(IndexSearch.search(idx, hot))
     // k = 20 passes the stored top block maxes: the driver path runs
     // unseeded and the range path seeds from a window job; tiny ranges
@@ -52,6 +52,6 @@ object TopKParity extends Assertions {
     for (dpr <- Seq(default, 7L))
       assert(rows(engine(idx, queries, 5, dpr, 5)) == pageExh, s"page docsPerRange=$dpr")
     assert(rows(engine(idx, oov, 10, default, 0)).isEmpty, "all-OOV")
-    assert(rows(engine(idx, hot, 10, idx.stats.nDocs, 0)) == hotExh, "over the bound")
+    assert(rows(engine(idx, hot, 10, idx.nDocs, 0)) == hotExh, "over the bound")
   }
 }

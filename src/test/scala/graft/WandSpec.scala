@@ -169,10 +169,6 @@ class WandSpec extends SparkSpec {
       assert(jobsBm == 0, s"stored-max seed path ran $jobsBm jobs")
       assert(jobsBm < jobsWindow,
         s"stored-max seed path ran $jobsBm jobs, window path $jobsWindow — must be fewer")
-      // the resident seed: the stored k-th max, −∞ past the stored maxes
-      val w1 = Seq(idx.resident.row("w1"))
-      assert(idx.resident.seed(w1, kStored) == expected(kStored)(1))
-      assert(idx.resident.seed(w1, kWindow) == Double.NegativeInfinity)
       // a warm single-query request: ONE job collects its blocks, the
       // driver ranks them, and the returned local frame collects jobless
       IndexSearch.searchWand(idx, Seq(1 -> "w1 w3")).collect()
