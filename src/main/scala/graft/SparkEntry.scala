@@ -637,7 +637,7 @@ object SparkEntry {
     * search with exact global stats must equal full-corpus BM25. */
   private val aliasRoots =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  private def aliasIndexes(s: SparkSession, dir: String): Seq[String] =
+  private def aliasIndexes(s: SparkSession, dir: String): Seq[IndexSearch.OpenIndex] =
     aliasRoots.computeIfAbsent(dir, _ => {
       val d = s.read.parquet(s"$dir/documents.parquet")
       val n = d.count()
@@ -652,7 +652,7 @@ object SparkEntry {
           r
         }
       })
-    })
+    }).map(openCached(s, _))
 
   /** Run independent fixture-build thunks concurrently, preserving order
     * of results. Bounded at 2–4 threads — enough to back-fill scheduler
@@ -1443,12 +1443,12 @@ object SparkEntry {
     // time-partitioned collections, global df/N/avgdl — answers ≡ one
     // unified index over the union (the full-corpus keys oracle)
     "q_bm25_alias" -> ((s, dir) =>
-      IndexSearch.searchAlias(s, aliasIndexes(s, dir), DisjQueries)),
+      IndexSearch.searchAlias(aliasIndexes(s, dir), DisjQueries)),
     // Solr TIME-ROUTED alias: window from ts(3n/5) prunes the 'lo'
     // collection by metadata alone; fq drops the hi-collection prefix
     "q_bm25_alias_tra" -> ((s, dir) => {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
-      IndexSearch.searchAliasTimeRouted(s, aliasIndexes(s, dir), DisjQueries,
+      IndexSearch.searchAliasTimeRouted(aliasIndexes(s, dir), DisjQueries,
         Some(Transcripts.Epoch2024 + (3L * n / 5) * 30), None)
     }),
     // Solr {!collapse field=conv_id} + expand=true: flat best-turn-per-

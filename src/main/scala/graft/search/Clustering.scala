@@ -45,7 +45,7 @@ object Clustering {
     // distinct analyzed terms of the hit docs (docs/ scan pruned by the
     // pushed doc_id IN; re-tokenization is bit-identical to the tf the
     // dictionary was built from)
-    val docTerms = idx.io.read(spark, idx.paths.docs)
+    val docTerms = idx.stored
       .where(col("doc_id").isin(ids: _*))
       .select(col("doc_id"),
         explode(array_distinct(Analyzer.tokens(col("text")))).as("term"))

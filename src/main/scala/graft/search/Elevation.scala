@@ -46,8 +46,7 @@ object Elevation {
         .map { case (d, i) => (qid, d, i + 1) }
     }
     val elevDf = elevRows.toDF("query_id", "doc_id", "_pos")
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val scored = IndexSearch.scoredDocs(idx, qt, conjunctive = false)
+    val scored = IndexSearch.scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
     // elevated block: curated order, organic score attached when matched.
     // The curated pairs first SEMI-prune the scored frame (request-bounded
     // result), so the outer join below is tiny-LEFT-JOIN-tiny with the

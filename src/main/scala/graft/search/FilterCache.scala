@@ -45,7 +45,7 @@ object FilterCache {
     val spark = idx.spark
     val path = entryPath(idx, fq)
     if (!Fs.exists(spark, s"$path/_SUCCESS")) {
-      idx.io.read(spark, idx.paths.docs)
+      idx.stored
         .where(FilterQuery.parse(fq)).select("doc_id")
         .write.mode("overwrite").parquet(path)
       Fs.writeString(spark, s"$path/_fq", fq.trim)
@@ -57,10 +57,8 @@ object FilterCache {
     * but the attrs scan happens at most once per (index, fq). */
   def searchFiltered(idx: IndexSearch.OpenIndex, queries: Seq[(Int, String)],
                      fq: String, k: Int = 10,
-                     conjunctive: Boolean = false): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
+                     conjunctive: Boolean = false): DataFrame =
     Search.rank(
-      IndexSearch.scoredDocs(idx, qt, conjunctive)
+      IndexSearch.scoredDocs(idx, Search.queryPairs(queries), conjunctive)
         .join(docSet(idx, fq), Seq("doc_id"), "left_semi"), k)
-  }
 }

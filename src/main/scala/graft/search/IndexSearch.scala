@@ -10,10 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Query path over the PERSISTED index (SURVEY.md §3.2):
   *
   *  1. analyze queries with the same Analyzer;
-  *  2. broadcast-join query terms with the dictionary (df, shard,
-  *     max_score) — unknown terms drop out (Solr semantics);
-  *  3. scan `postings/` pruned to only the shards the query terms hash to
-  *     (partition pruning on the shard directory column);
+  *  2. look the query terms up in the index's [[ResidentDict]] on the
+  *     driver (df, shard, stored top block maxes) — unknown terms drop out
+  *     (Solr semantics), and no Spark job runs;
+  *  3. read their posting blocks through [[OpenIndex.blocks]], the one
+  *     block read: the scan is pruned to the shards those terms hash to
+  *     (partition pruning on the shard directory column) and to the terms
+  *     themselves (a pushed `term IN` filter);
   *  4. decode blocks (codegen'd varint expressions) → score → top-k.
   *
   * Must return exactly what [[Search.searchCorpus]] returns on the same
@@ -27,9 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[searchWand]], [[searchMaxScore]]) are written once against a
   * [[View]]. A bulk root's [[OpenIndex]] is one view (doc_id identity,
   * one leaf); the live segmented root of
-  * [[graft.index.SegmentedIndex.open]] is the other ((conv_id, turn_idx)
+  * [[graft.index.SegmentedIndex.open]] is another ((conv_id, turn_idx)
   * identity, one leaf per segment filtered by its tombstones, live df
-  * from metadata). The remaining shapes take an [[OpenIndex]].
+  * from metadata), and a collection alias ([[searchAlias]]) a third. The
+  * remaining shapes take an [[OpenIndex]] and read its postings through
+  * the same [[View.matched]].
   */
 object IndexSearch {
 
@@ -60,20 +65,17 @@ object IndexSearch {
     def key: Seq[String]
     def nDocs: Long
     def avgdl: Double
-    /** Per leaf: the shards its resident dictionary maps the live terms
-      * to, decoded, tagged with the leaf and keyed ([[keyed]]) — one
-      * broadcast join of the terms with live df, no dictionary scan and no
-      * Spark job before the scan. */
+    /** Per leaf: the blocks of the live terms ([[OpenIndex.blocks]]),
+      * decoded, tagged with the leaf and keyed ([[keyed]]) — one broadcast
+      * join of the terms with live df, no dictionary scan and no Spark job
+      * before the scan. */
     def matched(qt: Seq[(Int, String)]): DataFrame = {
       val dfs = df(qt.map(_._2).distinct)
       val qd = broadcast(spark.createDataFrame(qt.distinct.collect {
         case (q, t) if dfs.contains(t) => (q, t, dfs(t)) }).toDF("query_id", "term", "df"))
       leaves.zipWithIndex.flatMap { case (l, o) =>
-        val shards = l.index.resident.shardsOf(dfs.keys.toSeq)
-        if (shards.isEmpty) None
-        else Some(PostingBlocks.decodePostings(l.index.postings
-          .where(col("shard").isin(shards: _*)).join(qd, Seq("term"))
-          .withColumn("_leaf", lit(o))))
+        l.index.blocks(dfs.keys.toSeq).map(b => PostingBlocks.decodePostings(
+          b.join(qd, Seq("term")).withColumn("_leaf", lit(o))))
       }.reduceOption(_ unionByName _).map(keyed(this, _))
         .getOrElse(attrs.limit(0).select(lit(0).as("query_id") +: lit("").as("term") +:
           lit(0L).as("df") +: key.map(col) :+ lit(0).as("tf") :+ lit(0).as("dl"): _*))
@@ -115,7 +117,8 @@ object IndexSearch {
     * keeps at most its own dictionary rows, and on the single-range path
     * of [[searchWand]]) the encoded blocks of ≤ docsPerRange postings.
     * Only the resident dictionary joins `blockmeta/`; the plain
-    * `dictionary` relation stays unjoined for every other probe. */
+    * `dictionary` relation stays unjoined for the vocabulary walks and
+    * doc-derived term statistics that read it. */
   final case class OpenIndex(paths: IndexPaths, dictionary: DataFrame,
                              stats: Stats, spark: SparkSession,
                              io: graft.sources.TableIO) extends View {
@@ -136,6 +139,22 @@ object IndexSearch {
       terms.map(t => t -> resident.row(t)).collect {
         case (t, r) if r >= 0 => t -> resident.df(r) }.toMap
     lazy val leaves: Seq[Leaf] = Seq(new Leaf { def index: OpenIndex = OpenIndex.this })
+
+    /** The `postings` rows of the in-vocabulary ones of `terms`, the scan
+      * pruned to their shards (from the resident dictionary) and to
+      * `terms` — both pushed to it; None when this index holds none of
+      * them. The one place postings are read for query terms. The term
+      * predicate is whatever list the caller passes: `matched` and
+      * `highlightWith` pass the view-wide list, so their leaves scan
+      * under one predicate and share one broadcast of the request's
+      * terms; the WAND reads pass each leaf's own share, which is safe
+      * there because each leaf joins its own query-term relation. */
+    def blocks(terms: Seq[String]): Option[DataFrame] = {
+      val shards = resident.shardsOf(terms)
+      if (shards.isEmpty) None
+      else Some(postings.where(col("shard").isin(shards: _*) &&
+        col("term").isin(terms.distinct: _*)))
+    }
   }
 
   /** One posting block routed to one (query, leaf, doc-range) group
@@ -181,45 +200,13 @@ object IndexSearch {
       BuildIndexJob.readStats(spark, p, io), spark, io)
   }
 
-  /** Decoded posting rows of the given (query_id, term) pairs, pruned to
-    * the shards those terms hash to: (query_id, term, df, doc_id, tf, dl).
-    * The shared scan under exhaustive scoring, filtering, faceting, and
-    * NOT-exclusion. */
-  private[search] def matchedPostings(idx: OpenIndex, qt: DataFrame,
-                                      withCf: Boolean = false): DataFrame = {
-    val spark = idx.spark
-    val dictCols = Seq("query_id", "term", "df") ++ (if (withCf) Seq("cf") else Nil)
-    // tiny join: |distinct query terms| rows
-    val qd = qt.join(idx.dictionary, "term")
-      .select((dictCols :+ "shard").map(col): _*)
-    // driver boundary: the set of shards the query touches (≤ |q| ints)
-    val shards = qd.select("shard").distinct().collect().map(_.getInt(0)).toSeq
-    if (shards.isEmpty)
-      return PostingBlocks.decodePostings(
-        idx.postings.limit(0)
-          .join(broadcast(qd.select(dictCols.map(col): _*)), Seq("term")))
-    val blocks = idx.postings
-      .where(col("shard").isin(shards: _*))
-      .join(broadcast(qd.select(dictCols.map(col): _*)), Seq("term"))
-    PostingBlocks.decodePostings(blocks)
-  }
-
-  /** Pre-rank per-(query, doc) scores over the persisted index — the
-    * index-side twin of [[Search.scoredDocs]]. Package-visible so
-    * [[MultiField.searchIndexes]] can weight-combine per-field indexes. */
-  private[search] def scoredDocs(idx: OpenIndex, qt: DataFrame,
-                                 conjunctive: Boolean): DataFrame =
-    scoreMatched(idx, matchedPostings(idx, qt), qt, conjunctive)
-
-  /** [[scoredDocs]] over a view, keyed (query_id, key…). */
-  private def scoredDocs(v: View, qt: Seq[(Int, String)],
-                         conjunctive: Boolean): DataFrame =
-    scoreMatched(v, v.matched(qt),
-      v.spark.createDataFrame(qt).toDF("query_id", "term"), conjunctive)
-
-  private def scoreMatched(v: View, matched: DataFrame, qt: DataFrame,
-                           conjunctive: Boolean): DataFrame = {
-    val scored = matched
+  /** Pre-rank per-(query, key…) scores over a view: (query_id, key…,
+    * _score, _n_matched) — the index-side twin of [[Search.scoredDocs]].
+    * Package-visible so [[MultiField.searchIndexes]] can weight-combine
+    * per-field indexes. */
+  private[search] def scoredDocs(v: View, qt: Seq[(Int, String)],
+                                 conjunctive: Boolean): DataFrame = {
+    val scored = v.matched(qt)
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
         lit(v.nDocs), lit(v.avgdl)))
       .groupBy(("query_id" +: v.key).map(col): _*)
@@ -228,7 +215,8 @@ object IndexSearch {
     else {
       // all analyzed query terms, pre-dictionary — Lucene MUST semantics
       // (out-of-vocabulary required term ⇒ no matches)
-      val nq = qt.groupBy("query_id").agg(count(lit(1)).as("_n_q"))
+      val nq = v.spark.createDataFrame(qt.distinct.groupMapReduce(_._1)(_ => 1L)(_ + _).toSeq)
+        .toDF("query_id", "_n_q")
       scored.join(broadcast(nq), "query_id")
         .where(col("_n_matched") === col("_n_q"))
     }
@@ -264,17 +252,20 @@ object IndexSearch {
       start, v.key)
 
   /** Top-k under a pluggable similarity ([[Similarities.SimilarityModel]]
-    * — Solr's per-field `<similarity>`). Same dictionary probe, shard
-    * prune, and pinned ranking as [[search]]; only the per-posting score
-    * expression differs, with cf riding the broadcast dictionary probe
-    * for the collection model. Exhaustive (dictionary- and shard-pruned)
-    * by design: the persisted block maxes are BM25 bounds, so WAND /
-    * MaxScore skipping is unsound for other models. */
+    * — Solr's per-field `<similarity>`). Same block read and pinned
+    * ranking as [[search]]; only the per-posting score expression
+    * differs, with cf (which the resident dictionary does not hold) from
+    * one `term IN`-pushed probe of the `dictionary` relation, broadcast
+    * onto the matched postings. Exhaustive (shard-pruned) by design: the
+    * persisted block maxes are BM25 bounds, so WAND / MaxScore skipping
+    * is unsound for other models. */
   def searchSim(idx: OpenIndex, queries: Seq[(Int, String)],
                 sim: Similarities.SimilarityModel, k: Int = 10,
                 start: Int = 0): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val scored = matchedPostings(idx, qt, withCf = true)
+    val qt = Search.queryPairs(queries)
+    val cf = idx.dictionary.where(col("term").isin(qt.map(_._2).distinct: _*))
+      .select("term", "cf")
+    val scored = idx.matched(qt).join(broadcast(cf), "term")
       .withColumn("_s", sim.termScore(col("tf"), col("dl"), col("df"),
         col("cf"), idx.stats.nDocs, idx.stats.avgdl, idx.stats.totalTokens))
       .groupBy("query_id", "doc_id")
@@ -294,29 +285,27 @@ object IndexSearch {
     * class). Pinned vs Lucene: low.minimumNumberShouldMatch = 1,
     * high.msm = 0 (the ES cutoff semantics; Lucene's independent per-group
     * msm knobs are not exposed). Scale shape: identical to [[search]] —
-    * the classification rides the broadcast dictionary df, so the hot
+    * the classification rides the resident dictionary's df, so the hot
     * stopword-ish postings stay OUT of the required set without any
     * index-time stopping. */
   def searchCommonTerms(idx: OpenIndex, queries: Seq[(Int, String)],
                         maxTermFrequency: Double, k: Int = 10): DataFrame = {
     require(maxTermFrequency > 0 && maxTermFrequency <= 1,
       s"maxTermFrequency must be in (0,1] (got $maxTermFrequency)")
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val cutoff = lit(maxTermFrequency) * lit(idx.stats.nDocs)
-    val perTerm = matchedPostings(idx, qt)
+    val qt = Search.queryPairs(queries)
+    val cutoff = maxTermFrequency * idx.nDocs
+    val perTerm = idx.matched(qt)
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-        lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
+        lit(idx.nDocs), lit(idx.avgdl)))
       .withColumn("_low", when(col("df") <= cutoff, 1).otherwise(0))
     val scored = perTerm.groupBy("query_id", "doc_id")
       .agg(sum(col("_s")).as("_score"),
         max(col("_low")).as("_low_matched"))
-    // per-query fallback flag from the tiny dictionary probe
-    val qHasLow = qt.join(idx.dictionary.select("term", "df"), "term")
-      .groupBy("query_id")
-      .agg(max(when(col("df") <= cutoff, 1).otherwise(0)).as("_has_low"))
+    // the queries holding a low-df term, on the driver
+    val df = idx.df(qt.map(_._2).distinct)
+    val hasLow = qt.collect { case (q, t) if df.get(t).exists(_ <= cutoff) => q }.distinct
     Search.rank(
-      scored.join(broadcast(qHasLow), "query_id")
-        .where(col("_low_matched") === 1 || col("_has_low") === 0), k)
+      scored.where(col("_low_matched") === 1 || !col("query_id").isin(hasLow: _*)), k)
   }
 
   /** Solr COLLECTION ALIAS query with EXACT distributed statistics (the
@@ -332,15 +321,14 @@ object IndexSearch {
     * alias results; the rank tie-break is (round-7 score DESC, conv_id
     * ASC, turn_idx ASC), the segmented engine's pinned key ordering.
     *
-    * Scale shape: one pushed `term IN` dictionary probe per collection
-    * (driver holds ≤ |distinct terms| × |collections| df rows), shard-
-    * pruned posting decodes scored map-side against broadcast global
-    * stats, per-collection key joins over the match set only, one union
-    * + the standard rank window. Collections never shuffle against each
+    * The alias is a [[View]] over the collections ([[Alias]]), so this is
+    * [[search]] over it: df from the collections' resident dictionaries,
+    * postings through each one's block read, keyed by its `docs/` keys
+    * over the match set only. Collections never shuffle against each
     * other below the final window. */
-  def searchAlias(spark: SparkSession, roots: Seq[String],
-                  queries: Seq[(Int, String)], k: Int = 10): DataFrame =
-    aliasCore(spark, roots, queries, k, None, None)
+  def searchAlias(collections: Seq[OpenIndex], queries: Seq[(Int, String)],
+                  k: Int = 10): DataFrame =
+    search(Alias(collections), queries, k).orderBy("query_id", "rank")
 
   /** Solr TIME-ROUTED ALIAS (TRA) query: collections own disjoint time
     * slices; a time-windowed query is ROUTED only to the collections
@@ -348,102 +336,58 @@ object IndexSearch {
     * pruned by metadata before any posting is read (Solr's TRA routing;
     * the partition-pruning story lifted from shards to collections).
     * Within the surviving collections the window applies as an fq
-    * (constant-score filter on matched docs — it never changes df/N/
-    * avgdl, which come from the surviving collections WHOLE, exactly
-    * Solr's stats scope when a filtered query hits a shard). Bounds are
-    * epoch seconds, either side open. */
-  def searchAliasTimeRouted(spark: SparkSession, roots: Seq[String],
-                            queries: Seq[(Int, String)],
+    * ([[searchFiltered]] over their alias: a filter on matched docs that
+    * never changes df/N/avgdl, which come from the surviving collections
+    * WHOLE, exactly Solr's stats scope when a filtered query hits a
+    * shard). Bounds are epoch seconds, either side open. */
+  def searchAliasTimeRouted(collections: Seq[OpenIndex], queries: Seq[(Int, String)],
                             fromSec: Option[Long], toSec: Option[Long],
                             k: Int = 10): DataFrame = {
-    import spark.implicits._
     require(fromSec.nonEmpty || toSec.nonEmpty,
       "time-routed query needs at least one bound (else use searchAlias)")
-    val routed = routeCollections(spark, roots, fromSec, toSec)
-    if (routed.isEmpty)
-      return Seq.empty[(Int, Int, String, Int, Double)]
-        .toDF("query_id", "rank", "conv_id", "turn_idx", "score")
-    aliasCore(spark, routed, queries, k, fromSec, toSec)
+    val routed = routeCollections(collections, fromSec, toSec)
+    val ts = col("ts").cast("long")
+    // no collection overlaps the window: the alias's empty answer, read
+    // from no posting
+    if (routed.isEmpty) searchAlias(collections, Nil, k)
+    else searchFiltered(Alias(routed), queries,
+      fromSec.fold(lit(true))(ts >= _) && toSec.fold(lit(true))(ts <= _), k)
+      .orderBy("query_id", "rank")
   }
 
   /** The TRA routing step: collections whose stored-ts range overlaps
     * [fromSec, toSec] — one (min, max) metadata agg per collection, no
     * posting access. Exposed for the pruning assertion in specs. */
-  def routeCollections(spark: SparkSession, roots: Seq[String],
-                       fromSec: Option[Long], toSec: Option[Long]): Seq[String] =
-    roots.filter { r =>
-      val b = IndexSearch.open(spark, r).io
-        .read(spark, IndexPaths(r).docs)
-        .agg(min(col("ts").cast("long")), max(col("ts").cast("long")))
+  def routeCollections(collections: Seq[OpenIndex], fromSec: Option[Long],
+                       toSec: Option[Long]): Seq[OpenIndex] =
+    collections.filter { c =>
+      val b = c.attrs.agg(min(col("ts").cast("long")), max(col("ts").cast("long")))
         .collect()(0)
       !b.isNullAt(0) &&
         fromSec.forall(_ <= b.getLong(1)) && toSec.forall(_ >= b.getLong(0))
     }
 
-  private def aliasCore(spark: SparkSession, roots: Seq[String],
-                        queries: Seq[(Int, String)], k: Int,
-                        fromSec: Option[Long], toSec: Option[Long]): DataFrame = {
-    import spark.implicits._
-    require(roots.nonEmpty, "alias must name at least one collection")
-    val idxs = roots.map(r => open(spark, r))
-    val nDocs = idxs.map(_.stats.nDocs).sum
-    val totalTokens = idxs.map(_.stats.totalTokens).sum
+  /** A collection alias as one view: disjoint collections, keyed
+    * (conv_id, turn_idx) — df summed over the collections, N and avgdl
+    * those of their union, one keyed leaf per collection whose live map
+    * is its `docs/` keys, and the union of their attributes. Disjoint
+    * collections are the caller's precondition. */
+  private final case class Alias(collections: Seq[OpenIndex]) extends View {
+    require(collections.nonEmpty, "alias must name at least one collection")
     require(nDocs > 0, "alias over empty collections")
-    val avgdl = totalTokens.toDouble / nDocs
-    val terms = queries.flatMap(q => graft.analysis.Analyzer.tokenize(q._2))
-      .distinct
-    // exact global df: sum the collections' dictionary rows for the
-    // probe terms (each probe is a pushed In filter; ≤ |terms| rows back)
-    val dfGlobal: Map[String, Long] = idxs
-      .flatMap { idx =>
-        if (terms.isEmpty) Nil
-        else idx.dictionary.where(col("term").isin(terms: _*))
-          .select("term", "df").collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-      }
-      .groupBy(_._1).map { case (t, rs) => t -> rs.map(_._2).sum }
-    val qtRows = queries.flatMap { case (qid, text) =>
-      graft.analysis.Analyzer.tokenize(text).distinct
-        .collect { case t if dfGlobal.contains(t) => (qid, t, dfGlobal(t)) }
-    }
-    if (qtRows.isEmpty)
-      return Seq.empty[(Int, Int, String, Int, Double)]
-        .toDF("query_id", "rank", "conv_id", "turn_idx", "score")
-    val qdf = qtRows.toDF("query_id", "term", "df")
-    val perRoot = idxs.flatMap { idx =>
-      val shards = qdf.join(idx.dictionary.select("term", "shard"), "term")
-        .select("shard").distinct().collect().map(_.getInt(0)).toSeq
-      if (shards.isEmpty) None
-      else {
-        val blocks = idx.postings
-          .where(col("shard").isin(shards: _*))
-          .join(broadcast(qdf), Seq("term"))
-        val scored = PostingBlocks.decodePostings(blocks)
-          .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
-            lit(nDocs), lit(avgdl)))
-          .groupBy("query_id", "doc_id")
-          .agg(sum(col("_s")).as("_score"))
-        // the fq side of TRA: matched docs outside the window drop here,
-        // AFTER scoring (stats stay whole-collection, the Solr scope)
-        val keys = idx.io.read(spark, idx.paths.docs)
-          .select(col("doc_id"), col("conv_id"), col("turn_idx"),
-            col("ts").cast("long").as("_ts"))
-          .where(fromSec.map(f => col("_ts") >= f).getOrElse(lit(true)) &&
-            toSec.map(t => col("_ts") <= t).getOrElse(lit(true)))
-        Some(scored.join(keys, "doc_id")
-          .select("query_id", "conv_id", "turn_idx", "_score"))
-      }
-    }
-    val all = perRoot.reduce(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(round(col("_score"), Bm25.RankScale).desc,
-        col("conv_id").asc, col("turn_idx").asc)
-    all.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("conv_id"), col("turn_idx"),
-        round(col("_score"), Bm25.OutScale).as("score"))
-      .orderBy("query_id", "rank")
+    def spark: SparkSession = collections.head.spark
+    def key: Seq[String] = Seq("conv_id", "turn_idx")
+    def nDocs: Long = collections.map(_.nDocs).sum
+    def avgdl: Double = collections.map(_.stats.totalTokens).sum.toDouble / nDocs
+    lazy val attrs: DataFrame =
+      collections.map(_.stored.drop("text", "doc_id")).reduce(_ unionByName _)
+    def df(terms: Seq[String]): Map[String, Long] =
+      collections.flatMap(_.df(terms)).groupMapReduce(_._1)(_._2)(_ + _)
+    lazy val leaves: Seq[Leaf] = collections.map(c => new Leaf {
+      def index: OpenIndex = c
+      override lazy val live: Option[DataFrame] =
+        Some(c.stored.select("doc_id", "conv_id", "turn_idx"))
+    })
   }
 
   /** Solr `debug=true` / Lucene Explanation over the persisted index:
@@ -459,8 +403,7 @@ object IndexSearch {
     * return). */
   def explain(idx: OpenIndex, queries: Seq[(Int, String)],
               k: Int = 10): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val per = matchedPostings(idx, qt)
+    val per = idx.matched(Search.queryPairs(queries))
       .withColumn("_idf", Bm25.idf(col("df"), lit(idx.stats.nDocs)))
       .withColumn("_c", Bm25.termScore(col("tf"), col("dl"), col("df"),
         lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
@@ -492,9 +435,11 @@ object IndexSearch {
     * ≤ queries·k enriched heads by broadcast. */
   def ltrFeatures(idx: OpenIndex, queries: Seq[(Int, String)],
                   k: Int = 10): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val qsize = qt.groupBy("query_id").agg(countDistinct(col("term")).as("_qn"))
-    val per = matchedPostings(idx, qt)
+    val spark = idx.spark
+    import spark.implicits._
+    val qt = Search.queryPairs(queries)
+    val qsize = qt.groupMapReduce(_._1)(_ => 1L)(_ + _).toSeq.toDF("query_id", "_qn")
+    val per = idx.matched(qt)
       .withColumn("_idf", Bm25.idf(col("df"), lit(idx.stats.nDocs)))
       .withColumn("_c", Bm25.termScore(col("tf"), col("dl"), col("df"),
         lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
@@ -509,9 +454,9 @@ object IndexSearch {
       val heads = Search.rank(feats, k)
         .join(feats.drop("_score"), Seq("query_id", "doc_id"))
         .join(broadcast(qsize), "query_id")
-      val attrs = idx.io.read(idx.spark, idx.paths.docs)
+      val attrs = idx.attrs
         .select(col("doc_id"), (col("role") === "user").cast("int").as("f_is_user"))
-      localize(idx.spark, attrs.join(broadcast(heads), Seq("doc_id"))
+      localize(spark, attrs.join(broadcast(heads), Seq("doc_id"))
         .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
           col("f_tf_sum"), col("f_matched"),
           round(col("f_matched").cast("double") / col("_qn"), 4).as("f_coverage"),
@@ -602,7 +547,7 @@ object IndexSearch {
                                    qids: DataFrame, nRand: Int,
                                    permille: Int): DataFrame = {
     val spark = idx.spark
-    val docs = idx.io.read(spark, idx.paths.docs).select("doc_id")
+    val docs = idx.attrs.select("doc_id")
     val h = conv(substring(md5(concat(col("query_id").cast("string"),
       lit(":"), col("doc_id").cast("string"))), 1, 8), 16, 10)
       .cast("long")
@@ -684,8 +629,7 @@ object IndexSearch {
   def searchSorted(idx: OpenIndex, queries: Seq[(Int, String)],
                    sortCols: Seq[Column], k: Int = 10,
                    extra: Seq[(String, Column)] = Nil): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val joined = scoredDocs(idx, qt, conjunctive = false)
+    val joined = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
       .join(idx.attrs, "doc_id")
     val withExtra = extra.foldLeft(joined) { case (d, (n, c)) =>
       d.withColumn(n, c) }
@@ -723,14 +667,14 @@ object IndexSearch {
         .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
     val qt0 = orig.toDF("query_id", "term")
     // round 1: standard top-fbDocs (driver boundary: ≤ |queries|·fbDocs)
-    val fbPairs = Search.rank(scoredDocs(idx, qt0, conjunctive = false), fbDocs)
+    val fbPairs = Search.rank(scoredDocs(idx, orig, conjunctive = false), fbDocs)
       .select("query_id", "doc_id").collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     val expansions: Seq[(Int, String)] =
       if (fbPairs.isEmpty) Seq.empty
       else {
         val hitIds = fbPairs.map(_._2).distinct
-        val docToks = idx.io.read(spark, idx.paths.docs)
+        val docToks = idx.stored
           .where(col("doc_id").isin(hitIds: _*))
           .select(col("doc_id"), col("dl"),
             explode(graft.analysis.Analyzer.tokens(col("text"))).as("term"))
@@ -752,8 +696,7 @@ object IndexSearch {
     val qt1 = orig.map { case (q, t) => (q, t, 1.0) } ++
       expansions.map { case (q, t) => (q, t, expWeight) }
     val boosts = broadcast(qt1.toDF("query_id", "term", "_boost"))
-    val scored = matchedPostings(idx, qt1.map(r => (r._1, r._2))
-        .toDF("query_id", "term"))
+    val scored = idx.matched(qt1.map(r => (r._1, r._2)))
       .join(boosts, Seq("query_id", "term"))
       .withColumn("_s", col("_boost") * Bm25.termScore(col("tf"), col("dl"),
         col("df"), lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
@@ -772,8 +715,8 @@ object IndexSearch {
   def searchFields(idx: OpenIndex, queries: Seq[(Int, String)],
                    fields: Seq[String], pseudo: Seq[(String, String)] = Nil,
                    k: Int = 10): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val joined = scoredDocs(idx, qt, conjunctive = false).join(idx.attrs, "doc_id")
+    val joined = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
+      .join(idx.attrs, "doc_id")
     val withPseudo = pseudo.foldLeft(joined) { case (d, (n, fn)) =>
       d.withColumn(n, FunctionQuery.toColumn(FunctionQuery.parse(fn))) }
     Search.rankBy(withPseudo,
@@ -793,8 +736,7 @@ object IndexSearch {
   def searchBoosted(idx: OpenIndex, queries: Seq[(Int, String)],
                     boost: Column, k: Int = 10,
                     multiplicative: Boolean = false): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val scored = scoredDocs(idx, qt, conjunctive = false)
+    val scored = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
       .join(idx.attrs, "doc_id")
       .withColumn("_score",
         if (multiplicative) col("_score") * boost else col("_score") + boost)
@@ -812,7 +754,7 @@ object IndexSearch {
     require(keys.nonEmpty, "realtime get needs at least one key")
     val pred = keys.map { case (c, t) =>
       col("conv_id") === c && col("turn_idx") === t }.reduce(_ || _)
-    idx.io.read(idx.spark, idx.paths.docs)
+    idx.stored
       .where(pred)
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("dl").cast("long").as("dl"), col("text"))
@@ -843,7 +785,7 @@ object IndexSearch {
     def pred(ks: Seq[(String, Int)]) = ks.map { case (c, t) =>
       col("conv_id") === c && col("turn_idx") === t }.reduce(_ || _)
     val pendKeys = pending.map(p => (p._1, p._2))
-    val committed = idx.io.read(spark, idx.paths.docs)
+    val committed = idx.stored
       .where(pred(keys))
       .where(if (pendKeys.isEmpty) lit(true) else !pred(pendKeys))
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
@@ -871,7 +813,7 @@ object IndexSearch {
     require(keys.nonEmpty, "term vectors need at least one key")
     val pred = keys.map { case (c, t) =>
       col("conv_id") === c && col("turn_idx") === t }.reduce(_ || _)
-    idx.io.read(idx.spark, idx.paths.docs)
+    idx.stored
       .where(pred)
       .select(col("conv_id"), col("turn_idx"),
         posexplode(graft.analysis.Analyzer.tokens(col("text"))).as(Seq("pos", "term")))
@@ -916,11 +858,9 @@ object IndexSearch {
       s"bq is pinned to a non-empty SHOULD term disjunction, got: '$bq'")
     val spark = idx.spark
     import spark.implicits._
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val main = scoredDocs(idx, qt, conjunctive = false)
-    val bqTerms = c.should.map(t => (0, t)).toDF("query_id", "term")
+    val main = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
     val boosts = c.should.map(t => (t, c.boost(t))).toDF("term", "_bqb")
-    val bqScore = matchedPostings(idx, bqTerms)
+    val bqScore = idx.matched(c.should.map(t => (0, t)))
       .join(broadcast(boosts), "term")
       .withColumn("_s", col("_bqb") * Bm25.termScore(col("tf"), col("dl"),
         col("df"), lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
@@ -955,14 +895,12 @@ object IndexSearch {
       s"reRankQuery is pinned to a SHOULD term disjunction, got: '$rerankQuery'")
     val spark = idx.spark
     import spark.implicits._
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
     val w0 = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
-    val ranked0 = scoredDocs(idx, qt, conjunctive = false)
+    val ranked0 = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
       .withColumn("_rnk0", row_number().over(w0))
-    val rqTerms = c.should.map(t => (0, t)).toDF("query_id", "term")
     val boosts = c.should.map(t => (t, c.boost(t))).toDF("term", "_rqb")
-    val rr = matchedPostings(idx, rqTerms)
+    val rr = idx.matched(c.should.map(t => (0, t)))
       .join(broadcast(boosts), "term")
       .withColumn("_s", col("_rqb") * Bm25.termScore(col("tf"), col("dl"),
         col("df"), lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
@@ -994,10 +932,9 @@ object IndexSearch {
   def pageCursor(idx: OpenIndex, queries: Seq[(Int, String)],
                  upto: Int): Map[Int, (Double, Long)] = {
     require(upto > 0, s"cursor page size must be positive (got $upto)")
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(round(col("_score"), Bm25.RankScale).desc, col("doc_id").asc)
-    scoredDocs(idx, qt, conjunctive = false)
+    scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= upto)
       .groupBy("query_id")
@@ -1021,8 +958,7 @@ object IndexSearch {
                   after: Map[Int, (Double, Long)], k: Int = 10): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
-    val scored = scoredDocs(idx, qt, conjunctive = false)
+    val scored = scoredDocs(idx, Search.queryPairs(queries), conjunctive = false)
     if (after.isEmpty) return Search.rank(scored, k)
     val aftDf = after.toSeq.map { case (qid, (s, d)) => (qid, s, d) }
       .toDF("query_id", "_a_s", "_a_d")
@@ -1080,9 +1016,8 @@ object IndexSearch {
     * distinct match-position array and its stored text; `render(toks,
     * positions)` produces the snippet column. The hits' leaf-local ids
     * are the hits themselves on an identity leaf and ONE Spark job over
-    * the live maps otherwise, whatever the leaf count; a leaf's df and
-    * shards come from its resident dictionary, so no dictionary probe
-    * runs. */
+    * the live maps otherwise, whatever the leaf count; each hit leaf's
+    * blocks come from its block read, so no dictionary probe runs. */
   private def highlightWith(v: View, queries: Seq[(Int, String)],
                             k: Int, window: Int)(
       render: (Column, Column) => Column): DataFrame = {
@@ -1112,19 +1047,17 @@ object IndexSearch {
       // holds a hit id decode their positions (idArr is a tiny literal
       // array)
       val idArr = array(ls.map(lit(_)): _*)
-      val pos = PostingBlocks.decodePostingsWithPositions(idx.postings
-          .where(col("shard").isin(idx.resident.shardsOf(terms): _*) &&
-            col("term").isInCollection(terms) &&
-            exists(idArr, id => id >= col("first_doc") && id <= col("last_doc"))))
+      val pos = idx.blocks(terms).map(b => PostingBlocks.decodePostingsWithPositions(
+          b.where(exists(idArr, id => id >= col("first_doc") && id <= col("last_doc"))))
         .where(col("doc_id").isin(ls: _*))
-        .select(lit(o).as("_leaf"), col("doc_id"), col("term"), col("positions"))
+        .select(lit(o).as("_leaf"), col("doc_id"), col("term"), col("positions")))
       val texts = idx.stored.where(col("doc_id").isin(ls: _*))
         .select(lit(o).as("_leaf"), col("doc_id"), col("text"))
       (pos, texts)
     }
     def keyedHits(parts: Seq[DataFrame]): DataFrame =
       parts.reduce(_ unionByName _).join(broadcast(inst), Seq("_leaf", "doc_id"))
-    val matchPos = keyedHits(perLeaf.map(_._1))
+    val matchPos = keyedHits(perLeaf.flatMap(_._1))
       .join(broadcast(qt.toDF("query_id", "term")), Seq("term")) // attach query ownership
       .groupBy(("query_id" +: v.key).map(col): _*)
       .agg(sort_array(array_distinct(flatten(collect_list(col("positions")))))
@@ -1241,9 +1174,10 @@ object IndexSearch {
     * span match weighs 1.0 in SpanScorer's sloppyFreq), idf = the TERM's
     * dictionary idf (SpanWeight scores with the underlying term
     * statistics, NOT a position-filtered df), dl/avgdl as usual. Scale
-    * shape: dictionary probe → shard-pruned positional decode of the
-    * query terms only → per-posting position counting inside the scan
-    * (a codegen'd array filter — positions never explode into rows). */
+    * shape: resident-dictionary df → the block read's positional decode
+    * of the query terms only → per-posting position counting inside the
+    * scan (a codegen'd array filter — positions never explode into
+    * rows). */
   def searchSpanFirst(idx: OpenIndex, queries: Seq[(Int, String, Int)],
                       k: Int = 10): DataFrame = {
     requirePositional(idx)
@@ -1256,24 +1190,19 @@ object IndexSearch {
       require(end > 0, s"span_first end must be positive (query '$text')")
       (qid, toks.head, end)
     }
-    val qd = parsed.toDF("query_id", "term", "_end")
-      .join(idx.dictionary, "term")
-      .select("query_id", "term", "df", "_end", "shard")
-    val shards = qd.select("shard").distinct().collect().map(_.getInt(0)).toSeq
-    val base =
-      if (shards.isEmpty) idx.postings.limit(0)
-      else idx.postings
-        .where(col("shard").isin(shards: _*))
-    val rows = PostingBlocks.decodePostingsWithPositions(
-      base.join(broadcast(qd.drop("shard")), Seq("term")))
-    val scored = rows
-      .withColumn("_tf",
-        size(filter(col("positions"), p => p < col("_end"))))
-      .where(col("_tf") > 0)
-      .withColumn("_s", Bm25.termScore(col("_tf"), col("dl"), col("df"),
-        lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("_s")).as("_score"))
+    val df = idx.df(parsed.map(_._2).distinct)
+    val qd = parsed.collect { case (q, t, end) if df.contains(t) => (q, t, df(t), end) }
+      .toDF("query_id", "term", "df", "_end")
+    val scored = idx.blocks(df.keys.toSeq).fold(noScores(idx)) { b =>
+      PostingBlocks.decodePostingsWithPositions(b.join(broadcast(qd), Seq("term")))
+        .withColumn("_tf",
+          size(filter(col("positions"), p => p < col("_end"))))
+        .where(col("_tf") > 0)
+        .withColumn("_s", Bm25.termScore(col("_tf"), col("dl"), col("df"),
+          lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
+        .groupBy("query_id", "doc_id")
+        .agg(sum(col("_s")).as("_score"))
+    }
     Search.rank(scored, k)
   }
 
@@ -1522,11 +1451,9 @@ object IndexSearch {
                    fl: Seq[String],
                    conjunctive: Boolean = false): DataFrame = {
     require(fl.nonEmpty, "/export requires an fl field list")
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val matched = scoredDocs(idx, qt, conjunctive)
+    val matched = scoredDocs(idx, Search.queryPairs(queries), conjunctive)
       .select("query_id", "doc_id")
-    val attrs = idx.io.read(idx.spark, idx.paths.docs)
-      .select(("doc_id" +: fl).distinct.map(col): _*)
+    val attrs = idx.stored.select(("doc_id" +: fl).distinct.map(col): _*)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(sortCols :+ col("doc_id").asc: _*)
     matched.join(attrs, "doc_id")
@@ -1747,8 +1674,7 @@ object IndexSearch {
   def searchChildren(idx: OpenIndex, queries: Seq[(Int, String)],
                      mode: BlockJoin.ScoreMode, k: Int = 10,
                      parentField: String = "conv_id"): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    BlockJoin.children(scoredDocs(idx, qt, conjunctive = false),
+    BlockJoin.children(scoredDocs(idx, Search.queryPairs(queries), conjunctive = false),
       idx.attrs, parentField, mode, k,
       childCols = Seq("turn_idx", "role"), childOrder = Seq("turn_idx"))
   }
@@ -1812,9 +1738,9 @@ object IndexSearch {
     val qt = parsed.flatMap { case (id, c) =>
       c.must.map(t => (id, t, true, c.boost(t))) ++
         c.should.map(t => (id, t, false, c.boost(t)))
-    }.toDF("query_id", "term", "_m", "_boost")
-    val tScored = matchedPostings(idx, qt.select("query_id", "term"))
-      .join(broadcast(qt), Seq("query_id", "term"))
+    }
+    val tScored = idx.matched(qt.map(r => (r._1, r._2)))
+      .join(broadcast(qt.toDF("query_id", "term", "_m", "_boost")), Seq("query_id", "term"))
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
         lit(idx.stats.nDocs), lit(idx.stats.avgdl)) * col("_boost"))
       .select(col("query_id"), col("doc_id"), col("_s"), col("_m"))
@@ -1828,12 +1754,11 @@ object IndexSearch {
       (id, c.must.size + c.fieldedMust.size) }.toDF("query_id", "_n_must")
     val matched = agg.join(broadcast(nMust), "query_id")
       .where(col("_must_ok") === col("_n_must"))
-    val negT = parsed.flatMap { case (id, c) => c.not.map(t => (id, t)) }
-      .toDF("query_id", "term")
     val negF = parsed.flatMap { case (id, c) =>
       c.fieldedNot.map(fv => (id, fv._1, fv._2)) }
       .toDF("query_id", "_f", "_v")
-    val negDocs = matchedPostings(idx, negT).select("query_id", "doc_id")
+    val negDocs = idx.matched(parsed.flatMap { case (id, c) => c.not.map(t => (id, t)) })
+      .select("query_id", "doc_id")
       .union(melted.join(broadcast(negF), Seq("_f", "_v"))
         .select("query_id", "doc_id"))
     Search.rank(
@@ -1862,8 +1787,7 @@ object IndexSearch {
   def searchGrouped(idx: OpenIndex, queries: Seq[(Int, String)],
                     groupField: String, kGroups: Int = 10,
                     groupLimit: Int = 1): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    Grouping.topGroups(scoredDocs(idx, qt, conjunctive = false),
+    Grouping.topGroups(scoredDocs(idx, Search.queryPairs(queries), conjunctive = false),
       idx.attrs, groupField, kGroups, groupLimit)
   }
 
@@ -1879,15 +1803,14 @@ object IndexSearch {
       "group.query names must be non-empty and unique")
     val spark = idx.spark
     import spark.implicits._
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
     val gqt = groups.zipWithIndex.flatMap { case ((_, text), i) =>
       graft.analysis.Analyzer.tokenize(text).distinct.map(t => (i, t))
-    }.toDF("query_id", "term")
-    val member = matchedPostings(idx, gqt)
+    }
+    val member = idx.matched(gqt)
       .select(col("query_id").as("_gid"), col("doc_id")).distinct()
     val gnames = groups.zipWithIndex.map { case ((g, _), i) => (i, g) }
       .toDF("_gid", "group_name")
-    Grouping.topGroupQueries(scoredDocs(idx, qt, conjunctive = false),
+    Grouping.topGroupQueries(scoredDocs(idx, Search.queryPairs(queries), conjunctive = false),
       member, gnames, groupLimit)
   }
 
@@ -1896,13 +1819,9 @@ object IndexSearch {
     * ranked list plus the per-head expand section. */
   def searchCollapsed(idx: OpenIndex, queries: Seq[(Int, String)],
                       field: String, k: Int = 10,
-                      expandRows: Int = 0): DataFrame = {
-    val qt = Search.queryTerms(Search.queryFrame(idx.spark, queries))
-    val attrs = idx.io.read(idx.spark, idx.paths.docs)
-      .select(col("doc_id"), col(field))
-    Collapse.collapseExpand(scoredDocs(idx, qt, conjunctive = false),
-      attrs, field, k, expandRows)
-  }
+                      expandRows: Int = 0): DataFrame =
+    Collapse.collapseExpand(scoredDocs(idx, Search.queryPairs(queries), conjunctive = false),
+      idx.attrs.select(col("doc_id"), col(field)), field, k, expandRows)
 
   /** Fail fast on a non-positional view: poss = null would otherwise
     * null out the position chain and SILENTLY return zero hits for
@@ -1983,17 +1902,12 @@ object IndexSearch {
     val restTerms = qtRows.filterNot(_._3).map(_._2).distinct
     val nDistinct = batch.queries
       .map { case (qid, terms) => (qid, terms.distinct.size) }
-    // per leaf, its postings pruned to the shards its resident dictionary
-    // maps the phrase terms to (a leaf holding none is skipped). The term
-    // predicate reaches each scan as a pushed filter. `_bfd` carries the
-    // block identity (first_doc is unique per term within a leaf —
-    // blocks of one term are doc-disjoint) through the decode.
+    // per leaf, its block read of the phrase terms (a leaf holding none is
+    // skipped). `_bfd` carries the block identity (first_doc is unique per
+    // term within a leaf — blocks of one term are doc-disjoint) through
+    // the decode.
     val blocks = v.leaves.zipWithIndex.flatMap { case (l, o) =>
-      val shards = l.index.resident.shardsOf(allTerms)
-      if (shards.isEmpty) None
-      else Some(l.index.postings
-        .where(col("shard").isin(shards: _*) && col("term").isInCollection(allTerms))
-        .withColumn("_leaf", lit(o)).withColumn("_bfd", col("first_doc")))
+      l.index.blocks(allTerms).map(_.withColumn("_leaf", lit(o)).withColumn("_bfd", col("first_doc")))
     }.reduce(_ unionByName _)
     // THIN pass: doc-id stream only — `poss` (the fat stream) is never
     // referenced, so parquet column pruning skips its bytes entirely
@@ -2270,18 +2184,16 @@ object IndexSearch {
     // per leaf: its postings of the batch's terms, each with the live df
     // and the term's upper (`block_max_score`) and lower (`_low`)
     // corrected block max
-    val base = in.leafTerms.indices.filter(in.leafTerms(_).nonEmpty).map { o =>
-      val idx = v.leaves(o).index
+    val base = in.leafTerms.indices.flatMap { o =>
       val qd = in.terms.flatMap { case (q, ts) => ts.flatMap(t =>
         in.leafTerms(o).get(t).map { case (_, up, lo) => (q, t, in.df(t), up, lo) }) }
         .toDF("query_id", "term", "df", "_cup", "_clo")
-      idx.postings
-        .where(col("shard").isin(idx.resident.shardsOf(in.leafTerms(o).keys.toSeq): _*))
+      v.leaves(o).index.blocks(in.leafTerms(o).keys.toSeq).map(_
         .join(broadcast(qd), Seq("term"))
         .select(col("query_id"), lit(o).as("leaf"), col("term"), col("df"),
           col("first_doc"), col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
           (col("block_max_score") * col("_cup")).as("block_max_score"),
-          (col("block_max_score") * col("_clo")).as("_low"))
+          (col("block_max_score") * col("_clo")).as("_low")))
     }.reduce(_ unionByName _)
     // exact integer range id: (d - d mod rs) / rs — the numerator is an
     // exact multiple of rs, so the double division is exact (plain d / rs
@@ -2457,13 +2369,11 @@ object IndexSearch {
         // ONE job collects the batch's blocks from every leaf holding its
         // terms; their maxes are scaled to the upper bound on the driver
         val lists: Map[(Int, String), BlockMaxWand.TermPostings] =
-          in.leafTerms.indices.filter(in.leafTerms(_).nonEmpty).map { o =>
-            val (idx, ts) = (leaves(o).index, in.leafTerms(o).keys.toSeq)
-            idx.postings
-              .where(col("shard").isin(idx.resident.shardsOf(ts): _*) && col("term").isin(ts: _*))
+          in.leafTerms.indices.flatMap { o =>
+            leaves(o).index.blocks(in.leafTerms(o).keys.toSeq).map(_
               .select(lit(o).as("leaf"), col("term"), col("first_doc"),
                 col("last_doc"), col("doc_gaps"), col("tfs"), col("dls"),
-                col("block_max_score"))
+                col("block_max_score")))
           }.reduce(_ unionByName _).collect()
             .groupBy(r => (r.getInt(0), r.getString(1))).map { case ((o, t), rs) =>
               val up = in.leafTerms(o)(t)._2

@@ -119,26 +119,20 @@ object Intervals {
           "intervals over repeated terms are not pinned (use a phrase)")
       (qid, ts)
     }.filter(_._2.nonEmpty)
-    if (parsed.isEmpty) return empty
-    val allTerms = parsed.flatMap(_._2).distinct
-    val dictRows = idx.dictionary
-      .where(col("term").isInCollection(allTerms))
-      .select("term", "df", "shard").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2)))).toMap
+    val df = idx.df(parsed.flatMap(_._2).distinct)
     // OOV term ⇒ empty intervals source ⇒ the query matches nothing
-    val live = parsed.filter(_._2.forall(dictRows.contains))
-    if (live.isEmpty) return empty
+    val live = parsed.filter(_._2.forall(df.contains))
+    val liveTerms = live.flatMap(_._2).distinct
+    val blocks = idx.blocks(liveTerms) match {
+      case Some(b) => b
+      case None => return empty
+    }
     val qtRows = live.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-    val shards = live.flatMap(_._2).distinct.map(t => dictRows(t)._2).distinct
-    val blocks = idx.postings
-      .where(col("shard").isin(shards: _*))
-    val dfDf = live.flatMap(_._2).distinct.map(t => (t, dictRows(t)._1))
-      .toDF("term", "df")
+    val dfDf = liveTerms.map(t => (t, df(t))).toDF("term", "df")
     // THIN conjunctive pass: per (query, doc) the BM25 sum AND the block
     // keys ride one aggregation; only all-m-term docs survive
     val thin = PostingBlocks.decodePostings(
         blocks.drop("poss")
-          .where(col("term").isInCollection(live.flatMap(_._2).distinct))
           .withColumn("_bfd", col("first_doc"))
           .join(broadcast(qtRows.toDF("query_id", "term")), Seq("term")))
       .join(broadcast(dfDf), Seq("term"))
@@ -159,7 +153,6 @@ object Intervals {
         .select(col("_b.term").as("term"), col("_b._bfd").as("_bfd"))
         .distinct()
       val fatBlocks = blocks
-        .where(col("term").isInCollection(live.flatMap(_._2).distinct))
         .withColumn("_bfd", col("first_doc"))
         .join(blockKeys, Seq("term", "_bfd"), "left_semi")
       val fatRows = PostingBlocks.decodePostingsWithPositions(

@@ -34,7 +34,7 @@ object JoinQuery {
   def join(idx: IndexSearch.OpenIndex, queries: Seq[(Int, String)],
            fromField: String, toField: String, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive (got $k)")
-    val attrs = idx.io.read(idx.spark, idx.paths.docs)
+    val attrs = idx.attrs
     val fromKeys = IndexSearch.matchedDocSet(idx, queries)
       .join(attrs.select(col("doc_id"), col(fromField).as("_key")), "doc_id")
       .where(col("_key").isNotNull)

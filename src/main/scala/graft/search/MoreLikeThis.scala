@@ -54,7 +54,7 @@ object MoreLikeThis {
     val seedIds = seeds.map(_._2).distinct
     val seedsDf = seeds.toDF("query_id", "_seed_doc")
     // point lookup: doc_id IN (…) pushes to the docs/ parquet scan
-    val seedText = idx.io.read(spark, idx.paths.docs)
+    val seedText = idx.stored
       .where(col("doc_id").isin(seedIds: _*))
       .select(col("doc_id").as("_seed_doc"), col("text"))
     val seedTf = broadcast(seedsDf).join(seedText, "_seed_doc")
@@ -79,8 +79,9 @@ object MoreLikeThis {
                    minDf: Long = 2L): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
+    // ≤ |seeds|·maxQueryTerms pairs
     val qt = interestingTerms(idx, seeds, maxQueryTerms, minTf, minDf)
-      .select("query_id", "term")
+      .select("query_id", "term").as[(Int, String)].collect().toSeq
     val seedsDf = seeds.toDF("_seed_q", "_seed_doc")
     val scored = IndexSearch.scoredDocs(idx, qt, conjunctive = false)
       .join(broadcast(seedsDf),

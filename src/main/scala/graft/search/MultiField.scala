@@ -105,7 +105,7 @@ object MultiField {
     require(counts.map(_._2).distinct.size == 1,
       s"field indexes must share one doc-id space (same ingest row set); " +
         s"docs/ row counts differ: $counts")
-    val qt = Search.queryTerms(Search.queryFrame(spark, queries))
+    val qt = Search.queryPairs(queries)
     val perField = fields.map { case (idx, boost) =>
       IndexSearch.scoredDocs(idx, qt, conjunctive = false)
         .select(col("query_id"), col("doc_id"),

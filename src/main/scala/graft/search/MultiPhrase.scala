@@ -106,28 +106,27 @@ object MultiPhrase {
         ts.head
       }.distinct))
     }.filter { case (_, slots) => slots.nonEmpty && slots.forall(_.nonEmpty) }
-    if (parsed.isEmpty) return empty
 
-    val allTerms = parsed.flatMap(_._2.flatten).distinct
-    // ONE driver probe for the batch: ≤ |distinct alternatives| rows
-    val dictRows = idx.dictionary
-      .where(col("term").isInCollection(allTerms))
-      .select("term", "df", "shard").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2)))).toMap
+    // the batch's df from the resident dictionary, on the driver
+    val df = idx.df(parsed.flatMap(_._2.flatten).distinct)
     val live = parsed
-      .map { case (qid, slots) => (qid, slots.map(_.filter(dictRows.contains))) }
+      .map { case (qid, slots) => (qid, slots.map(_.filter(df.contains))) }
       .filter(_._2.forall(_.nonEmpty))
-    if (live.isEmpty) return empty
+    val allTerms = live.flatMap(_._2.flatten).distinct
+    val blocks = idx.blocks(allTerms) match {
+      case Some(b) => b
+      case None => return empty
+    }
 
     val idfSums = live.map { case (qid, slots) =>
       qid -> slots.flatten
-        .map(t => Bm25.idfValue(dictRows(t)._1, idx.stats.nDocs)).sum
+        .map(t => Bm25.idfValue(df(t), idx.stats.nDocs)).sum
     }.toMap
     // leader slot = min Σ alternative df (an upper bound on the union's
     // df — the cheapest slot to stream first), ties to the lower ordinal
     val leaderSlot = live.map { case (qid, slots) =>
       qid -> slots.zipWithIndex
-        .minBy { case (alts, i) => (alts.map(t => dictRows(t)._1).sum, i) }._2
+        .minBy { case (alts, i) => (alts.map(df).sum, i) }._2
     }.toMap
     // (query_id, slot, term) routing rows, split leader vs rest
     val routing = live.flatMap { case (qid, slots) =>
@@ -135,9 +134,6 @@ object MultiPhrase {
     }
     val (leadRows, restRows) = routing.partition { case (qid, i, _) =>
       i == leaderSlot(qid) }
-    val shards = allTerms.flatMap(dictRows.get).map(_._2).distinct
-    val blocks = idx.postings
-      .where(col("shard").isin(shards: _*))
 
     // THIN pass (no `poss` bytes read): (query_id, slot, term, _bfd, doc_id)
     def thinSide(rows: Seq[(Int, Int, String)]): DataFrame =
@@ -170,10 +166,8 @@ object MultiPhrase {
         val blockKeys = cand.select(explode(col("_blks")).as("_b"))
           .select(col("_b.term").as("term"), col("_b._bfd").as("_bfd"))
           .distinct()
-        // FAT pass: positions decoded only for candidate-bearing blocks;
-        // the term predicate repeats so it pushes to THIS scan too
+        // FAT pass: positions decoded only for candidate-bearing blocks
         val fatBlocks = blocks
-          .where(col("term").isInCollection(allTerms))
           .withColumn("_bfd", col("first_doc"))
           .join(blockKeys, Seq("term", "_bfd"), "left_semi")
         val fatRows = PostingBlocks.decodePostingsWithPositions(

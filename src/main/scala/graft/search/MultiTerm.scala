@@ -127,9 +127,10 @@ object MultiTerm {
   }
 
   /** Batch regexp expansion: one bounded dictionary probe per DISTINCT
-    * pattern, whole-term anchored (`^(p)$`). A regex cannot prune the
-    * dictionary scan (exactly Lucene's RegexpQuery terms-dictionary
-    * walk) — the cost is one dictionary pass per pattern, with the
+    * pattern, whole-term anchored (`^(p)$`). A regex has no key range
+    * that could bound a walk of the resident dictionary, so it stays a
+    * distributed pass over the `dictionary` relation (exactly Lucene's
+    * RegexpQuery terms-dictionary walk) — one pass per pattern, with the
     * match inside the scan filter; expansions beyond `maxExpansions`
     * fail loudly (TooManyClauses). */
   def expandRegexps(idx: IndexSearch.OpenIndex, pats: Seq[String],
@@ -260,20 +261,16 @@ object MultiTerm {
     (Analyzer.tokenize(rest).distinct, ranges)
   }
 
-  /** Batch term-range expansion: one dictionary probe per DISTINCT range,
-    * both endpoint predicates pushed to the parquet dictionary scan
-    * (GreaterThan[OrEqual]/LessThan[OrEqual] on the sorted `term`
-    * column), `limit(maxExpansions + 1)`-bounded before the collect —
-    * an over-broad range fails loudly (TooManyClauses analog), never
+  /** Batch term-range expansion: per DISTINCT range, a walk of the
+    * resident dictionary's sorted terms from `lo` to `hi` on the driver,
+    * no Spark job — stopped after `maxExpansions + 1` terms, so an
+    * over-broad range fails loudly (TooManyClauses analog), never
     * materializes. */
   def expandRanges(idx: IndexSearch.OpenIndex, ranges: Seq[TermRange],
                    maxExpansions: Int): Map[TermRange, Seq[String]] =
     ranges.distinct.map { r =>
-      val loP = if (r.incLo) col("term") >= r.lo else col("term") > r.lo
-      val hiP = if (r.incHi) col("term") <= r.hi else col("term") < r.hi
-      val terms = idx.dictionary.where(loP && hiP)
-        .select("term").limit(maxExpansions + 1)
-        .collect().map(_.getString(0)).toSeq
+      val terms = idx.resident.termsBetween(r.lo, r.incLo, r.hi, r.incHi)
+        .take(maxExpansions + 1).toSeq
       require(terms.size <= maxExpansions,
         s"term range '${r.lo} TO ${r.hi}' expands to more than " +
           s"maxExpansions=$maxExpansions dictionary terms " +

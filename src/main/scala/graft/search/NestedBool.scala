@@ -131,7 +131,7 @@ object NestedBool {
     }
     if (qt.isEmpty) return empty
     // one pruned posting scan for every leaf of every query in the batch
-    val ls = IndexSearch.matchedPostings(idx, qt.toDF("query_id", "term"))
+    val ls = idx.matched(qt)
       .withColumn("_s", Bm25.termScore(col("tf"), col("dl"), col("df"),
         lit(idx.stats.nDocs), lit(idx.stats.avgdl)))
       .select("query_id", "term", "doc_id", "_s")

@@ -5,8 +5,11 @@ import org.apache.spark.sql.DataFrame
 /** The term dictionary of one open index joined with its blockmeta, held
   * on the driver as compact arrays sorted by term: df, shard and the
   * stored top block maxes (descending, ≤ [[graft.index.PostingBlocks.TopBlockMaxes]]
-  * per term, flattened into one array). A request looks its terms up by
-  * binary search — no Spark job, no dictionary scan.
+  * per term, flattened into one array). It is the one query-term lookup:
+  * every request shape finds its terms' df and shards here by binary
+  * search — no Spark job, no dictionary scan — and reads their postings
+  * through [[IndexSearch.OpenIndex.blocks]]. Prefix, wildcard, fuzzy and
+  * term-range expansion walk its sorted terms.
   *
   * Size grows with the vocabulary, not the corpus: per term one String,
   * a long, two ints and 8 bytes per stored block max — about 84 bytes
@@ -29,6 +32,14 @@ final class ResidentDict private (terms: Array[String], dfs: Array[Long],
   def termsFrom(prefix: String): Iterator[String] = {
     val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], prefix)
     terms.iterator.drop(if (i >= 0) i else -i - 1).takeWhile(_.startsWith(prefix))
+  }
+
+  /** The terms between `lo` and `hi`, ascending — each bound inclusive
+    * or not — found by binary search to `lo`. */
+  def termsBetween(lo: String, incLo: Boolean, hi: String, incHi: Boolean): Iterator[String] = {
+    val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], lo)
+    terms.iterator.drop(if (i < 0) -i - 1 else if (incLo) i else i + 1)
+      .takeWhile(t => if (incHi) t <= hi else t < hi)
   }
 
   /** Distinct shards holding the in-vocabulary ones of `terms`. */

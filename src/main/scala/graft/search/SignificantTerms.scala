@@ -43,7 +43,7 @@ object SignificantTerms {
     require(minDf >= 1 && minFgDf >= 1,
       s"minDf/minFgDf must be >= 1 (got $minDf/$minFgDf)")
     val matched = IndexSearch.matchedDocSet(idx, queries)
-    val docsText = idx.io.read(idx.spark, idx.paths.docs)
+    val docsText = idx.stored
       .select(col("doc_id"), col("text"))
     val fg = matched.join(docsText, "doc_id")
       .select(col("query_id"), col("doc_id"),

@@ -492,7 +492,7 @@ object StreamExpr {
   private def render(idx: IndexSearch.OpenIndex, n: Node): DataFrame = n match {
     case SearchNode(q, fl, sort) =>
       val matched = IndexSearch.matchedDocSet(idx, Seq(1 -> q)).select("doc_id")
-      val attrs = idx.io.read(idx.spark, idx.paths.docs)
+      val attrs = idx.stored
         .select(("doc_id" +: fl).distinct.map(col): _*)
       matched.join(attrs, "doc_id")
         .select(fl.map(col): _*)
@@ -530,7 +530,7 @@ object StreamExpr {
       render(idx, l).join(render(idx, r), on, "left")
         .select(j.schema.map(col): _*)
     case f @ FetchNode(c, fl, on) =>
-      val attrs = idx.io.read(idx.spark, idx.paths.docs)
+      val attrs = idx.stored
         .select((on +: fl).map(col): _*)
       render(idx, c).join(attrs, on).select(f.schema.map(col): _*)
     case HavingNode(c, p) =>

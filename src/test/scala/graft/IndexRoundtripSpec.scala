@@ -144,7 +144,7 @@ class IndexRoundtripSpec extends SparkSpec {
           .select("doc_id", "conv_id", "turn_idx"), "doc_id")
         .select("query_id", "rank", "conv_id", "turn_idx", "score")
         .orderBy("query_id", "rank").collect().toSeq
-      val got = IndexSearch.searchAlias(spark, roots, queries, 10)
+      val got = IndexSearch.searchAlias(roots.map(IndexSearch.open(spark, _)), queries, 10)
         .select("query_id", "rank", "conv_id", "turn_idx", "score")
         .orderBy("query_id", "rank").collect().toSeq
       assert(got == want && got.nonEmpty)
@@ -206,21 +206,22 @@ class IndexRoundtripSpec extends SparkSpec {
         .collect()(0).getLong(0)
       // routing: a window starting at the late slice's first ts prunes
       // the early collection by metadata alone
-      assert(IndexSearch.routeCollections(spark, roots, Some(lateMin), None)
-        == Seq(roots(1)))
-      assert(IndexSearch.routeCollections(spark, roots,
+      val idxs = roots.map(IndexSearch.open(spark, _))
+      assert(IndexSearch.routeCollections(idxs, Some(lateMin), None)
+        .map(_.paths.root) == Seq(roots(1)))
+      assert(IndexSearch.routeCollections(idxs,
         Some(lateMin), Some(lateMin - 1)).isEmpty) // inverted → nothing
       // fq a no-op at the slice boundary → ≡ the single-collection alias
-      val got = IndexSearch.searchAliasTimeRouted(spark, roots, queries,
+      val got = IndexSearch.searchAliasTimeRouted(idxs, queries,
         Some(lateMin), None).collect().toSeq
-      val want = IndexSearch.searchAlias(spark, Seq(roots(1)), queries)
+      val want = IndexSearch.searchAlias(Seq(idxs(1)), queries)
         .collect().toSeq
       assert(got == want && got.nonEmpty)
       // window past every collection → empty, keys-shaped
-      assert(IndexSearch.searchAliasTimeRouted(spark, roots, queries,
+      assert(IndexSearch.searchAliasTimeRouted(idxs, queries,
         Some(Long.MaxValue), None).count() == 0)
       intercept[IllegalArgumentException](IndexSearch.searchAliasTimeRouted(
-        spark, roots, queries, None, None))
+        idxs, queries, None, None))
     } finally roots.foreach(rmrf)
   }
 
